@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` replays a deterministic CDC change log end-to-end through
-the engine (validate → normalize → latest-wins collapse → bucket-pruned
-COW merge → atomic snapshot commit) and returns the final transcript
+the engine (validate → normalize → latest-wins collapse → merge-on-read
+delta append → atomic snapshot commit) and returns the final transcript
 table — the flagship path of SURVEY.md §7 Phase 1-3.
 
 ``queries()`` / ``oracle_sql()`` cover the operator inventory of

@@ -6,8 +6,8 @@ Per the driver contract: runs on ``local[$SPARK_GRAFT_CPUS]`` and prints
 Extra keys: ``cdc`` (events/sec of the end-to-end apply path — the
 BASELINE.json headline metric) and ``rows`` per query for sanity.
 
-Scaling-efficiency evidence (local[8] vs local[32] per BASELINE.md) lives
-in ``bench_scaling.py`` / ``BENCH.md``; this file is the per-round loop.
+Executor-scaling evidence lives in ``bench_scaling_cluster.py`` /
+``BENCH.md``; this file is the per-round loop.
 """
 
 from __future__ import annotations
@@ -223,12 +223,12 @@ def bench_cdc(spark, n_turns: int = 1_000_000) -> dict:
         write_batch_files(warm, warm_log)
         CdcIngest(
             os.path.join(work, "warm_table"), warm_log, num_buckets=32,
-            mode="mor", compact_max_files=8,
+            compact_max_files=8,
         ).run(spark)
         shutil.rmtree(os.path.join(work, "warm_table"), ignore_errors=True)
         ing = CdcIngest(
             os.path.join(work, "table"), log_dir, num_buckets=32,
-            mode="mor", compact_max_files=8,
+            compact_max_files=8,
         )
         t0 = time.perf_counter()
         results = ing.run(spark)

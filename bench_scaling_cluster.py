@@ -1,9 +1,9 @@
 """Executor-JVM scaling bench — the N → 4N *executor* evidence.
 
 BASELINE.json's north_rule states the ≥0.8 scaling-efficiency criterion
-over executor counts (N and 4N executors), not threads. ``bench_scaling.py``
-measured ``local[N]`` vs ``local[4N]`` — thread scaling inside ONE JVM —
-and BENCH.md round 1 documented that this sandbox's single-JVM per-core
+over executor counts (N and 4N executors), not threads. The round-1
+protocol measured ``local[N]`` vs ``local[4N]`` — thread scaling inside ONE
+JVM — and BENCH.md round 1 documented that this sandbox's single-JVM per-core
 throughput degrades continuously with thread count (a pure-JVM control
 degrades identically), capping that measurement at 0.59-0.82.
 
@@ -109,7 +109,6 @@ else:
             break
         time.sleep(0.5)
     from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-    impl = os.environ.get("SCALING_IMPL", "maxby")
     table = os.path.join(work, f"scaling_table_{n_exec}")
     warm_table = os.path.join(work, f"warm_table_{n_exec}")
     shutil.rmtree(table, ignore_errors=True)
@@ -117,10 +116,9 @@ else:
     try:
         # untimed JIT warm-up pass over a small separate log (see gen)
         CdcIngest(warm_table, os.path.join(work, "warmlog"), num_buckets=32,
-                  mode="mor", compact_max_files=8, collapse_impl=impl).run(spark)
+                  compact_max_files=8).run(spark)
         shutil.rmtree(warm_table, ignore_errors=True)
-        ing = CdcIngest(table, log, num_buckets=32, mode="mor", compact_max_files=8,
-                        collapse_impl=impl)
+        ing = CdcIngest(table, log, num_buckets=32, compact_max_files=8)
         t0 = time.perf_counter()
         res = ing.run(spark)
         dt = time.perf_counter() - t0

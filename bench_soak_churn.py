@@ -112,8 +112,7 @@ def main() -> None:
             "spark.sql.adaptive.enabled": "false",
         },
     )
-    ing = CdcIngest(table_dir, log_dir, num_buckets=32, mode="mor",
-                    compact_max_files=8)
+    ing = CdcIngest(table_dir, log_dir, num_buckets=32, compact_max_files=8)
     feed = IncrementalFeed(table_dir, os.path.join(work, "feed_pos.json"))
 
     lsn_span = n_turns * 10 + 100 + max(n_turns // 20, 1) * 10 + 20
@@ -160,13 +159,12 @@ def main() -> None:
 
             def _racer(i: int) -> None:
                 rival = CdcIngest(table_dir, log_dir, num_buckets=32,
-                                  mode="mor", compact_max_files=8)
+                                  compact_max_files=8)
                 pend = rival.pending()
                 tbl = rival.table()
                 barrier.wait()
                 outcomes[i] = [
-                    apply_batch(spark, tbl, spark.read.parquet(p), b,
-                                mode="mor")
+                    apply_batch(spark, tbl, spark.read.parquet(p), b)
                     for b, p in pend
                 ]
 

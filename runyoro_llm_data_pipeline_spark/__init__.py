@@ -6,10 +6,9 @@ idiomatic Spark engine:
 
 * change-event log (insert/update/delete/upsert keyed on ``conv_id, turn_idx``)
   applied to a snapshot-atomic lake table of multi-turn transcripts,
-* latest-wins dedup via map-side-combinable aggregation (skew-proof), with
-  salted and Arrow-vectorized (mapInPandas) variants,
-* two merge disciplines: bucket-pruned copy-on-write and O(batch)
-  merge-on-read delta appends with bounded-read compaction,
+* latest-wins dedup via map-side-combinable aggregation (skew-proof),
+* one apply path: O(batch) merge-on-read delta appends with bounded-read
+  compaction,
 * exactly-once commits (offsets live inside the table snapshot),
 * batch (``CdcIngest``) and Structured Streaming (``CdcStreamIngest``,
   Trigger.AvailableNow + foreachBatch) front-ends over one apply path,

@@ -10,24 +10,25 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
 * **normalization** (P2): the reference's ``clean_and_preprocess_text``
   (``scripts/text_processing.py:15-40``) applied to the ``text`` payload as a
   JVM column expression — the per-turn equality invariant lives here;
-* **collapse** (W3): latest-wins by ``(event_ts, lsn)`` per key;
-* **merge**: ``mode='cow'`` = bucket-pruned copy-on-write rewrite
-  (read-optimized); ``mode='mor'`` = merge-on-read delta append
-  (write-optimized) on a deliberately minimal job graph:
+* **collapse** (W3): latest-wins by ``(event_ts, lsn)`` per key with the
+  pure-JVM ``max_by`` aggregate; each key's row keeps its winning event's
+  own ``(event_ts, lsn)`` as the stored version;
+* **merge-on-read delta append** on a deliberately minimal job graph:
 
       metadata count → [collapse → partitioned parquet write]
 
-  where collapse is either the pure-JVM ``max_by`` aggregate (default —
-  map-side partial aggregation, measured fastest: the post-collapse
-  bucket shuffle moves only one row per key) or the single-shuffle
-  Arrow ``mapInPandas`` dedup (``collapse_impl='arrow'`` — fewer
-  shuffles but pays one Arrow round-trip of the full batch; the
-  vectorized-apply stage of BASELINE.json:north_star). Admission
-  metrics are piggybacked on the write via ``Observation``
-  (no extra scan), per-bucket lineage stats harvested from the written
-  parquet *footers* (no stats job — the same trick Iceberg manifests use),
-  and the lineage file written driver-side with pyarrow (no Spark job).
-  Two Spark jobs per batch, total.
+  The collapse gets map-side partial aggregation, so the post-collapse
+  bucket shuffle moves at most one row per key and task. It is kept as
+  the benchmarked default, not as the fastest: on a 4-CPU host it measured
+  slower than the Arrow and single-shuffle collapses that were tried, so
+  replacing it is a job for a measured A/B.
+  Admission metrics (counts and the admitted lsn range) are piggybacked
+  on the write via ``Observation`` (no extra scan), per-bucket lineage
+  stats harvested from the written parquet *footers* (no stats job — the
+  same trick Iceberg manifests use), and the lineage file written
+  driver-side with pyarrow (no Spark job). Two Spark jobs per batch,
+  total. Readers collapse base ∪ deltas; ``LakeTable.compact`` folds
+  deltas back into base files.
 * **commit**: data files + applied offsets + lineage land in ONE snapshot;
   the version-pointer rename is the commit point. Crash anywhere before it
   → next run re-applies the batch onto the previous snapshot and converges
@@ -44,8 +45,6 @@ from pyspark.sql import functions as F
 
 from runyoro_llm_data_pipeline_spark.cdc.dedup import (
     collapse_latest_wins,
-    collapse_latest_wins_arrow,
-    collapse_latest_wins_bucketed,
     payload_columns,
 )
 from runyoro_llm_data_pipeline_spark.cdc.events import (
@@ -53,7 +52,7 @@ from runyoro_llm_data_pipeline_spark.cdc.events import (
     validate_events,
     validity_condition,
 )
-from runyoro_llm_data_pipeline_spark.lake.merge import evolve_schema, merge_into
+from runyoro_llm_data_pipeline_spark.lake.merge import evolve_schema
 from runyoro_llm_data_pipeline_spark.lake.table import (
     DELETED,
     LINEAGE_DIR,
@@ -135,69 +134,6 @@ def _footer_stats(table: LakeTable, entries: list[dict]) -> list[dict]:
     ]
 
 
-def _commit(
-    table: LakeTable,
-    snap,
-    plan: dict,
-    batch_id: int,
-    stats: list[dict],
-    n_rejected: int,
-    t_start: float | None = None,
-    summary_extra: dict | None = None,
-) -> dict[str, Any]:
-    import time
-
-    sec = round(time.perf_counter() - t_start, 3) if t_start else None
-    version = plan["version"]
-    if stats:
-        min_lsn = min(s["min_lsn"] for s in stats)
-        max_lsn = max(s["max_lsn"] for s in stats)
-    else:
-        min_lsn = max_lsn = -1
-    lineage_rel = _write_lineage_driver_side(table, version, batch_id, stats)
-    table.commit(
-        new_files=plan["new_files"],
-        carried_files=plan["carried_files"],
-        schema=plan["schema"],
-        applied_update={str(batch_id): [int(min_lsn), int(max_lsn)]},
-        summary_update={
-            "last_batch_id": int(batch_id),
-            "watermark_lsn": max(
-                int(snap.summary.get("watermark_lsn", -1)), int(max_lsn)
-            ),
-            # per-batch job metrics, queryable from the snapshot history
-            "last_batch_sec": sec,
-            "last_batch_keys": sum(s["row_count"] for s in stats),
-            **(summary_extra or {}),
-        },
-        lineage_rel_path=lineage_rel,
-        parent=snap,
-    )
-    return {
-        "status": "applied",
-        "batch_id": batch_id,
-        "sec": sec,
-        "version": version,
-        "affected_buckets": plan["affected_buckets"],
-        "rejected_rows": n_rejected,
-        "applied_keys": sum(s["row_count"] for s in stats),
-        "min_lsn": min_lsn,
-        "max_lsn": max_lsn,
-    }
-
-
-def _normalizer(impl: str):
-    """P2 text normalization column fn: 'jvm' = whole-stage-codegen regex
-    (fast path; Unicode-version caveat in operators/text.py), 'pandas' =
-    Arrow-batched CPython regex (bit-exact vs the reference)."""
-    from runyoro_llm_data_pipeline_spark.operators import text as t
-
-    return (
-        t.clean_and_preprocess_text_pandas if impl == "pandas"
-        else t.clean_and_preprocess_text_col
-    )
-
-
 def _apply_mor(
     spark: SparkSession,
     table: LakeTable,
@@ -206,22 +142,26 @@ def _apply_mor(
     normalize_text: bool,
     key_cols: tuple[str, ...],
     snap,
-    collapse_impl: str = "maxby",
-    normalize_impl: str = "jvm",
     summary_extra: dict | None = None,
 ) -> dict[str, Any]:
     import time
 
+    from runyoro_llm_data_pipeline_spark.operators.text import (
+        clean_and_preprocess_text_col,
+    )
+
     t_start = time.perf_counter()
-    # admission accounting (total / valid / late) rides the write job's own
-    # scan via ONE Observation placed BELOW the validity filter, so n_total
-    # counts exactly the rows this batch frame produces — filtered sources
-    # (e.g. an lsn-range scan of a shared log) are counted correctly, and
-    # no separate count job or footer arithmetic is needed. Late events
-    # (SURVEY §2.8): at or below the committed lsn watermark — replays or
-    # out-of-order stragglers, safe under latest-wins but surfaced.
+    # admission accounting (total / valid / late / admitted lsn range)
+    # rides the write job's own scan via ONE Observation placed BELOW the
+    # validity filter, so n_total counts exactly the rows this batch frame
+    # produces — filtered sources (e.g. an lsn-range scan of a shared log)
+    # are counted correctly, and no separate count job or footer
+    # arithmetic is needed. Late events (SURVEY §2.8): at or below the
+    # committed lsn watermark — replays or out-of-order stragglers, safe
+    # under latest-wins but surfaced.
     watermark = int(snap.summary.get("watermark_lsn", -1))
     cond = validity_condition()
+    admitted_lsn = F.when(cond, F.col("lsn"))
     obs = Observation(f"admit_b{batch_id}_v{snap.version}")
     conformed = conform_events(events).observe(
         obs,
@@ -230,67 +170,70 @@ def _apply_mor(
         F.sum((cond & (F.col("lsn") <= F.lit(watermark))).cast("long")).alias(
             "n_late"
         ),
+        F.min(admitted_lsn).alias("min_lsn"),
+        F.max(admitted_lsn).alias("max_lsn"),
     )
     valid = conformed.filter(cond)
     if normalize_text:
-        valid = valid.withColumn("text", _normalizer(normalize_impl)(F.col("text")))
+        valid = valid.withColumn("text", clean_and_preprocess_text_col(F.col("text")))
 
     keys = list(key_cols)
-    if collapse_impl == "arrow":
-        # one shuffle (bucket-aligned) + Arrow-batched dedup; the write
-        # below streams straight through without repartitioning
-        collapsed = collapse_latest_wins_arrow(
-            valid, keys=key_cols, partition_expr=table.bucket_expr(key_cols[0])
-        )
-        pre_partitioned = True
-    elif collapse_impl == "bucket":
-        # one shuffle total, pure JVM: fine-partitioned exchange whose
-        # partitioning satisfies the aggregate's clustering (no second
-        # exchange) and is already bucket-aligned for the write
-        collapsed = collapse_latest_wins_bucketed(
-            valid, keys=key_cols, key_col=key_cols[0],
-            num_buckets=table.num_buckets,
-        )
-        pre_partitioned = True
-    else:
-        # pure-JVM map-side-combinable aggregate; needs a second (cheap,
-        # post-collapse) shuffle to bucket-align the write
-        collapsed = collapse_latest_wins(valid, keys=key_cols)
-        pre_partitioned = False
+    # map-side-combinable aggregate; the write below adds a second (cheap,
+    # post-collapse) shuffle to bucket-align the files
+    collapsed = collapse_latest_wins(valid, keys=key_cols)
     schema = evolve_schema(snap.schema(), collapsed)
-    payload = payload_columns(collapsed, keys)
     incoming = collapsed.select(
         *keys,
-        *payload,
-        F.col("__max_event_ts").alias(VERSION_TS),
-        F.col("__max_lsn").alias(VERSION_LSN),
+        *payload_columns(collapsed, keys),
+        F.col("__event_ts").alias(VERSION_TS),
+        F.col("__lsn").alias(VERSION_LSN),
         (F.col("__op") == "delete").alias(DELETED),
         table.bucket_expr(key_cols[0]).alias("__bucket"),
     )
     version = snap.version + 1
     new_files = table.write_data_files(
-        incoming, version, kind="delta", pre_partitioned=pre_partitioned,
-        salt_cols=keys,
+        incoming, version, kind="delta", salt_cols=keys
     )
     stats = _footer_stats(table, new_files)
     metrics = obs.get
-    # F.sum over an empty batch observes NULL (count observes 0); guard all
-    # three so an empty poll commits a no-op batch instead of raising
+    # aggregates over an empty (or all-rejected) batch observe NULL (count
+    # observes 0); guard them so an empty poll commits a no-op batch
     n_total = int(metrics["n_total"] or 0)
     n_rejected = n_total - int(metrics["n_valid"] or 0)
-    n_late = int(metrics["n_late"] or 0)
-    plan = {
-        "new_files": new_files,
-        "carried_files": list(snap.files),
-        "schema": schema,
-        "affected_buckets": sorted({e["bucket"] for e in new_files}),
-        "version": version,
-    }
-    result = _commit(
-        table, snap, plan, batch_id, stats, n_rejected, t_start, summary_extra
+    min_lsn = -1 if metrics["min_lsn"] is None else int(metrics["min_lsn"])
+    max_lsn = -1 if metrics["max_lsn"] is None else int(metrics["max_lsn"])
+    applied_keys = sum(s["row_count"] for s in stats)
+    sec = round(time.perf_counter() - t_start, 3)
+    table.commit(
+        new_files=new_files,
+        carried_files=list(snap.files),
+        schema=schema,
+        applied_update={str(batch_id): [min_lsn, max_lsn]},
+        summary_update={
+            "last_batch_id": int(batch_id),
+            "watermark_lsn": max(watermark, max_lsn),
+            # per-batch job metrics, queryable from the snapshot history
+            "last_batch_sec": sec,
+            "last_batch_keys": applied_keys,
+            **(summary_extra or {}),
+        },
+        lineage_rel_path=_write_lineage_driver_side(
+            table, version, batch_id, stats
+        ),
+        parent=snap,
     )
-    result["late_events"] = n_late
-    return result
+    return {
+        "status": "applied",
+        "batch_id": batch_id,
+        "sec": sec,
+        "version": version,
+        "affected_buckets": sorted({e["bucket"] for e in new_files}),
+        "rejected_rows": n_rejected,
+        "applied_keys": applied_keys,
+        "min_lsn": min_lsn,
+        "max_lsn": max_lsn,
+        "late_events": int(metrics["n_late"] or 0),
+    }
 
 
 def apply_batch(
@@ -300,20 +243,13 @@ def apply_batch(
     batch_id: int,
     normalize_text: bool = True,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    mode: str = "mor",
-    collapse_impl: str = "maxby",
-    normalize_impl: str = "jvm",
     quarantine_dir: str | None = None,
     summary_extra: dict | None = None,
     max_commit_retries: int = 3,
 ) -> dict[str, Any]:
-    """``mode='mor'`` (default — the high-throughput path all published
-    numbers use) appends per-bucket delta files on a two-job graph
-    (write-optimized — pair with ``table.compact()``); ``mode='cow'``
-    rewrites affected buckets pre-collapsed (read-optimized).
-    ``collapse_impl``: 'arrow' = single-shuffle mapInPandas dedup,
-    'maxby' = JVM aggregate + bucket repartition. ``normalize_impl``:
-    'jvm' fast path or 'pandas' CPython-bit-exact path.
+    """Append the batch's per-key winners as per-bucket delta files on a
+    two-job graph (write-optimized — pair with ``table.compact()``, which
+    the ingest front-ends run through ``compact_if_needed``).
 
     **Optimistic concurrency with bounded retry**: if another writer
     commits between this call's snapshot read and its pointer swap (e.g.
@@ -325,22 +261,6 @@ def apply_batch(
     applied the SAME batch the retry degrades to ``status='skipped'`` —
     exactly-once holds under any interleaving. Data files staged by a
     lost attempt are unreferenced and reclaimed by ``cleanup_orphans``."""
-    if quarantine_dir:
-        # materialize rejected rows for inspection/replay-after-fix —
-        # generalizes the reference's skip-and-log of unsupported sources
-        # (scripts/process_raw_data.py:52). Optional: costs one extra
-        # filtered scan of the batch only when enabled. Gated on the same
-        # applied/floor test as the apply itself so a re-delivered batch
-        # stays fully side-effect free (no Spark jobs, no rewrite of the
-        # quarantine parquet a prior delivery already produced).
-        snap0 = table.current()
-        floor0 = int(snap0.summary.get("applied_floor", -1))
-        if str(batch_id) not in snap0.applied and batch_id > floor0:
-            _, rejected = validate_events(events)
-            rejected.write.mode("overwrite").parquet(
-                os.path.join(quarantine_dir, f"batch_{batch_id:05d}")
-            )
-
     attempt = 0
     while True:
         snap = table.current()
@@ -357,31 +277,22 @@ def apply_batch(
                 "status": "skipped", "batch_id": batch_id,
                 "version": snap.version,
             }
-        try:
-            if mode == "mor":
-                return _apply_mor(
-                    spark, table, events, batch_id, normalize_text,
-                    key_cols, snap, collapse_impl=collapse_impl,
-                    normalize_impl=normalize_impl,
-                    summary_extra=summary_extra,
-                )
-
-            import time
-
-            t_start = time.perf_counter()
-            valid, rejected = validate_events(events)
-            n_rejected = rejected.count()
-            if normalize_text:
-                valid = valid.withColumn(
-                    "text", _normalizer(normalize_impl)(F.col("text"))
-                )
-            changes = collapse_latest_wins(valid, keys=key_cols)
-            plan = merge_into(
-                spark, table, changes, key_cols=key_cols, snap=snap
+        if quarantine_dir and attempt == 0:
+            # materialize rejected rows for inspection/replay-after-fix —
+            # generalizes the reference's skip-and-log of unsupported
+            # sources (scripts/process_raw_data.py:52). Optional: costs one
+            # extra filtered scan of the batch only when enabled. Behind the
+            # applied/floor gate above, so a re-delivered batch stays fully
+            # side-effect free (no Spark jobs, no rewrite of the quarantine
+            # parquet a prior delivery already produced).
+            _, rejected = validate_events(events)
+            rejected.write.mode("overwrite").parquet(
+                os.path.join(quarantine_dir, f"batch_{batch_id:05d}")
             )
-            return _commit(
-                table, snap, plan, batch_id, plan["bucket_stats"],
-                n_rejected, t_start, summary_extra,
+        try:
+            return _apply_mor(
+                spark, table, events, batch_id, normalize_text, key_cols,
+                snap, summary_extra=summary_extra,
             )
         except CommitConflictError:
             attempt += 1

@@ -28,6 +28,8 @@ from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
 from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
+_MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+_OPEN_COST_BYTES = "spark.sql.files.openCostInBytes"
 
 
 class CdcIngest:
@@ -37,21 +39,16 @@ class CdcIngest:
         batch_dir: str,
         num_buckets: int = 16,
         normalize_text: bool = True,
-        mode: str = "mor",
         compact_max_files: int | None = 4,
-        collapse_impl: str = "maxby",
-        normalize_impl: str = "jvm",
         quarantine_dir: str | None = None,
         truncate_keep: int | None = 4096,
         compact_target_file_rows: int | None = None,
     ):
-        """The default ``mode='mor'`` + ``compact_max_files=k`` is the
-        high-throughput configuration every published number uses: batches
-        append O(batch) delta files; any bucket accumulating more than k
-        live files is compacted inline (a data-only snapshot — resumable
-        like every other commit). ``compact_max_files=None`` disables
-        auto-compaction. ``mode='cow'`` trades write throughput for
-        scan-only reads (read-heavy tables, small batches).
+        """Batches append O(batch) delta files; with
+        ``compact_max_files=k`` any bucket accumulating more than k delta
+        files is compacted inline (a data-only snapshot — resumable like
+        every other commit). ``compact_max_files=None`` disables
+        auto-compaction.
 
         ``truncate_keep`` bounds the applied-batch ledger: once more than
         that many entries are committed, a maintenance commit folds the
@@ -72,10 +69,7 @@ class CdcIngest:
         self.batch_dir = batch_dir
         self.num_buckets = num_buckets
         self.normalize_text = normalize_text
-        self.mode = mode
         self.compact_max_files = compact_max_files
-        self.collapse_impl = collapse_impl
-        self.normalize_impl = normalize_impl
         self.quarantine_dir = quarantine_dir
         self.truncate_keep = truncate_keep
         self.compact_target_file_rows = compact_target_file_rows
@@ -117,7 +111,8 @@ class CdcIngest:
         batch collapses into 2-3 splits and the scan→normalize→partial-agg
         map stage — the CPU-heavy part of apply — serializes onto a few
         cores. Target ≈ 2 splits per core, floored at 4 MB; at 10^10-event
-        scale batches are big and this converges back to the default."""
+        scale batches are big and this converges back to the default.
+        Session-global: ``run()`` restores both keys when it returns."""
         try:
             size = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -129,41 +124,45 @@ class CdcIngest:
         cores = spark.sparkContext.defaultParallelism
         target = max(size // (cores * 2), 1024 * 1024)
         target = min(target, 128 * 1024 * 1024)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))
+        spark.conf.set(_MAX_PARTITION_BYTES, str(target))
+        spark.conf.set(_OPEN_COST_BYTES, str(512 * 1024))
 
     def run(
         self, spark: SparkSession, max_batches: int | None = None
     ) -> list[dict[str, Any]]:
         """Apply pending batches in order; ``max_batches`` lets tests simulate
-        a crash between commits."""
+        a crash between commits. The session's split-size settings are
+        restored on return, so later reads plan as if no ingest ran."""
         table = self.table()
         results = []
-        for i, (batch_id, path) in enumerate(self.pending()):
-            if max_batches is not None and i >= max_batches:
-                break
-            self._tune_split_size(spark, path)
-            events = spark.read.parquet(path)
-            results.append(
-                apply_batch(
-                    spark,
-                    table,
-                    events,
-                    batch_id,
-                    normalize_text=self.normalize_text,
-                    mode=self.mode,
-                    collapse_impl=self.collapse_impl,
-                    normalize_impl=self.normalize_impl,
-                    quarantine_dir=self.quarantine_dir,
-                )
-            )
-            if self.mode == "mor" and self.compact_max_files is not None:
-                hot = table.buckets_needing_compaction(self.compact_max_files)
-                if hot:
-                    table.compact(
-                        spark, hot,
-                        target_file_rows=self.compact_target_file_rows,
+        conf = spark.conf.getAll
+        saved = {k: conf.get(k) for k in (_MAX_PARTITION_BYTES, _OPEN_COST_BYTES)}
+        try:
+            for i, (batch_id, path) in enumerate(self.pending()):
+                if max_batches is not None and i >= max_batches:
+                    break
+                self._tune_split_size(spark, path)
+                events = spark.read.parquet(path)
+                results.append(
+                    apply_batch(
+                        spark,
+                        table,
+                        events,
+                        batch_id,
+                        normalize_text=self.normalize_text,
+                        quarantine_dir=self.quarantine_dir,
                     )
+                )
+                table.compact_if_needed(
+                    spark, self.compact_max_files,
+                    target_file_rows=self.compact_target_file_rows,
+                )
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
         if (
             results
             and self.truncate_keep is not None

@@ -7,7 +7,7 @@ Cluster deployment (the target run mode per BASELINE.json:north_rule)::
         --conf spark.sql.shuffle.partitions=<2-3x total cores> \
         -m runyoro_llm_data_pipeline_spark.cli \
         --table s3://lake/transcripts --batch-dir s3://cdc/log \
-        --num-buckets 4096 --mode mor
+        --num-buckets 4096
 
 Local smoke::
 
@@ -32,10 +32,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--table", required=True, help="lake table path")
     p.add_argument("--batch-dir", required=True, help="change-event batch directory")
     p.add_argument("--num-buckets", type=int, default=64)
-    p.add_argument("--mode", choices=("cow", "mor"), default="mor")
-    p.add_argument(
-        "--collapse-impl", choices=("maxby", "bucket", "arrow"), default="maxby"
-    )
     p.add_argument("--compact-max-files", type=int, default=8)
     p.add_argument("--no-normalize", action="store_true")
     p.add_argument("--max-batches", type=int, default=None)
@@ -78,7 +74,6 @@ def main(argv: list[str] | None = None) -> int:
             args.batch_dir,
             args.checkpoint_dir,
             num_buckets=args.num_buckets,
-            mode=args.mode,
             normalize_text=not args.no_normalize,
             compact_max_files=args.compact_max_files,
         )
@@ -91,9 +86,7 @@ def main(argv: list[str] | None = None) -> int:
             args.batch_dir,
             num_buckets=args.num_buckets,
             normalize_text=not args.no_normalize,
-            mode=args.mode,
             compact_max_files=args.compact_max_files,
-            collapse_impl=args.collapse_impl,
             truncate_keep=args.truncate_keep or None,
             compact_target_file_rows=args.compact_target_file_rows,
         )

@@ -6,9 +6,9 @@ and atomically rewritten per ingest run (``scripts/orchestrator.py:34-40,52-61,
 dedup index. This module generalizes it into a real table format:
 
 * **data** lives in immutable Parquet files, grouped by a hash bucket of the
-  record key (``bucket = pmod(xxhash64(conv_id), num_buckets)``) so a CDC
-  batch only rewrites the buckets it touches (copy-on-write MERGE with
-  partition pruning by construction);
+  record key (``bucket = pmod(xxhash64(conv_id), num_buckets)``); a CDC
+  batch appends delta files to the buckets it touches, and compaction and
+  point lookups prune by bucket;
 * **snapshots** are JSON manifests (schema + file list + summary properties +
   applied-offset map) committed by atomic ``os.rename`` of a version pointer —
   the same all-or-nothing property as the reference's ledger rewrite, and the
@@ -65,7 +65,8 @@ LINEAGE_DIR = "lineage"
 
 # internal CDC version/tombstone columns stored in data files, hidden from
 # public reads (deletes persist as tombstones so batch application is
-# commutative — see lake/merge.py)
+# commutative: a stale event arriving after a newer delete can never
+# resurrect the key, so any arrival order of one log converges)
 VERSION_TS = "_cdc_event_ts"
 VERSION_LSN = "_cdc_lsn"
 DELETED = "_cdc_deleted"
@@ -244,16 +245,12 @@ def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
 class LakeTable:
     """A bucketed, snapshot-versioned Parquet table with atomic commits.
 
-    Two write disciplines share the format (file entries carry
-    ``kind: base|delta``):
-
-    * **copy-on-write** — affected buckets are rewritten pre-collapsed;
-      reads are plain scans. Best for read-heavy tables / small batches.
-    * **merge-on-read** — each batch appends per-bucket delta files
-      (O(batch) write cost regardless of table size); reads collapse
-      base ∪ deltas per key, and ``compact()`` folds deltas back into base
-      files per bucket. Best for high-rate CDC apply — the 10^10-event
-      headline path.
+    Merge-on-read: each applied batch appends per-bucket *delta* files
+    (O(batch) write cost regardless of table size); reads collapse
+    base ∪ deltas per key by the stored version columns. *Base* files
+    (file entries carry ``kind: base|delta``) come only from ``compact()``,
+    which folds a bucket's files back into key-sorted base files, and
+    ``rebucket()``.
     """
 
     # a partial snapshot manifest older than this is considered abandoned
@@ -416,12 +413,9 @@ class LakeTable:
         independent crash-safe commit or idempotent cleanup; safe to run
         from a cron alongside the ingester (single-writer discipline
         applies to the pair as a whole)."""
-        hot = self.buckets_needing_compaction(compact_max_files)
         return {
-            "compacted_buckets": (
-                self.compact(spark, hot, target_file_rows=target_file_rows)
-                if hot
-                else 0
+            "compacted_buckets": self.compact_if_needed(
+                spark, compact_max_files, target_file_rows=target_file_rows
             ),
             "applied_truncated": self.truncate_applied(keep_last=truncate_keep),
             "snapshots_expired": self.expire_snapshots(
@@ -540,7 +534,7 @@ class LakeTable:
         else:
             df = spark.read.schema(schema).parquet(*paths)
         # merge-on-read: when any delta files exist, collapse base ∪ deltas
-        # per key before serving (one hash aggregate; pre-collapsed COW
+        # per key before serving (one hash aggregate; fully compacted
         # snapshots skip this entirely)
         if any(f.get("kind", "base") == "delta" for f in snap.files):
             df = collapse_stored(df, self.key_cols)
@@ -605,10 +599,8 @@ class LakeTable:
         from its own commit's manifest, so auto-compaction can never
         silently drop changes from an incremental consumer. O(new files).
 
-        MOR data commits deliver exactly the batch's per-key winners; COW
-        data commits rewrite whole buckets, so consumers may be
-        over-delivered unchanged rows of co-bucketed keys (upsert
-        semantics make that safe for any latest-wins consumer).
+        Data commits are delta appends, so the window delivers exactly
+        the per-key winners of the batches it spans.
 
         Raises ``IncrementalHistoryError`` when the chain or a needed
         file has been expired (``expire_snapshots``/``cleanup_orphans``),
@@ -781,7 +773,6 @@ class LakeTable:
         version: int,
         buckets_hint: int | None = None,
         kind: str = "base",
-        pre_partitioned: bool = False,
         salt_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
@@ -790,9 +781,6 @@ class LakeTable:
         dir, one Parquet directory partition per bucket; returns manifest
         entries tagged ``kind`` (base = pre-collapsed, delta = MOR append).
         Uses ``partitionBy`` so file→bucket is structural.
-        ``pre_partitioned=True`` skips the repartition — callers that
-        already shuffled on the bucket expression (the MOR single-shuffle
-        path) write straight through.
 
         The directory name carries a per-attempt nonce so two writers
         racing on the same version can never clobber each other's files —
@@ -800,20 +788,17 @@ class LakeTable:
         references (age-based orphan cleanup reclaims it)."""
         rel_dir = os.path.join(DATA_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
-        if not pre_partitioned:
-            n_out = buckets_hint or self.num_buckets
-            if salt_cols:
-                # salt the write partitioning *within* buckets: a Zipf-hot
-                # conversation concentrates keys into one bucket, and an
-                # unsalted repartition makes that bucket's single writer
-                # the stage straggler. Multiple files per bucket are fine —
-                # the manifest lists them all. Key identity is untouched.
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(4)
-                )
-                df = df.repartition(n_out * 2, "__bucket", salt)
-            else:
-                df = df.repartition(n_out, "__bucket")
+        n_out = buckets_hint or self.num_buckets
+        if salt_cols:
+            # salt the write partitioning *within* buckets: a Zipf-hot
+            # conversation concentrates keys into one bucket, and an
+            # unsalted repartition makes that bucket's single writer the
+            # stage straggler. Multiple files per bucket are fine — the
+            # manifest lists them all. Key identity is untouched.
+            salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(4))
+            df = df.repartition(n_out * 2, "__bucket", salt)
+        else:
+            df = df.repartition(n_out, "__bucket")
         if sort_cols:
             # cluster rows by key within each written file so parquet
             # row-group min/max statistics become selective — a point
@@ -862,6 +847,20 @@ class LakeTable:
             if f.get("kind", "base") == "delta":
                 counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
         return {b for b, n in counts.items() if n > max_files}
+
+    def compact_if_needed(
+        self,
+        spark: SparkSession,
+        max_files: int | None,
+        target_file_rows: int | None = None,
+    ) -> int:
+        """The post-apply compaction policy every ingest front-end shares:
+        compact the buckets holding more than ``max_files`` delta files
+        (``None`` disables). Returns the number of buckets compacted."""
+        if max_files is None:
+            return 0
+        hot = self.buckets_needing_compaction(max_files)
+        return self.compact(spark, hot, target_file_rows=target_file_rows) if hot else 0
 
     def bucket_for_key(self, spark: SparkSession, key_value: str) -> int:
         """The key's hash bucket, computed with the exact engine expression

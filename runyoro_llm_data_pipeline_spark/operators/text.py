@@ -49,9 +49,9 @@ _PY_PATTERN = re.compile(rf"[^\w\s{re.escape(_ALLOWED_PUNCT)}]", flags=re.UNICOD
 # Known residual divergence: codepoints ASSIGNED AFTER the JVM's Unicode
 # table version (JDK 17 ships Unicode 13; CPython 3.11 ships 14 — e.g.
 # U+0870 Arabic Ext-B) classify as non-word on the JVM and word in
-# CPython. For corpora that can contain bleeding-edge codepoints use
-# ``clean_and_preprocess_text_pandas`` (bit-exact by construction) via
-# ``apply_batch(..., normalize_impl='pandas')``.
+# CPython. For corpora that can contain bleeding-edge codepoints,
+# normalize ``text`` with ``functions.clean_text_exact`` (bit-exact by
+# construction) before ingest and apply with ``normalize_text=False``.
 _J_WS = r"\s\x1C-\x1F"
 _JAVA_PATTERN = rf"(?U)[^\p{{L}}\p{{N}}_{_J_WS}.,?!'’\-–—]"
 # Python str.strip() removes exactly the CPython-whitespace set.

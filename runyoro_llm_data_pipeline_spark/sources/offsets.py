@@ -154,14 +154,12 @@ class OffsetRangeIngest:
         table_path: str,
         log: OffsetLog,
         num_buckets: int = 16,
-        mode: str = "mor",
         normalize_text: bool = True,
         compact_max_files: int | None = 8,
     ):
         self.table_path = table_path
         self.log = log
         self.num_buckets = num_buckets
-        self.mode = mode
         self.normalize_text = normalize_text
         self.compact_max_files = compact_max_files
 
@@ -208,15 +206,11 @@ class OffsetRangeIngest:
             events,
             batch_id,
             normalize_text=self.normalize_text,
-            mode=self.mode,
             # offsets land INSIDE the same snapshot as the data — the
             # checkpoint can never disagree with the table
             summary_extra={OFFSETS_KEY: new_offsets},
         )
-        if self.mode == "mor" and self.compact_max_files is not None:
-            hot = table.buckets_needing_compaction(self.compact_max_files)
-            if hot:
-                table.compact(spark, hot)
+        table.compact_if_needed(spark, self.compact_max_files)
         return {**result, "offsets": new_offsets}
 
     def run(self, spark: SparkSession, max_rounds: int = 100) -> list[dict]:

@@ -48,7 +48,6 @@ class CdcStreamIngest:
         source_dir: str,
         checkpoint_dir: str,
         num_buckets: int = 16,
-        mode: str = "mor",
         normalize_text: bool = True,
         compact_max_files: int | None = 8,
         max_files_per_trigger: int | None = None,
@@ -57,7 +56,6 @@ class CdcStreamIngest:
         self.source_dir = source_dir
         self.checkpoint_dir = checkpoint_dir
         self.num_buckets = num_buckets
-        self.mode = mode
         self.normalize_text = normalize_text
         self.compact_max_files = compact_max_files
         self.max_files_per_trigger = max_files_per_trigger
@@ -81,13 +79,9 @@ class CdcStreamIngest:
             df,
             batch_id=int(epoch_id),
             normalize_text=self.normalize_text,
-            mode=self.mode,
         )
         self.results.append(r)
-        if self.mode == "mor" and self.compact_max_files is not None:
-            hot = table.buckets_needing_compaction(self.compact_max_files)
-            if hot:
-                table.compact(spark, hot)
+        table.compact_if_needed(spark, self.compact_max_files)
 
     def run_available_now(self, spark: SparkSession) -> list[dict[str, Any]]:
         """Drain everything currently in the source directory, then stop —

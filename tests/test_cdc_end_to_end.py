@@ -1,10 +1,10 @@
-"""End-to-end CDC engine tests (SURVEY.md §5 target plan items 2-6),
-pinned to mode='cow' (the engine default is 'mor'; test_mor.py re-proves
-every guarantee there).
+"""End-to-end CDC engine tests (SURVEY.md §5 target plan items 2-6) on
+the default ingest: merge-on-read delta appends with inline
+auto-compaction.
 
 The oracle path (window collapse + CPython-exact normalization) is
-independent of the engine path (max_by collapse + JVM regex + COW merge +
-snapshot commits); agreement pins both.
+independent of the engine path (max_by collapse + JVM regex + delta
+append + compaction + snapshot commits); agreement pins both.
 """
 
 import os
@@ -45,7 +45,7 @@ def log(spark, tmp_path_factory):
 
 def test_full_replay_matches_expected(spark, log, tmp_lake):
     batch_dir, expected = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     results = ing.run(spark)
     assert all(r["status"] == "applied" for r in results)
     final = ing.table().read(spark)
@@ -54,7 +54,7 @@ def test_full_replay_matches_expected(spark, log, tmp_lake):
 
 def test_idempotent_reapply(spark, log, tmp_lake):
     batch_dir, expected = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     ing.run(spark)
     v1 = ing.table().current_version()
     # second run: everything already applied → no new snapshots
@@ -73,11 +73,11 @@ def test_idempotent_reapply(spark, log, tmp_lake):
 def test_resume_mid_stream(spark, log, tmp_lake):
     """Kill after k batches, resume → identical final state."""
     batch_dir, expected = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     first = ing.run(spark, max_batches=2)
     assert len(first) == 2
     # 'crash' — new ingest object (fresh process analogue) resumes
-    ing2 = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing2 = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     rest = ing2.run(spark)
     assert len(rest) == 4
     assert _sorted_rows(ing2.table().read(spark)) == expected
@@ -91,7 +91,7 @@ def test_arrival_permutation_same_final_state(spark, tmp_lake, tmp_path_factory)
         spark, n_turns=400, n_convs=20, n_batches=5, permute_batches=True
     )
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8)
     ing.run(spark)
     assert _sorted_rows(ing.table().read(spark)) == _expected_rows(expected)
 
@@ -100,7 +100,7 @@ def test_schema_evolution_tool_column(spark, log, tmp_lake):
     """Batches 0-1 lack the tool column on the wire; final table must carry
     it, null for rows whose winning event predates it."""
     batch_dir, expected = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     ing.run(spark, max_batches=2)
     t = ing.table()
     cols_early = [f.name for f in t.current().schema().fields]
@@ -134,7 +134,7 @@ def test_additive_new_column_mid_stream(spark, tmp_lake, tmp_path_factory):
 
 def test_time_travel_and_lineage(spark, log, tmp_lake):
     batch_dir, _ = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     results = ing.run(spark)
     t = ing.table()
     # time travel: row count is monotone-ish across versions and v0 is empty
@@ -181,7 +181,7 @@ def test_rejected_rows_counted(spark, tmp_lake):
 
 def test_snapshot_expiry(spark, log, tmp_lake):
     batch_dir, expected = log
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     ing.run(spark)
     t = ing.table()
     n_before = len(t.history())
@@ -201,9 +201,21 @@ def test_extreme_skew_hot_conversation(spark, tmp_lake, tmp_path_factory):
         spark, n_turns=2000, n_convs=10, n_batches=3, hot_share_pct=90
     )
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8)
     ing.run(spark)
     final = ing.table().read(spark)
     assert _sorted_rows(final) == _expected_rows(expected)
     hot = final.filter(F.col("conv_id") == "conv_hot").count()
     assert hot > 0.8 * final.count()
+
+
+def test_run_leaves_session_conf_unchanged(spark, log, tmp_lake):
+    """Per-batch split sizing is scoped to the ingest: after run() every
+    session setting is back to what it was, including keys that were
+    unset before."""
+    batch_dir, _ = log
+    spark.conf.unset("spark.sql.files.openCostInBytes")
+    before = spark.conf.getAll
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
+    assert ing.run(spark, max_batches=2)
+    assert spark.conf.getAll == before

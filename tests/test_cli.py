@@ -25,7 +25,7 @@ def test_cli_ingest_roundtrip(spark, tmp_lake, tmp_path_factory):
         [
             sys.executable, "-m", "runyoro_llm_data_pipeline_spark.cli",
             "--table", table, "--batch-dir", log_dir,
-            "--num-buckets", "4", "--mode", "mor", "--master", "local[4]",
+            "--num-buckets", "4", "--master", "local[4]",
         ],
         capture_output=True, text=True, env=env, cwd=REPO, timeout=300,
     )
@@ -91,7 +91,7 @@ def test_spark_submit_py_files_separate_executor_jvms(
             "--py-files", zip_path,
             job,
             "--table", table, "--batch-dir", log_dir,
-            "--num-buckets", "4", "--mode", "mor",
+            "--num-buckets", "4",
         ],
         capture_output=True, text=True, env=env, cwd=str(work), timeout=600,
     )

@@ -44,7 +44,7 @@ def test_concurrent_commit_conflict_detected(spark, tmp_lake):
     rows = t.read(spark).collect()
     assert len(rows) == 1 and rows[0]["text"] == "writer1"
     # the losing writer retries against the fresh snapshot and succeeds
-    r2 = apply_batch(spark, t, _batch(spark, 2, 1, "writer2"), 1, mode="mor")
+    r2 = apply_batch(spark, t, _batch(spark, 2, 1, "writer2"), 1)
     assert r2["status"] == "applied"
     assert t.read(spark).collect()[0]["text"] == "writer2"
 
@@ -52,13 +52,13 @@ def test_concurrent_commit_conflict_detected(spark, tmp_lake):
 def test_schema_type_conflict_rejected(spark, tmp_lake):
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
-    apply_batch(spark, t, _batch(spark, 1, 0), 0, mode="mor")
+    apply_batch(spark, t, _batch(spark, 1, 0), 0)
     bad = _batch(spark, 2, 1).withColumn("role", F.lit(7))  # string → int
     with pytest.raises(SchemaConflictError, match="role"):
-        apply_batch(spark, t, bad, 1, mode="mor")
+        apply_batch(spark, t, bad, 1)
     # table unchanged and still writable after the rejected batch
     assert t.read(spark).count() == 1
-    ok = apply_batch(spark, t, _batch(spark, 3, 2, "after"), 2, mode="mor")
+    ok = apply_batch(spark, t, _batch(spark, 3, 2, "after"), 2)
     assert ok["status"] == "applied"
 
 
@@ -81,7 +81,7 @@ def test_orphan_cleanup_after_lost_race(spark, tmp_lake):
     assert removed > 0
     # table still reads fine and a new commit works
     assert t.read(spark).collect()[0]["text"] == "w1"
-    r = apply_batch(spark, t, _batch(spark, 2, 1, "w2"), 1, mode="mor")
+    r = apply_batch(spark, t, _batch(spark, 2, 1, "w2"), 1)
     assert r["status"] == "applied"
     assert t.cleanup_orphans(min_age_seconds=0) == 0  # nothing orphaned now
 
@@ -103,7 +103,7 @@ def test_apply_batch_retries_after_transient_conflict(spark, tmp_lake):
         return real_commit(*a, **k)
 
     t.commit = flaky_commit
-    r = apply_batch(spark, t, _batch(spark, 1, 0, "survivor"), 0, mode="mor")
+    r = apply_batch(spark, t, _batch(spark, 1, 0, "survivor"), 0)
     assert r["status"] == "applied"
     assert calls["n"] == 2  # one lost race + one winning retry
     assert t.read(spark).collect()[0]["text"] == "survivor"
@@ -117,7 +117,7 @@ def test_apply_batch_retries_after_transient_conflict(spark, tmp_lake):
     t2.commit = always_conflict
     with pytest.raises(CommitConflictError):
         apply_batch(
-            spark, t2, _batch(spark, 2, 1), 1, mode="mor",
+            spark, t2, _batch(spark, 2, 1), 1,
             max_commit_retries=0,
         )
 
@@ -141,12 +141,12 @@ def test_apply_batch_retry_degrades_to_skip_when_rival_applied_same_batch(
             state["raced"] = True
             # the rival applies the SAME batch first, then our commit
             # loses the pointer race
-            apply_batch(spark, rival, _batch(spark, 1, 0, "rival"), 0, mode="mor")
+            apply_batch(spark, rival, _batch(spark, 1, 0, "rival"), 0)
             raise CommitConflictError("lost to rival")
         return real_commit(*a, **k)
 
     t.commit = racing_commit
-    r = apply_batch(spark, t, _batch(spark, 1, 0, "ours"), 0, mode="mor")
+    r = apply_batch(spark, t, _batch(spark, 1, 0, "ours"), 0)
     assert r["status"] == "skipped"
     rows = t.read(spark).collect()
     assert len(rows) == 1 and rows[0]["text"] == "rival"  # applied exactly once
@@ -160,7 +160,7 @@ def test_apply_batch_retry_adopts_rival_rebucket(spark, tmp_lake):
     path = os.path.join(tmp_lake, "t")
     ing = CdcIngest(path, "/nonexistent", num_buckets=4)
     t = ing.table()
-    r0 = apply_batch(spark, t, _batch(spark, 1, 0, "seed"), 0, mode="mor")
+    r0 = apply_batch(spark, t, _batch(spark, 1, 0, "seed"), 0)
     assert r0["status"] == "applied"
 
     rival = ing.table()
@@ -175,7 +175,7 @@ def test_apply_batch_retry_adopts_rival_rebucket(spark, tmp_lake):
         return real_commit(*a, **k)
 
     t.commit = racing_commit
-    r = apply_batch(spark, t, _batch(spark, 2, 1, "after"), 1, mode="mor")
+    r = apply_batch(spark, t, _batch(spark, 2, 1, "after"), 1)
     assert r["status"] == "applied"
     assert t.num_buckets == 8  # handle refreshed from the fresh snapshot
     rows = {x["text"] for x in t.read(spark).collect()}

@@ -18,7 +18,7 @@ def test_incremental_read_between_versions(spark, tmp_lake, tmp_path_factory):
     events, _ = gen_change_log(spark, n_turns=400, n_convs=15, n_batches=4)
     write_batch_files(events, d)
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor",
+        os.path.join(tmp_lake, "t"), d, num_buckets=4,
         compact_max_files=None,
     )
     first = ing.run(spark, max_batches=2)
@@ -69,7 +69,7 @@ def test_sql_view_and_metrics_history(spark, tmp_lake, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("view"))
     events, expected = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=2)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark)
     t = ing.table()
     t.create_view(spark, "transcripts")

@@ -61,7 +61,7 @@ def test_jsonl_to_ingest_end_to_end(spark, tmp_path_factory, tmp_lake):
             n_files=2,
         )
     jsonl_batch_dirs_to_parquet(spark, jd, pd_)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), pd_, num_buckets=4, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), pd_, num_buckets=4)
     ing.run(spark)
     final = ing.table().read(spark)
     cols = ["conv_id", "turn_idx", "role", "text"]

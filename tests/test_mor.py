@@ -1,7 +1,6 @@
-"""Merge-on-read apply path: same semantics as COW, O(batch) writes.
-
-Every guarantee proven for COW in test_cdc_end_to_end must hold verbatim
-for mode='mor', including mid-run compaction and crash-resume.
+"""Merge-on-read apply path: O(batch) delta writes, latest-wins at read,
+with and without compaction, across crash-resume, tombstones, schema
+evolution and late-event accounting.
 """
 
 import os
@@ -36,7 +35,7 @@ def log(spark, tmp_path_factory):
 def test_mor_replay_matches_expected_and_cow(spark, log, tmp_lake):
     batch_dir, expected = log
     mor = CdcIngest(
-        os.path.join(tmp_lake, "mor"), batch_dir, num_buckets=8, mode="mor",
+        os.path.join(tmp_lake, "mor"), batch_dir, num_buckets=8,
         compact_max_files=None,
     )
     mor.run(spark)
@@ -46,15 +45,11 @@ def test_mor_replay_matches_expected_and_cow(spark, log, tmp_lake):
     assert kinds == {"delta"}
     assert _rows(t.read(spark)) == expected
 
-    cow = CdcIngest(os.path.join(tmp_lake, "cow"), batch_dir, num_buckets=8, mode="cow")
-    cow.run(spark)
-    assert _rows(cow.table().read(spark)) == expected
-
 
 def test_mor_auto_compaction_preserves_state(spark, log, tmp_lake):
     batch_dir, expected = log
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
+        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8,
         compact_max_files=2,
     )
     ing.run(spark)
@@ -76,72 +71,19 @@ def test_mor_auto_compaction_preserves_state(spark, log, tmp_lake):
 def test_mor_resume_and_idempotency(spark, log, tmp_lake):
     batch_dir, expected = log
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
+        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8,
         compact_max_files=3,
     )
     first = ing.run(spark, max_batches=3)
     assert len(first) == 3
     ing2 = CdcIngest(
-        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
+        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8,
         compact_max_files=3,
     )
     rest = ing2.run(spark)
     assert len(rest) == 3
     assert ing2.run(spark) == []
     assert _rows(ing2.table().read(spark)) == expected
-
-
-def test_arrow_collapse_equals_window_oracle(spark):
-    """The single-shuffle mapInPandas dedup must agree with the window
-    formulation on winners (lineage cols differ by design: arrow reports
-    the winner's version, window reports per-key maxima — equal whenever
-    version order is consistent, as in the generated log)."""
-    from runyoro_llm_data_pipeline_spark.cdc.dedup import (
-        collapse_latest_wins_arrow,
-        collapse_latest_wins_window,
-    )
-
-    events, _ = gen_change_log(spark, n_turns=500, n_convs=20, n_batches=3)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "__op"]
-    a = collapse_latest_wins_arrow(events).select(*cols)
-    w = collapse_latest_wins_window(events).select(*cols)
-    assert a.exceptAll(w).count() == 0 and w.exceptAll(a).count() == 0
-
-
-def test_mor_arrow_impl_end_to_end(spark, log, tmp_lake):
-    batch_dir, expected = log
-    ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
-        compact_max_files=3, collapse_impl="arrow",
-    )
-    ing.run(spark)
-    assert _rows(ing.table().read(spark)) == expected
-
-
-def test_bucketed_collapse_equals_default(spark):
-    """The single-shuffle write-aligned JVM collapse must agree with the
-    default map-side-combined aggregate on every output column."""
-    from runyoro_llm_data_pipeline_spark.cdc.dedup import (
-        collapse_latest_wins,
-        collapse_latest_wins_bucketed,
-    )
-
-    events, _ = gen_change_log(spark, n_turns=500, n_convs=20, n_batches=3)
-    a = collapse_latest_wins(events)
-    b = collapse_latest_wins_bucketed(events, num_buckets=8).drop("__bucket").select(
-        *a.columns
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_mor_bucket_impl_end_to_end(spark, log, tmp_lake):
-    batch_dir, expected = log
-    ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8, mode="mor",
-        compact_max_files=3, collapse_impl="bucket",
-    )
-    ing.run(spark)
-    assert _rows(ing.table().read(spark)) == expected
 
 
 def test_mor_tombstone_survives_compaction(spark, tmp_lake):
@@ -161,25 +103,25 @@ def test_mor_tombstone_survives_compaction(spark, tmp_lake):
     t = ing.table()
     apply_batch(
         spark, t,
-        df([("insert", "c1", 0, "user", "v1", None, ts, ts, 1, 0)]), 0, mode="mor",
+        df([("insert", "c1", 0, "user", "v1", None, ts, ts, 1, 0)]), 0,
     )
     apply_batch(
         spark, t,
-        df([("delete", "c1", 0, None, None, None, None, t2, 5, 1)]), 1, mode="mor",
+        df([("delete", "c1", 0, None, None, None, None, t2, 5, 1)]), 1,
     )
     t.compact(spark)
     assert t.read(spark).count() == 0
     # stale event (older version) arrives in a later batch → must stay dead
     apply_batch(
         spark, t,
-        df([("upsert", "c1", 0, "user", "stale", None, ts, ts, 2, 2)]), 2, mode="mor",
+        df([("upsert", "c1", 0, "user", "stale", None, ts, ts, 2, 2)]), 2,
     )
     assert t.read(spark).count() == 0
     # genuinely newer re-insert resurrects
     t3 = datetime.datetime(2024, 1, 3)
     apply_batch(
         spark, t,
-        df([("insert", "c1", 0, "user", "new", None, t3, t3, 9, 3)]), 3, mode="mor",
+        df([("insert", "c1", 0, "user", "new", None, t3, t3, 9, 3)]), 3,
     )
     out = t.read(spark).collect()
     assert len(out) == 1 and out[0]["text"] == "new"
@@ -195,8 +137,8 @@ def test_mor_schema_evolution(spark, tmp_lake):
     )
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
-    apply_batch(spark, t, b0, 0, mode="mor")
-    apply_batch(spark, t, b1, 1, mode="mor")
+    apply_batch(spark, t, b0, 0)
+    apply_batch(spark, t, b1, 1)
     final = t.read(spark)
     assert "meta" in final.columns
     assert final.filter(F.col("meta").isNotNull()).count() > 0
@@ -232,7 +174,7 @@ def test_late_event_accounting(spark, tmp_lake):
         spark.createDataFrame(
             [("insert", "c1", 0, "user", "v1", None, ts, ts, 100, 0)], EVENT_SCHEMA
         ),
-        0, mode="mor",
+        0,
     )
     assert r1["late_events"] == 0
     ts2 = datetime.datetime(2024, 1, 2)
@@ -245,7 +187,7 @@ def test_late_event_accounting(spark, tmp_lake):
             ],
             EVENT_SCHEMA,
         ),
-        1, mode="mor",
+        1,
     )
     assert r2["late_events"] == 1
     # the stale duplicate did not clobber anything

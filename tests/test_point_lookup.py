@@ -13,7 +13,7 @@ def test_read_conversation_prunes_and_matches(spark, tmp_lake, tmp_path_factory)
     d = str(tmp_path_factory.mktemp("pl"))
     events, expected = gen_change_log(spark, n_turns=400, n_convs=20, n_batches=3)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=8)
     results = ing.run(spark)
     assert all(r["sec"] is not None and r["sec"] > 0 for r in results)
     t = ing.table()
@@ -38,7 +38,7 @@ def test_file_range_pruning_after_sized_compaction(spark, tmp_lake, tmp_path_fac
     d = str(tmp_path_factory.mktemp("plr"))
     events, expected = gen_change_log(spark, n_turns=1200, n_convs=60, n_batches=2)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t2"), d, num_buckets=2, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t2"), d, num_buckets=2)
     ing.run(spark)
     t = ing.table()
     t.compact(spark, target_file_rows=120)
@@ -83,11 +83,11 @@ def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory)
     events, expected = gen_change_log(spark, n_turns=300, n_convs=12, n_batches=3)
     ing = CdcIngest(os.path.join(tmp_lake, "t3"), "/nonexistent", num_buckets=2)
     t = ing.table()
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
     t.compact(spark, target_file_rows=60)
     # the last batch lands as deltas on top of the key-ranged base files
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2)
 
     full = t.read(spark)
     for conv in [r["conv_id"] for r in full.select("conv_id").distinct().collect()][:5]:

@@ -29,10 +29,10 @@ def _mk(spark, tmp_lake, name, n_batches=3, n_turns=240, n_convs=12):
 
 def test_tag_read_and_drop(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "t1")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     state0 = _rows(t.read(spark))
     v = t.tag("after-b0")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
 
     assert t.tags() == {"after-b0": v}
     assert _rows(t.read(spark, "after-b0")) == state0
@@ -48,12 +48,12 @@ def test_tag_read_and_drop(spark, tmp_lake):
 
 def test_tagged_snapshot_survives_expiry(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "t2", n_batches=4)
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     state0 = _rows(t.read(spark))
     t.tag("certified")
     for b in (1, 2, 3):
         apply_batch(
-            spark, t, events.filter(F.col("batch_id") == b), b, mode="mor"
+            spark, t, events.filter(F.col("batch_id") == b), b
         )
     t.expire_snapshots(keep_last=1)
     # pinned manifest + files intact across expiry (and a second pass)
@@ -70,11 +70,11 @@ def test_tagged_snapshot_survives_expiry(spark, tmp_lake):
 
 def test_rollback_restores_state_and_ledger(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "t3")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
     v1 = t.current().version
     state1 = _rows(t.read(spark))
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2)
     state2 = _rows(t.read(spark))
     assert state2 != state1
 
@@ -85,7 +85,7 @@ def test_rollback_restores_state_and_ledger(spark, tmp_lake):
     # ledger restored wholesale: batch 2 is re-ingestable and converges
     assert not t.was_applied(2)
     r = apply_batch(
-        spark, t, events.filter(F.col("batch_id") == 2), 2, mode="mor"
+        spark, t, events.filter(F.col("batch_id") == 2), 2
     )
     assert r["status"] == "applied"
     assert _rows(t.read(spark)) == state2
@@ -93,10 +93,10 @@ def test_rollback_restores_state_and_ledger(spark, tmp_lake):
 
 def test_rollback_by_tag_and_maintain(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "t4")
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     t.tag("good")
     state0 = _rows(t.read(spark))
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
     t.rollback("good")
     assert _rows(t.read(spark)) == state0
 
@@ -125,15 +125,15 @@ def test_rollback_forces_feed_resync_and_replica_converges(
     ckpt = str(tmp_path_factory.mktemp("ck")) + "/pos.json"
     feed = IncrementalFeed(t.path, ckpt)
 
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     v_after_0 = t.current().version
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
     df, tok = feed.poll(spark)  # replica now holds batches 0+1
     feed.commit(tok)
     replica = {tuple(r) for r in df.filter(~F.col("_cdc_deleted")).drop("_cdc_deleted").collect()}
 
     t.rollback(v_after_0)
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2)
     out = feed.poll(spark)
     assert out is not None
     df2, tok2 = out

@@ -37,7 +37,7 @@ def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_fac
     events, _ = gen_change_log(spark, n_turns=400, n_convs=15, n_batches=4)
     write_batch_files(events, d)
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor",
+        os.path.join(tmp_lake, "t"), d, num_buckets=4,
         compact_max_files=1,  # compact after nearly every batch
     )
     ing.run(spark, max_batches=2)
@@ -59,14 +59,14 @@ def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_fac
 
 
 def test_incremental_read_sees_cow_commits(spark, tmp_lake, tmp_path_factory):
-    """ADVICE(high): COW data commits (kind='base') must appear in
-    incremental reads. COW rewrites whole buckets, so the consumer may be
-    over-delivered co-bucketed keys — but never under-delivered, and
-    delivered values must match the table state."""
-    d = str(tmp_path_factory.mktemp("inccow"))
+    """ADVICE(high): every data commit must appear in incremental reads,
+    across the default ingest's inline compactions (which rewrite buckets
+    into base files between the consumer's checkpoints). The consumer is
+    never under-delivered, and delivered values match the table state."""
+    d = str(tmp_path_factory.mktemp("incdata"))
     events, _ = gen_change_log(spark, n_turns=300, n_convs=12, n_batches=4)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="cow")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark, max_batches=2)
     t = ing.table()
     v_mid = t.current_version()
@@ -97,7 +97,7 @@ def test_incremental_read_raises_after_expiry(spark, tmp_lake, tmp_path_factory)
     d = str(tmp_path_factory.mktemp("incexp"))
     events, _ = gen_change_log(spark, n_turns=200, n_convs=8, n_batches=3)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark)
     t = ing.table()
     t.expire_snapshots(keep_last=1)
@@ -204,7 +204,7 @@ def test_rejected_rows_on_filtered_scan(spark, tmp_lake):
 
     events = spark.read.parquet(log_dir).filter(F.col("lsn") >= 50)
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
-    r = apply_batch(spark, ing.table(), events, 0, mode="mor")
+    r = apply_batch(spark, ing.table(), events, 0)
     assert r["rejected_rows"] == 2  # NOT 52: the 50 old rows are outside the scan
     assert r["applied_keys"] == 8
 
@@ -247,7 +247,7 @@ def test_expire_and_orphan_cleanup_under_mor_churn(spark, tmp_lake, tmp_path_fac
     events, _ = gen_change_log(spark, n_turns=400, n_convs=15, n_batches=5)
     write_batch_files(events, d)
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor",
+        os.path.join(tmp_lake, "t"), d, num_buckets=4,
         compact_max_files=1,
     )
     ing.run(spark)
@@ -295,7 +295,7 @@ def test_compaction_clusters_rows_by_key(spark, tmp_lake, tmp_path_factory):
     events, _ = gen_change_log(spark, n_turns=2000, n_convs=40, n_batches=2)
     write_batch_files(events, d)
     ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor",
+        os.path.join(tmp_lake, "t"), d, num_buckets=4,
         compact_max_files=None,
     )
     ing.run(spark)

@@ -34,7 +34,7 @@ def _mk(spark, tmp_lake, name, num_buckets=2):
 
 def test_rollback_across_rebucket_refreshes_num_buckets(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "rb", num_buckets=2)
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     pre = t.current().version
     assert t.num_buckets == 2
 
@@ -50,7 +50,7 @@ def test_rollback_across_rebucket_refreshes_num_buckets(spark, tmp_lake):
 
     # a post-rollback write + point lookup round-trips through the
     # restored modulus
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
     some_key = t.read(spark).select("conv_id").first()[0]
     got = t.read_conversation(spark, some_key)
     want = t.read(spark).filter(F.col("conv_id") == some_key)
@@ -98,7 +98,7 @@ def test_line_dedup_total_over_empty_docs(spark):
 
 def test_concurrent_tag_mutations_do_not_lose_tags(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "tags", num_buckets=2)
-    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0, mode="mor")
+    apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     v = t.current().version
 
     n_each = 25

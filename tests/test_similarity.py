@@ -58,7 +58,7 @@ def test_quarantine_sink(spark, tmp_lake, tmp_path_factory):
     qdir = str(tmp_path_factory.mktemp("quarantine"))
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     r = apply_batch(
-        spark, ing.table(), df, 0, mode="mor", quarantine_dir=qdir
+        spark, ing.table(), df, 0, quarantine_dir=qdir
     )
     assert r["rejected_rows"] == 2
     quarantined = spark.read.parquet(os.path.join(qdir, "batch_00000"))
@@ -79,7 +79,7 @@ def test_rebucket_preserves_state(spark, tmp_lake, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("rb"))
     events, expected = gen_change_log(spark, n_turns=300, n_convs=15, n_batches=2)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4, mode="mor")
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark)
     t = ing.table()
     before = sorted(

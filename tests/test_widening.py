@@ -4,7 +4,8 @@ An existing column may arrive as a safely-wider type mid-stream —
 int→long, float→double — and the TABLE schema widens (metadata-only:
 older narrow files are read through the widened snapshot schema, which
 Spark 4's Parquet readers up-convert at scan). A column arriving
-*narrower* than stored is up-cast on write. Cross-family or narrowing
+*narrower* than stored is accepted and read back at the table's type.
+Cross-family or narrowing
 changes still fail loudly (`SchemaConflictError`).
 """
 
@@ -44,20 +45,19 @@ def test_widen_lattice():
     assert _widen(T.LongType(), T.FloatType()) is None
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_int_column_widens_to_long_mid_stream(spark, tmp_lake, mode):
-    ing = CdcIngest(os.path.join(tmp_lake, f"t_{mode}"), "/nonexistent", num_buckets=4)
+def test_int_column_widens_to_long_mid_stream(spark, tmp_lake):
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
     # batch 0 introduces `score` as INT
     b0 = _batch(spark, 1, 0, conv="c1").withColumn("score", F.lit(7).cast("int"))
-    apply_batch(spark, t, b0, 0, mode=mode)
+    apply_batch(spark, t, b0, 0)
     assert dict(t.read(spark).dtypes)["score"] == "int"
     # batch 1 sends `score` as LONG, with a value outside int range
     big = 2**40
     b1 = _batch(spark, 2, 1, conv="c2").withColumn(
         "score", F.lit(big).cast("long")
     )
-    apply_batch(spark, t, b1, 1, mode=mode)
+    apply_batch(spark, t, b1, 1)
     out = t.read(spark)
     assert dict(out.dtypes)["score"] == "bigint"
     rows = {r["conv_id"]: r["score"] for r in out.collect()}
@@ -72,13 +72,13 @@ def test_int_column_widens_to_long_mid_stream(spark, tmp_lake, mode):
 
 def test_narrow_arrival_upcast_on_write(spark, tmp_lake):
     """Table already stores LONG; a later batch sends INT — accepted and
-    up-cast on write, schema unchanged."""
+    read back as LONG, schema unchanged."""
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
     b0 = _batch(spark, 1, 0, conv="c1").withColumn("score", F.lit(5).cast("long"))
-    apply_batch(spark, t, b0, 0, mode="mor")
+    apply_batch(spark, t, b0, 0)
     b1 = _batch(spark, 2, 1, conv="c2").withColumn("score", F.lit(9).cast("int"))
-    apply_batch(spark, t, b1, 1, mode="mor")
+    apply_batch(spark, t, b1, 1)
     out = t.read(spark)
     assert dict(out.dtypes)["score"] == "bigint"
     assert {r["conv_id"]: r["score"] for r in out.collect()} == {"c1": 5, "c2": 9}
@@ -90,11 +90,11 @@ def test_float_widens_to_double(spark, tmp_lake):
     b0 = _batch(spark, 1, 0, conv="c1").withColumn(
         "conf", F.lit(0.5).cast("float")
     )
-    apply_batch(spark, t, b0, 0, mode="mor")
+    apply_batch(spark, t, b0, 0)
     b1 = _batch(spark, 2, 1, conv="c2").withColumn(
         "conf", F.lit(0.25).cast("double")
     )
-    apply_batch(spark, t, b1, 1, mode="mor")
+    apply_batch(spark, t, b1, 1)
     out = t.read(spark)
     assert dict(out.dtypes)["conf"] == "double"
     assert {r["conv_id"]: r["conf"] for r in out.collect()} == {
@@ -108,15 +108,15 @@ def test_cross_family_still_rejected(spark, tmp_lake):
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
     b0 = _batch(spark, 1, 0).withColumn("score", F.lit(1).cast("long"))
-    apply_batch(spark, t, b0, 0, mode="mor")
+    apply_batch(spark, t, b0, 0)
     bad = _batch(spark, 2, 1).withColumn("score", F.lit(1.0).cast("double"))
     with pytest.raises(SchemaConflictError, match="score"):
-        apply_batch(spark, t, bad, 1, mode="mor")
+        apply_batch(spark, t, bad, 1)
     # and the table is still writable afterwards
     ok = apply_batch(
         spark, t,
         _batch(spark, 3, 2, conv="c9").withColumn("score", F.lit(2).cast("long")),
-        2, mode="mor",
+        2,
     )
     assert ok["status"] == "applied"
 
