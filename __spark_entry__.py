@@ -150,16 +150,14 @@ _STREAM_LAKE_CACHE: dict[str, str] = {}
 
 def _stream_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final lake state produced by the REAL Structured Streaming path:
-    readStream over the derived change log → foreachBatch(apply_batch)
-    under Trigger.AvailableNow, multiple micro-batches forced via
-    maxFilesPerTrigger. Built once per corpus per process; the gate
-    queries read the committed table — so the one engine surface with no
-    batch twin (streaming checkpoint + epoch-gated exactly-once) sits
-    under the driver's DuckDB oracle."""
+    ``CdcIngest.run_stream`` (readStream over the derived change log →
+    foreachBatch into the shared apply step under Trigger.AvailableNow),
+    multiple micro-batches forced via maxFilesPerTrigger. Built once per
+    corpus per process; the gate queries read the committed table — so the
+    one engine surface with no batch twin (streaming checkpoint +
+    epoch-gated exactly-once) sits under the driver's DuckDB oracle."""
+    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
     from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
-    from runyoro_llm_data_pipeline_spark.streaming.ingest_stream import (
-        CdcStreamIngest,
-    )
 
     path = _STREAM_LAKE_CACHE.get(sf_dir)
     if path is None:
@@ -170,15 +168,10 @@ def _stream_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (version resolution is by stored (event_ts, lsn), not arrival)
         _derived_cdc_log(spark, sf_dir).repartition(8).write.parquet(log_dir)
         path = os.path.join(work, "table")
-        ing = CdcStreamIngest(
-            path,
-            log_dir,
-            os.path.join(work, "ckpt"),
-            num_buckets=8,
-            normalize_text=False,
-            max_files_per_trigger=3,
+        ing = CdcIngest(path, log_dir, num_buckets=8, normalize_text=False)
+        results = ing.run_stream(
+            spark, os.path.join(work, "ckpt"), max_files_per_trigger=3
         )
-        results = ing.run_available_now(spark)
         assert all(r["status"] in ("applied", "skipped") for r in results)
         _STREAM_LAKE_CACHE[sf_dir] = path
     return LakeTable.load(path).read(spark)

@@ -1,7 +1,8 @@
 """Bench harness — headline queries at $SPARK_GRAFT_SF_DIR plus CDC apply
 throughput, printed as ONE JSON line.
 
-Per the driver contract: runs on ``local[$SPARK_GRAFT_CPUS]`` and prints
+Per the driver contract: runs on ``local[host_cpus()]`` (``$SPARK_GRAFT_CPUS``
+when set, else the CPUs this process may use) and prints
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
 Extra keys: ``cdc`` (events/sec of the end-to-end apply path — the
 BASELINE.json headline metric) and ``rows`` per query for sanity.
@@ -21,10 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from runyoro_llm_data_pipeline_spark.session import get_spark  # noqa: E402
+from runyoro_llm_data_pipeline_spark.session import get_spark, host_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = host_cpus()
 
 # headline subset: every operator family, weighted to the heavy ones
 HEADLINE = [

@@ -42,7 +42,7 @@ from runyoro_llm_data_pipeline_spark.cdc.generator import (  # noqa: E402
     write_batch_files,
 )
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest  # noqa: E402
-from runyoro_llm_data_pipeline_spark.session import get_spark  # noqa: E402
+from runyoro_llm_data_pipeline_spark.session import get_spark, host_cpus  # noqa: E402
 
 
 def _footer_rows(batch_dir: str) -> int:
@@ -61,7 +61,7 @@ def main() -> None:
     rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     n_turns = int(sys.argv[2]) if len(sys.argv) > 2 else 9_000_000
     probe_n = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
 
     ram = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     work = os.path.join(ram, f"soak_{os.getpid()}")

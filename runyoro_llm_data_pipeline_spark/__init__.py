@@ -10,8 +10,10 @@ idiomatic Spark engine:
 * one apply path: O(batch) merge-on-read delta appends with bounded-read
   compaction,
 * exactly-once commits (offsets live inside the table snapshot),
-* batch (``CdcIngest``) and Structured Streaming (``CdcStreamIngest``,
-  Trigger.AvailableNow + foreachBatch) front-ends over one apply path,
+* one ingest driver, ``CdcIngest``, over one apply path, fed by batch
+  directories (``run``), a Structured Streaming query (``run_stream``,
+  Trigger.AvailableNow + foreachBatch) or an offset-addressed log
+  (``run_log``),
 * additive schema evolution, per-partition lineage, checkpoint resume,
 * plus the training-data operator library: exact/MinHash-LSH/SimHash/
   n-gram-Jaccard dedup, cosine similarity search, text quality/lang-id/

@@ -4,21 +4,30 @@ One call = one exactly-once unit, generalizing the reference's per-source
 ingest transaction (dedup check ``scripts/orchestrator.py:88-101`` …
 ledger rewrite ``scripts/orchestrator.py:184-186``):
 
-* **idempotency gate**: if ``batch_id`` is already in the current snapshot's
-  applied-offset map the call is a no-op (returns ``skipped``) — replaying a
-  batch after a crash, or delivering it twice, cannot double-apply;
+* **idempotency gate**: if the current snapshot has already applied
+  ``batch_id`` (``Snapshot.has_applied``: a live ledger entry, or at/below
+  the ``applied_floor``) the call is a no-op (returns ``skipped``) —
+  replaying a batch after a crash, or delivering it twice, cannot
+  double-apply;
 * **normalization** (P2): the reference's ``clean_and_preprocess_text``
   (``scripts/text_processing.py:15-40``) applied to the ``text`` payload as a
   JVM column expression — the per-turn equality invariant lives here;
 * **collapse** (W3): latest-wins by ``(event_ts, lsn)`` per key with the
   pure-JVM ``max_by`` aggregate; each key's row keeps its winning event's
   own ``(event_ts, lsn)`` as the stored version;
-* **merge-on-read delta append** on a deliberately minimal job graph:
+* **merge-on-read delta append** as ONE write query with two shuffles:
 
-      metadata count → [collapse → partitioned parquet write]
+      scan → validate → normalize → partial collapse ⇒ final collapse
+      ⇒ bucket repartition → partitioned parquet write
 
-  The collapse gets map-side partial aggregation, so the post-collapse
-  bucket shuffle moves at most one row per key and task. It is kept as
+  Under AQE each shuffle's map side runs as its own query-stage job, so a
+  traced ingest (``perfbench/run.py --trace 1``) shows three Spark jobs
+  per batch, all with the anonymous stage name
+  ``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``:
+  (1) scan → normalize → partial ``max_by`` into the collapse shuffle,
+  (2) final collapse into the bucket shuffle, (3) the partitioned parquet
+  write. The partial aggregation means the post-collapse bucket shuffle
+  moves at most one row per key and task. The collapse is kept as
   the benchmarked default, not as the fastest: on a 4-CPU host it measured
   slower than the Arrow and single-shuffle collapses that were tried, so
   replacing it is a job for a measured A/B.
@@ -26,9 +35,8 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   on the write via ``Observation`` (no extra scan), per-bucket lineage
   stats harvested from the written parquet *footers* (no stats job — the
   same trick Iceberg manifests use), and the lineage file written
-  driver-side with pyarrow (no Spark job). Two Spark jobs per batch,
-  total. Readers collapse base ∪ deltas; ``LakeTable.compact`` folds
-  deltas back into base files.
+  driver-side with pyarrow (no Spark job). Readers collapse base ∪
+  deltas; ``LakeTable.compact`` folds deltas back into base files.
 * **commit**: data files + applied offsets + lineage land in ONE snapshot;
   the version-pointer rename is the commit point. Crash anywhere before it
   → next run re-applies the batch onto the previous snapshot and converges
@@ -60,6 +68,7 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     VERSION_TS,
     CommitConflictError,
     LakeTable,
+    footer_bounds,
 )
 
 
@@ -98,30 +107,16 @@ def _footer_stats(table: LakeTable, entries: list[dict]) -> list[dict]:
     fixed cost that eats scaling headroom on fast multi-executor runs."""
     from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow.parquet as pq
-
-    def one(e: dict):
-        md = pq.ParquetFile(os.path.join(table.path, e["path"])).metadata
-        lsn_idx = next(
-            i for i in range(md.num_columns)
-            if md.schema.column(i).name == VERSION_LSN
-        )
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(lsn_idx).statistics
-            if st is not None and st.has_min_max:
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        return e["bucket"], md.num_rows, lo, hi
-
-    with ThreadPoolExecutor(max_workers=min(16, max(len(entries), 1))) as ex:
-        results = list(ex.map(one, entries))
+    paths = [os.path.join(table.path, e["path"]) for e in entries]
+    with ThreadPoolExecutor(max_workers=min(16, max(len(paths), 1))) as ex:
+        bounds = list(ex.map(lambda p: footer_bounds(p, VERSION_LSN), paths))
 
     agg: dict[int, dict] = {}
-    for bucket, n_rows, lo, hi in results:
+    for e, (n_rows, lo, hi) in zip(entries, bounds):
         b = agg.setdefault(
-            bucket,
-            {"__bucket": bucket, "min_lsn": None, "max_lsn": None, "row_count": 0},
+            e["bucket"],
+            {"__bucket": e["bucket"], "min_lsn": None, "max_lsn": None,
+             "row_count": 0},
         )
         b["row_count"] += n_rows
         if lo is not None:
@@ -140,7 +135,6 @@ def _apply_mor(
     events: DataFrame,
     batch_id: int,
     normalize_text: bool,
-    key_cols: tuple[str, ...],
     snap,
     summary_extra: dict | None = None,
 ) -> dict[str, Any]:
@@ -177,10 +171,10 @@ def _apply_mor(
     if normalize_text:
         valid = valid.withColumn("text", clean_and_preprocess_text_col(F.col("text")))
 
-    keys = list(key_cols)
+    keys = table.key_cols
     # map-side-combinable aggregate; the write below adds a second (cheap,
     # post-collapse) shuffle to bucket-align the files
-    collapsed = collapse_latest_wins(valid, keys=key_cols)
+    collapsed = collapse_latest_wins(valid, keys=keys)
     schema = evolve_schema(snap.schema(), collapsed)
     incoming = collapsed.select(
         *keys,
@@ -188,7 +182,7 @@ def _apply_mor(
         F.col("__event_ts").alias(VERSION_TS),
         F.col("__lsn").alias(VERSION_LSN),
         (F.col("__op") == "delete").alias(DELETED),
-        table.bucket_expr(key_cols[0]).alias("__bucket"),
+        table.bucket_expr(keys[0]).alias("__bucket"),
     )
     version = snap.version + 1
     new_files = table.write_data_files(
@@ -242,14 +236,15 @@ def apply_batch(
     events: DataFrame,
     batch_id: int,
     normalize_text: bool = True,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     quarantine_dir: str | None = None,
     summary_extra: dict | None = None,
     max_commit_retries: int = 3,
 ) -> dict[str, Any]:
-    """Append the batch's per-key winners as per-bucket delta files on a
-    two-job graph (write-optimized — pair with ``table.compact()``, which
-    the ingest front-ends run through ``compact_if_needed``).
+    """Append the batch's per-key winners (keyed on ``table.key_cols``) as
+    per-bucket delta files with one write query — three Spark jobs under
+    AQE, see the module docstring (write-optimized — pair with
+    ``table.compact()``, which ``CdcIngest`` runs through
+    ``compact_if_needed`` after every batch).
 
     **Optimistic concurrency with bounded retry**: if another writer
     commits between this call's snapshot read and its pointer swap (e.g.
@@ -271,8 +266,7 @@ def apply_batch(
         table.num_buckets = int(
             snap.summary.get("num_buckets", table.num_buckets)
         )
-        floor = int(snap.summary.get("applied_floor", -1))
-        if str(batch_id) in snap.applied or batch_id <= floor:
+        if snap.has_applied(batch_id):
             return {
                 "status": "skipped", "batch_id": batch_id,
                 "version": snap.version,
@@ -291,8 +285,8 @@ def apply_batch(
             )
         try:
             return _apply_mor(
-                spark, table, events, batch_id, normalize_text, key_cols,
-                snap, summary_extra=summary_extra,
+                spark, table, events, batch_id, normalize_text, snap,
+                summary_extra=summary_extra,
             )
         except CommitConflictError:
             attempt += 1

@@ -1,31 +1,48 @@
-"""CdcIngest — tail a directory of change-event batches into the lake table.
+"""CdcIngest — the one ingest driver: change-log batches into the lake table.
 
 Generalizes the reference's re-scan-and-skip ingest loop
 (``scripts/process_raw_data.py:46-54`` + ledger admission
-``scripts/orchestrator.py:52-101``): each run discovers batch directories,
-consults the table's applied-offset map (stored *in* the committed snapshot,
-so the checkpoint can never disagree with the data), and applies only the
-unapplied batches in order. Crash anywhere → rerun resumes from the last
-committed snapshot and converges to the identical final state
-(checkpoint-resume invariant, BASELINE.json:north_star).
+``scripts/orchestrator.py:52-101``). Three front-ends feed one private apply
+step — ``apply_batch``, then ``compact_if_needed``, then one ledger
+truncation per run — so every source gets the same compaction threshold,
+quarantine, ledger bound and session-conf restore:
 
-Batch layout: ``<batch_dir>/batch_<id>/*.parquet`` (one Parquet directory per
-offset range). A Kafka/binlog source would substitute discovery with offset
-ranges; apply_batch is source-agnostic.
+* ``run()`` discovers batch directories (``<batch_dir>/batch_<id>/*.parquet``),
+  consults the applied-offset map stored *in* the committed snapshot (the
+  checkpoint can never disagree with the data) and applies only the
+  unapplied batches in order;
+* ``run_stream()`` tails the same directory as a Structured Streaming query
+  (``readStream`` → ``foreachBatch`` under ``Trigger.AvailableNow``), the
+  streaming form of the reference's "rerun, pick up only new files"
+  (``scripts/train_llm.py:126-129``). Each epoch id is the batch id, so
+  exactly-once is double-gated: the streaming checkpoint redelivers an epoch
+  at-least-once with a stable id, and the table's applied gate turns the
+  redelivery into a no-op. A lost streaming checkpoint is survivable too;
+* ``run_log()`` tails an offset-addressed log (``sources.offsets.OffsetLog``,
+  the Kafka/binlog shape): it reads ``(committed, head]`` per partition as
+  one batch whose id is an md5 of the target offsets, and stores the
+  advanced offsets in the same snapshot summary as the data.
+
+Crash anywhere → rerun resumes from the last committed snapshot and
+converges to the identical final state (checkpoint-resume invariant,
+BASELINE.json:north_star).
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
 import re
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
-from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
+from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
 from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.sources.offsets import OFFSETS_KEY, OffsetLog
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
 _MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
@@ -36,7 +53,7 @@ class CdcIngest:
     def __init__(
         self,
         table_path: str,
-        batch_dir: str,
+        batch_dir: str | None = None,
         num_buckets: int = 16,
         normalize_text: bool = True,
         compact_max_files: int | None = 4,
@@ -44,20 +61,23 @@ class CdcIngest:
         truncate_keep: int | None = 4096,
         compact_target_file_rows: int | None = None,
     ):
-        """Batches append O(batch) delta files; with
-        ``compact_max_files=k`` any bucket accumulating more than k delta
-        files is compacted inline (a data-only snapshot — resumable like
-        every other commit). ``compact_max_files=None`` disables
-        auto-compaction.
+        """``batch_dir`` is the source of ``run()`` and ``run_stream()``;
+        ``run_log()`` takes its log as an argument and needs none.
+
+        Batches append O(batch) delta files; with ``compact_max_files=k``
+        any bucket accumulating more than k delta files is compacted
+        inline (a data-only snapshot — resumable like every other commit).
+        ``None`` disables auto-compaction.
 
         ``truncate_keep`` bounds the applied-batch ledger: once more than
         that many entries are committed, a maintenance commit folds the
         contiguous prefix into the ``applied_floor`` low watermark
         (``LakeTable.truncate_applied``) — the soak showed ~300 B/batch
         manifest growth otherwise, which matters at 10⁵+ batches. Runs at
-        most once per ``run()``, after the batch loop, so it costs one
-        manifest write per ingest cycle, not per batch. ``None``
-        disables.
+        most once per run, after its last batch, so it costs one manifest
+        write per ingest cycle, not per batch. ``None`` disables. The
+        hashed batch ids of ``run_log()`` are not a contiguous sequence and
+        never fold into the floor, so this does not bound that ledger.
 
         ``compact_target_file_rows`` caps rows per compacted file: big
         buckets split into key-contiguous files whose harvested manifest
@@ -85,7 +105,7 @@ class CdcIngest:
 
     def discover(self) -> list[tuple[int, str]]:
         out = []
-        if not os.path.isdir(self.batch_dir):
+        if not self.batch_dir or not os.path.isdir(self.batch_dir):
             return out
         for name in os.listdir(self.batch_dir):
             m = _BATCH_RE.match(name)
@@ -94,15 +114,8 @@ class CdcIngest:
         return sorted(out)
 
     def pending(self) -> list[tuple[int, str]]:
-        t = self.table()
-        snap = t.current()
-        applied = set(snap.applied.keys())
-        floor = int(snap.summary.get("applied_floor", -1))
-        return [
-            (b, p)
-            for b, p in self.discover()
-            if str(b) not in applied and b > floor
-        ]
+        snap = self.table().current()
+        return [(b, p) for b, p in self.discover() if not snap.has_applied(b)]
 
     @staticmethod
     def _tune_split_size(spark: SparkSession, batch_path: str) -> None:
@@ -112,7 +125,7 @@ class CdcIngest:
         map stage — the CPU-heavy part of apply — serializes onto a few
         cores. Target ≈ 2 splits per core, floored at 4 MB; at 10^10-event
         scale batches are big and this converges back to the default.
-        Session-global: ``run()`` restores both keys when it returns."""
+        Session-global: every run restores both keys when it returns."""
         try:
             size = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -127,36 +140,17 @@ class CdcIngest:
         spark.conf.set(_MAX_PARTITION_BYTES, str(target))
         spark.conf.set(_OPEN_COST_BYTES, str(512 * 1024))
 
-    def run(
-        self, spark: SparkSession, max_batches: int | None = None
-    ) -> list[dict[str, Any]]:
-        """Apply pending batches in order; ``max_batches`` lets tests simulate
-        a crash between commits. The session's split-size settings are
-        restored on return, so later reads plan as if no ingest ran."""
+    @contextlib.contextmanager
+    def _run(self, spark: SparkSession):
+        """One ingest run: yields the table and the run's result list,
+        restores the split-size session conf however the run ends, and
+        truncates the applied ledger once if the run completes."""
         table = self.table()
-        results = []
+        results: list[dict[str, Any]] = []
         conf = spark.conf.getAll
         saved = {k: conf.get(k) for k in (_MAX_PARTITION_BYTES, _OPEN_COST_BYTES)}
         try:
-            for i, (batch_id, path) in enumerate(self.pending()):
-                if max_batches is not None and i >= max_batches:
-                    break
-                self._tune_split_size(spark, path)
-                events = spark.read.parquet(path)
-                results.append(
-                    apply_batch(
-                        spark,
-                        table,
-                        events,
-                        batch_id,
-                        normalize_text=self.normalize_text,
-                        quarantine_dir=self.quarantine_dir,
-                    )
-                )
-                table.compact_if_needed(
-                    spark, self.compact_max_files,
-                    target_file_rows=self.compact_target_file_rows,
-                )
+            yield table, results
         finally:
             for k, v in saved.items():
                 if v is None:
@@ -169,4 +163,102 @@ class CdcIngest:
             and len(table.current().applied) > self.truncate_keep
         ):
             table.truncate_applied(keep_last=self.truncate_keep)
+
+    def _apply(
+        self,
+        spark: SparkSession,
+        table: LakeTable,
+        events: DataFrame,
+        batch_id: int,
+        summary_extra: dict | None = None,
+    ) -> dict[str, Any]:
+        """The apply step every front-end shares: one exactly-once batch,
+        then the post-apply compaction policy."""
+        result = apply_batch(
+            spark,
+            table,
+            events,
+            batch_id,
+            normalize_text=self.normalize_text,
+            quarantine_dir=self.quarantine_dir,
+            summary_extra=summary_extra,
+        )
+        table.compact_if_needed(
+            spark, self.compact_max_files,
+            target_file_rows=self.compact_target_file_rows,
+        )
+        return result
+
+    def run(
+        self, spark: SparkSession, max_batches: int | None = None
+    ) -> list[dict[str, Any]]:
+        """Apply pending batch directories in order; ``max_batches`` lets
+        tests simulate a crash between commits."""
+        with self._run(spark) as (table, results):
+            for i, (batch_id, path) in enumerate(self.pending()):
+                if max_batches is not None and i >= max_batches:
+                    break
+                self._tune_split_size(spark, path)
+                events = spark.read.parquet(path)
+                results.append(self._apply(spark, table, events, batch_id))
+        return results
+
+    def run_stream(
+        self,
+        spark: SparkSession,
+        checkpoint_dir: str,
+        max_files_per_trigger: int | None = None,
+    ) -> list[dict[str, Any]]:
+        """Drain every event file now under ``batch_dir`` as a stream and
+        stop (``Trigger.AvailableNow``: the batch-equivalent streaming run
+        for incremental catch-up jobs). Each micro-batch is applied with
+        its epoch id as the batch id; ``max_files_per_trigger`` caps the
+        files per epoch."""
+        with self._run(spark) as (table, results):
+
+            def apply_epoch(df: DataFrame, epoch_id: int) -> None:
+                results.append(
+                    self._apply(df.sparkSession, table, df, int(epoch_id))
+                )
+
+            reader = spark.readStream.schema(EVENT_SCHEMA).option(
+                "recursiveFileLookup", "true"
+            )
+            if max_files_per_trigger:
+                reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+            q = (
+                reader.parquet(self.batch_dir)
+                .writeStream.foreachBatch(apply_epoch)
+                .option("checkpointLocation", checkpoint_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return results
+
+    def run_log(self, spark: SparkSession, log: OffsetLog) -> list[dict[str, Any]]:
+        """Apply everything between the committed offsets and the log head
+        as ONE batch; returns ``[]`` when caught up. The batch id is an md5
+        of the target offsets, stable across retries and processes, so a
+        crash after commit makes the retry a structural no-op and a crash
+        before commit re-reads the identical range. Each result carries the
+        committed ``offsets``."""
+        with self._run(spark) as (table, results):
+            since = dict(table.current().summary.get(OFFSETS_KEY, {}))
+            pending = {
+                p: hi
+                for p, hi in log.latest_offsets(spark).items()
+                if hi > since.get(p, -1)
+            }
+            if pending:
+                digest = hashlib.md5(repr(sorted(pending.items())).encode())
+                batch_id = int(digest.hexdigest()[:15], 16)
+                offsets = {**since, **pending}
+                # offsets land INSIDE the same snapshot as the data — the
+                # checkpoint can never disagree with the table
+                result = self._apply(
+                    spark, table, log.read(spark, since, pending), batch_id,
+                    summary_extra={OFFSETS_KEY: offsets},
+                )
+                results.append({**result, "offsets": offsets})
         return results

@@ -14,6 +14,11 @@ Local smoke::
     python -m runyoro_llm_data_pipeline_spark.cli \
         --table /tmp/t --batch-dir /tmp/log --master "local[8]"
 
+``--streaming --checkpoint-dir DIR`` drains the same directory as a
+Structured Streaming query (``CdcIngest.run_stream``) instead of per batch
+directory (``CdcIngest.run``); both take the same compaction, ledger and
+normalization options. ``--max-batches`` is batch-directory only.
+
 Exit code 0 = all pending batches committed; the job is safe to re-run or
 to schedule at any cadence (exactly-once is enforced by the table's
 applied-offset gate, not by the scheduler).
@@ -60,36 +65,28 @@ def main(argv: list[str] | None = None) -> int:
                         "watermark); 0 disables")
     args = p.parse_args(argv)
 
+    if args.streaming and not args.checkpoint_dir:
+        p.error("--streaming requires --checkpoint-dir")
+    if args.streaming and args.max_batches is not None:
+        p.error("--max-batches applies to batch-directory ingest, not --streaming")
+
+    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
     from runyoro_llm_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="cdc-ingest", master=args.master)
+    ing = CdcIngest(
+        args.table,
+        args.batch_dir,
+        num_buckets=args.num_buckets,
+        normalize_text=not args.no_normalize,
+        compact_max_files=args.compact_max_files,
+        truncate_keep=args.truncate_keep or None,
+        compact_target_file_rows=args.compact_target_file_rows,
+    )
     t0 = time.perf_counter()
     if args.streaming:
-        if not args.checkpoint_dir:
-            p.error("--streaming requires --checkpoint-dir")
-        from runyoro_llm_data_pipeline_spark.streaming import CdcStreamIngest
-
-        ing = CdcStreamIngest(
-            args.table,
-            args.batch_dir,
-            args.checkpoint_dir,
-            num_buckets=args.num_buckets,
-            normalize_text=not args.no_normalize,
-            compact_max_files=args.compact_max_files,
-        )
-        results = ing.run_available_now(spark)
+        results = ing.run_stream(spark, args.checkpoint_dir)
     else:
-        from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-
-        ing = CdcIngest(
-            args.table,
-            args.batch_dir,
-            num_buckets=args.num_buckets,
-            normalize_text=not args.no_normalize,
-            compact_max_files=args.compact_max_files,
-            truncate_keep=args.truncate_keep or None,
-            compact_target_file_rows=args.compact_target_file_rows,
-        )
         results = ing.run(spark, max_batches=args.max_batches)
     dt = time.perf_counter() - t0
     table = ing.table()

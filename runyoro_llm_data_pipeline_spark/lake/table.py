@@ -95,6 +95,15 @@ class Snapshot:
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schema_json)
 
+    def has_applied(self, batch_id: int) -> bool:
+        """The exactly-once rule: ``batch_id`` is consumed iff its ledger
+        entry is live, or it sits at/below the ``applied_floor`` low
+        watermark (``truncate_applied`` folded its entry away; the floor's
+        contract is that the whole contiguous prefix was applied)."""
+        return str(batch_id) in self.applied or batch_id <= int(
+            self.summary.get("applied_floor", -1)
+        )
+
     def to_json(self) -> str:
         return json.dumps(
             {
@@ -182,50 +191,28 @@ def _exclusive_write(path: str, content: str) -> None:
         os.fsync(fh.fileno())
 
 
-def _harvest_key_ranges(root: str, entries: list[dict], key: str) -> None:
-    """Attach per-file ``min_key``/``max_key`` of ``key`` (from parquet
-    footers, threaded, O(files) driver-side — the same trick as the
-    lineage footer harvest) to manifest entries in place. Iceberg keeps the
-    same per-data-file column bounds in its manifests; here they let a
-    point lookup prune *files* inside the already-pruned bucket before
-    parquet row-group stats prune pages. Only meaningful for key-sorted
-    writes (compaction/rebucket) where files cover disjoint key ranges.
-
-    Any stats gap (missing footer statistics, type surprises, truncated
-    bounds) simply leaves the entry without a range — an unranged file is
-    always read, so the harvest can only cost performance, never
-    correctness."""
-    from concurrent.futures import ThreadPoolExecutor
-
+def footer_bounds(path: str, column: str) -> tuple[int, Any, Any]:
+    """``(num_rows, min, max)`` of ``column`` from one parquet file's
+    footer — O(footer), no data read, no Spark job (the trick Iceberg
+    manifests use for column bounds). The bounds are ``None`` unless every
+    row group carries min/max statistics for the column: partial stats
+    make no claim. Errors (missing or torn file) propagate; each caller
+    decides what a failure means."""
     import pyarrow.parquet as pq
 
-    def one(e: dict) -> None:
-        try:
-            md = pq.ParquetFile(os.path.join(root, e["path"])).metadata
-            idx = next(
-                (
-                    i
-                    for i in range(md.num_columns)
-                    if md.schema.column(i).name == key
-                ),
-                None,
-            )
-            if idx is None:
-                return
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return  # partial stats → make no claim for this file
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None:
-                e["min_key"], e["max_key"] = lo, hi
-        except Exception:
-            return
-
-    with ThreadPoolExecutor(max_workers=min(16, max(len(entries), 1))) as ex:
-        list(ex.map(one, entries))
+    md = pq.ParquetFile(path).metadata
+    idx = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).name == column),
+        None,
+    )
+    lo = hi = None
+    for rg in range(md.num_row_groups if idx is not None else 0):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return md.num_rows, None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return md.num_rows, lo, hi
 
 
 def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -511,6 +498,37 @@ class LakeTable:
             )
 
     # ----------------------------------------------------------------- read
+    def _scan(
+        self,
+        spark: SparkSession,
+        schema: T.StructType,
+        files: list[dict[str, Any]],
+        collapse: bool = False,
+    ) -> DataFrame:
+        """The one merge-on-read scan: ``files`` at ``schema`` (explicit,
+        so older files missing newly-added columns yield nulls), collapsed
+        latest-wins per key when any of them is a delta file or
+        ``collapse`` is set. No files → an empty frame. Stored rows:
+        tombstones and internal version columns included."""
+        if not files:
+            return spark.createDataFrame([], schema)
+        df = spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f["path"]) for f in files]
+        )
+        if collapse or any(f.get("kind", "base") == "delta" for f in files):
+            df = collapse_stored(df, self.key_cols)
+        return df
+
+    @staticmethod
+    def _public_view(df: DataFrame) -> DataFrame:
+        """Stored rows → public rows: tombstones filtered, internal CDC
+        version columns dropped."""
+        if DELETED not in df.columns:
+            return df
+        return df.filter(~F.coalesce(F.col(DELETED), F.lit(False))).drop(
+            *[c for c in INTERNAL_COLS if c in df.columns]
+        )
+
     def read(
         self,
         spark: SparkSession,
@@ -518,44 +536,17 @@ class LakeTable:
         include_internal: bool = False,
     ) -> DataFrame:
         """Read the table at a snapshot (time travel) — by version number
-        or by tag name (``table.read(spark, "certified-v1")``). Explicit
-        schema makes older files missing newly-added columns yield nulls.
-        By default the public view is returned: tombstones filtered,
-        internal CDC version columns dropped."""
+        or by tag name (``table.read(spark, "certified-v1")``). Fully
+        compacted snapshots skip the merge-on-read collapse. By default
+        the public view is returned: tombstones filtered, internal CDC
+        version columns dropped."""
         snap = (
             self.current()
             if version is None
             else self.snapshot(self.resolve_ref(version))
         )
-        schema = snap.schema()
-        paths = [os.path.join(self.path, f["path"]) for f in snap.files]
-        if not paths:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = spark.read.schema(schema).parquet(*paths)
-        # merge-on-read: when any delta files exist, collapse base ∪ deltas
-        # per key before serving (one hash aggregate; fully compacted
-        # snapshots skip this entirely)
-        if any(f.get("kind", "base") == "delta" for f in snap.files):
-            df = collapse_stored(df, self.key_cols)
-        if include_internal or DELETED not in df.columns:
-            return df
-        return df.filter(~F.coalesce(F.col(DELETED), F.lit(False))).drop(
-            *[c for c in INTERNAL_COLS if c in df.columns]
-        )
-
-    def read_buckets(
-        self, spark: SparkSession, buckets: set[int], snap: Snapshot
-    ) -> DataFrame:
-        schema = snap.schema()
-        paths = [
-            os.path.join(self.path, f["path"])
-            for f in snap.files
-            if f["bucket"] in buckets
-        ]
-        if not paths:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*paths)
+        df = self._scan(spark, snap.schema(), snap.files)
+        return df if include_internal else self._public_view(df)
 
     def read_conversation(self, spark: SparkSession, conv_id: str) -> DataFrame:
         """Point lookup: read ONE conversation by pruning to its hash
@@ -566,20 +557,8 @@ class LakeTable:
         serving path."""
         snap = self.current()
         _bucket, cand = self.candidate_files_for_key(spark, conv_id, snap)
-        schema = snap.schema()
-        paths = [os.path.join(self.path, f["path"]) for f in cand]
-        if not paths:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = spark.read.schema(schema).parquet(*paths)
-        if any(f.get("kind", "base") == "delta" for f in cand):
-            df = collapse_stored(df, self.key_cols)
-        out = df.filter(F.col(self.key_cols[0]) == conv_id)
-        if DELETED in out.columns:
-            out = out.filter(~F.coalesce(F.col(DELETED), F.lit(False))).drop(
-                *[c for c in INTERNAL_COLS if c in out.columns]
-            )
-        return out
+        df = self._scan(spark, snap.schema(), cand)
+        return self._public_view(df.filter(F.col(self.key_cols[0]) == conv_id))
 
     def read_incremental(
         self, spark: SparkSession, since_version: int
@@ -634,44 +613,31 @@ class LakeTable:
                     "fall back to a full read"
                 ) from e
         parent_paths = {f["path"] for f in s.files}  # s == since snapshot
-        new_paths: list[str] = []
+        new_files: list[dict[str, Any]] = []
         for snap in reversed(chain):
             if snap.commit_type == "data":
-                for f in snap.files:
-                    if f["path"] not in parent_paths:
-                        new_paths.append(f["path"])
+                new_files += [f for f in snap.files if f["path"] not in parent_paths]
             parent_paths = {f["path"] for f in snap.files}
-        schema = cur.schema()
-        if not new_paths:
-            return spark.createDataFrame([], schema)
-        missing = [p for p in new_paths if not os.path.exists(os.path.join(self.path, p))]
+        missing = [
+            f["path"] for f in new_files
+            if not os.path.exists(os.path.join(self.path, f["path"]))
+        ]
         if missing:
             raise IncrementalHistoryError(
                 f"{len(missing)} data file(s) from the incremental window "
                 f"were removed (e.g. {missing[0]!r}) — history was cleaned "
                 "up; fall back to a full read"
             )
-        df = spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, p) for p in new_paths]
-        )
         # latest-wins within the consumed window (a key may appear in
         # several new commits)
-        return collapse_stored(df, self.key_cols)
+        return self._scan(spark, cur.schema(), new_files, collapse=True)
 
     def was_applied(self, batch_id: int) -> bool:
-        """Floor-aware idempotency probe: True iff ``batch_id`` is
-        known-consumed — either its ledger entry is live in the current
-        snapshot, or it sits at/below the ``applied_floor`` low watermark
-        (``truncate_applied`` folded its entry away; the floor's contract
-        is that the whole contiguous prefix was applied). This is the
-        check ``apply_batch`` runs before doing any work, exposed for
-        source connectors that want to prune already-consumed offset
-        ranges before even reading them."""
-        snap = self.current()
-        return (
-            str(batch_id) in snap.applied
-            or batch_id <= int(snap.summary.get("applied_floor", -1))
-        )
+        """Floor-aware idempotency probe on the current snapshot
+        (``Snapshot.has_applied``): the check ``apply_batch`` runs before
+        doing any work, exposed for source connectors that want to prune
+        already-consumed offset ranges before even reading them."""
+        return self.current().has_applied(batch_id)
 
     def version_for_batch(self, batch_id: int) -> int:
         """Resolve the snapshot version whose data commit applied
@@ -833,8 +799,30 @@ class LakeTable:
             # key-sorted writes (compaction/rebucket) get per-file key
             # bounds in the manifest; hot-path delta writes skip the
             # harvest along with the sort
-            _harvest_key_ranges(self.path, entries, sort_cols[0])
+            self._harvest_key_ranges(entries, sort_cols[0])
         return entries
+
+    def _harvest_key_ranges(self, entries: list[dict], key: str) -> None:
+        """Attach per-file ``min_key``/``max_key`` of ``key`` from the
+        parquet footers (threaded, O(files) driver-side) to manifest
+        entries in place. They let a point lookup prune *files* inside the
+        already-pruned bucket before parquet row-group stats prune pages.
+        Only meaningful for key-sorted writes, where files cover disjoint
+        key ranges. Any failure or stats gap leaves the entry unranged,
+        and an unranged file is always read: the harvest can only cost
+        performance, never correctness."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        def one(e: dict) -> None:
+            try:
+                _, lo, hi = footer_bounds(os.path.join(self.path, e["path"]), key)
+            except Exception:
+                return
+            if lo is not None:
+                e["min_key"], e["max_key"] = lo, hi
+
+        with ThreadPoolExecutor(max_workers=min(16, max(len(entries), 1))) as ex:
+            list(ex.map(one, entries))
 
     # ----------------------------------------------------------- compaction
     def buckets_needing_compaction(self, max_files: int = 4) -> set[int]:
@@ -923,10 +911,11 @@ class LakeTable:
         }
         if not buckets:
             return 0
-        df = self.read_buckets(spark, buckets, snap)
-        compacted = collapse_stored(df, self.key_cols).withColumn(
-            "__bucket", self.bucket_expr(self.key_cols[0])
+        df = self._scan(
+            spark, snap.schema(),
+            [f for f in snap.files if f["bucket"] in buckets], collapse=True,
         )
+        compacted = df.withColumn("__bucket", self.bucket_expr(self.key_cols[0]))
         version = snap.version + 1
         new_files = self.write_data_files(
             compacted, version, buckets_hint=max(len(buckets), 1), kind="base",
@@ -1138,10 +1127,7 @@ class LakeTable:
         unaffected; readers before/after the commit see consistent state
         (snapshot isolation)."""
         snap = self.current()
-        df = self.read_buckets(spark, {f["bucket"] for f in snap.files}, snap)
-        collapsed = collapse_stored(df, self.key_cols) if any(
-            f.get("kind", "base") == "delta" for f in snap.files
-        ) else df
+        collapsed = self._scan(spark, snap.schema(), snap.files)
         old_n = self.num_buckets
         self.num_buckets = new_num_buckets
         try:

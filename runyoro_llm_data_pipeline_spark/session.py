@@ -3,8 +3,11 @@
 The reference has no session concept (single Python process,
 ``scripts/process_raw_data.py:46-54`` runs sources strictly sequentially);
 here every job shares a tuned session. Scale knobs are explicit so the same
-code runs on ``local[8]``/``local[32]`` in the sandbox and on a 1000-executor
-cluster via ``spark-submit --py-files`` with ``--conf`` overrides.
+code runs in local mode and on a 1000-executor cluster via ``spark-submit
+--py-files`` with ``--conf`` overrides. Local defaults are sized to the
+host: ``local[<CPUs this process may use>]`` and a driver heap of at most
+half the physical memory (``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM``
+override them).
 """
 
 from __future__ import annotations
@@ -12,6 +15,26 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_MB = 24 * 1024
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on — ``$SPARK_GRAFT_CPUS`` if set, else
+    the scheduler affinity mask (a container's CPU set, not the machine's
+    core count). The default local parallelism of every harness."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM`` if set, else half the physical memory, capped
+    at 24 GB: a local-mode driver holds the executors too, and a heap
+    larger than RAM ends in the OOM killer, not in a Java error."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, _MAX_DRIVER_MB)}m"
 
 
 def get_spark(
@@ -22,7 +45,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    Defaults: master from ``$SPARK_GRAFT_CPUS`` (``local[N]``), shuffle
+    Defaults: master ``local[host_cpus()]``, driver heap
+    ``default_driver_memory()``, shuffle
     partitions ≈ cores (never the 200 default — wrong at both ends), AQE on
     with skew-join splitting, Arrow on for all pandas-UDF exchange, UTC
     session time zone (oracle comparisons are TZ-sensitive).
@@ -44,8 +68,7 @@ def get_spark(
     # master= argument still wins (the CLI's --master override).
     under_spark_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     if shuffle_partitions is None and under_spark_submit:
         # respect a launcher-provided --conf; fall through to our default
         # (NOT Spark's 200) only when the operator set nothing. SparkConf
@@ -86,7 +109,7 @@ def get_spark(
         .config("spark.sql.parquet.mergeSchema", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -3,6 +3,6 @@ from runyoro_llm_data_pipeline_spark.sources.jsonl import (  # noqa: F401
     write_events_jsonl,
 )
 from runyoro_llm_data_pipeline_spark.sources.offsets import (  # noqa: F401
-    OffsetRangeIngest,
+    OffsetLog,
     ParquetOffsetLog,
 )

@@ -1,3 +1,5 @@
 from runyoro_llm_data_pipeline_spark.streaming.ingest_stream import (  # noqa: F401
-    CdcStreamIngest,
+    conversation_sessions,
+    dedup_within_watermark,
+    turn_rate,
 )

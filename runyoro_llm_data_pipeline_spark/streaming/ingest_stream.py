@@ -1,108 +1,21 @@
-"""Structured Streaming front-end for the CDC engine.
+"""Streaming operators around the CDC engine.
 
-The batch ingest (``cdc.ingest.CdcIngest``) and this streaming ingest share
-one apply path: ``readStream`` over the event-log directory →
-``foreachBatch(apply_batch)`` with ``Trigger.AvailableNow`` — the streaming
-formalization of the reference's "rerun the pipeline, it picks up only new
-files" semantics (``scripts/train_llm.py:126-129``,
-``scripts/orchestrator.py:52-101``).
+The streaming *ingest* is ``cdc.ingest.CdcIngest.run_stream``: ``readStream``
+over the event-log directory → ``foreachBatch`` into the same apply step as
+the batch and offset-log front-ends, under ``Trigger.AvailableNow``.
 
-Exactly-once is *double-gated*:
-
-1. Spark's streaming checkpoint guarantees each micro-batch (epoch) is
-   delivered to ``foreachBatch`` at-least-once with a stable ``epoch_id``;
-2. the engine's applied-offset gate (epoch_id = batch_id recorded inside
-   the committed snapshot) turns redelivery into a no-op.
-
-Either mechanism alone suffices for idempotent replay; together a lost
-*streaming* checkpoint is also survivable (the table remembers what was
-applied). A Kafka/binlog source swaps the file source line only.
-
-Watermarked windowed aggregates (``turn_rate``, ``conversation_sessions``)
-show the engine's late-data metric surface — ``session_window`` is the
-streaming analogue of the reference's silence-gap segmentation
-(``scripts/audio_processing.py:42-47``).
+This module holds the watermarked operators that work on a streaming and a
+batch DataFrame alike (same code path, so batch parity is testable):
+windowed turn rate, ``session_window`` sessionization — the streaming
+analogue of the reference's silence-gap segmentation
+(``scripts/audio_processing.py:42-47``) — and wire-duplicate suppression
+ahead of the apply path.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
-from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
-from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
-
-
-class CdcStreamIngest:
-    """Tail an event-log directory as a stream and apply micro-batches to
-    the lake table with exactly-once semantics."""
-
-    def __init__(
-        self,
-        table_path: str,
-        source_dir: str,
-        checkpoint_dir: str,
-        num_buckets: int = 16,
-        normalize_text: bool = True,
-        compact_max_files: int | None = 8,
-        max_files_per_trigger: int | None = None,
-    ):
-        self.table_path = table_path
-        self.source_dir = source_dir
-        self.checkpoint_dir = checkpoint_dir
-        self.num_buckets = num_buckets
-        self.normalize_text = normalize_text
-        self.compact_max_files = compact_max_files
-        self.max_files_per_trigger = max_files_per_trigger
-        self.results: list[dict[str, Any]] = []
-
-    def table(self) -> LakeTable:
-        if os.path.exists(os.path.join(self.table_path, "_VERSION")):
-            return LakeTable.load(self.table_path)
-        return LakeTable.create(
-            self.table_path,
-            with_internal_schema(TRANSCRIPT_SCHEMA),
-            num_buckets=self.num_buckets,
-        )
-
-    def _apply_epoch(self, df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        table = self.table()
-        r = apply_batch(
-            spark,
-            table,
-            df,
-            batch_id=int(epoch_id),
-            normalize_text=self.normalize_text,
-        )
-        self.results.append(r)
-        table.compact_if_needed(spark, self.compact_max_files)
-
-    def run_available_now(self, spark: SparkSession) -> list[dict[str, Any]]:
-        """Drain everything currently in the source directory, then stop —
-        ``Trigger.AvailableNow``: the batch-equivalent streaming run used
-        for incremental catch-up jobs."""
-        self.results = []
-        reader = (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .option("recursiveFileLookup", "true")
-        )
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        stream = reader.parquet(self.source_dir)
-        q = (
-            stream.writeStream.foreachBatch(self._apply_epoch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return self.results
 
 
 def turn_rate(

@@ -209,13 +209,75 @@ def test_extreme_skew_hot_conversation(spark, tmp_lake, tmp_path_factory):
     assert hot > 0.8 * final.count()
 
 
-def test_run_leaves_session_conf_unchanged(spark, log, tmp_lake):
-    """Per-batch split sizing is scoped to the ingest: after run() every
-    session setting is back to what it was, including keys that were
-    unset before."""
+FRONT_ENDS = ("run", "run_stream", "run_log")
+TRUNCATE_KEEP = 2
+
+
+@pytest.fixture(scope="module")
+def front_ends(spark, log, tmp_path_factory):
+    """The fixture log (tool arrives at batch 2) ingested once through each
+    of CdcIngest's three front-ends, each into its own table, with the
+    session conf recorded around each run."""
+    from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA
+    from runyoro_llm_data_pipeline_spark.sources.offsets import ParquetOffsetLog
+
     batch_dir, _ = log
-    spark.conf.unset("spark.sql.files.openCostInBytes")
-    before = spark.conf.getAll
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
-    assert ing.run(spark, max_batches=2)
-    assert spark.conf.getAll == before
+    work = str(tmp_path_factory.mktemp("front_ends"))
+    olog = ParquetOffsetLog(os.path.join(work, "olog"))
+    olog.append(
+        spark.read.schema(EVENT_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(batch_dir)
+        .withColumn("log_part", F.pmod(F.xxhash64("conv_id"), F.lit(3)).cast("int"))
+    )
+    out = {}
+    for how in FRONT_ENDS:
+        ing = CdcIngest(
+            os.path.join(work, how), batch_dir, num_buckets=8,
+            truncate_keep=TRUNCATE_KEEP,
+        )
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+        before = spark.conf.getAll
+        if how == "run":
+            results = ing.run(spark)
+        elif how == "run_stream":
+            results = ing.run_stream(
+                spark, os.path.join(work, "cp"), max_files_per_trigger=16
+            )
+        else:
+            results = ing.run_log(spark, olog)
+        out[how] = (ing, results, before, spark.conf.getAll)
+    return out
+
+
+@pytest.mark.parametrize("how", FRONT_ENDS)
+def test_run_leaves_session_conf_unchanged(front_ends, how):
+    """Per-batch split sizing is scoped to the ingest: after every
+    front-end's run each session setting is back to what it was,
+    including keys that were unset before."""
+    _ing, results, before, after = front_ends[how]
+    assert results
+    assert after == before
+
+
+@pytest.mark.parametrize("how", FRONT_ENDS)
+def test_front_ends_agree(spark, log, front_ends, how):
+    """Batch directories, the streaming query and the offset log give the
+    same public table; run and run_stream keep the ledger within
+    truncate_keep (run_log's hashed batch ids never fold into the floor)."""
+    _, expected = log
+    ing, results, _, _ = front_ends[how]
+    assert all(r["status"] == "applied" for r in results)
+    public = ing.table().read(spark)
+    assert _sorted_rows(public) == expected
+    reference = front_ends["run"][0].table().read(spark)
+    cols = sorted(reference.columns)
+    assert sorted(public.columns) == cols
+    order = ["conv_id", "turn_idx"]
+    assert (
+        public.select(*cols).orderBy(*order).collect()
+        == reference.select(*cols).orderBy(*order).collect()
+    )
+    if how != "run_log":
+        assert len(results) > TRUNCATE_KEEP
+        assert len(ing.table().current().applied) <= TRUNCATE_KEEP

@@ -39,6 +39,51 @@ def test_cli_ingest_roundtrip(spark, tmp_lake, tmp_path_factory):
     assert CdcIngest(table, log_dir).run(spark) == []
 
 
+def test_cli_streaming_takes_ledger_and_compaction_options(
+    spark, tmp_lake, tmp_path_factory
+):
+    """``--streaming`` runs the same ingest driver as batch mode, so
+    ``--truncate-keep`` bounds its ledger and ``--compact-target-file-rows``
+    splits the buckets it compacts. Two invocations, one new batch each,
+    give two epochs."""
+    from pyspark.sql import functions as F
+
+    from runyoro_llm_data_pipeline_spark.cdc.generator import (
+        gen_change_log,
+        write_batch_files,
+    )
+    from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+
+    log_dir = str(tmp_path_factory.mktemp("clistreamlog"))
+    events, _ = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=2)
+    table = os.path.join(tmp_lake, "t")
+    env = dict(os.environ, PYTHONPATH=REPO)
+    for b in (0, 1):
+        write_batch_files(
+            events.filter(F.col("batch_id") == b), log_dir, files_per_batch=2
+        )
+        out = subprocess.run(
+            [
+                sys.executable, "-m", "runyoro_llm_data_pipeline_spark.cli",
+                "--table", table, "--batch-dir", log_dir,
+                "--streaming", "--checkpoint-dir", os.path.join(tmp_lake, "cp"),
+                "--num-buckets", "4", "--master", "local[2]",
+                "--truncate-keep", "1", "--compact-max-files", "0",
+                "--compact-target-file-rows", "10",
+            ],
+            capture_output=True, text=True, env=env, cwd=REPO, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert json.loads(out.stdout.strip().splitlines()[-1])["batches_applied"] == 1
+    snap = LakeTable.load(table).current()
+    assert list(snap.applied) == ["1"] and snap.summary["applied_floor"] == 0
+    per_bucket = {}
+    for f in snap.files:
+        assert f["kind"] == "base" and "min_key" in f
+        per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+    assert max(per_bucket.values()) > 1
+
+
 def test_spark_submit_py_files_separate_executor_jvms(
     spark, tmp_lake, tmp_path_factory
 ):

@@ -31,15 +31,12 @@ def test_concurrent_commit_conflict_detected(spark, tmp_lake):
 
     from runyoro_llm_data_pipeline_spark.cdc.apply import _apply_mor
 
-    r1 = _apply_mor(
-        spark, t, _batch(spark, 1, 0, "writer1"), 0, False, ("conv_id", "turn_idx"),
-        snap,
-    )
+    r1 = _apply_mor(spark, t, _batch(spark, 1, 0, "writer1"), 0, False, snap)
     assert r1["status"] == "applied"
     with pytest.raises(CommitConflictError):
         _apply_mor(
             spark, t, _batch(spark, 2, 1, "writer2"), 1, False,
-            ("conv_id", "turn_idx"), snap,  # stale parent
+            snap,  # stale parent
         )
     rows = t.read(spark).collect()
     assert len(rows) == 1 and rows[0]["text"] == "writer1"
@@ -70,11 +67,9 @@ def test_orphan_cleanup_after_lost_race(spark, tmp_lake):
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
     snap = t.current()
-    _apply_mor(spark, t, _batch(spark, 1, 0, "w1"), 0, False,
-               ("conv_id", "turn_idx"), snap)
+    _apply_mor(spark, t, _batch(spark, 1, 0, "w1"), 0, False, snap)
     with pytest.raises(CommitConflictError):
-        _apply_mor(spark, t, _batch(spark, 2, 1, "w2"), 1, False,
-                   ("conv_id", "turn_idx"), snap)
+        _apply_mor(spark, t, _batch(spark, 2, 1, "w2"), 1, False, snap)
     # fresh files: age guard protects them
     assert t.cleanup_orphans(min_age_seconds=3600) == 0
     removed = t.cleanup_orphans(min_age_seconds=0)

@@ -6,9 +6,10 @@ import os
 from pyspark.sql import functions as F
 
 from runyoro_llm_data_pipeline_spark.cdc.generator import gen_change_log
+from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+from runyoro_llm_data_pipeline_spark.sources import offsets
 from runyoro_llm_data_pipeline_spark.sources.offsets import (
     OFFSETS_KEY,
-    OffsetRangeIngest,
     ParquetOffsetLog,
 )
 
@@ -34,24 +35,25 @@ def test_offset_tailing_incremental(spark, tmp_lake, tmp_path_factory):
 
     # producer writes the first half; consumer catches up
     log.append(ev.filter(F.col("batch_id") < 2))
-    ing = OffsetRangeIngest(os.path.join(tmp_lake, "t"), log, num_buckets=4)
-    r1 = ing.run(spark)
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), num_buckets=4)
+    r1 = ing.run_log(spark, log)
     assert len(r1) == 1 and r1[0]["status"] == "applied"
-    offs1 = ing.applied_offsets()
+    offs1 = ing.table().current().summary[OFFSETS_KEY]
+    assert offs1 == r1[0]["offsets"]
     assert offs1 and all(v >= 0 for v in offs1.values())
 
     # caught up → no-op
-    assert ing.run_once(spark) is None
+    assert ing.run_log(spark, log) == []
 
     # producer appends the rest; consumer applies only the delta
     log.append(ev.filter(F.col("batch_id") >= 2))
-    r2 = ing.run(spark)
+    r2 = ing.run_log(spark, log)
     assert len(r2) == 1
     assert r2[0]["min_lsn"] > -1
     final = ing.table().read(spark)
     assert _rows(final) == _rows(expected)
     # committed offsets advanced to the log head
-    offs2 = ing.applied_offsets()
+    offs2 = ing.table().current().summary[OFFSETS_KEY]
     assert offs2 == log.latest_offsets(spark)
 
 
@@ -64,18 +66,20 @@ def test_offset_checkpoint_is_atomic_with_data(spark, tmp_lake, tmp_path_factory
     ev = _with_parts(events, n_parts=2)
     log.append(ev.filter(F.col("batch_id") == 0))
     t_path = os.path.join(tmp_lake, "t")
-    OffsetRangeIngest(t_path, log, num_buckets=4).run(spark)
+    CdcIngest(t_path, num_buckets=4).run_log(spark, log)
 
     log.append(ev.filter(F.col("batch_id") == 1))
-    ing2 = OffsetRangeIngest(t_path, log, num_buckets=4)  # "restart"
-    ing2.run(spark)
+    ing2 = CdcIngest(t_path, num_buckets=4)  # "restart"
+    ing2.run_log(spark, log)
     assert _rows(ing2.table().read(spark)) == _rows(expected)
     # offsets live in the snapshot summary, versioned with the data
     snap = ing2.table().current()
     assert OFFSETS_KEY in snap.summary
 
 
-def test_latest_offsets_footer_only_and_incremental(spark, tmp_path_factory):
+def test_latest_offsets_footer_only_and_incremental(
+    spark, tmp_path_factory, monkeypatch
+):
     """Head discovery is O(new files): footers are read once per file and
     cached; a catch-up poll after new appends opens only the new files.
     No Spark job is involved at all."""
@@ -86,13 +90,13 @@ def test_latest_offsets_footer_only_and_incremental(spark, tmp_path_factory):
     log.append(ev.filter(F.col("batch_id") == 0))
 
     calls = []
-    orig = ParquetOffsetLog._file_max_lsn
+    orig = offsets.footer_bounds
 
-    def counting(path):
+    def counting(path, column):
         calls.append(path)
-        return orig(path)
+        return orig(path, column)
 
-    log._file_max_lsn = counting
+    monkeypatch.setattr(offsets, "footer_bounds", counting)
     first = log.latest_offsets(spark)
     n_first = len(calls)
     assert n_first > 0 and set(first) == {"0", "1"}

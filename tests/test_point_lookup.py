@@ -95,3 +95,55 @@ def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory)
         want = full.filter(full.conv_id == conv)
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
+
+
+def test_file_without_footer_stats_is_unranged_and_read(
+    spark, tmp_lake, tmp_path_factory
+):
+    """A parquet file written without column statistics lands in a
+    compacted (range-pruned) bucket: it gets no key range, so the lookup
+    planner always keeps it and ``read_conversation`` returns its rows."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from runyoro_llm_data_pipeline_spark.lake.table import (
+        DELETED,
+        VERSION_LSN,
+        VERSION_TS,
+        footer_bounds,
+    )
+
+    d = str(tmp_path_factory.mktemp("plns"))
+    events, _ = gen_change_log(spark, n_turns=600, n_convs=30, n_batches=2)
+    write_batch_files(events, d)
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=2)
+    ing.run(spark)
+    t = ing.table()
+    t.compact(spark, target_file_rows=60)
+
+    key = "conv_nostats"
+    bucket = t.bucket_for_key(spark, key)
+    snap = t.current()
+    assert all("min_key" in f for f in snap.files if f["bucket"] == bucket)
+    ts = datetime.datetime(2024, 1, 1)
+    row = {"conv_id": key, "turn_idx": 0, "role": "user", "text": "no stats",
+           "ts": ts, VERSION_TS: ts, VERSION_LSN: 10**9, DELETED: False}
+    schema = snap.schema()
+    df = spark.createDataFrame([tuple(row.get(f.name) for f in schema)], schema)
+    rel = os.path.join("data", "nostats", f"__bucket={bucket}", "part-0.parquet")
+    os.makedirs(os.path.dirname(os.path.join(t.path, rel)))
+    pq.write_table(df.toArrow(), os.path.join(t.path, rel), write_statistics=False)
+
+    assert footer_bounds(os.path.join(t.path, rel), "conv_id") == (1, None, None)
+    entry = {"path": rel, "bucket": bucket, "kind": "base"}
+    t._harvest_key_ranges([entry], "conv_id")
+    assert "min_key" not in entry and "max_key" not in entry
+    t.commit(
+        new_files=[entry], carried_files=list(snap.files), schema=schema,
+        applied_update={}, parent=snap, commit_type="maintenance",
+    )
+    _, cand = t.candidate_files_for_key(spark, key)
+    assert rel in [f["path"] for f in cand]
+    got = t.read_conversation(spark, key).collect()
+    assert [(r["turn_idx"], r["text"]) for r in got] == [(0, "no stats")]

@@ -10,8 +10,8 @@ from runyoro_llm_data_pipeline_spark.cdc.generator import (
     gen_change_log,
     write_batch_files,
 )
+from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.streaming.ingest_stream import (
-    CdcStreamIngest,
     conversation_sessions,
     turn_rate,
 )
@@ -36,14 +36,10 @@ def log(spark, tmp_path_factory):
 
 def test_stream_available_now_matches_expected(spark, log, tmp_lake):
     src, expected, _ = log
-    ing = CdcStreamIngest(
-        os.path.join(tmp_lake, "t"),
-        src,
-        os.path.join(tmp_lake, "cp"),
-        num_buckets=8,
-        max_files_per_trigger=4,
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), src, num_buckets=8)
+    results = ing.run_stream(
+        spark, os.path.join(tmp_lake, "cp"), max_files_per_trigger=4
     )
-    results = ing.run_available_now(spark)
     assert len(results) >= 2  # multiple micro-batches actually happened
     assert all(r["status"] == "applied" for r in results)
     assert _rows(ing.table().read(spark)) == expected
@@ -53,13 +49,13 @@ def test_stream_restart_is_noop_then_incremental(spark, log, tmp_lake):
     src, expected, events = log
     t = os.path.join(tmp_lake, "t")
     cp = os.path.join(tmp_lake, "cp")
-    ing = CdcStreamIngest(t, src, cp, num_buckets=8)
-    ing.run_available_now(spark)
+    ing = CdcIngest(t, src, num_buckets=8)
+    ing.run_stream(spark, cp)
     v1 = ing.table().current_version()
 
     # restart with same checkpoint: nothing new → no new commits
-    ing2 = CdcStreamIngest(t, src, cp, num_buckets=8)
-    r2 = ing2.run_available_now(spark)
+    ing2 = CdcIngest(t, src, num_buckets=8)
+    r2 = ing2.run_stream(spark, cp)
     assert all(x["status"] in ("applied", "skipped") for x in r2)
     assert ing2.table().current_version() == v1
     assert _rows(ing2.table().read(spark)) == expected
@@ -73,8 +69,8 @@ def test_stream_restart_is_noop_then_incremental(spark, log, tmp_lake):
      .withColumn("lsn", F.lit(10_000_000).cast("long")) \
      .withColumn("batch_id", F.lit(999).cast("long"))
     late.coalesce(1).write.mode("append").parquet(os.path.join(src, "late_batch"))
-    ing3 = CdcStreamIngest(t, src, cp, num_buckets=8)
-    r3 = ing3.run_available_now(spark)
+    ing3 = CdcIngest(t, src, num_buckets=8)
+    r3 = ing3.run_stream(spark, cp)
     assert any(x["status"] == "applied" for x in r3)
     final = ing3.table().read(spark)
     assert final.filter(F.col("conv_id") == "conv_late").count() == 1
