@@ -150,7 +150,7 @@ def main() -> None:
             "orphans_removed": orphans,
             "files_base": n_base,
             "files_delta": n_delta,
-            "files_per_bucket": round((n_base + n_delta) / table.num_buckets, 2),
+            "files_per_bucket": round((n_base + n_delta) / snap.num_buckets, 2),
             "manifest_bytes": manifest_bytes,
             "snapshot_dir_entries": n_snap_files,
             "lookup_p50_ms": round(1000 * lookups[len(lookups) // 2], 1),

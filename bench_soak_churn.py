@@ -219,7 +219,7 @@ def main() -> None:
             # snapshot, and a later rollback may unwind it — both paths
             # must stay convergent)
             t_rbk = time.perf_counter()
-            nb_new = 48 if table.num_buckets == 32 else 32
+            nb_new = 48 if table.current().num_buckets == 32 else 32
             table.rebucket(spark, nb_new)
             rebucketed = {
                 "num_buckets": nb_new,
@@ -278,7 +278,7 @@ def main() -> None:
             "rolled_back": rolled_back,
             "rebucketed": rebucketed,
             "race": race,
-            "num_buckets": table.num_buckets,
+            "num_buckets": snap.num_buckets,
             "was_resync": tok.was_resync,
             "replica_diff_rows": diff,
             "n_tags": len(table.tags()),

@@ -68,6 +68,7 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     VERSION_TS,
     CommitConflictError,
     LakeTable,
+    bucket_expr,
     footer_bounds,
 )
 
@@ -171,7 +172,7 @@ def _apply_mor(
     if normalize_text:
         valid = valid.withColumn("text", clean_and_preprocess_text_col(F.col("text")))
 
-    keys = table.key_cols
+    keys = snap.key_cols
     # map-side-combinable aggregate; the write below adds a second (cheap,
     # post-collapse) shuffle to bucket-align the files
     collapsed = collapse_latest_wins(valid, keys=keys)
@@ -182,11 +183,11 @@ def _apply_mor(
         F.col("__event_ts").alias(VERSION_TS),
         F.col("__lsn").alias(VERSION_LSN),
         (F.col("__op") == "delete").alias(DELETED),
-        table.bucket_expr(keys[0]).alias("__bucket"),
+        bucket_expr(keys[0], snap.num_buckets).alias("__bucket"),
     )
     version = snap.version + 1
     new_files = table.write_data_files(
-        incoming, version, kind="delta", salt_cols=keys
+        incoming, version, snap.num_buckets, kind="delta", salt_cols=keys
     )
     stats = _footer_stats(table, new_files)
     metrics = obs.get
@@ -199,11 +200,12 @@ def _apply_mor(
     applied_keys = sum(s["row_count"] for s in stats)
     sec = round(time.perf_counter() - t_start, 3)
     table.commit(
-        new_files=new_files,
-        carried_files=list(snap.files),
+        snap,
+        snap.files + new_files,
         schema=schema,
-        applied_update={str(batch_id): [min_lsn, max_lsn]},
-        summary_update={
+        applied={**snap.applied, str(batch_id): [min_lsn, max_lsn]},
+        summary={
+            **snap.summary,
             "last_batch_id": int(batch_id),
             "watermark_lsn": max(watermark, max_lsn),
             # per-batch job metrics, queryable from the snapshot history
@@ -214,7 +216,6 @@ def _apply_mor(
         lineage_rel_path=_write_lineage_driver_side(
             table, version, batch_id, stats
         ),
-        parent=snap,
     )
     return {
         "status": "applied",
@@ -240,32 +241,27 @@ def apply_batch(
     summary_extra: dict | None = None,
     max_commit_retries: int = 3,
 ) -> dict[str, Any]:
-    """Append the batch's per-key winners (keyed on ``table.key_cols``) as
-    per-bucket delta files with one write query — three Spark jobs under
-    AQE, see the module docstring (write-optimized — pair with
-    ``table.compact()``, which ``CdcIngest`` runs through
-    ``compact_if_needed`` after every batch).
+    """Append the batch's per-key winners (keyed on the current snapshot's
+    ``key_cols``, bucketed under its ``num_buckets``) as per-bucket delta
+    files with one write query — three Spark jobs under AQE, see the
+    module docstring (write-optimized — pair with ``table.compact()``,
+    which ``CdcIngest`` runs through ``compact_if_needed`` after every
+    batch).
 
     **Optimistic concurrency with bounded retry**: if another writer
     commits between this call's snapshot read and its pointer swap (e.g.
     an overlapping cron launch of the reference's run-again-forever loop,
     ``train_llm.py:126-129``), the atomic commit raises
     ``CommitConflictError``; this call then re-reads the fresh snapshot
-    and retries up to ``max_commit_retries`` times. The applied-offset
-    gate is re-checked on every attempt, so if the competing writer
-    applied the SAME batch the retry degrades to ``status='skipped'`` —
-    exactly-once holds under any interleaving. Data files staged by a
+    (layout included, so a rival's ``rebucket`` is honoured) and retries
+    up to ``max_commit_retries`` times. The applied-offset gate is
+    re-checked on every attempt, so if the competing writer applied the
+    SAME batch the retry degrades to ``status='skipped'`` — exactly-once
+    holds under any interleaving. Data files staged by a
     lost attempt are unreferenced and reclaimed by ``cleanup_orphans``."""
     attempt = 0
     while True:
         snap = table.current()
-        # refresh handle state the snapshot is authoritative for: a rival
-        # rebucket() between attempts would otherwise leave this handle
-        # computing bucket_expr against the old modulus (the same staleness
-        # class as the rollback num_buckets fix, lake/table.py:400)
-        table.num_buckets = int(
-            snap.summary.get("num_buckets", table.num_buckets)
-        )
         if snap.has_applied(batch_id):
             return {
                 "status": "skipped", "batch_id": batch_id,

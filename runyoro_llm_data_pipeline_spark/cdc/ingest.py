@@ -95,8 +95,7 @@ class CdcIngest:
         self.compact_target_file_rows = compact_target_file_rows
 
     def table(self) -> LakeTable:
-        if os.path.exists(os.path.join(self.table_path, "_VERSION")):
-            return LakeTable.load(self.table_path)
+        """Open the table, creating it with ``num_buckets`` on first use."""
         return LakeTable.create(
             self.table_path,
             with_internal_schema(TRANSCRIPT_SCHEMA),

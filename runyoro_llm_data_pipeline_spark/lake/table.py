@@ -72,9 +72,19 @@ VERSION_LSN = "_cdc_lsn"
 DELETED = "_cdc_deleted"
 INTERNAL_COLS = (VERSION_TS, VERSION_LSN, DELETED)
 
+# the default layout, also assumed for manifests older than the summary keys
+DEFAULT_NUM_BUCKETS = 16
+DEFAULT_KEY_COLS = ("conv_id", "turn_idx")
+
 
 @dataclass
 class Snapshot:
+    """One committed table version. It owns the table layout: the bucket
+    modulus and the key columns live in ``summary``, so every operation
+    plans against the layout of the snapshot it read, and a handle holds
+    no copy that another writer's ``rebucket``/``rollback`` could make
+    stale."""
+
     version: int
     parent: int | None
     schema_json: dict[str, Any]
@@ -94,6 +104,14 @@ class Snapshot:
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schema_json)
+
+    @property
+    def num_buckets(self) -> int:
+        return int(self.summary.get("num_buckets", DEFAULT_NUM_BUCKETS))
+
+    @property
+    def key_cols(self) -> list[str]:
+        return list(self.summary.get("key_cols", DEFAULT_KEY_COLS))
 
     def has_applied(self, batch_id: int) -> bool:
         """The exactly-once rule: ``batch_id`` is consumed iff its ledger
@@ -215,6 +233,13 @@ def footer_bounds(path: str, column: str) -> tuple[int, Any, Any]:
     return md.num_rows, lo, hi
 
 
+def bucket_expr(key, num_buckets: int):
+    """The engine's hash bucket of ``key`` (a column name or a Column):
+    ``pmod(xxhash64(key), num_buckets)``. Writes, compaction, rebucket and
+    point-lookup planning all use this one expression."""
+    return F.pmod(F.xxhash64(key), F.lit(num_buckets)).cast("int")
+
+
 def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
     """Latest-wins collapse of *stored* rows (base ∪ delta files) by the
     internal version columns — the read-side half of merge-on-read. Same
@@ -238,30 +263,34 @@ class LakeTable:
     (file entries carry ``kind: base|delta``) come only from ``compact()``,
     which folds a bucket's files back into key-sorted base files, and
     ``rebucket()``.
+
+    The handle holds only the table's path. Layout (bucket modulus, key
+    columns) is read from the snapshot each operation plans against, so
+    two handles on one path always agree with the committed table.
     """
 
     # a partial snapshot manifest older than this is considered abandoned
     # by a dead writer and may be reclaimed during commit
     stale_manifest_seconds: float = 300.0
 
-    def __init__(self, path: str, num_buckets: int = 16):
+    def __init__(self, path: str):
         self.path = os.path.abspath(path)
-        self.num_buckets = num_buckets
-        self.key_cols = ["conv_id", "turn_idx"]
 
     # ---------------------------------------------------------------- setup
     @staticmethod
     def create(
         path: str,
         schema: T.StructType,
-        num_buckets: int = 16,
-        key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+        num_buckets: int = DEFAULT_NUM_BUCKETS,
+        key_cols: tuple[str, ...] = DEFAULT_KEY_COLS,
     ) -> "LakeTable":
+        """Create the table at ``path`` with this layout, or open it if it
+        exists (the arguments are then ignored: the committed snapshot
+        owns the layout)."""
         os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
-        t = LakeTable(path, num_buckets)
-        t.key_cols = list(key_cols)
+        t = LakeTable(path)
         if t.current_version() is None:
             snap = Snapshot(
                 version=0,
@@ -274,18 +303,13 @@ class LakeTable:
             t._write_snapshot(snap)
         else:
             t.recover()
-            cur = t.current()
-            t.num_buckets = cur.summary.get("num_buckets", num_buckets)
-            t.key_cols = cur.summary.get("key_cols", list(key_cols))
         return t
 
     @staticmethod
     def load(path: str) -> "LakeTable":
         t = LakeTable(path)
         t.recover()
-        cur = t.current()
-        t.num_buckets = cur.summary.get("num_buckets", 16)
-        t.key_cols = cur.summary.get("key_cols", ["conv_id", "turn_idx"])
+        t.current()  # raises FileNotFoundError when no table is at path
         return t
 
     # ------------------------------------------------------------ snapshots
@@ -363,26 +387,18 @@ class LakeTable:
         wholesale, not merged."""
         target = self.snapshot(self.resolve_ref(version_or_ref))
         cur = self.current()
-        snap = self.commit(
-            new_files=[],
-            carried_files=list(target.files),
+        return self.commit(
+            cur,
+            target.files,
             schema=target.schema(),
-            applied_update={},
-            applied_replace=dict(target.applied),
-            summary_replace=dict(target.summary),
-            summary_update={
+            applied=target.applied,
+            summary={
+                **target.summary,
                 "rolled_back_from": cur.version,
                 "rolled_back_to": target.version,
             },
-            parent=cur,
             commit_type="rollback",
         )
-        # Rolling back across a rebucket() must also restore the live
-        # object's modulus (mirrors LakeTable.open's summary read) —
-        # otherwise bucket_expr/candidate_files_for_key silently compute
-        # against the wrong bucket count until the table is reopened.
-        self.num_buckets = target.summary.get("num_buckets", self.num_buckets)
-        return snap
 
     def maintain(
         self,
@@ -499,24 +515,26 @@ class LakeTable:
 
     # ----------------------------------------------------------------- read
     def _scan(
-        self,
-        spark: SparkSession,
-        schema: T.StructType,
-        files: list[dict[str, Any]],
-        collapse: bool = False,
+        self, spark: SparkSession, snap: Snapshot, files: list[dict[str, Any]]
     ) -> DataFrame:
-        """The one merge-on-read scan: ``files`` at ``schema`` (explicit,
-        so older files missing newly-added columns yield nulls), collapsed
-        latest-wins per key when any of them is a delta file or
-        ``collapse`` is set. No files → an empty frame. Stored rows:
-        tombstones and internal version columns included."""
+        """The one merge-on-read scan: ``files`` at ``snap``'s schema
+        (explicit, so older files missing newly-added columns yield
+        nulls), collapsed latest-wins per ``snap.key_cols`` if and only if
+        a delta file is in the set. No files → an empty frame. Stored
+        rows: tombstones and internal version columns included.
+
+        A base-only set needs no collapse because base files come only
+        from collapsed rewrites (``compact``/``rebucket``), each of which
+        replaces every file of the buckets it reads: no two base files
+        share a key."""
+        schema = snap.schema()
         if not files:
             return spark.createDataFrame([], schema)
         df = spark.read.schema(schema).parquet(
             *[os.path.join(self.path, f["path"]) for f in files]
         )
-        if collapse or any(f.get("kind", "base") == "delta" for f in files):
-            df = collapse_stored(df, self.key_cols)
+        if any(f.get("kind", "base") == "delta" for f in files):
+            df = collapse_stored(df, snap.key_cols)
         return df
 
     @staticmethod
@@ -545,7 +563,7 @@ class LakeTable:
             if version is None
             else self.snapshot(self.resolve_ref(version))
         )
-        df = self._scan(spark, snap.schema(), snap.files)
+        df = self._scan(spark, snap, snap.files)
         return df if include_internal else self._public_view(df)
 
     def read_conversation(self, spark: SparkSession, conv_id: str) -> DataFrame:
@@ -557,8 +575,8 @@ class LakeTable:
         serving path."""
         snap = self.current()
         _bucket, cand = self.candidate_files_for_key(spark, conv_id, snap)
-        df = self._scan(spark, snap.schema(), cand)
-        return self._public_view(df.filter(F.col(self.key_cols[0]) == conv_id))
+        df = self._scan(spark, snap, cand)
+        return self._public_view(df.filter(F.col(snap.key_cols[0]) == conv_id))
 
     def read_incremental(
         self, spark: SparkSession, since_version: int
@@ -628,9 +646,9 @@ class LakeTable:
                 f"were removed (e.g. {missing[0]!r}) — history was cleaned "
                 "up; fall back to a full read"
             )
-        # latest-wins within the consumed window (a key may appear in
-        # several new commits)
-        return self._scan(spark, cur.schema(), new_files, collapse=True)
+        # data commits add delta files, so the scan collapses latest-wins
+        # within the consumed window (a key may appear in several commits)
+        return self._scan(spark, cur, new_files)
 
     def was_applied(self, batch_id: int) -> bool:
         """Floor-aware idempotency probe on the current snapshot
@@ -699,28 +717,21 @@ class LakeTable:
 
     def metrics_history(self) -> list[dict[str, Any]]:
         """Per-commit job metrics from the snapshot chain — the queryable
-        form of the reference's ledger entries (throughput report)."""
-        out = []
-        prev_applied = -1
-        for s in self.history():
-            if "last_batch_id" not in s.summary:
-                prev_applied = max(prev_applied, len(s.applied))
-                continue
-            # compaction/maintenance commits inherit the parent summary —
-            # only snapshots that actually applied a new batch count
-            if len(s.applied) <= prev_applied:
-                continue
-            prev_applied = len(s.applied)
-            out.append(
-                {
-                    "version": s.version,
-                    "batch_id": s.summary.get("last_batch_id"),
-                    "sec": s.summary.get("last_batch_sec"),
-                    "keys": s.summary.get("last_batch_keys"),
-                    "watermark_lsn": s.summary.get("watermark_lsn"),
-                }
-            )
-        return out
+        form of the reference's ledger entries (throughput report). One
+        row per batch-applying commit, identified as in
+        ``version_for_batch``: maintenance and rollback commits inherit
+        the parent summary and are skipped."""
+        return [
+            {
+                "version": s.version,
+                "batch_id": s.summary["last_batch_id"],
+                "sec": s.summary.get("last_batch_sec"),
+                "keys": s.summary.get("last_batch_keys"),
+                "watermark_lsn": s.summary.get("watermark_lsn"),
+            }
+            for s in self.history()
+            if s.commit_type == "data" and "last_batch_id" in s.summary
+        ]
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
         snap = self.current()
@@ -730,14 +741,11 @@ class LakeTable:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(*paths)
 
     # ---------------------------------------------------------------- write
-    def bucket_expr(self, key_col: str = "conv_id"):
-        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(self.num_buckets)).cast("int")
-
     def write_data_files(
         self,
         df: DataFrame,
         version: int,
-        buckets_hint: int | None = None,
+        n_buckets: int,
         kind: str = "base",
         salt_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
@@ -746,7 +754,9 @@ class LakeTable:
         """Write ``df`` (must contain ``__bucket``) into this snapshot's data
         dir, one Parquet directory partition per bucket; returns manifest
         entries tagged ``kind`` (base = pre-collapsed, delta = MOR append).
-        Uses ``partitionBy`` so file→bucket is structural.
+        Uses ``partitionBy`` so file→bucket is structural. ``n_buckets`` is
+        how many buckets ``df`` spans under the caller's snapshot layout;
+        it sizes the write's repartition.
 
         The directory name carries a per-attempt nonce so two writers
         racing on the same version can never clobber each other's files —
@@ -754,7 +764,6 @@ class LakeTable:
         references (age-based orphan cleanup reclaims it)."""
         rel_dir = os.path.join(DATA_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
-        n_out = buckets_hint or self.num_buckets
         if salt_cols:
             # salt the write partitioning *within* buckets: a Zipf-hot
             # conversation concentrates keys into one bucket, and an
@@ -762,9 +771,9 @@ class LakeTable:
             # stage straggler. Multiple files per bucket are fine — the
             # manifest lists them all. Key identity is untouched.
             salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(4))
-            df = df.repartition(n_out * 2, "__bucket", salt)
+            df = df.repartition(n_buckets * 2, "__bucket", salt)
         else:
-            df = df.repartition(n_out, "__bucket")
+            df = df.repartition(n_buckets, "__bucket")
         if sort_cols:
             # cluster rows by key within each written file so parquet
             # row-group min/max statistics become selective — a point
@@ -850,16 +859,16 @@ class LakeTable:
         hot = self.buckets_needing_compaction(max_files)
         return self.compact(spark, hot, target_file_rows=target_file_rows) if hot else 0
 
-    def bucket_for_key(self, spark: SparkSession, key_value: str) -> int:
-        """The key's hash bucket, computed with the exact engine expression
+    def bucket_for_key(
+        self, spark: SparkSession, key_value: str, snap: Snapshot | None = None
+    ) -> int:
+        """The key's hash bucket under ``snap``'s modulus (default: the
+        current snapshot), computed with the exact engine expression
         (1-row local job — constant-folded, no scan)."""
+        snap = snap or self.current()
         return (
             spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(key_value)), F.lit(self.num_buckets))
-                .cast("int")
-                .alias("b")
-            )
+            .select(bucket_expr(F.lit(key_value), snap.num_buckets).alias("b"))
             .collect()[0]["b"]
         )
 
@@ -873,7 +882,7 @@ class LakeTable:
         Driver-side arithmetic over the manifest — the file-skipping half
         of what Iceberg does with manifest column bounds."""
         snap = snap or self.current()
-        bucket = self.bucket_for_key(spark, key_value)
+        bucket = self.bucket_for_key(spark, key_value, snap)
         cand = [
             f
             for f in snap.files
@@ -891,97 +900,117 @@ class LakeTable:
         buckets: set[int] | None = None,
         target_file_rows: int | None = None,
     ) -> int:
-        """Fold delta files back into one base file per bucket (latest-wins
-        collapse with tombstones retained — a stale replayed event must
-        still lose to a newer delete). Data-only commit: the applied-offset
-        map is untouched, so compaction is safe at any point and crash
-        during compaction simply leaves the previous snapshot current."""
+        """Fold each bucket's files back into key-sorted base files
+        (latest-wins collapse with tombstones retained — a stale replayed
+        event must still lose to a newer delete). Only buckets holding a
+        delta file or more than one file are rewritten. Data-only commit:
+        the applied-offset map is untouched, so compaction is safe at any
+        point and crash during compaction simply leaves the previous
+        snapshot current. Returns the number of buckets compacted."""
         snap = self.current()
-        if buckets is None:
-            buckets = {f["bucket"] for f in snap.files}
-        buckets = {
+        per_bucket: dict[int, list[dict[str, Any]]] = {}
+        for f in snap.files:
+            per_bucket.setdefault(f["bucket"], []).append(f)
+        todo = {
             b
-            for b in buckets
-            if sum(1 for f in snap.files if f["bucket"] == b) > 1
-            or any(
-                f.get("kind", "base") == "delta"
-                for f in snap.files
-                if f["bucket"] == b
-            )
+            for b, fs in per_bucket.items()
+            if (buckets is None or b in buckets)
+            and (len(fs) > 1 or any(f.get("kind", "base") == "delta" for f in fs))
         }
-        if not buckets:
+        if not todo:
             return 0
-        df = self._scan(
-            spark, snap.schema(),
-            [f for f in snap.files if f["bucket"] in buckets], collapse=True,
+        self._rewrite(
+            spark, snap, [f for f in snap.files if f["bucket"] in todo],
+            snap.num_buckets,
+            {**snap.summary, "last_compaction_version": snap.version + 1},
+            target_file_rows,
         )
-        compacted = df.withColumn("__bucket", self.bucket_expr(self.key_cols[0]))
-        version = snap.version + 1
-        new_files = self.write_data_files(
-            compacted, version, buckets_hint=max(len(buckets), 1), kind="base",
-            sort_cols=self.key_cols, max_records_per_file=target_file_rows,
+        return len(todo)
+
+    def rebucket(self, spark: SparkSession, new_num_buckets: int) -> None:
+        """Change the table's bucket count (a growing table needs more
+        buckets for write parallelism and point-lookup pruning). One
+        full collapse+rewrite committed as a data-only snapshot whose
+        summary carries the new modulus — the applied-offset map is
+        untouched, so ingest semantics are unaffected; readers before/after
+        the commit see consistent state (snapshot isolation)."""
+        snap = self.current()
+        self._rewrite(
+            spark, snap, snap.files, new_num_buckets,
+            {**snap.summary, "num_buckets": new_num_buckets},
         )
-        carried = [f for f in snap.files if f["bucket"] not in buckets]
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        files: list[dict[str, Any]],
+        num_buckets: int,
+        summary: dict[str, Any],
+        target_file_rows: int | None = None,
+    ) -> None:
+        """The one maintenance rewrite under ``compact`` and ``rebucket``:
+        scan ``files`` (collapsed when any is a delta), bucket the rows
+        under ``num_buckets``, write them as key-sorted base files, and
+        commit a maintenance snapshot in which they replace ``files``."""
+        keys = snap.key_cols
+        rows = self._scan(spark, snap, files).withColumn(
+            "__bucket", bucket_expr(keys[0], num_buckets)
+        )
+        # one write task per output bucket: a compaction keeps rows in the
+        # buckets it read, a rebucket spreads them over the new modulus
+        width = (
+            len({f["bucket"] for f in files})
+            if num_buckets == snap.num_buckets
+            else num_buckets
+        )
+        written = self.write_data_files(
+            rows, snap.version + 1, max(width, 1), kind="base",
+            sort_cols=keys, max_records_per_file=target_file_rows,
+        )
+        replaced = {f["path"] for f in files}
         self.commit(
-            new_files=new_files,
-            carried_files=carried,
-            schema=snap.schema(),
-            applied_update={},
-            summary_update={"last_compaction_version": version},
-            parent=snap,
+            snap,
+            [f for f in snap.files if f["path"] not in replaced] + written,
+            summary=summary,
             commit_type="maintenance",
         )
-        return len(buckets)
 
     def commit(
         self,
-        new_files: list[dict[str, Any]],
-        carried_files: list[dict[str, Any]],
-        schema: T.StructType,
-        applied_update: dict[str, list[int]],
-        summary_update: dict[str, Any] | None = None,
+        parent: Snapshot,
+        files: list[dict[str, Any]],
+        *,
+        schema: T.StructType | None = None,
+        applied: dict[str, list[int]] | None = None,
+        summary: dict[str, Any] | None = None,
         lineage_rel_path: str | None = None,
-        parent: Snapshot | None = None,
         commit_type: str = "data",
         pending_txn: str | None = None,
-        applied_replace: dict[str, list[int]] | None = None,
-        summary_replace: dict[str, Any] | None = None,
     ) -> Snapshot:
-        """``pending_txn`` stages the snapshot for a multi-table
-        transaction (lake/txn.py): the manifest is written exclusively but
-        the pointer does NOT move — visibility comes when the transaction
-        record commits and recover()/the coordinator rolls the pointer.
-        ``applied_replace`` swaps the applied-batch ledger wholesale
-        (ledger truncation) instead of merging ``applied_update``."""
-        base = parent if parent is not None else self.current()
-        applied = (
-            dict(applied_replace)
-            if applied_replace is not None
-            else dict(base.applied)
-        )
-        applied.update(applied_update)
-        summary = (
-            dict(summary_replace)
-            if summary_replace is not None
-            else dict(base.summary)
-        )
-        summary.update(summary_update or {})
-        lineage_files = list(base.lineage_files)
-        if lineage_rel_path:
-            lineage_files.append(lineage_rel_path)
-        version = base.version + 1
-        # stamp each new file with its committing version so incremental
-        # readers can attribute files to commits (Iceberg's snapshot_id on
-        # manifest entries)
-        new_files = [{**f, "added_v": version} for f in new_files]
+        """Commit snapshot ``parent.version + 1`` listing ``files``. Every
+        other field defaults to ``parent``'s value; a caller passes the
+        whole new value of what it changes (``lineage_rel_path`` appends
+        one lineage directory). Entries without ``added_v`` are stamped
+        with the new version, so incremental readers can attribute files
+        to commits (Iceberg's snapshot_id on manifest entries).
+
+        ``pending_txn`` stages the snapshot for a multi-table transaction
+        (lake/txn.py): the manifest is written exclusively but the pointer
+        does NOT move — visibility comes when the transaction record
+        commits and recover()/the coordinator rolls the pointer."""
+        version = parent.version + 1
         snap = Snapshot(
             version=version,
-            parent=base.version,
-            schema_json=schema.jsonValue(),
-            files=carried_files + new_files,
-            applied=applied,
-            summary=summary,
-            lineage_files=lineage_files,
+            parent=parent.version,
+            schema_json=(
+                parent.schema_json if schema is None else schema.jsonValue()
+            ),
+            files=[f if "added_v" in f else {**f, "added_v": version} for f in files],
+            applied=dict(parent.applied if applied is None else applied),
+            summary=dict(parent.summary if summary is None else summary),
+            lineage_files=parent.lineage_files
+            + ([lineage_rel_path] if lineage_rel_path else []),
             commit_type=commit_type,
             pending_txn=pending_txn,
         )
@@ -1047,18 +1076,36 @@ class LakeTable:
             k: v for k, v in snap.applied.items() if int(k) > floor
         }
         self.commit(
-            new_files=[],
-            carried_files=list(snap.files),
-            schema=snap.schema(),
-            applied_update={},
-            applied_replace=new_applied,
-            summary_update={"applied_floor": floor},
-            parent=snap,
+            snap,
+            snap.files,
+            applied=new_applied,
+            summary={**snap.summary, "applied_floor": floor},
             commit_type="maintenance",
         )
         return len(snap.applied) - len(new_applied)
 
     # -------------------------------------------------------------- cleanup
+    def _retained(self, snaps: list[Snapshot]) -> tuple[set[int], set[str]]:
+        """The retention rule ``expire_snapshots`` and ``cleanup_orphans``
+        share: the tag-pinned versions, and the data/lineage paths that
+        ``snaps`` or a tag-pinned snapshot references. Tagged snapshots
+        survive until the tag is dropped (Iceberg ref-retention
+        semantics). Tags resolve by manifest, not via the chain — a prior
+        expiry's re-parenting may have detached them from ``history()``
+        while they remain directly readable; an unreadable manifest pins
+        nothing."""
+        pinned: list[Snapshot] = []
+        for v in sorted(set(self.tags().values())):
+            try:
+                pinned.append(self.snapshot(v))
+            except (OSError, ValueError):
+                continue
+        live: set[str] = set()
+        for s in snaps + pinned:
+            live |= {f["path"] for f in s.files}
+            live |= set(s.lineage_files)
+        return {s.version for s in pinned}, live
+
     def cleanup_orphans(self, min_age_seconds: float = 3600) -> int:
         """Delete data/lineage files referenced by NO snapshot in the
         retained history (e.g. left by a writer that lost the commit race
@@ -1067,16 +1114,8 @@ class LakeTable:
         safe, exactly like Iceberg's orphan-file removal."""
         import time
 
-        live: set[str] = set()
-        pinned: list[Snapshot] = []
-        for v in sorted(set(self.tags().values())):
-            try:
-                pinned.append(self.snapshot(v))
-            except (OSError, ValueError):
-                continue
-        for s in self.history() + pinned:
-            live |= {f["path"] for f in s.files}
-            live |= set(s.lineage_files)
+        _, live = self._retained(self.history())
+
         def referenced(rel: str) -> bool:
             # lineage manifests reference directories; data manifests
             # reference files — check both granularities
@@ -1119,39 +1158,6 @@ class LakeTable:
                         pass
         return removed
 
-    def rebucket(self, spark: SparkSession, new_num_buckets: int) -> None:
-        """Change the table's bucket count (a growing table needs more
-        buckets for write parallelism and point-lookup pruning). One
-        full collapse+rewrite committed as a data-only snapshot — the
-        applied-offset map is untouched, so ingest semantics are
-        unaffected; readers before/after the commit see consistent state
-        (snapshot isolation)."""
-        snap = self.current()
-        collapsed = self._scan(spark, snap.schema(), snap.files)
-        old_n = self.num_buckets
-        self.num_buckets = new_num_buckets
-        try:
-            out = collapsed.withColumn(
-                "__bucket", self.bucket_expr(self.key_cols[0])
-            )
-            version = snap.version + 1
-            new_files = self.write_data_files(
-                out, version, buckets_hint=new_num_buckets, kind="base",
-                sort_cols=self.key_cols,
-            )
-            self.commit(
-                new_files=new_files,
-                carried_files=[],
-                schema=snap.schema(),
-                applied_update={},
-                summary_update={"num_buckets": new_num_buckets},
-                parent=snap,
-                commit_type="maintenance",
-            )
-        except BaseException:
-            self.num_buckets = old_n
-            raise
-
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Delete snapshot manifests (and data files referenced by no kept
         snapshot) older than the last ``keep_last`` in the commit chain —
@@ -1160,21 +1166,8 @@ class LakeTable:
         if len(chain) <= keep_last:
             return 0
         kept = chain[-keep_last:]
-        # tagged snapshots are pinned: their manifests and files survive
-        # expiry until the tag is dropped (Iceberg ref-retention
-        # semantics). Resolve tags by manifest, not via the chain — a
-        # prior expiry's re-parenting may have detached them from
-        # history() while they remain directly readable.
-        tagged = set(self.tags().values())
-        pinned = []
-        for v in sorted(tagged):
-            try:
-                pinned.append(self.snapshot(v))
-            except (OSError, ValueError):
-                continue
+        tagged, live = self._retained(kept)
         dropped = [s for s in chain[:-keep_last] if s.version not in tagged]
-        live = {f["path"] for s in kept + pinned for f in s.files}
-        live |= {p for s in kept + pinned for p in s.lineage_files}
         removed = 0
         for s in dropped:
             for f in s.files:

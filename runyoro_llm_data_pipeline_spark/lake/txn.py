@@ -58,8 +58,8 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
 @dataclass
 class StagedCommit:
     """One table's half-open commit: the kwargs it would pass to
-    ``LakeTable.commit`` (new_files/carried_files/schema/applied_update/
-    summary_update/lineage_rel_path/parent/commit_type)."""
+    ``LakeTable.commit`` (parent/files/schema/applied/summary/
+    lineage_rel_path/commit_type), passed through unchanged."""
 
     table: LakeTable
     kwargs: dict[str, Any] = field(default_factory=dict)
@@ -72,9 +72,9 @@ class MultiTableTransaction:
 
         txn = MultiTableTransaction(txn_dir)
         txn.commit_all([
-            StagedCommit(transcripts, dict(new_files=..., carried_files=...,
-                                           schema=..., applied_update=...)),
-            StagedCommit(rollup, dict(new_files=..., ...)),
+            StagedCommit(transcripts, dict(parent=..., files=...,
+                                           applied=...)),
+            StagedCommit(rollup, dict(parent=..., files=..., ...)),
         ])
     """
 

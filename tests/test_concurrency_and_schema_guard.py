@@ -172,7 +172,7 @@ def test_apply_batch_retry_adopts_rival_rebucket(spark, tmp_lake):
     t.commit = racing_commit
     r = apply_batch(spark, t, _batch(spark, 2, 1, "after"), 1)
     assert r["status"] == "applied"
-    assert t.num_buckets == 8  # handle refreshed from the fresh snapshot
+    assert t.current().num_buckets == 8  # the retry planned on the rival's layout
     rows = {x["text"] for x in t.read(spark).collect()}
     assert rows == {"after"}  # latest-wins row readable post-rebucket
     # point lookup plans against the new modulus and still finds the key

@@ -139,10 +139,7 @@ def test_file_without_footer_stats_is_unranged_and_read(
     entry = {"path": rel, "bucket": bucket, "kind": "base"}
     t._harvest_key_ranges([entry], "conv_id")
     assert "min_key" not in entry and "max_key" not in entry
-    t.commit(
-        new_files=[entry], carried_files=list(snap.files), schema=schema,
-        applied_update={}, parent=snap, commit_type="maintenance",
-    )
+    t.commit(snap, snap.files + [entry], commit_type="maintenance")
     _, cand = t.candidate_files_for_key(spark, key)
     assert rel in [f["path"] for f in cand]
     got = t.read_conversation(spark, key).collect()

@@ -11,12 +11,7 @@ query that lacked a recent driver row; this test pins that contract so a
 future registration can't undo it unnoticed.
 """
 
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entrymod  # noqa: E402
+import __spark_entry__ as entrymod
 
 # the 6 queries that had never had a driver row before round 5, plus the
 # 10 that were green in round 3 but rotated out of the round-4 window —

@@ -1,8 +1,8 @@
 """Round-4 ADVICE fixes, each pinned by a regression test:
 
-1. rollback() across a rebucket() refreshes the live object's
-   num_buckets (stale modulus => wrong-bucket writes + silent lookup
-   misses until reopen).
+1. rollback() across a rebucket() restores the snapshot's num_buckets,
+   which every write and lookup plans against (stale modulus =>
+   wrong-bucket writes + silent lookup misses).
 2. mix_threshold_hex clamps rates in (1 - 2^-33, 1.0) — round() yields
    2^32 whose 9-char hex sorts below nearly every md5 prefix, silently
    inverting "keep ~everything" into "keep ~6%".
@@ -36,16 +36,15 @@ def test_rollback_across_rebucket_refreshes_num_buckets(spark, tmp_lake):
     t, events = _mk(spark, tmp_lake, "rb", num_buckets=2)
     apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     pre = t.current().version
-    assert t.num_buckets == 2
+    assert t.current().num_buckets == 2
 
     t.rebucket(spark, 8)
-    assert t.num_buckets == 8
+    assert t.current().num_buckets == 8
 
     t.rollback(pre)
-    # the live object must match the restored manifest's modulus —
-    # otherwise the next delta write lands in wrong buckets and
-    # candidate_files_for_key prunes to the wrong bucket.
-    assert t.num_buckets == 2
+    # the restored manifest's modulus is what the next delta write and
+    # candidate_files_for_key plan against
+    assert t.current().num_buckets == 2
     assert t.current().summary.get("num_buckets") == 2
 
     # a post-rollback write + point lookup round-trips through the

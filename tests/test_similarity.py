@@ -87,7 +87,7 @@ def test_rebucket_preserves_state(spark, tmp_lake, tmp_path_factory):
     )
     t.rebucket(spark, 16)
     t2 = LakeTable.load(os.path.join(tmp_lake, "t"))
-    assert t2.num_buckets == 16
+    assert t2.current().num_buckets == 16
     after = sorted(
         map(tuple, t2.read(spark).select("conv_id", "turn_idx", "text").collect())
     )

@@ -29,14 +29,12 @@ def _two_tables(spark, root):
 def _noop_commit_kwargs(t: LakeTable, batch_id: int) -> dict:
     """A minimal (file-less) commit: advances the applied-batch ledger.
     The txn machinery is identical for data-carrying commits — files ride
-    in new_files exactly as in single-table commits."""
+    in ``files`` exactly as in single-table commits."""
     snap = t.current()
     return dict(
-        new_files=[],
-        carried_files=list(snap.files),
-        schema=snap.schema(),
-        applied_update={str(batch_id): [0, 0]},
         parent=snap,
+        files=snap.files,
+        applied={**snap.applied, str(batch_id): [0, 0]},
     )
 
 
