@@ -32,15 +32,17 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   slower than the Arrow and single-shuffle collapses that were tried, so
   replacing it is a job for a measured A/B.
   Admission metrics (counts and the admitted lsn range) are piggybacked
-  on the write via ``Observation`` (no extra scan), per-bucket lineage
-  stats harvested from the written parquet *footers* (no stats job — the
-  same trick Iceberg manifests use), and the lineage file written
-  driver-side with pyarrow (no Spark job). Readers collapse base ∪
-  deltas; ``LakeTable.compact`` folds deltas back into base files.
-* **commit**: data files + applied offsets + lineage land in ONE snapshot;
-  the version-pointer rename is the commit point. Crash anywhere before it
-  → next run re-applies the batch onto the previous snapshot and converges
-  to the same state (orphan files are ignored by manifests).
+  on the write via ``Observation`` (no extra scan). Each new file's row
+  count and key/lsn bounds are harvested from its parquet *footer* onto
+  its manifest entry by ``LakeTable.write_data_files`` (no stats job — the
+  same trick Iceberg manifests use); lineage is read back from those
+  entries (``LakeTable.read_lineage``), so apply writes nothing beside the
+  data files and the manifest. Readers collapse base ∪ deltas;
+  ``LakeTable.compact`` folds deltas back into base files.
+* **commit**: data files (with their stats) + applied offsets land in ONE
+  snapshot; the version-pointer rename is the commit point. Crash anywhere
+  before it → next run re-applies the batch onto the previous snapshot and
+  converges to the same state (orphan files are ignored by manifests).
 """
 
 from __future__ import annotations
@@ -63,71 +65,12 @@ from runyoro_llm_data_pipeline_spark.cdc.events import (
 from runyoro_llm_data_pipeline_spark.lake.merge import evolve_schema
 from runyoro_llm_data_pipeline_spark.lake.table import (
     DELETED,
-    LINEAGE_DIR,
     VERSION_LSN,
     VERSION_TS,
     CommitConflictError,
     LakeTable,
     bucket_expr,
-    footer_bounds,
 )
-
-
-def _write_lineage_driver_side(
-    table: LakeTable, version: int, batch_id: int, stats: list[dict]
-) -> str:
-    """Lineage rows are tiny driver-side data — write them with pyarrow
-    directly instead of scheduling a Spark job."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    import uuid
-
-    rel = os.path.join(LINEAGE_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
-    out_dir = os.path.join(table.path, rel)
-    os.makedirs(out_dir, exist_ok=True)
-    t = pa.table(
-        {
-            "batch_id": pa.array([int(batch_id)] * len(stats), pa.int64()),
-            "bucket": pa.array([int(s["__bucket"]) for s in stats], pa.int32()),
-            "min_lsn": pa.array([int(s["min_lsn"]) for s in stats], pa.int64()),
-            "max_lsn": pa.array([int(s["max_lsn"]) for s in stats], pa.int64()),
-            "row_count": pa.array([int(s["row_count"]) for s in stats], pa.int64()),
-            "snapshot_version": pa.array([int(version)] * len(stats), pa.int64()),
-        }
-    )
-    pq.write_table(t, os.path.join(out_dir, "part-00000.parquet"))
-    return rel
-
-
-def _footer_stats(table: LakeTable, entries: list[dict]) -> list[dict]:
-    """Per-bucket (min_lsn, max_lsn, row_count) from the written files'
-    parquet footers — no Spark job, exact, and O(files) driver-side.
-    Footers are fetched with a thread pool: this sits on the serial
-    commit path of every batch, and ~64 sequential footer opens are a
-    fixed cost that eats scaling headroom on fast multi-executor runs."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    paths = [os.path.join(table.path, e["path"]) for e in entries]
-    with ThreadPoolExecutor(max_workers=min(16, max(len(paths), 1))) as ex:
-        bounds = list(ex.map(lambda p: footer_bounds(p, VERSION_LSN), paths))
-
-    agg: dict[int, dict] = {}
-    for e, (n_rows, lo, hi) in zip(entries, bounds):
-        b = agg.setdefault(
-            e["bucket"],
-            {"__bucket": e["bucket"], "min_lsn": None, "max_lsn": None,
-             "row_count": 0},
-        )
-        b["row_count"] += n_rows
-        if lo is not None:
-            b["min_lsn"] = lo if b["min_lsn"] is None else min(b["min_lsn"], lo)
-            b["max_lsn"] = hi if b["max_lsn"] is None else max(b["max_lsn"], hi)
-    return [
-        {**s, "min_lsn": s["min_lsn"] if s["min_lsn"] is not None else -1,
-         "max_lsn": s["max_lsn"] if s["max_lsn"] is not None else -1}
-        for s in sorted(agg.values(), key=lambda s: s["__bucket"])
-    ]
 
 
 def _apply_mor(
@@ -187,9 +130,8 @@ def _apply_mor(
     )
     version = snap.version + 1
     new_files = table.write_data_files(
-        incoming, version, snap.num_buckets, kind="delta", salt_cols=keys
+        incoming, version, snap.num_buckets, keys, kind="delta"
     )
-    stats = _footer_stats(table, new_files)
     metrics = obs.get
     # aggregates over an empty (or all-rejected) batch observe NULL (count
     # observes 0); guard them so an empty poll commits a no-op batch
@@ -197,7 +139,7 @@ def _apply_mor(
     n_rejected = n_total - int(metrics["n_valid"] or 0)
     min_lsn = -1 if metrics["min_lsn"] is None else int(metrics["min_lsn"])
     max_lsn = -1 if metrics["max_lsn"] is None else int(metrics["max_lsn"])
-    applied_keys = sum(s["row_count"] for s in stats)
+    applied_keys = sum(e["rows"] for e in new_files)
     sec = round(time.perf_counter() - t_start, 3)
     table.commit(
         snap,
@@ -213,9 +155,6 @@ def _apply_mor(
             "last_batch_keys": applied_keys,
             **(summary_extra or {}),
         },
-        lineage_rel_path=_write_lineage_driver_side(
-            table, version, batch_id, stats
-        ),
     )
     return {
         "status": "applied",

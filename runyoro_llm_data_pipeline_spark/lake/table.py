@@ -14,6 +14,11 @@ dedup index. This module generalizes it into a real table format:
   the same all-or-nothing property as the reference's ledger rewrite, and the
   same mechanism Iceberg's HadoopTableOperations uses for file-system
   catalogs;
+* **per-file stats** live on the manifest entry and nowhere else: each write
+  opens every new file's footer once and records its row count and its key
+  and lsn bounds. Point lookups prune files by those bounds, and lineage is
+  read from the entries each data commit added, along the snapshot chain, so
+  it is retained exactly as long as the snapshots themselves;
 * **exactly-once** falls out: applied batch offsets are recorded in the same
   snapshot that contains their data, so a crash before the pointer swap
   leaves both invisible and replay is safe (idempotent, cf.
@@ -61,7 +66,6 @@ VERSION_POINTER = "_VERSION"
 TAGS_FILE = "tags.json"
 SNAP_DIR = "snapshots"
 DATA_DIR = "data"
-LINEAGE_DIR = "lineage"
 
 # internal CDC version/tombstone columns stored in data files, hidden from
 # public reads (deletes persist as tombstones so batch application is
@@ -88,10 +92,11 @@ class Snapshot:
     version: int
     parent: int | None
     schema_json: dict[str, Any]
-    files: list[dict[str, Any]]  # {path(rel), bucket, kind, added_v}
+    # {path(rel), bucket, kind, added_v, rows, [min_key, max_key],
+    #  [min_lsn, max_lsn]} — see LakeTable.write_data_files
+    files: list[dict[str, Any]]
     applied: dict[str, list[int]]  # batch_id(str) -> [min_lsn, max_lsn]
     summary: dict[str, Any] = field(default_factory=dict)
-    lineage_files: list[str] = field(default_factory=list)
     # 'data' = the commit added logical changes (batch apply);
     # 'maintenance' = pure rewrite (compaction / rebucket) — no new
     # logical content, excluded from incremental consumption
@@ -131,7 +136,6 @@ class Snapshot:
                 "files": self.files,
                 "applied": self.applied,
                 "summary": self.summary,
-                "lineage_files": self.lineage_files,
                 "commit_type": self.commit_type,
                 **(
                     {"pending_txn": self.pending_txn}
@@ -152,7 +156,6 @@ class Snapshot:
             files=d["files"],
             applied=d.get("applied", {}),
             summary=d.get("summary", {}),
-            lineage_files=d.get("lineage_files", []),
             commit_type=d.get("commit_type", "data"),
             pending_txn=d.get("pending_txn"),
         )
@@ -209,28 +212,42 @@ def _exclusive_write(path: str, content: str) -> None:
         os.fsync(fh.fileno())
 
 
-def footer_bounds(path: str, column: str) -> tuple[int, Any, Any]:
-    """``(num_rows, min, max)`` of ``column`` from one parquet file's
-    footer — O(footer), no data read, no Spark job (the trick Iceberg
-    manifests use for column bounds). The bounds are ``None`` unless every
-    row group carries min/max statistics for the column: partial stats
-    make no claim. Errors (missing or torn file) propagate; each caller
-    decides what a failure means."""
+def footer_bounds(
+    path: str, columns: list[str]
+) -> tuple[int, dict[str, tuple[Any, Any]]]:
+    """``(num_rows, {column: (min, max)})`` from one parquet file's footer
+    — one metadata read for any number of columns, no data read, no Spark
+    job (the trick Iceberg manifests use for column bounds). A column is in
+    the map only if every row group carries min/max statistics for it:
+    partial stats make no claim. Errors (missing or torn file) propagate;
+    each caller decides what a failure means."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    idx = next(
-        (i for i in range(md.num_columns) if md.schema.column(i).name == column),
-        None,
-    )
-    lo = hi = None
-    for rg in range(md.num_row_groups if idx is not None else 0):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return md.num_rows, None, None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return md.num_rows, lo, hi
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    bounds: dict[str, tuple[Any, Any]] = {}
+    for col in columns:
+        if col not in names:
+            continue
+        idx = names.index(col)
+        stats = [
+            md.row_group(rg).column(idx).statistics
+            for rg in range(md.num_row_groups)
+        ]
+        if stats and all(st is not None and st.has_min_max for st in stats):
+            bounds[col] = (min(st.min for st in stats), max(st.max for st in stats))
+    return md.num_rows, bounds
+
+
+def _applied_batch(snap: Snapshot) -> int | None:
+    """The batch ``snap`` applied, or None: the one rule for "the commit
+    that applied batch b". That commit is a data commit carrying
+    ``summary.last_batch_id == b`` — batch ids are single-shot (the
+    idempotency gate skips replays), and maintenance and rollback commits
+    merely inherit the parent summary."""
+    if snap.commit_type != "data" or "last_batch_id" not in snap.summary:
+        return None
+    return int(snap.summary["last_batch_id"])
 
 
 def bucket_expr(key, num_buckets: int):
@@ -289,7 +306,6 @@ class LakeTable:
         owns the layout)."""
         os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
-        os.makedirs(os.path.join(path, LINEAGE_DIR), exist_ok=True)
         t = LakeTable(path)
         if t.current_version() is None:
             snap = Snapshot(
@@ -661,10 +677,8 @@ class LakeTable:
         """Resolve the snapshot version whose data commit applied
         ``batch_id`` — the bridge from the *producer's* progress unit
         (batch/offset-range id) to the *consumer's* (snapshot version).
-        The applying commit is uniquely identified by
-        ``commit_type == 'data' and summary.last_batch_id == batch_id``:
-        batch ids are single-shot (the idempotency gate skips replays)
-        and maintenance commits merely inherit the parent summary.
+        The applying commit is the one ``_applied_batch`` maps to
+        ``batch_id``.
 
         Walks newest→oldest, so cost is O(commits since the batch) — the
         common "resume from a recent batch" case touches a handful of
@@ -676,10 +690,7 @@ class LakeTable:
         else was never applied → ``KeyError``."""
         s = self.current()
         while True:
-            if (
-                s.commit_type == "data"
-                and s.summary.get("last_batch_id") == int(batch_id)
-            ):
+            if _applied_batch(s) == int(batch_id):
                 return s.version
             if s.parent is None:
                 break
@@ -718,27 +729,52 @@ class LakeTable:
     def metrics_history(self) -> list[dict[str, Any]]:
         """Per-commit job metrics from the snapshot chain — the queryable
         form of the reference's ledger entries (throughput report). One
-        row per batch-applying commit, identified as in
-        ``version_for_batch``: maintenance and rollback commits inherit
-        the parent summary and are skipped."""
+        row per batch-applying commit (``_applied_batch``): maintenance
+        and rollback commits inherit the parent summary and are skipped."""
         return [
             {
                 "version": s.version,
-                "batch_id": s.summary["last_batch_id"],
+                "batch_id": _applied_batch(s),
                 "sec": s.summary.get("last_batch_sec"),
                 "keys": s.summary.get("last_batch_keys"),
                 "watermark_lsn": s.summary.get("watermark_lsn"),
             }
             for s in self.history()
-            if s.commit_type == "data" and "last_batch_id" in s.summary
+            if _applied_batch(s) is not None
         ]
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
-        snap = self.current()
-        paths = [os.path.join(self.path, p) for p in snap.lineage_files]
-        if not paths:
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(*paths)
+        """Per-partition lineage (``LINEAGE_SCHEMA``), read from the
+        manifests with no Spark scan: one row per (batch, bucket) for each
+        batch-applying commit in ``history()`` (``_applied_batch``).
+        ``row_count`` sums ``rows`` over the entries that commit added
+        (``added_v == version``), ``min_lsn``/``max_lsn`` bound the stored
+        lsn over those entries (-1 when none carries bounds), and
+        ``snapshot_version`` is the commit's version. Each commit's own
+        manifest still lists the deltas a later compaction folded away.
+
+        Retention: lineage lasts as long as the snapshots that hold it.
+        ``expire_snapshots(keep_last=k)`` drops the lineage of the commits
+        it drops, together with their time travel and ``metrics_history``
+        rows."""
+        rows = []
+        for s in self.history():
+            batch = _applied_batch(s)
+            if batch is None:
+                continue
+            per_bucket: dict[int, list[dict[str, Any]]] = {}
+            for f in s.files:
+                if f.get("added_v") == s.version:
+                    per_bucket.setdefault(f["bucket"], []).append(f)
+            for bucket, fs in sorted(per_bucket.items()):
+                ranged = [f for f in fs if "min_lsn" in f]
+                rows.append((
+                    batch, bucket,
+                    min((f["min_lsn"] for f in ranged), default=-1),
+                    max((f["max_lsn"] for f in ranged), default=-1),
+                    sum(f["rows"] for f in fs), s.version,
+                ))
+        return spark.createDataFrame(rows, LINEAGE_SCHEMA)
 
     # ---------------------------------------------------------------- write
     def write_data_files(
@@ -746,17 +782,26 @@ class LakeTable:
         df: DataFrame,
         version: int,
         n_buckets: int,
+        keys: list[str],
         kind: str = "base",
-        salt_cols: list[str] | None = None,
-        sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
     ) -> list[dict[str, Any]]:
         """Write ``df`` (must contain ``__bucket``) into this snapshot's data
-        dir, one Parquet directory partition per bucket; returns manifest
-        entries tagged ``kind`` (base = pre-collapsed, delta = MOR append).
-        Uses ``partitionBy`` so file→bucket is structural. ``n_buckets`` is
-        how many buckets ``df`` spans under the caller's snapshot layout;
-        it sizes the write's repartition.
+        dir, one Parquet directory partition per bucket (``partitionBy``, so
+        file→bucket is structural), and return one manifest entry per
+        written file. ``n_buckets`` is how many buckets ``df`` spans under
+        the caller's snapshot layout; it sizes the write's repartition.
+        ``kind`` picks the layout:
+
+        * ``delta`` (the MOR apply append): the write partitioning is salted
+          by ``keys`` within each bucket, and rows are left unsorted;
+        * ``base`` (``compact``/``rebucket`` output, pre-collapsed): rows are
+          sorted by bucket and then ``keys``, so each file covers one
+          contiguous key range.
+
+        Every entry carries the file's footer stats (``_harvest``): ``rows``
+        always, ``min_key``/``max_key`` of ``keys[0]`` and
+        ``min_lsn``/``max_lsn`` of the stored lsn where the footer has them.
 
         The directory name carries a per-attempt nonce so two writers
         racing on the same version can never clobber each other's files —
@@ -764,28 +809,28 @@ class LakeTable:
         references (age-based orphan cleanup reclaims it)."""
         rel_dir = os.path.join(DATA_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
-        if salt_cols:
+        if kind == "delta":
             # salt the write partitioning *within* buckets: a Zipf-hot
             # conversation concentrates keys into one bucket, and an
             # unsalted repartition makes that bucket's single writer the
             # stage straggler. Multiple files per bucket are fine — the
-            # manifest lists them all. Key identity is untouched.
-            salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(4))
+            # manifest lists them all. Key identity is untouched. Deltas
+            # stay sort-free: sorting would tax ingest throughput for
+            # transient files.
+            salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(4))
             df = df.repartition(n_buckets * 2, "__bucket", salt)
         else:
-            df = df.repartition(n_buckets, "__bucket")
-        if sort_cols:
             # cluster rows by key within each written file so parquet
             # row-group min/max statistics become selective — a point
             # lookup (read_conversation) then skips most row groups of
-            # the pruned bucket's files. Used by compact()/rebucket():
-            # hot-path delta writes stay sort-free (sorting there would
-            # tax ingest throughput for transient files).
-            df = df.sortWithinPartitions("__bucket", *sort_cols)
+            # the pruned bucket's files
+            df = df.repartition(n_buckets, "__bucket").sortWithinPartitions(
+                "__bucket", *keys
+            )
         writer = df.write.mode("overwrite").partitionBy("__bucket")
         if max_records_per_file:
             # split big buckets into several key-contiguous files (rows are
-            # already sorted within the task when sort_cols is set), so the
+            # already sorted within the task for base writes), so the
             # harvested per-file key ranges become disjoint and a point
             # lookup reads ~1 file however large the bucket grows
             writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
@@ -804,34 +849,37 @@ class LakeTable:
                             "kind": kind,
                         }
                     )
-        if sort_cols:
-            # key-sorted writes (compaction/rebucket) get per-file key
-            # bounds in the manifest; hot-path delta writes skip the
-            # harvest along with the sort
-            self._harvest_key_ranges(entries, sort_cols[0])
-        return entries
+        return self._harvest(entries, keys[0])
 
-    def _harvest_key_ranges(self, entries: list[dict], key: str) -> None:
-        """Attach per-file ``min_key``/``max_key`` of ``key`` from the
-        parquet footers (threaded, O(files) driver-side) to manifest
-        entries in place. They let a point lookup prune *files* inside the
-        already-pruned bucket before parquet row-group stats prune pages.
-        Only meaningful for key-sorted writes, where files cover disjoint
-        key ranges. Any failure or stats gap leaves the entry unranged,
-        and an unranged file is always read: the harvest can only cost
-        performance, never correctness."""
+    def _harvest(
+        self, entries: list[dict[str, Any]], key: str
+    ) -> list[dict[str, Any]]:
+        """``entries`` with each file's footer stats attached: ``rows``,
+        plus ``min_key``/``max_key`` of ``key`` and ``min_lsn``/``max_lsn``
+        of the stored lsn when every row group has stats for that column.
+        One footer open per file, in one thread pool (this sits on the
+        serial commit path of every batch). The bounds let a point lookup
+        prune *files* inside the already-pruned bucket; the rows and lsn
+        bounds are the lineage ``read_lineage`` reports.
+
+        An unreadable footer raises: the caller commits nothing, and the
+        written files become orphans that ``cleanup_orphans`` reclaims. A
+        stats gap only leaves that pair of bounds off the entry, and an
+        unranged file is always read."""
         from concurrent.futures import ThreadPoolExecutor
 
-        def one(e: dict) -> None:
-            try:
-                _, lo, hi = footer_bounds(os.path.join(self.path, e["path"]), key)
-            except Exception:
-                return
-            if lo is not None:
-                e["min_key"], e["max_key"] = lo, hi
+        def one(e: dict[str, Any]) -> dict[str, Any]:
+            rows, bounds = footer_bounds(
+                os.path.join(self.path, e["path"]), [key, VERSION_LSN]
+            )
+            out = {**e, "rows": rows}
+            for col, name in ((key, "key"), (VERSION_LSN, "lsn")):
+                if col in bounds:
+                    out[f"min_{name}"], out[f"max_{name}"] = bounds[col]
+            return out
 
         with ThreadPoolExecutor(max_workers=min(16, max(len(entries), 1))) as ex:
-            list(ex.map(one, entries))
+            return list(ex.map(one, entries))
 
     # ----------------------------------------------------------- compaction
     def buckets_needing_compaction(self, max_files: int = 4) -> set[int]:
@@ -876,11 +924,13 @@ class LakeTable:
         self, spark: SparkSession, key_value: str, snap: Snapshot | None = None
     ) -> tuple[int, list[dict[str, Any]]]:
         """Point-lookup planning: the key's hash bucket, then file-level
-        key-range pruning inside it (files with harvested
-        ``min_key``/``max_key`` bounds that exclude ``key_value`` are
-        skipped; unranged files — all hot-path deltas — are always kept).
-        Driver-side arithmetic over the manifest — the file-skipping half
-        of what Iceberg does with manifest column bounds."""
+        key-range pruning inside it. Base and delta files whose harvested
+        ``min_key``/``max_key`` bounds exclude ``key_value`` are skipped;
+        an unranged file (a footer without key stats) is always kept.
+        Unsorted deltas span most of their bucket's key range, so their
+        bounds prune less than a sorted base file's. Driver-side
+        arithmetic over the manifest — the file-skipping half of what
+        Iceberg does with manifest column bounds."""
         snap = snap or self.current()
         bucket = self.bucket_for_key(spark, key_value, snap)
         cand = [
@@ -965,8 +1015,8 @@ class LakeTable:
             else num_buckets
         )
         written = self.write_data_files(
-            rows, snap.version + 1, max(width, 1), kind="base",
-            sort_cols=keys, max_records_per_file=target_file_rows,
+            rows, snap.version + 1, max(width, 1), keys, kind="base",
+            max_records_per_file=target_file_rows,
         )
         replaced = {f["path"] for f in files}
         self.commit(
@@ -984,16 +1034,15 @@ class LakeTable:
         schema: T.StructType | None = None,
         applied: dict[str, list[int]] | None = None,
         summary: dict[str, Any] | None = None,
-        lineage_rel_path: str | None = None,
         commit_type: str = "data",
         pending_txn: str | None = None,
     ) -> Snapshot:
         """Commit snapshot ``parent.version + 1`` listing ``files``. Every
         other field defaults to ``parent``'s value; a caller passes the
-        whole new value of what it changes (``lineage_rel_path`` appends
-        one lineage directory). Entries without ``added_v`` are stamped
-        with the new version, so incremental readers can attribute files
-        to commits (Iceberg's snapshot_id on manifest entries).
+        whole new value of what it changes. Entries without ``added_v``
+        are stamped with the new version, so incremental readers and
+        ``read_lineage`` can attribute files to commits (Iceberg's
+        snapshot_id on manifest entries).
 
         ``pending_txn`` stages the snapshot for a multi-table transaction
         (lake/txn.py): the manifest is written exclusively but the pointer
@@ -1009,8 +1058,6 @@ class LakeTable:
             files=[f if "added_v" in f else {**f, "added_v": version} for f in files],
             applied=dict(parent.applied if applied is None else applied),
             summary=dict(parent.summary if summary is None else summary),
-            lineage_files=parent.lineage_files
-            + ([lineage_rel_path] if lineage_rel_path else []),
             commit_type=commit_type,
             pending_txn=pending_txn,
         )
@@ -1087,7 +1134,7 @@ class LakeTable:
     # -------------------------------------------------------------- cleanup
     def _retained(self, snaps: list[Snapshot]) -> tuple[set[int], set[str]]:
         """The retention rule ``expire_snapshots`` and ``cleanup_orphans``
-        share: the tag-pinned versions, and the data/lineage paths that
+        share: the tag-pinned versions, and the data file paths that
         ``snaps`` or a tag-pinned snapshot references. Tagged snapshots
         survive until the tag is dropped (Iceberg ref-retention
         semantics). Tags resolve by manifest, not via the chain — a prior
@@ -1103,59 +1150,47 @@ class LakeTable:
         live: set[str] = set()
         for s in snaps + pinned:
             live |= {f["path"] for f in s.files}
-            live |= set(s.lineage_files)
         return {s.version for s in pinned}, live
 
     def cleanup_orphans(self, min_age_seconds: float = 3600) -> int:
-        """Delete data/lineage files referenced by NO snapshot in the
-        retained history (e.g. left by a writer that lost the commit race
-        or crashed mid-write), provided they are older than
+        """Delete data files referenced by NO snapshot in the retained
+        history (e.g. left by a writer that lost the commit race or
+        crashed mid-write), provided they are older than
         ``min_age_seconds`` — the age guard keeps in-flight writers' files
         safe, exactly like Iceberg's orphan-file removal."""
         import time
 
         _, live = self._retained(self.history())
-
-        def referenced(rel: str) -> bool:
-            # lineage manifests reference directories; data manifests
-            # reference files — check both granularities
-            return any(p == rel or rel.startswith(p + os.sep) for p in live)
-
-        # version dirs (data/vNNN-nonce, lineage/vNNN-nonce) that hold any
-        # referenced content: writer bookkeeping files (_SUCCESS, .crc —
-        # never listed in manifests) inside them are NOT orphans
+        # version dirs (data/vNNN-nonce) that hold a referenced file:
+        # writer bookkeeping files (_SUCCESS, .crc — never listed in
+        # manifests) inside them are NOT orphans
         live_vdirs = {os.sep.join(p.split(os.sep)[:2]) for p in live}
 
         now = time.time()
         removed = 0
-        for sub in (DATA_DIR, LINEAGE_DIR):
-            root = os.path.join(self.path, sub)
-            if not os.path.isdir(root):
-                continue
-            for dirpath, _, filenames in os.walk(root):
-                for fn in filenames:
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.path)
-                    if referenced(rel):
-                        continue
-                    vdir = os.sep.join(rel.split(os.sep)[:2])
-                    if not fn.endswith(".parquet") and vdir in live_vdirs:
-                        continue
-                    try:
-                        if now - os.path.getmtime(full) >= min_age_seconds:
-                            os.remove(full)
-                            removed += 1
-                    except OSError:
-                        pass
+        root = os.path.join(self.path, DATA_DIR)
+        for dirpath, _, filenames in os.walk(root):
+            for fn in filenames:
+                full = os.path.join(dirpath, fn)
+                rel = os.path.relpath(full, self.path)
+                if rel in live:
+                    continue
+                vdir = os.sep.join(rel.split(os.sep)[:2])
+                if not fn.endswith(".parquet") and vdir in live_vdirs:
+                    continue
+                try:
+                    if now - os.path.getmtime(full) >= min_age_seconds:
+                        os.remove(full)
+                        removed += 1
+                except OSError:
+                    pass
         # prune now-empty dirs
-        for sub in (DATA_DIR, LINEAGE_DIR):
-            root = os.path.join(self.path, sub)
-            for dirpath, dirnames, filenames in list(os.walk(root, topdown=False)):
-                if dirpath != root and not dirnames and not filenames:
-                    try:
-                        os.rmdir(dirpath)
-                    except OSError:
-                        pass
+        for dirpath, dirnames, filenames in list(os.walk(root, topdown=False)):
+            if dirpath != root and not dirnames and not filenames:
+                try:
+                    os.rmdir(dirpath)
+                except OSError:
+                    pass
         return removed
 
     def expire_snapshots(self, keep_last: int = 2) -> int:

@@ -59,7 +59,7 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
 class StagedCommit:
     """One table's half-open commit: the kwargs it would pass to
     ``LakeTable.commit`` (parent/files/schema/applied/summary/
-    lineage_rel_path/commit_type), passed through unchanged."""
+    commit_type), passed through unchanged."""
 
     table: LakeTable
     kwargs: dict[str, Any] = field(default_factory=dict)

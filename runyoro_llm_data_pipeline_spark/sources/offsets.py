@@ -90,12 +90,13 @@ class ParquetOffsetLog:
                     import pyarrow as pa
 
                     try:
-                        _, _, fmax = footer_bounds(full, "lsn")
+                        _, bounds = footer_bounds(full, ["lsn"])
                     except (OSError, pa.ArrowInvalid):
                         # a file mid-write by the producer (torn footer) or
                         # corrupt: skip WITHOUT caching so the next poll
                         # retries it once the writer finishes
                         continue
+                    fmax = bounds["lsn"][1] if "lsn" in bounds else None
                     self._footer_cache[rel] = (st.st_size, st.st_mtime, fmax)
                 else:
                     fmax = cached[2]

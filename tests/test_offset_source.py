@@ -92,9 +92,9 @@ def test_latest_offsets_footer_only_and_incremental(
     calls = []
     orig = offsets.footer_bounds
 
-    def counting(path, column):
+    def counting(path, columns):
         calls.append(path)
-        return orig(path, column)
+        return orig(path, columns)
 
     monkeypatch.setattr(offsets, "footer_bounds", counting)
     first = log.latest_offsets(spark)

@@ -73,9 +73,10 @@ def test_file_range_pruning_after_sized_compaction(spark, tmp_lake, tmp_path_fac
 
 
 def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory):
-    """Unranged delta files must always survive pruning: post-compaction
-    batches must win the point lookup even though their delta files carry
-    no key bounds in the manifest."""
+    """Delta files must never be pruned away from a key they hold:
+    post-compaction batches land as unsorted deltas whose harvested key
+    bounds span most of their bucket, on top of key-ranged base files, and
+    they must still win the point lookup."""
     from pyspark.sql import functions as F
 
     from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
@@ -135,10 +136,10 @@ def test_file_without_footer_stats_is_unranged_and_read(
     os.makedirs(os.path.dirname(os.path.join(t.path, rel)))
     pq.write_table(df.toArrow(), os.path.join(t.path, rel), write_statistics=False)
 
-    assert footer_bounds(os.path.join(t.path, rel), "conv_id") == (1, None, None)
-    entry = {"path": rel, "bucket": bucket, "kind": "base"}
-    t._harvest_key_ranges([entry], "conv_id")
-    assert "min_key" not in entry and "max_key" not in entry
+    assert footer_bounds(os.path.join(t.path, rel), ["conv_id"]) == (1, {})
+    [entry] = t._harvest([{"path": rel, "bucket": bucket, "kind": "base"}], "conv_id")
+    assert entry["rows"] == 1
+    assert not {"min_key", "max_key", "min_lsn", "max_lsn"} & set(entry)
     t.commit(snap, snap.files + [entry], commit_type="maintenance")
     _, cand = t.candidate_files_for_key(spark, key)
     assert rel in [f["path"] for f in cand]
