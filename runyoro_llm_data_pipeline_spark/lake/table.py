@@ -28,11 +28,16 @@ dedup index. This module generalizes it into a real table format:
   nulls (generalizing the ledger's dynamic additive entry shapes,
   ``processed_data/processed_data_metadata.json``).
 
+Commits: writing ``snapshots/vN.json`` create-exclusive is the commit, a
+CAS (Iceberg's optimistic concurrency); the pointer rename after it only
+publishes it, and ``recover()`` finishes that for a writer that died.
+``apply_batch`` retries a lost commit and re-gates on ``has_applied``; a
+losing maintenance commit raises ``CommitConflictError``.
+
 Scale notes (100 TB / 1000 executors): the manifest lists O(num_buckets ×
 files-per-bucket) entries handled driver-side — same order as Iceberg's
 manifest lists; data access is executor-side Parquet scans of only the
-pruned file set. Single-writer commit (one streaming/batch driver) is
-assumed, as in any single-sink CDC apply job.
+pruned file set.
 
 Manifest hygiene at 100 TB: MOR keeps per-bucket live-file counts bounded
 by ``compact_max_files``, so the manifest stays O(num_buckets ×
@@ -53,7 +58,9 @@ import contextlib
 import fcntl
 import json
 import os
+import re
 import shutil
+import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
@@ -66,6 +73,7 @@ VERSION_POINTER = "_VERSION"
 TAGS_FILE = "tags.json"
 SNAP_DIR = "snapshots"
 DATA_DIR = "data"
+_MANIFEST_RE = re.compile(r"^v(\d{8})\.json$")
 
 # internal CDC version/tombstone columns stored in data files, hidden from
 # public reads (deletes persist as tombstones so batch application is
@@ -101,11 +109,6 @@ class Snapshot:
     # 'maintenance' = pure rewrite (compaction / rebucket) — no new
     # logical content, excluded from incremental consumption
     commit_type: str = "data"
-    # set on snapshots STAGED by a multi-table transaction (lake/txn.py):
-    # absolute path of the transaction record. A staged snapshot is not a
-    # durable commit by itself — recover() adopts it only once the record
-    # says 'committed' (both-or-neither visibility across tables).
-    pending_txn: str | None = None
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schema_json)
@@ -137,11 +140,6 @@ class Snapshot:
                 "applied": self.applied,
                 "summary": self.summary,
                 "commit_type": self.commit_type,
-                **(
-                    {"pending_txn": self.pending_txn}
-                    if self.pending_txn is not None
-                    else {}
-                ),
             },
             indent=1,
         )
@@ -157,7 +155,6 @@ class Snapshot:
             applied=d.get("applied", {}),
             summary=d.get("summary", {}),
             commit_type=d.get("commit_type", "data"),
-            pending_txn=d.get("pending_txn"),
         )
 
 
@@ -337,7 +334,7 @@ class LakeTable:
             return int(fh.read().strip())
 
     def snapshot(self, version: int) -> Snapshot:
-        with open(os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")) as fh:
+        with open(self._manifest_path(version)) as fh:
             return Snapshot.from_json(fh.read())
 
     def current(self) -> Snapshot:
@@ -425,13 +422,14 @@ class LakeTable:
         keep_last_snapshots: int = 4,
         orphan_age_seconds: float = 3600,
     ) -> dict[str, int]:
-        """One-call production maintenance pass — the mix the soak bench
-        runs inline (BENCH.md §0b): compact read-amplified buckets, fold
-        the applied ledger into its low watermark, expire old snapshots
-        (tagged ones retained), reclaim orphaned files. Every step is an
-        independent crash-safe commit or idempotent cleanup; safe to run
-        from a cron alongside the ingester (single-writer discipline
-        applies to the pair as a whole)."""
+        """One-call production maintenance pass: compact read-amplified
+        buckets, fold the applied ledger into its low watermark, expire
+        old snapshots (tagged ones retained), reclaim orphaned files.
+        Every step is an independent crash-safe commit or idempotent
+        cleanup, so a pass that died is finished by the next one. Safe to
+        run from a cron alongside the ingester: a compaction or truncation
+        that loses its commit to an ingest raises ``CommitConflictError``
+        and the next pass retries it."""
         return {
             "compacted_buckets": self.compact_if_needed(
                 spark, compact_max_files, target_file_rows=target_file_rows
@@ -446,35 +444,17 @@ class LakeTable:
         }
 
     def _valid_orphan_snapshot(self, version: int) -> Snapshot | None:
-        """Parse snapshots/vN.json if it exists and is a complete, correctly
-        chained manifest (a crashed writer can leave a partial file — the
-        create-exclusive fd exists before the content is fsynced)."""
-        p = os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")
+        """snapshots/vN.json if it is a commit: it parses, and it says
+        ``version == N`` and ``parent == N-1``. Anything else (missing, or
+        a partial file — the create-exclusive fd exists before the content
+        is fsynced) is not, and yields None."""
         try:
-            with open(p) as fh:
+            with open(self._manifest_path(version)) as fh:
                 snap = Snapshot.from_json(fh.read())
         except (OSError, ValueError, KeyError):
             return None
         if snap.version != version or snap.parent != version - 1:
             return None
-        if snap.pending_txn is not None:
-            # staged by a multi-table transaction: durable ONLY if the
-            # transaction record decided 'committed' and names this
-            # (table, version). An undecided/aborted/missing record means
-            # the stage is not a commit — never adopt it (the
-            # stale-manifest reclaim in commit() garbage-collects it).
-            try:
-                with open(snap.pending_txn) as fh:
-                    rec = json.load(fh)
-            except (OSError, ValueError):
-                return None
-            if rec.get("status") != "committed":
-                return None
-            if not any(
-                p.get("table") == self.path and p.get("version") == version
-                for p in rec.get("participants", [])
-            ):
-                return None
         return snap
 
     def recover(self) -> int | None:
@@ -507,27 +487,21 @@ class LakeTable:
             v = s.parent
         return list(reversed(out))
 
-    def _write_snapshot(
-        self,
-        snap: Snapshot,
-        update_pointer: bool = True,
-        exclusive: bool = False,
-    ) -> None:
-        """``exclusive=True`` = optimistic-concurrency commit: creating
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")
+
+    def _write_snapshot(self, snap: Snapshot, exclusive: bool = False) -> None:
+        """Write ``snap``'s manifest, then move the version pointer to it.
+        ``exclusive=True`` = optimistic-concurrency commit: creating
         snapshot vN is the CAS — if another writer already produced vN the
         commit raises CommitConflictError and nothing (incl. the pointer)
-        changes; the caller re-reads and re-plans. Used for data commits;
-        rewrite-in-place callers (expire_snapshots re-parenting) keep the
-        plain atomic rename."""
-        snap_path = os.path.join(self.path, SNAP_DIR, f"v{snap.version:08d}.json")
+        changes; the caller re-reads and re-plans."""
+        path = self._manifest_path(snap.version)
         if exclusive:
-            _exclusive_write(snap_path, snap.to_json())
+            _exclusive_write(path, snap.to_json())
         else:
-            _atomic_write(snap_path, snap.to_json())
-        if update_pointer:
-            _atomic_write(
-                os.path.join(self.path, VERSION_POINTER), str(snap.version)
-            )
+            _atomic_write(path, snap.to_json())
+        _atomic_write(os.path.join(self.path, VERSION_POINTER), str(snap.version))
 
     # ----------------------------------------------------------------- read
     def _scan(
@@ -1035,7 +1009,6 @@ class LakeTable:
         applied: dict[str, list[int]] | None = None,
         summary: dict[str, Any] | None = None,
         commit_type: str = "data",
-        pending_txn: str | None = None,
     ) -> Snapshot:
         """Commit snapshot ``parent.version + 1`` listing ``files``. Every
         other field defaults to ``parent``'s value; a caller passes the
@@ -1044,10 +1017,10 @@ class LakeTable:
         ``read_lineage`` can attribute files to commits (Iceberg's
         snapshot_id on manifest entries).
 
-        ``pending_txn`` stages the snapshot for a multi-table transaction
-        (lake/txn.py): the manifest is written exclusively but the pointer
-        does NOT move — visibility comes when the transaction record
-        commits and recover()/the coordinator rolls the pointer."""
+        The create-exclusive manifest write is the commit; moving the
+        version pointer afterwards only publishes it, and ``recover()``
+        finishes that step for a writer that died before it. Raises
+        ``CommitConflictError`` when vN already exists."""
         version = parent.version + 1
         snap = Snapshot(
             version=version,
@@ -1059,11 +1032,9 @@ class LakeTable:
             applied=dict(parent.applied if applied is None else applied),
             summary=dict(parent.summary if summary is None else summary),
             commit_type=commit_type,
-            pending_txn=pending_txn,
         )
-        update_pointer = pending_txn is None
         try:
-            self._write_snapshot(snap, exclusive=True, update_pointer=update_pointer)
+            self._write_snapshot(snap, exclusive=True)
         except CommitConflictError:
             if self._valid_orphan_snapshot(version) is not None:
                 # a durable vN exists (concurrent winner, or a crashed
@@ -1074,9 +1045,7 @@ class LakeTable:
                 raise
             # partial manifest from a writer that died mid-write: reclaim
             # it once it is old enough that no live writer can own it
-            import time
-
-            p = os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")
+            p = self._manifest_path(version)
             try:
                 stale = (
                     time.time() - os.path.getmtime(p)
@@ -1087,7 +1056,7 @@ class LakeTable:
             if not stale:
                 raise
             os.remove(p)
-            self._write_snapshot(snap, exclusive=True, update_pointer=update_pointer)
+            self._write_snapshot(snap, exclusive=True)
         return snap
 
     def applied_floor(self) -> int:
@@ -1158,8 +1127,6 @@ class LakeTable:
         crashed mid-write), provided they are older than
         ``min_age_seconds`` — the age guard keeps in-flight writers' files
         safe, exactly like Iceberg's orphan-file removal."""
-        import time
-
         _, live = self._retained(self.history())
         # version dirs (data/vNNN-nonce) that hold a referenced file:
         # writer bookkeeping files (_SUCCESS, .crc — never listed in
@@ -1194,32 +1161,38 @@ class LakeTable:
         return removed
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
-        """Delete snapshot manifests (and data files referenced by no kept
-        snapshot) older than the last ``keep_last`` in the commit chain —
-        the reference keeps 2 checkpoints (``scripts/train_llm.py:265``)."""
+        """Cut the chain to its last ``keep_last`` snapshots (the reference
+        keeps 2 checkpoints, ``scripts/train_llm.py:265``); tagged ones
+        survive. In order: delete the dropped snapshots' data files that no
+        kept or tagged snapshot references; re-parent the oldest kept
+        snapshot so ``history()`` stops there; then sweep ``snapshots/`` of
+        every untagged ``vNNNNNNNN.json`` below the oldest kept version.
+        The sweep lists the directory, not the chain, and runs even when
+        the chain is within ``keep_last``, so a resumed call finishes a
+        crashed one; it follows the re-parent, so ``history()`` never names
+        a missing parent. Returns the data files deleted."""
         chain = self.history()
-        if len(chain) <= keep_last:
-            return 0
         kept = chain[-keep_last:]
         tagged, live = self._retained(kept)
-        dropped = [s for s in chain[:-keep_last] if s.version not in tagged]
         removed = 0
-        for s in dropped:
+        for s in chain[: len(chain) - len(kept)]:
+            if s.version in tagged:
+                continue
             for f in s.files:
-                if f["path"] not in live:
-                    fp = os.path.join(self.path, f["path"])
-                    if os.path.exists(fp):
-                        os.remove(fp)
-                        removed += 1
-        # re-parent the oldest kept snapshot so history() stops there
-        # (must NOT move the version pointer — current stays current)
+                fp = os.path.join(self.path, f["path"])
+                if f["path"] not in live and os.path.exists(fp):
+                    os.remove(fp)
+                    removed += 1
         oldest = kept[0]
-        oldest.parent = None
-        self._write_snapshot(oldest, update_pointer=False)
-        for s in dropped:
-            sp = os.path.join(self.path, SNAP_DIR, f"v{s.version:08d}.json")
-            if os.path.exists(sp):
-                os.remove(sp)
+        if oldest.parent is not None:
+            oldest.parent = None
+            _atomic_write(self._manifest_path(oldest.version), oldest.to_json())
+        snap_dir = os.path.join(self.path, SNAP_DIR)
+        for fn in os.listdir(snap_dir):
+            m = _MANIFEST_RE.match(fn)
+            v = int(m.group(1)) if m else None
+            if v is not None and v < oldest.version and v not in tagged:
+                os.remove(os.path.join(snap_dir, fn))
         # prune empty data dirs
         ddir = os.path.join(self.path, DATA_DIR)
         for sub in os.listdir(ddir):

@@ -1,0 +1,327 @@
+"""Crash matrix: every table mutation, killed at each of its named steps.
+
+One row per crash point (``ROWS``). A row runs its mutation on a copy of
+one base table, dies at the point, then resumes the way an operator
+would: a fresh handle issues the same operation again, ``run()`` ingests
+whatever is pending, and one ``maintain`` pass follows. The table must
+then equal the generator's oracle, every file a retained manifest names
+must exist, nothing unreferenced may stay on disk, and a feed replica
+must converge. A new mutation adds one entry to ``MUTATIONS`` and one
+row per crash point.
+
+The crash is injected from here; the package has no hook for it. A row
+wraps one function so that it raises ``_Crash`` (a ``BaseException``)
+at the point. Nothing under ``lake/`` or ``cdc/`` catches
+``BaseException`` (``test_engine_never_catches_base_exception``), so the
+raise leaves the disk exactly as a process death would, and
+``test_apply_manifest_crash_in_subprocess`` checks one row against a real
+``os._exit``.
+"""
+
+import ast
+import os
+import shutil
+import subprocess
+import sys
+from dataclasses import dataclass
+
+import pytest
+
+import runyoro_llm_data_pipeline_spark as pkg
+from runyoro_llm_data_pipeline_spark.cdc.feed import IncrementalFeed
+from runyoro_llm_data_pipeline_spark.cdc.generator import (
+    gen_change_log,
+    write_batch_files,
+)
+from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+from runyoro_llm_data_pipeline_spark.lake import table as table_mod
+from runyoro_llm_data_pipeline_spark.lake.table import (
+    SNAP_DIR,
+    VERSION_POINTER,
+    LakeTable,
+    bucket_expr,
+)
+
+NUM_BUCKETS = 4
+TAG = "t1"
+COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+class _Crash(BaseException):
+    """The injected death. Not an ``Exception``, so no engine handler
+    stops it on its way out."""
+
+
+def _ingest(root: str) -> CdcIngest:
+    return CdcIngest(
+        os.path.join(root, "table"), os.path.join(root, "log"),
+        num_buckets=NUM_BUCKETS, compact_max_files=None,
+    )
+
+
+def _table(root: str) -> LakeTable:
+    return LakeTable.load(os.path.join(root, "table"))
+
+
+# each mutation opens its own handle, so a re-issue after a crash always
+# starts from a fresh LakeTable.load (or a new CdcIngest)
+MUTATIONS = {
+    "apply": lambda spark, root: _ingest(root).run(spark),
+    "compact": lambda spark, root: _table(root).compact(spark),
+    "rebucket": lambda spark, root: _table(root).rebucket(spark, 2 * NUM_BUCKETS),
+    "truncate_applied": lambda _, root: _table(root).truncate_applied(keep_last=1),
+    "rollback": lambda _, root: _table(root).rollback(TAG),
+    "expire_snapshots": lambda _, root: _table(root).expire_snapshots(keep_last=2),
+    "cleanup_orphans": lambda _, root: _table(root).cleanup_orphans(min_age_seconds=0),
+}
+
+
+def _always(*_args) -> bool:
+    return True
+
+
+def _is_pointer(path, *_rest) -> bool:
+    return os.path.basename(path) == VERSION_POINTER
+
+
+def _is_manifest(path, *_rest) -> bool:
+    return os.path.basename(os.path.dirname(path)) == SNAP_DIR
+
+
+def _is_data_file(path, *_rest) -> bool:
+    return path.endswith(".parquet")
+
+
+# point -> (owner, attribute, which calls hit, raise after the real call)
+POINTS = {
+    # the Spark write is done, its footers are not harvested
+    "written": (LakeTable, "_harvest", _always, False),
+    # files written and harvested, no manifest
+    "harvested": (table_mod, "_exclusive_write", _always, False),
+    # manifest durable, version pointer not moved
+    "manifest": (table_mod, "_atomic_write", _is_pointer, False),
+    "files_deleted": (os, "remove", _is_data_file, True),
+    "reparented": (table_mod, "_atomic_write", _is_manifest, True),
+    "manifests_deleted": (os, "remove", _is_manifest, True),
+    "removed": (os, "remove", _always, True),
+}
+
+ROWS = [
+    ("apply", "written"),
+    ("apply", "harvested"),
+    ("apply", "manifest"),
+    ("compact", "written"),
+    ("compact", "harvested"),
+    ("compact", "manifest"),
+    ("rebucket", "manifest"),
+    ("truncate_applied", "manifest"),
+    ("rollback", "manifest"),
+    ("expire_snapshots", "files_deleted"),
+    ("expire_snapshots", "reparented"),
+    ("expire_snapshots", "manifests_deleted"),
+    ("cleanup_orphans", "removed"),
+]
+
+# mutations that cut the feed's incremental window on their own
+RESYNC_ALLOWED = {"rollback", "expire_snapshots"}
+
+
+def _arm(mp: pytest.MonkeyPatch, point: str) -> None:
+    """Make the first call that ``point`` names raise ``_Crash``."""
+    owner, attr, hits, after = POINTS[point]
+    real = getattr(owner, attr)
+
+    def dying(*args, **kwargs):
+        if not after and hits(*args):
+            raise _Crash(point)
+        out = real(*args, **kwargs)
+        if after and hits(*args):
+            raise _Crash(point)
+        return out
+
+    mp.setattr(owner, attr, dying)
+
+
+@dataclass(frozen=True)
+class Base:
+    state: str  # table/, log/, feed.json: the tree each row copies
+    expected: str  # the generator's final state, as parquet
+    replica: dict  # the feed replica, synced at the base version
+
+
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory, feed_replica):
+    """3 of 4 batches applied on 4 buckets, batch 0 compacted into base
+    files (so expiry has data files to delete), a tag after batch 1,
+    live deltas from batches 1 and 2, one dead writer's uncommitted
+    files, and a feed replica synced at the current version."""
+    root = str(tmp_path_factory.mktemp("crash_base"))
+    state = os.path.join(root, "state")
+    events, expected = gen_change_log(spark, n_turns=240, n_convs=8, n_batches=4)
+    write_batch_files(events, os.path.join(state, "log"), files_per_batch=2)
+    expected.select(*COLS).write.parquet(os.path.join(root, "expected"))
+
+    ing = _ingest(state)
+    ing.run(spark, max_batches=1)
+    t = ing.table()
+    t.compact(spark)
+    ing.run(spark, max_batches=1)
+    t.tag(TAG)
+    ing.run(spark, max_batches=1)
+    assert [b for b, _ in ing.pending()] == [3]
+    snap = t.current()
+    keys = snap.key_cols
+    t.write_data_files(
+        t.read(spark, include_internal=True).limit(5).withColumn(
+            "__bucket", bucket_expr(keys[0], NUM_BUCKETS)
+        ),
+        snap.version + 1, NUM_BUCKETS, keys, kind="delta",
+    )
+    replica = feed_replica()
+    replica.sync(spark, IncrementalFeed(t.path, os.path.join(state, "feed.json")))
+    return Base(state, os.path.join(root, "expected"), replica.rows)
+
+
+def _resume_and_check(
+    spark, base: Base, root: str, mutation: str, check_table_files, feed_replica
+) -> int:
+    """Re-issue ``mutation``, ingest what is pending, sync the feed
+    replica, run one maintenance pass, and check the table. Returns the
+    number of ``write_data_files`` calls the re-issue made."""
+    writes = []
+    real_write = LakeTable.write_data_files
+
+    def counting(self, *args, **kwargs):
+        writes.append(args[1])
+        return real_write(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(LakeTable, "write_data_files", counting)
+        MUTATIONS[mutation](spark, root)
+    _ingest(root).run(spark)
+
+    # the replica syncs before maintenance: maintain's expiry at
+    # keep_last=2 would push any position out of history, and only a
+    # mutation that cuts the window itself may force a resync
+    t = _table(root)
+    replica = feed_replica(base.replica)
+    feed = IncrementalFeed(t.path, os.path.join(root, "feed.json"))
+    token = replica.sync(spark, feed)
+    assert token is not None
+    assert not token.was_resync or mutation in RESYNC_ALLOWED
+    assert replica.rows == feed_replica.state(spark, t)
+
+    t.maintain(spark, keep_last_snapshots=2, orphan_age_seconds=0)
+    t = _table(root)
+    got = t.read(spark).select(*COLS)
+    want = spark.read.parquet(base.expected)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    check_table_files(t)
+    return len(writes)
+
+
+def _copy(base: Base, tmp_path) -> str:
+    root = str(tmp_path / "state")
+    shutil.copytree(base.state, root)
+    return root
+
+
+@pytest.mark.parametrize(
+    "mutation,point", ROWS, ids=[f"{m}/{p}" for m, p in ROWS]
+)
+def test_crash_then_resume_converges(
+    spark, base, tmp_path, mutation, point, check_table_files, feed_replica
+):
+    root = _copy(base, tmp_path)
+    with pytest.MonkeyPatch.context() as mp:
+        _arm(mp, point)
+        with pytest.raises(_Crash):
+            MUTATIONS[mutation](spark, root)
+    writes = _resume_and_check(
+        spark, base, root, mutation, check_table_files, feed_replica
+    )
+    if (mutation, point) == ("apply", "manifest"):
+        # the adopted manifest already applied the batch
+        assert writes == 0
+
+
+_CHILD = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+from runyoro_llm_data_pipeline_spark.lake import table as table_mod
+from runyoro_llm_data_pipeline_spark.session import get_spark
+
+real = table_mod._atomic_write
+
+def die_before_pointer(path, content):
+    if os.path.basename(path) == table_mod.VERSION_POINTER:
+        os._exit(1)
+    real(path, content)
+
+table_mod._atomic_write = die_before_pointer
+spark = get_spark(app_name="crash-child")
+root = sys.argv[2]
+CdcIngest(
+    os.path.join(root, "table"), os.path.join(root, "log"),
+    num_buckets=int(sys.argv[3]), compact_max_files=None,
+).run(spark)
+os._exit(0)
+"""
+
+
+def test_apply_manifest_crash_in_subprocess(
+    spark, base, tmp_path, check_table_files, feed_replica
+):
+    """The ``apply/manifest`` row with a real process death: a child
+    ingests and calls ``os._exit(1)`` once its manifest is durable, before
+    the pointer moves. Resuming here gives the in-process row's outcome."""
+    root = _copy(base, tmp_path)
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "2"}
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    child = subprocess.run(
+        [sys.executable, "-c", _CHILD, REPO, root, str(NUM_BUCKETS)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert child.returncode == 1, child.stderr[-2000:]
+    t = LakeTable(os.path.join(root, "table"))
+    unpublished = f"v{t.current_version() + 1:08d}.json"
+    assert unpublished in os.listdir(os.path.join(t.path, SNAP_DIR))
+    writes = _resume_and_check(
+        spark, base, root, "apply", check_table_files, feed_replica
+    )
+    assert writes == 0
+
+
+def test_engine_never_catches_base_exception():
+    """The in-process ``_Crash`` equals a process death only while no
+    handler under ``lake/`` or ``cdc/`` can catch it: no ``except
+    BaseException`` and no bare ``except:``."""
+    offenders = []
+    pkg_dir = os.path.dirname(pkg.__file__)
+    for sub in ("lake", "cdc"):
+        for dirpath, _, fns in os.walk(os.path.join(pkg_dir, sub)):
+            for fn in fns:
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read(), path)
+                for node in ast.walk(tree):
+                    if not isinstance(node, ast.ExceptHandler):
+                        continue
+                    caught = (
+                        node.type.elts if isinstance(node.type, ast.Tuple)
+                        else [node.type]
+                    )
+                    if any(
+                        c is None
+                        or (isinstance(c, ast.Name) and c.id == "BaseException")
+                        for c in caught
+                    ):
+                        offenders.append(
+                            f"{os.path.relpath(path, pkg_dir)}:{node.lineno}"
+                        )
+    assert offenders == []
