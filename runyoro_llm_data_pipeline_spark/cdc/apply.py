@@ -27,10 +27,12 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   (1) scan → normalize → partial ``max_by`` into the collapse shuffle,
   (2) final collapse into the bucket shuffle, (3) the partitioned parquet
   write. The partial aggregation means the post-collapse bucket shuffle
-  moves at most one row per key and task. The collapse is kept as
-  the benchmarked default, not as the fastest: on a 4-CPU host it measured
-  slower than the Arrow and single-shuffle collapses that were tried, so
-  replacing it is a job for a measured A/B.
+  moves at most one row per key and task. The bucket repartition runs
+  ``min(num_buckets, cores)`` write tasks with each bucket on exactly one
+  of them, so a batch appends at most one delta file per bucket. The
+  collapse is kept as the benchmarked default, not as the fastest: on a
+  4-CPU host it measured slower than the Arrow and single-shuffle
+  collapses that were tried, so replacing it is a job for a measured A/B.
   Admission metrics (counts and the admitted lsn range) are piggybacked
   on the write via ``Observation`` (no extra scan). Each new file's row
   count and key/lsn bounds are harvested from its parquet *footer* onto

@@ -64,9 +64,10 @@ class CdcIngest:
         """``batch_dir`` is the source of ``run()`` and ``run_stream()``;
         ``run_log()`` takes its log as an argument and needs none.
 
-        Batches append O(batch) delta files; with ``compact_max_files=k``
-        any bucket accumulating more than k delta files is compacted
-        inline (a data-only snapshot — resumable like every other commit).
+        A batch appends at most one delta file per bucket it touches; with
+        ``compact_max_files=k`` any bucket accumulating more than k delta
+        files is compacted inline (a data-only snapshot — resumable like
+        every other commit), so about k batches run between compactions.
         ``None`` disables auto-compaction.
 
         ``truncate_keep`` bounds the applied-batch ledger: once more than

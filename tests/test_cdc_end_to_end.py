@@ -48,6 +48,8 @@ def test_full_replay_matches_expected(spark, log, tmp_lake):
     ing = CdcIngest(os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8)
     results = ing.run(spark)
     assert all(r["status"] == "applied" for r in results)
+    # the default compact_max_files=4 compacts inside a 6-batch run
+    assert any(s.commit_type == "maintenance" for s in ing.table().history())
     final = ing.table().read(spark)
     assert _sorted_rows(final) == expected
 
@@ -193,7 +195,8 @@ def test_snapshot_expiry(spark, log, tmp_lake):
 
 def test_extreme_skew_hot_conversation(spark, tmp_lake, tmp_path_factory):
     """90% of all turns in ONE conversation: the map-side-combined collapse
-    and salted bucket writes must keep correctness (and not OOM a task).
+    and the one-writer-per-bucket write must keep correctness (and not OOM
+    a task).
     Perf evidence for the skew story is in BENCH.md/PLANS.md; this pins
     correctness under pathological skew."""
     d = str(tmp_path_factory.mktemp("skew"))

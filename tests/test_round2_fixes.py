@@ -58,20 +58,28 @@ def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_fac
     assert inc.count() == len(late_keys)
 
 
-def test_incremental_read_sees_cow_commits(spark, tmp_lake, tmp_path_factory):
+def test_incremental_read_across_inline_compactions(
+    spark, tmp_lake, tmp_path_factory
+):
     """ADVICE(high): every data commit must appear in incremental reads,
-    across the default ingest's inline compactions (which rewrite buckets
-    into base files between the consumer's checkpoints). The consumer is
-    never under-delivered, and delivered values match the table state."""
+    across inline compactions (which rewrite buckets into base files
+    between the consumer's checkpoints). The consumer is never
+    under-delivered, and delivered values match the table state."""
     d = str(tmp_path_factory.mktemp("incdata"))
     events, _ = gen_change_log(spark, n_turns=300, n_convs=12, n_batches=4)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
+    ing = CdcIngest(
+        os.path.join(tmp_lake, "t"), d, num_buckets=4, compact_max_files=1
+    )
     ing.run(spark, max_batches=2)
     t = ing.table()
     v_mid = t.current_version()
     ing.run(spark)
     t = ing.table()
+    # a compaction landed inside the window the consumer reads
+    assert any(
+        s.commit_type == "maintenance" and s.version > v_mid for s in t.history()
+    )
 
     inc = t.read_incremental(spark, v_mid)
     late_keys = {

@@ -1,15 +1,21 @@
 """The snapshot owns the table layout: a handle plans every read, write
 and rewrite against the bucket modulus of the snapshot it reads, so a
-handle that did not make a layout change still agrees with the table."""
+handle that did not make a layout change still agrees with the table.
+Every write gives each bucket one writer, so an apply lands one delta per
+touched bucket and ``compact_max_files=k`` counts batches."""
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
-from runyoro_llm_data_pipeline_spark.cdc.generator import gen_change_log
+from runyoro_llm_data_pipeline_spark.cdc.generator import (
+    gen_change_log,
+    write_batch_files,
+)
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import LakeTable, bucket_expr
 
 
 def _lookup_misses(spark, t: LakeTable) -> list[str]:
@@ -45,3 +51,50 @@ def test_stale_handle_plans_against_rival_rebucket(spark, tmp_lake):
     # A's compaction rewrote under the snapshot's modulus, not a stale 2
     assert len({f["bucket"] for f in snap.files}) > 2
     assert _lookup_misses(spark, LakeTable.load(path)) == []
+
+
+def _added_per_bucket(snap) -> Counter:
+    return Counter(f["bucket"] for f in snap.files if f.get("added_v") == snap.version)
+
+
+def test_apply_writes_one_delta_per_touched_bucket(spark, tmp_lake):
+    events, _ = gen_change_log(
+        spark, n_turns=2000, n_convs=20, n_batches=1, hot_share_pct=90
+    )
+    t = CdcIngest(os.path.join(tmp_lake, "t"), num_buckets=8).table()
+    apply_batch(spark, t, events, 0)
+    touched = {
+        r["b"]
+        for r in events.select(bucket_expr("conv_id", 8).alias("b"))
+        .distinct()
+        .collect()
+    }
+    snap = t.current()
+    added = _added_per_bucket(snap)
+    assert set(added) == touched
+    assert all(n == 1 for n in added.values())
+    assert sum(added.values()) <= 8
+    assert {f["kind"] for f in snap.files} == {"delta"}
+
+
+def test_compaction_cadence_counts_batches(spark, tmp_lake, tmp_path_factory):
+    k = 2
+    d = str(tmp_path_factory.mktemp("cadence"))
+    events, _ = gen_change_log(spark, n_turns=400, n_convs=12, n_batches=k + 2)
+    write_batch_files(events, d)
+    ing = CdcIngest(
+        os.path.join(tmp_lake, "t"), d, num_buckets=4, compact_max_files=k
+    )
+    ing.run(spark)
+    t = ing.table()
+    first = next(s for s in t.history() if s.commit_type == "maintenance")
+    # batches 0..k left k+1 deltas in a bucket: the first compaction
+    # directly follows batch k, the (k+1)-th batch
+    assert t.snapshot(first.parent).summary["last_batch_id"] == k
+
+    # a full compaction leaves one base file per bucket
+    assert t.compact(spark) > 0
+    files = t.current().files
+    assert {f["kind"] for f in files} == {"base"}
+    assert sorted(Counter(f["bucket"] for f in files).values()) == [1] * 4
+
