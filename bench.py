@@ -1,14 +1,14 @@
-"""Bench harness — headline queries at $SPARK_GRAFT_SF_DIR plus CDC apply
-throughput, printed as ONE JSON line.
+"""Bench harness — the curation query suite at $SPARK_GRAFT_SF_DIR, printed
+as ONE JSON line.
 
-Per the driver contract: runs on ``local[host_cpus()]`` (``$SPARK_GRAFT_CPUS``
-when set, else the CPUs this process may use) and prints
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
-Extra keys: ``cdc`` (events/sec of the end-to-end apply path — the
-BASELINE.json headline metric) and ``rows`` per query for sanity.
+Runs on the engine's own session (``get_spark()`` defaults:
+``local[host_cpus()]``, shuffle partitions ≈ cores) and prints
+``{"metric": "headline_suite", "value": N, "unit": "sec", "queries": {...},
+"sf": ...}`` plus the ANN-index and materialization timings and a host
+probe; ``BENCH_FULL.json`` also gets the ``rows`` per query for sanity.
 
-Executor-scaling evidence lives in ``bench_scaling_cluster.py`` /
-``BENCH.md``; this file is the per-round loop.
+CDC ingest is measured by ``perfbench/run.py`` (oracle-gated); executor
+scaling by ``bench_scaling_cluster.py``.
 """
 
 from __future__ import annotations
@@ -88,8 +88,6 @@ def bench_ann_index(spark, n_queries: int = 8) -> dict:
     (materialized to parquet), then run queries as (tbl, sig) equi-joins
     + candidate-only re-scoring against the stored index — per-query cost
     is the candidate fraction, not a full-corpus signature recompute."""
-    from pyspark.sql import functions as F
-
     from runyoro_llm_data_pipeline_spark.operators.similarity import (
         build_lsh_index,
         cosine_topk_lsh,
@@ -183,70 +181,6 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, int], dict[str, fl
     return times, rows, mat
 
 
-def bench_cdc(spark, n_turns: int = 1_000_000) -> dict:
-    """End-to-end CDC apply throughput: synthesize a deterministic change
-    log (~1.7 events/turn: stale versions, duplicate deliveries, deletes,
-    ghosts, hot-key skew), materialize it, then time ingest → committed
-    snapshot. events/sec counts *log events applied end-to-end*."""
-    from pyspark.sql import functions as F
-
-    from runyoro_llm_data_pipeline_spark.cdc.generator import (
-        gen_change_log,
-        write_batch_files,
-    )
-    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-
-    work = tempfile.mkdtemp(prefix="cdc_bench_")
-    try:
-        log_dir = os.path.join(work, "log")
-        events, _ = gen_change_log(
-            spark, n_turns=n_turns, n_convs=max(n_turns // 20, 10), n_batches=4,
-            tool_from_batch=2,
-        )
-        write_batch_files(events, log_dir, tool_from_batch=2)
-        n_events = sum(
-            spark.read.parquet(p).count()
-            for _, p in sorted(
-                (int(d.split("_")[1]), os.path.join(log_dir, d))
-                for d in os.listdir(log_dir)
-            )
-        )
-        # untimed warm-up ingest over a small separate log: the apply
-        # path's scan/normalize/collapse/commit codegen is JIT-compiled
-        # here instead of inside the timed window — a constant cost any
-        # long-running ingest job amortizes away, and the one the
-        # query-suite warm-up above does NOT cover (different plan).
-        warm_log = os.path.join(work, "warmlog")
-        warm, _ = gen_change_log(
-            spark, n_turns=max(n_turns // 10, 10_000),
-            n_convs=max(n_turns // 200, 10), n_batches=1,
-        )
-        write_batch_files(warm, warm_log)
-        CdcIngest(
-            os.path.join(work, "warm_table"), warm_log, num_buckets=32,
-            compact_max_files=8,
-        ).run(spark)
-        shutil.rmtree(os.path.join(work, "warm_table"), ignore_errors=True)
-        ing = CdcIngest(
-            os.path.join(work, "table"), log_dir, num_buckets=32,
-            compact_max_files=8,
-        )
-        t0 = time.perf_counter()
-        results = ing.run(spark)
-        dt = time.perf_counter() - t0
-        final_rows = ing.table().read(spark).count()
-        assert all(r["status"] == "applied" for r in results)
-        return {
-            "events": n_events,
-            "sec": round(dt, 3),
-            "events_per_sec": round(n_events / dt, 1),
-            "final_rows": final_rows,
-            "batches": len(results),
-        }
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def host_probe() -> dict:
     """Host-health snapshot recorded alongside the result so a degraded
     record is attributable (BENCH.md §3b: suite totals swing ±25% with
@@ -265,25 +199,19 @@ def host_probe() -> dict:
 
 def main() -> None:
     host_start = host_probe()
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=max(CPUS, 8),
-    )
+    spark = get_spark(app_name="bench")
     t_all = time.perf_counter()
     qtimes, qrows, mat = bench_queries(spark)
     ann = bench_ann_index(spark)
-    cdc = bench_cdc(spark)
     total = round(time.perf_counter() - t_all, 3)
     host_end = host_probe()
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     record = {
-        "metric": "headline_suite_plus_cdc_apply",
+        "metric": "headline_suite",
         "value": total,
         "unit": "sec",
         "queries": qtimes,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cdc": cdc,
         "ann_index": ann,
         "materialize": mat,
         "cpus": CPUS,

@@ -11,10 +11,11 @@ This script runs the real A/B: Spark **standalone local-cluster mode**
 (``local-cluster[n_exec, cores, worker_mb]``), which launches each executor
 as a SEPARATE JVM process with its own heap — the faithful sandbox analogue
 of ``spark-submit`` against a standalone cluster at two sizes. The job, the
-materialized input log, and every engine knob are identical between the two
-configurations; only the executor count changes (N=1 → 4N=4, 8 cores each).
-Shuffle partitions scale with total cores, as they would via ``--conf`` on
-a real cluster.
+materialized input log, and the engine's session conf (``get_spark``
+defaults, AQE on) are identical between the two configurations; only the
+executor count changes (N=1 → 4N=4, ``$SCALING_CORES`` cores each, default
+4). Shuffle partitions scale with total cores, as they would via ``--conf``
+on a real cluster.
 
 Shuffle/table dirs live on /dev/shm: each executor on a real cluster has
 its own local NVMe, so I/O bandwidth scales with executor count; this
@@ -65,8 +66,7 @@ phase = sys.argv[1]; work = sys.argv[2]; n_exec = int(sys.argv[3]); n_turns = in
 cores = %(cores)d
 log = os.path.join(work, "log")
 if phase == "gen":
-    spark = get_spark(app_name="scaling-gen", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="scaling-gen")
     from runyoro_llm_data_pipeline_spark.cdc.generator import gen_change_log, write_batch_files
     n_batches = int(os.environ.get("SCALING_BATCHES", "2"))
     events, _ = gen_change_log(spark, n_turns=n_turns, n_convs=max(n_turns // 20, 10),
@@ -93,10 +93,6 @@ else:
             "spark.executor.memory": "12g",
             "spark.local.dir": local_dir,
             "spark.executorEnv.PYTHONPATH": %(repo)r,
-            # fixed partition counts: AQE's per-query-stage replan barriers
-            # add driver latency per batch without helping this fully-known
-            # plan (same setting in both configs)
-            "spark.sql.adaptive.enabled": "false",
         },
     )
     # wait until every executor has registered so the timed run does not

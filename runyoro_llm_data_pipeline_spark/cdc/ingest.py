@@ -5,7 +5,8 @@ Generalizes the reference's re-scan-and-skip ingest loop
 ``scripts/orchestrator.py:52-101``). Three front-ends feed one private apply
 step — ``apply_batch``, then ``compact_if_needed``, then one ledger
 truncation per run — so every source gets the same compaction threshold,
-quarantine, ledger bound and session-conf restore:
+quarantine and ledger bound. None of them writes session conf: every batch
+is read under the session's own split rule (``session.get_spark``):
 
 * ``run()`` discovers batch directories (``<batch_dir>/batch_<id>/*.parquet``),
   consults the applied-offset map stored *in* the committed snapshot (the
@@ -45,8 +46,6 @@ from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
 from runyoro_llm_data_pipeline_spark.sources.offsets import OFFSETS_KEY, OffsetLog
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
-_MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
-_OPEN_COST_BYTES = "spark.sql.files.openCostInBytes"
 
 
 class CdcIngest:
@@ -117,46 +116,13 @@ class CdcIngest:
         snap = self.table().current()
         return [(b, p) for b, p in self.discover() if not snap.has_applied(b)]
 
-    @staticmethod
-    def _tune_split_size(spark: SparkSession, batch_path: str) -> None:
-        """Right-size input splits for this batch: with the stock 128 MB
-        ``maxPartitionBytes`` (+4 MB per-file open cost) a small catch-up
-        batch collapses into 2-3 splits and the scan→normalize→partial-agg
-        map stage — the CPU-heavy part of apply — serializes onto a few
-        cores. Target ≈ 2 splits per core, floored at 4 MB; at 10^10-event
-        scale batches are big and this converges back to the default.
-        Session-global: every run restores both keys when it returns."""
-        try:
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(batch_path)
-                for f in fs
-            )
-        except OSError:
-            return
-        cores = spark.sparkContext.defaultParallelism
-        target = max(size // (cores * 2), 1024 * 1024)
-        target = min(target, 128 * 1024 * 1024)
-        spark.conf.set(_MAX_PARTITION_BYTES, str(target))
-        spark.conf.set(_OPEN_COST_BYTES, str(512 * 1024))
-
     @contextlib.contextmanager
-    def _run(self, spark: SparkSession):
-        """One ingest run: yields the table and the run's result list,
-        restores the split-size session conf however the run ends, and
+    def _run(self):
+        """One ingest run: yields the table and the run's result list, and
         truncates the applied ledger once if the run completes."""
         table = self.table()
         results: list[dict[str, Any]] = []
-        conf = spark.conf.getAll
-        saved = {k: conf.get(k) for k in (_MAX_PARTITION_BYTES, _OPEN_COST_BYTES)}
-        try:
-            yield table, results
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+        yield table, results
         if (
             results
             and self.truncate_keep is not None
@@ -194,11 +160,10 @@ class CdcIngest:
     ) -> list[dict[str, Any]]:
         """Apply pending batch directories in order; ``max_batches`` lets
         tests simulate a crash between commits."""
-        with self._run(spark) as (table, results):
+        with self._run() as (table, results):
             for i, (batch_id, path) in enumerate(self.pending()):
                 if max_batches is not None and i >= max_batches:
                     break
-                self._tune_split_size(spark, path)
                 events = spark.read.parquet(path)
                 results.append(self._apply(spark, table, events, batch_id))
         return results
@@ -214,7 +179,7 @@ class CdcIngest:
         for incremental catch-up jobs). Each micro-batch is applied with
         its epoch id as the batch id; ``max_files_per_trigger`` caps the
         files per epoch."""
-        with self._run(spark) as (table, results):
+        with self._run() as (table, results):
 
             def apply_epoch(df: DataFrame, epoch_id: int) -> None:
                 results.append(
@@ -243,7 +208,7 @@ class CdcIngest:
         crash after commit makes the retry a structural no-op and a crash
         before commit re-reads the identical range. Each result carries the
         committed ``offsets``."""
-        with self._run(spark) as (table, results):
+        with self._run() as (table, results):
             since = dict(table.current().summary.get(OFFSETS_KEY, {}))
             pending = {
                 p: hi

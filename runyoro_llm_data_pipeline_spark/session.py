@@ -1,4 +1,5 @@
-"""SparkSession factory — one place for AQE / shuffle / Arrow / skew config.
+"""SparkSession factory — the one place the engine sets session conf, and
+only at build time (input splits follow Spark's own split rule).
 
 The reference has no session concept (single Python process,
 ``scripts/process_raw_data.py:46-54`` runs sources strictly sequentially);
@@ -107,7 +108,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.mergeSchema", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
     )

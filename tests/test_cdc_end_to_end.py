@@ -255,9 +255,9 @@ def front_ends(spark, log, tmp_path_factory):
 
 @pytest.mark.parametrize("how", FRONT_ENDS)
 def test_run_leaves_session_conf_unchanged(front_ends, how):
-    """Per-batch split sizing is scoped to the ingest: after every
-    front-end's run each session setting is back to what it was,
-    including keys that were unset before."""
+    """No front-end writes session conf: after every front-end's run
+    each session setting is what it was, including keys that were unset
+    before."""
     _ing, results, before, after = front_ends[how]
     assert results
     assert after == before
