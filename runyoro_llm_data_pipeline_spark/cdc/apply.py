@@ -42,9 +42,10 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   data files and the manifest. Readers collapse base ∪ deltas;
   ``LakeTable.compact`` folds deltas back into base files.
 * **commit**: data files (with their stats) + applied offsets land in ONE
-  snapshot; the version-pointer rename is the commit point. Crash anywhere
-  before it → next run re-applies the batch onto the previous snapshot and
-  converges to the same state (orphan files are ignored by manifests).
+  snapshot manifest, and linking it into ``snapshots/`` is the commit
+  point (``LakeTable.commit``). Crash anywhere before it → next run
+  re-applies the batch onto the previous snapshot and converges to the
+  same state (orphan files are ignored by manifests).
 """
 
 from __future__ import annotations
@@ -186,11 +187,11 @@ def apply_batch(
     ``key_cols``, bucketed under its ``num_buckets``) as per-bucket delta
     files with one write query — three Spark jobs under AQE, see the
     module docstring (write-optimized — pair with ``table.compact()``,
-    which ``CdcIngest`` runs through ``compact_if_needed`` after every
-    batch).
+    which ``CdcIngest`` runs with ``max_files=compact_max_files`` after
+    every batch).
 
     **Optimistic concurrency with bounded retry**: if another writer
-    commits between this call's snapshot read and its pointer swap (e.g.
+    commits between this call's snapshot read and its manifest link (e.g.
     an overlapping cron launch of the reference's run-again-forever loop,
     ``train_llm.py:126-129``), the atomic commit raises
     ``CommitConflictError``; this call then re-reads the fresh snapshot

@@ -30,8 +30,8 @@ Contract (Kafka-consumer-shaped, at-least-once):
   simply absent from it). ``was_resync`` on the token tells the sink to
   truncate-and-load instead of merge.
 
-The checkpoint is a tiny JSON file committed by atomic rename — same
-durability mechanism as the table's own version pointer, and it lives
+The checkpoint is a tiny JSON file published whole by the table's own
+file writer (``_atomic_write``: temp, fsync, rename), and it lives
 *outside* the table directory because consumer progress belongs to the
 consumer (many feeds, one table).
 
@@ -91,20 +91,22 @@ class IncrementalFeed:
     def poll(self, spark: SparkSession) -> tuple[DataFrame, FeedToken] | None:
         """One consumption cycle. ``None`` = caught up (no data committed
         since the checkpoint — maintenance commits alone don't wake the
-        consumer, their content is a rewrite of what it already saw)."""
+        consumer, their content is a rewrite of what it already saw).
+        The window is planned from one snapshot, which is also the token's
+        version, and judged empty from the manifest's harvested row
+        counts, so a poll with nothing new starts no Spark job."""
         table = LakeTable.load(self.table_path)
-        cur = table.current()
         pos = self.position()
-        if cur.version <= pos:
-            return None
-        token = FeedToken(version=cur.version)
         if pos < 0:
-            return self._resync(spark, table, cur.version)
+            return self._resync(spark, table)
         try:
-            df = table.read_incremental(spark, since_version=pos)
+            snap, files = table._window(pos)
         except IncrementalHistoryError:
-            return self._resync(spark, table, cur.version)
-        if df.isEmpty():
+            return self._resync(spark, table)
+        if snap.version <= pos:
+            return None
+        token = FeedToken(version=snap.version)
+        if not any(f["rows"] for f in files):
             # only maintenance commits in the window: fast-forward the
             # checkpoint so the next incremental walk starts at the tip
             # instead of re-diffing the same maintenance chain forever
@@ -113,14 +115,15 @@ class IncrementalFeed:
         # one delivery schema for both modes: public columns +
         # normalized tombstone flag (engine version columns are the
         # table's internals, not the consumer's)
-        df = df.withColumn(
+        df = table._scan(spark, snap, files).withColumn(
             DELETED, F.coalesce(F.col(DELETED), F.lit(False))
         ).drop(*[c for c in INTERNAL_COLS if c != DELETED])
         return df, token
 
     def _resync(
-        self, spark: SparkSession, table: LakeTable, version: int
+        self, spark: SparkSession, table: LakeTable
     ) -> tuple[DataFrame, FeedToken]:
+        version = table.current().version
         full = table.read(spark, version=version).withColumn(
             DELETED, F.lit(False)
         )

@@ -3,10 +3,11 @@
 Generalizes the reference's re-scan-and-skip ingest loop
 (``scripts/process_raw_data.py:46-54`` + ledger admission
 ``scripts/orchestrator.py:52-101``). Three front-ends feed one private apply
-step — ``apply_batch``, then ``compact_if_needed``, then one ledger
-truncation per run — so every source gets the same compaction threshold,
-quarantine and ledger bound. None of them writes session conf: every batch
-is read under the session's own split rule (``session.get_spark``):
+step — ``apply_batch``, then ``compact(max_files=compact_max_files)``, then
+one ledger truncation per run — so every source gets the same compaction
+threshold, quarantine and ledger bound. None of them writes session conf:
+every batch is read under the session's own split rule
+(``session.get_spark``):
 
 * ``run()`` discovers batch directories (``<batch_dir>/batch_<id>/*.parquet``),
   consults the applied-offset map stored *in* the committed snapshot (the
@@ -139,7 +140,8 @@ class CdcIngest:
         summary_extra: dict | None = None,
     ) -> dict[str, Any]:
         """The apply step every front-end shares: one exactly-once batch,
-        then the post-apply compaction policy."""
+        then the post-apply compaction policy (``compact`` of the buckets
+        holding more than ``compact_max_files`` deltas)."""
         result = apply_batch(
             spark,
             table,
@@ -149,10 +151,11 @@ class CdcIngest:
             quarantine_dir=self.quarantine_dir,
             summary_extra=summary_extra,
         )
-        table.compact_if_needed(
-            spark, self.compact_max_files,
-            target_file_rows=self.compact_target_file_rows,
-        )
+        if self.compact_max_files is not None:
+            table.compact(
+                spark, self.compact_max_files,
+                target_file_rows=self.compact_target_file_rows,
+            )
         return result
 
     def run(

@@ -10,29 +10,34 @@ dedup index. This module generalizes it into a real table format:
   batch appends delta files to the buckets it touches, and compaction and
   point lookups prune by bucket;
 * **snapshots** are JSON manifests (schema + file list + summary properties +
-  applied-offset map) committed by atomic ``os.rename`` of a version pointer —
-  the same all-or-nothing property as the reference's ledger rewrite, and the
-  same mechanism Iceberg's HadoopTableOperations uses for file-system
-  catalogs;
+  applied-offset map), each written whole to a temp file and linked into
+  place as ``snapshots/vN.json`` — the same all-or-nothing property as the
+  reference's ledger rewrite, and the mechanism Iceberg's file-system
+  catalog uses for its metadata files;
 * **per-file stats** live on the manifest entry and nowhere else: each write
   opens every new file's footer once and records its row count and its key
   and lsn bounds. Point lookups prune files by those bounds, and lineage is
   read from the entries each data commit added, along the snapshot chain, so
   it is retained exactly as long as the snapshots themselves;
 * **exactly-once** falls out: applied batch offsets are recorded in the same
-  snapshot that contains their data, so a crash before the pointer swap
-  leaves both invisible and replay is safe (idempotent, cf.
+  snapshot that contains their data, so a crash before its manifest is
+  linked leaves both invisible and replay is safe (idempotent, cf.
   ``scripts/orchestrator.py:88-101`` duplicate-skip);
 * **schema evolution** is additive: each snapshot carries the full Spark
   schema; readers pass it explicitly so older files missing a column yield
   nulls (generalizing the ledger's dynamic additive entry shapes,
   ``processed_data/processed_data_metadata.json``).
 
-Commits: writing ``snapshots/vN.json`` create-exclusive is the commit, a
-CAS (Iceberg's optimistic concurrency); the pointer rename after it only
-publishes it, and ``recover()`` finishes that for a writer that died.
-``apply_batch`` retries a lost commit and re-gates on ``has_applied``; a
-losing maintenance commit raises ``CommitConflictError``.
+Commits: every table file is written by ``_atomic_write`` (temp file,
+fsync, publish), so no reader ever sees a partial one. Linking the new
+manifest to ``snapshots/vN.json`` is the commit, a CAS (Iceberg's
+optimistic concurrency): it fails if vN exists. The ``_VERSION`` pointer
+renamed after it is only a hint that ``current_version`` probes forward
+from, so a writer that dies between the two has still committed, and one
+that dies before the link leaves only a temp manifest, which
+``expire_snapshots`` sweeps. ``apply_batch`` retries a lost commit and
+re-gates on ``has_applied``; a losing maintenance commit raises
+``CommitConflictError``.
 
 Scale notes (100 TB / 1000 executors): the manifest lists O(num_buckets ×
 files-per-bucket) entries handled driver-side — same order as Iceberg's
@@ -73,7 +78,8 @@ VERSION_POINTER = "_VERSION"
 TAGS_FILE = "tags.json"
 SNAP_DIR = "snapshots"
 DATA_DIR = "data"
-_MANIFEST_RE = re.compile(r"^v(\d{8})\.json$")
+# a manifest, or the temp a writer stages it in (``_atomic_write``)
+_MANIFEST_RE = re.compile(r"^v(\d{8})\.json(\.tmp\.[0-9a-f]+)?$")
 
 # internal CDC version/tombstone columns stored in data files, hidden from
 # public reads (deletes persist as tombstones so batch application is
@@ -168,22 +174,43 @@ class IncrementalHistoryError(RuntimeError):
     were expired; the consumer must fall back to a full read."""
 
 
-def _atomic_write(path: str, content: str) -> None:
+def _atomic_write(path: str, content: str, exclusive: bool = False) -> None:
+    """The one way the engine writes a table file: ``content`` goes to a
+    temp file beside ``path``, is fsynced, then published whole, so a
+    reader sees the old file or the complete new one and a dead writer
+    leaves only the temp. ``exclusive`` publishes with ``os.link``, which
+    fails if ``path`` exists — the commit CAS, raised as
+    ``CommitConflictError`` (also when ``expire_snapshots`` swept the temp
+    of a version that is no longer ahead). Otherwise ``os.rename``
+    replaces ``path``."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         fh.write(content)
         fh.flush()
         os.fsync(fh.fileno())
-    os.rename(tmp, path)  # POSIX atomic — the commit point
+    if not exclusive:
+        os.rename(tmp, path)
+        return
+    try:
+        os.link(tmp, path)
+        won = True
+    except (FileExistsError, FileNotFoundError):
+        won = False
+    with contextlib.suppress(FileNotFoundError):  # a swept temp is gone
+        os.remove(tmp)
+    if not won:
+        raise CommitConflictError(
+            f"snapshot {os.path.basename(path)} was committed concurrently"
+        )
 
 
 @contextlib.contextmanager
 def _file_lock(path: str):
     """Advisory exclusive lock (flock) serializing read-modify-write of a
     shared sidecar file (tags.json). Manifest commits don't need this —
-    they CAS via ``_exclusive_write`` — but tag mutations rewrite one
-    shared map, and last-writer-wins there can un-pin a snapshot that the
-    next expire/cleanup pass then permanently deletes."""
+    they CAS via ``_atomic_write(exclusive=True)`` — but tag mutations
+    rewrite one shared map, and last-writer-wins there can un-pin a
+    snapshot that the next expire/cleanup pass then permanently deletes."""
     fd = os.open(path, os.O_CREAT | os.O_RDWR)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX)
@@ -191,22 +218,6 @@ def _file_lock(path: str):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
-
-
-def _exclusive_write(path: str, content: str) -> None:
-    """Create-exclusive write: fails with CommitConflictError if the file
-    already exists — the optimistic-concurrency primitive (same contract
-    as Iceberg's version-file CAS for file-system catalogs)."""
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as e:
-        raise CommitConflictError(
-            f"snapshot {os.path.basename(path)} was committed concurrently"
-        ) from e
-    with os.fdopen(fd, "w") as fh:
-        fh.write(content)
-        fh.flush()
-        os.fsync(fh.fileno())
 
 
 def footer_bounds(
@@ -283,10 +294,6 @@ class LakeTable:
     two handles on one path always agree with the committed table.
     """
 
-    # a partial snapshot manifest older than this is considered abandoned
-    # by a dead writer and may be reclaimed during commit
-    stale_manifest_seconds: float = 300.0
-
     def __init__(self, path: str):
         self.path = os.path.abspath(path)
 
@@ -313,25 +320,31 @@ class LakeTable:
                 applied={},
                 summary={"num_buckets": num_buckets, "key_cols": list(key_cols)},
             )
-            t._write_snapshot(snap)
-        else:
-            t.recover()
+            with contextlib.suppress(CommitConflictError):  # a rival created it
+                t._write_snapshot(snap)
         return t
 
     @staticmethod
     def load(path: str) -> "LakeTable":
         t = LakeTable(path)
-        t.recover()
         t.current()  # raises FileNotFoundError when no table is at path
         return t
 
     # ------------------------------------------------------------ snapshots
     def current_version(self) -> int | None:
-        ptr = os.path.join(self.path, VERSION_POINTER)
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return int(fh.read().strip())
+        """The newest committed version, or None before the first commit.
+        ``_VERSION`` is a hint, moved after each commit, so it may trail:
+        probe forward from it while ``v+1`` exists (from v0 when there is
+        no pointer). Committed manifests are contiguous, so the probe
+        stops at the tip without listing ``snapshots/``."""
+        try:
+            with open(os.path.join(self.path, VERSION_POINTER)) as fh:
+                v = int(fh.read().strip())
+        except FileNotFoundError:
+            v = -1
+        while os.path.exists(self._manifest_path(v + 1)):
+            v += 1
+        return v if v >= 0 else None
 
     def snapshot(self, version: int) -> Snapshot:
         with open(self._manifest_path(version)) as fh:
@@ -393,8 +406,8 @@ class LakeTable:
         """Restore the table to a prior snapshot's state by committing a
         NEW snapshot with that snapshot's files, schema, applied-offset
         ledger, and summary (history-preserving, Iceberg-style rollback):
-        versions stay monotonic so the parent-chain invariants of
-        ``recover()``/``read_incremental`` hold, and batches applied
+        versions stay monotonic so ``current_version``'s forward probe
+        and ``read_incremental``'s parent chain hold, and batches applied
         after the target become re-ingestable again because the ledger
         (and its ``applied_floor``/watermark summary keys) are restored
         wholesale, not merged."""
@@ -431,7 +444,7 @@ class LakeTable:
         that loses its commit to an ingest raises ``CommitConflictError``
         and the next pass retries it."""
         return {
-            "compacted_buckets": self.compact_if_needed(
+            "compacted_buckets": self.compact(
                 spark, compact_max_files, target_file_rows=target_file_rows
             ),
             "applied_truncated": self.truncate_applied(keep_last=truncate_keep),
@@ -442,42 +455,6 @@ class LakeTable:
                 min_age_seconds=orphan_age_seconds
             ),
         }
-
-    def _valid_orphan_snapshot(self, version: int) -> Snapshot | None:
-        """snapshots/vN.json if it is a commit: it parses, and it says
-        ``version == N`` and ``parent == N-1``. Anything else (missing, or
-        a partial file — the create-exclusive fd exists before the content
-        is fsynced) is not, and yields None."""
-        try:
-            with open(self._manifest_path(version)) as fh:
-                snap = Snapshot.from_json(fh.read())
-        except (OSError, ValueError, KeyError):
-            return None
-        if snap.version != version or snap.parent != version - 1:
-            return None
-        return snap
-
-    def recover(self) -> int | None:
-        """Roll the version pointer forward over any fully-written snapshot
-        manifests it doesn't reference yet. A crash between the
-        create-exclusive snapshot write and the pointer rename would
-        otherwise wedge the table: the pointer stays at vN-1, every new
-        commit plans vN and hits CommitConflictError forever. The snapshot
-        file is fsynced before the pointer moves, so a valid vN manifest
-        IS a durable commit — adopting it merely finishes the crashed
-        writer's job (the pointer write is idempotent, so racing with a
-        live writer is harmless). Returns the new current version if the
-        pointer moved, else None."""
-        v = self.current_version()
-        if v is None:
-            return None
-        moved = None
-        while self._valid_orphan_snapshot(v + 1) is not None:
-            v += 1
-            moved = v
-        if moved is not None:
-            _atomic_write(os.path.join(self.path, VERSION_POINTER), str(moved))
-        return moved
 
     def history(self) -> list[Snapshot]:
         out, v = [], self.current_version()
@@ -490,17 +467,14 @@ class LakeTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")
 
-    def _write_snapshot(self, snap: Snapshot, exclusive: bool = False) -> None:
-        """Write ``snap``'s manifest, then move the version pointer to it.
-        ``exclusive=True`` = optimistic-concurrency commit: creating
-        snapshot vN is the CAS — if another writer already produced vN the
-        commit raises CommitConflictError and nothing (incl. the pointer)
-        changes; the caller re-reads and re-plans."""
-        path = self._manifest_path(snap.version)
-        if exclusive:
-            _exclusive_write(path, snap.to_json())
-        else:
-            _atomic_write(path, snap.to_json())
+    def _write_snapshot(self, snap: Snapshot) -> None:
+        """Commit ``snap``: link its manifest into place (the CAS — if
+        another writer already published vN this raises
+        ``CommitConflictError`` and nothing changes; the caller re-reads
+        and re-plans), then move the version hint to it."""
+        _atomic_write(
+            self._manifest_path(snap.version), snap.to_json(), exclusive=True
+        )
         _atomic_write(os.path.join(self.path, VERSION_POINTER), str(snap.version))
 
     # ----------------------------------------------------------------- read
@@ -595,6 +569,18 @@ class LakeTable:
         makes the window non-forward-only (rows the consumer already
         holds must be *unwound*, which upsert deltas cannot express), so
         the consumer must resync from the full state."""
+        snap, files = self._window(since_version)
+        # data commits add delta files, so the scan collapses latest-wins
+        # within the consumed window (a key may appear in several commits)
+        return self._scan(spark, snap, files)
+
+    def _window(
+        self, since_version: int
+    ) -> tuple[Snapshot, list[dict[str, Any]]]:
+        """The plan of ``read_incremental``: the current snapshot, and the
+        files the data commits after ``since_version`` added (empty when
+        ``since_version`` is at or past it). Manifests only, no Spark job;
+        raises ``IncrementalHistoryError`` as ``read_incremental`` does."""
         cur = self.current()
         chain: list[Snapshot] = []
         s = cur
@@ -636,9 +622,7 @@ class LakeTable:
                 f"were removed (e.g. {missing[0]!r}) — history was cleaned "
                 "up; fall back to a full read"
             )
-        # data commits add delta files, so the scan collapses latest-wins
-        # within the consumed window (a key may appear in several commits)
-        return self._scan(spark, cur, new_files)
+        return cur, new_files
 
     def was_applied(self, batch_id: int) -> bool:
         """Floor-aware idempotency probe on the current snapshot
@@ -848,33 +832,6 @@ class LakeTable:
             return list(ex.map(one, entries))
 
     # ----------------------------------------------------------- compaction
-    def buckets_needing_compaction(self, max_files: int = 4) -> set[int]:
-        """Buckets whose *delta* file count exceeds ``max_files`` — the MOR
-        read-amplification guard. An apply lands at most one delta per
-        bucket it touches, so ``max_files=k`` compacts a bucket on its
-        (k+1)-th batch since the last compaction. Base files don't count:
-        ``max_records_per_file`` may split a bucket's base, and read cost
-        is driven by how many deltas must be re-collapsed."""
-        counts: dict[int, int] = {}
-        for f in self.current().files:
-            if f.get("kind", "base") == "delta":
-                counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
-        return {b for b, n in counts.items() if n > max_files}
-
-    def compact_if_needed(
-        self,
-        spark: SparkSession,
-        max_files: int | None,
-        target_file_rows: int | None = None,
-    ) -> int:
-        """The post-apply compaction policy every ingest front-end shares:
-        compact the buckets holding more than ``max_files`` delta files
-        (``None`` disables). Returns the number of buckets compacted."""
-        if max_files is None:
-            return 0
-        hot = self.buckets_needing_compaction(max_files)
-        return self.compact(spark, hot, target_file_rows=target_file_rows) if hot else 0
-
     def bucket_for_key(
         self, spark: SparkSession, key_value: str, snap: Snapshot | None = None
     ) -> int:
@@ -915,26 +872,35 @@ class LakeTable:
     def compact(
         self,
         spark: SparkSession,
-        buckets: set[int] | None = None,
+        max_files: int | None = None,
         target_file_rows: int | None = None,
     ) -> int:
-        """Fold each bucket's files back into key-sorted base files
-        (latest-wins collapse with tombstones retained — a stale replayed
-        event must still lose to a newer delete). Only buckets holding a
-        delta file or more than one file are rewritten. Data-only commit:
-        the applied-offset map is untouched, so compaction is safe at any
-        point and crash during compaction simply leaves the previous
-        snapshot current. Returns the number of buckets compacted."""
+        """Fold buckets' files back into key-sorted base files (latest-wins
+        collapse with tombstones retained — a stale replayed event must
+        still lose to a newer delete), planned and rewritten on one
+        snapshot. ``max_files=None`` rewrites every bucket holding a delta
+        file or more than one file; ``max_files=k`` only the buckets with
+        more than k *delta* files — the MOR read-amplification guard. An
+        apply lands at most one delta per bucket it touches, so ``k``
+        compacts a bucket on its (k+1)-th batch since the last compaction.
+        Base files don't count: ``max_records_per_file`` may split a
+        bucket's base, and read cost is driven by how many deltas must be
+        re-collapsed. Data-only commit: the applied-offset map is
+        untouched, so compaction is safe at any point and crash during
+        compaction simply leaves the previous snapshot current. Returns
+        the number of buckets compacted."""
         snap = self.current()
         per_bucket: dict[int, list[dict[str, Any]]] = {}
         for f in snap.files:
             per_bucket.setdefault(f["bucket"], []).append(f)
-        todo = {
-            b
-            for b, fs in per_bucket.items()
-            if (buckets is None or b in buckets)
-            and (len(fs) > 1 or any(f.get("kind", "base") == "delta" for f in fs))
-        }
+
+        def due(fs: list[dict[str, Any]]) -> bool:
+            deltas = sum(f.get("kind", "base") == "delta" for f in fs)
+            if max_files is None:
+                return deltas > 0 or len(fs) > 1
+            return deltas > max_files
+
+        todo = {b for b, fs in per_bucket.items() if due(fs)}
         if not todo:
             return 0
         self._rewrite(
@@ -1012,9 +978,9 @@ class LakeTable:
         ``read_lineage`` can attribute files to commits (Iceberg's
         snapshot_id on manifest entries).
 
-        The create-exclusive manifest write is the commit; moving the
-        version pointer afterwards only publishes it, and ``recover()``
-        finishes that step for a writer that died before it. Raises
+        Linking the fsynced manifest to ``snapshots/vN.json`` is the
+        commit; the version hint moved afterwards may trail it
+        (``current_version`` probes past it). Raises
         ``CommitConflictError`` when vN already exists."""
         version = parent.version + 1
         snap = Snapshot(
@@ -1028,30 +994,7 @@ class LakeTable:
             summary=dict(parent.summary if summary is None else summary),
             commit_type=commit_type,
         )
-        try:
-            self._write_snapshot(snap, exclusive=True)
-        except CommitConflictError:
-            if self._valid_orphan_snapshot(version) is not None:
-                # a durable vN exists (concurrent winner, or a crashed
-                # writer that never moved the pointer) — adopt it so the
-                # caller's re-plan sees the real current snapshot instead
-                # of conflicting forever
-                self.recover()
-                raise
-            # partial manifest from a writer that died mid-write: reclaim
-            # it once it is old enough that no live writer can own it
-            p = self._manifest_path(version)
-            try:
-                stale = (
-                    time.time() - os.path.getmtime(p)
-                    >= self.stale_manifest_seconds
-                )
-            except OSError:
-                stale = False
-            if not stale:
-                raise
-            os.remove(p)
-            self._write_snapshot(snap, exclusive=True)
+        self._write_snapshot(snap)
         return snap
 
     def applied_floor(self) -> int:
@@ -1161,7 +1104,10 @@ class LakeTable:
         survive. In order: delete the dropped snapshots' data files that no
         kept or tagged snapshot references; re-parent the oldest kept
         snapshot so ``history()`` stops there; then sweep ``snapshots/`` of
-        every untagged ``vNNNNNNNN.json`` below the oldest kept version.
+        every untagged ``vNNNNNNNN.json`` below the oldest kept version,
+        and of every temp manifest whose version is not ahead of the
+        current one (its writer died or lost that version; a live one
+        that links later gets ``CommitConflictError``).
         The sweep lists the directory, not the chain, and runs even when
         the chain is within ``keep_last``, so a resumed call finishes a
         crashed one; it follows the re-parent, so ``history()`` never names
@@ -1185,9 +1131,17 @@ class LakeTable:
         snap_dir = os.path.join(self.path, SNAP_DIR)
         for fn in os.listdir(snap_dir):
             m = _MANIFEST_RE.match(fn)
-            v = int(m.group(1)) if m else None
-            if v is not None and v < oldest.version and v not in tagged:
-                os.remove(os.path.join(snap_dir, fn))
+            if not m:
+                continue
+            v = int(m.group(1))
+            if m.group(2):  # a temp: its writer died, or lost or won v
+                drop = v <= chain[-1].version
+            else:
+                drop = v < oldest.version and v not in tagged
+            if drop:
+                # a writer that won v may remove its own temp first
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(snap_dir, fn))
         # prune empty data dirs
         ddir = os.path.join(self.path, DATA_DIR)
         for sub in os.listdir(ddir):

@@ -14,6 +14,7 @@ override them).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -38,6 +39,25 @@ def default_driver_memory() -> str:
     return f"{min(phys_mb // 2, _MAX_DRIVER_MB)}m"
 
 
+def default_shuffle_partitions(master: str | None) -> int:
+    """Shuffle partitions ≈ the task slots ``master`` runs on, at least 8:
+    ``local[N]`` (and ``local[N,F]``) gives N, ``local[*]`` the host's
+    CPUs, ``local-cluster[n,c,m]`` n·c executor cores; any other master
+    (a cluster manager, or None) gives 32."""
+    m = re.fullmatch(r"local(-cluster)?\[([^\]]*)\]", master or "")
+    if m is None:
+        return 32
+    fields = [f.strip() for f in m.group(2).split(",")]
+    try:
+        if m.group(1):
+            n = int(fields[0]) * int(fields[1])
+        else:
+            n = host_cpus() if fields[0] == "*" else int(fields[0])
+    except (ValueError, IndexError):
+        return 32
+    return max(n, 8)
+
+
 def get_spark(
     app_name: str = "runyoro-cdc-engine",
     master: str | None = None,
@@ -47,10 +67,11 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Defaults: master ``local[host_cpus()]``, driver heap
-    ``default_driver_memory()``, shuffle
-    partitions ≈ cores (never the 200 default — wrong at both ends), AQE on
-    with skew-join splitting, Arrow on for all pandas-UDF exchange, UTC
-    session time zone (oracle comparisons are TZ-sensitive).
+    ``default_driver_memory()``, shuffle partitions
+    ``default_shuffle_partitions(master)`` ≈ cores (never the 200 default —
+    wrong at both ends), AQE on with skew-join splitting, Arrow on for all
+    pandas-UDF exchange, UTC session time zone (oracle comparisons are
+    TZ-sensitive).
     """
     # Python workers must be able to import this package (UDF closures
     # reference it by module name). On a cluster that's `spark-submit
@@ -85,15 +106,7 @@ def get_spark(
         if submitted is not None:
             shuffle_partitions = int(submitted)
     if shuffle_partitions is None:
-        try:
-            n = (
-                int(master.split("[")[1].rstrip("]*"))
-                if master and "[" in master
-                else 32
-            )
-        except ValueError:
-            n = 32
-        shuffle_partitions = max(n, 8)
+        shuffle_partitions = default_shuffle_partitions(master)
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

@@ -178,3 +178,34 @@ def test_apply_batch_retry_adopts_rival_rebucket(spark, tmp_lake):
     # point lookup plans against the new modulus and still finds the key
     got = t.read_conversation(spark, "c1").collect()
     assert len(got) == 1 and got[0]["text"] == "after"
+
+
+def test_writer_whose_temp_was_swept_loses(tmp_lake, monkeypatch):
+    """A live writer stalls after staging its temp manifest for v1. A
+    rival commits v1 and ``expire_snapshots`` sweeps the stalled temp
+    (its version is no longer ahead of the table). When the stalled
+    writer links, it must get CommitConflictError, and the table keeps
+    the rival's v1 with no temp left in ``snapshots/``."""
+    from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
+    from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
+    from runyoro_llm_data_pipeline_spark.lake.table import SNAP_DIR, LakeTable
+
+    t = LakeTable.create(
+        os.path.join(tmp_lake, "t"), with_internal_schema(TRANSCRIPT_SCHEMA)
+    )
+    parent = t.current()
+    real_link = os.link
+
+    def rival_wins_while_stalled(src, dst):
+        monkeypatch.setattr(os, "link", real_link)
+        t.commit(parent, [], summary={**parent.summary, "by": "rival"})
+        t.expire_snapshots(keep_last=1)
+        assert not os.path.exists(src)  # the stalled writer's temp was swept
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", rival_wins_while_stalled)
+    with pytest.raises(CommitConflictError):
+        t.commit(parent, [], summary={**parent.summary, "by": "stalled"})
+    assert t.current().version == 1
+    assert t.current().summary["by"] == "rival"
+    assert os.listdir(os.path.join(t.path, SNAP_DIR)) == ["v00000001.json"]

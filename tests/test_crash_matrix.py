@@ -98,8 +98,10 @@ POINTS = {
     # the Spark write is done, its footers are not harvested
     "written": (LakeTable, "_harvest", _always, False),
     # files written and harvested, no manifest
-    "harvested": (table_mod, "_exclusive_write", _always, False),
-    # manifest durable, version pointer not moved
+    "harvested": (table_mod, "_atomic_write", _is_manifest, False),
+    # temp manifest written and fsynced, not linked into place
+    "staged": (os, "link", _always, False),
+    # manifest linked, version pointer not moved
     "manifest": (table_mod, "_atomic_write", _is_pointer, False),
     "files_deleted": (os, "remove", _is_data_file, True),
     "reparented": (table_mod, "_atomic_write", _is_manifest, True),
@@ -110,9 +112,11 @@ POINTS = {
 ROWS = [
     ("apply", "written"),
     ("apply", "harvested"),
+    ("apply", "staged"),
     ("apply", "manifest"),
     ("compact", "written"),
     ("compact", "harvested"),
+    ("compact", "staged"),
     ("compact", "manifest"),
     ("rebucket", "manifest"),
     ("truncate_applied", "manifest"),
@@ -243,7 +247,7 @@ def test_crash_then_resume_converges(
         spark, base, root, mutation, check_table_files, feed_replica
     )
     if (mutation, point) == ("apply", "manifest"):
-        # the adopted manifest already applied the batch
+        # the linked manifest is the commit: the batch is already applied
         assert writes == 0
 
 
@@ -256,10 +260,10 @@ from runyoro_llm_data_pipeline_spark.session import get_spark
 
 real = table_mod._atomic_write
 
-def die_before_pointer(path, content):
+def die_before_pointer(path, content, **kwargs):
     if os.path.basename(path) == table_mod.VERSION_POINTER:
-        os._exit(1)
-    real(path, content)
+        os._exit(3)
+    real(path, content, **kwargs)
 
 table_mod._atomic_write = die_before_pointer
 spark = get_spark(app_name="crash-child")
@@ -276,8 +280,8 @@ def test_apply_manifest_crash_in_subprocess(
     spark, base, tmp_path, check_table_files, feed_replica
 ):
     """The ``apply/manifest`` row with a real process death: a child
-    ingests and calls ``os._exit(1)`` once its manifest is durable, before
-    the pointer moves. Resuming here gives the in-process row's outcome."""
+    ingests and calls ``os._exit(3)`` once its manifest is linked, before
+    the pointer moves (an uncaught error would exit with 1). Resuming here gives the in-process row's outcome."""
     root = _copy(base, tmp_path)
     env = {**os.environ, "SPARK_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "2"}
     env.pop("PYSPARK_GATEWAY_PORT", None)
@@ -285,10 +289,13 @@ def test_apply_manifest_crash_in_subprocess(
         [sys.executable, "-c", _CHILD, REPO, root, str(NUM_BUCKETS)],
         env=env, capture_output=True, text=True, timeout=300,
     )
-    assert child.returncode == 1, child.stderr[-2000:]
+    assert child.returncode == 3, child.stderr[-2000:]
     t = LakeTable(os.path.join(root, "table"))
-    unpublished = f"v{t.current_version() + 1:08d}.json"
-    assert unpublished in os.listdir(os.path.join(t.path, SNAP_DIR))
+    with open(os.path.join(t.path, VERSION_POINTER)) as fh:
+        hint = int(fh.read())
+    # the manifest past the stale hint is committed, and the probe finds it
+    assert f"v{hint + 1:08d}.json" in os.listdir(os.path.join(t.path, SNAP_DIR))
+    assert t.current_version() == hint + 1
     writes = _resume_and_check(
         spark, base, root, "apply", check_table_files, feed_replica
     )
@@ -324,4 +331,86 @@ def test_engine_never_catches_base_exception():
                         offenders.append(
                             f"{os.path.relpath(path, pkg_dir)}:{node.lineno}"
                         )
+    assert offenders == []
+
+
+# (module, function, name) allowed to write files: the one writer, and
+# the lock fd that serializes tag updates
+_TABLE_PY = os.path.join("lake", "table.py")
+_WRITERS = {
+    (_TABLE_PY, "_atomic_write", "open"),
+    (_TABLE_PY, "_atomic_write", "os.rename"),
+    (_TABLE_PY, "_atomic_write", "os.link"),
+    (_TABLE_PY, "_file_lock", "os.open"),
+}
+
+
+def _writes_file(call: ast.Call) -> bool:
+    """``open(...)`` in a mode that writes (an unknown mode counts)."""
+    mode = call.args[1] if len(call.args) > 1 else next(
+        (k.value for k in call.keywords if k.arg == "mode"), ast.Constant("r")
+    )
+    return not isinstance(mode, ast.Constant) or any(c in mode.value for c in "wax+")
+
+
+class _FileWrites(ast.NodeVisitor):
+    """Records ``(enclosing function, name, line)`` for each reference to
+    ``os.rename``/``os.replace``/``os.link``/``os.open`` and each
+    write-mode ``open`` call."""
+
+    def __init__(self):
+        self.scope: list[str] = []
+        self.found: list[tuple[str | None, str, int]] = []
+
+    def visit_FunctionDef(self, node):
+        self.scope.append(node.name)
+        self.generic_visit(node)
+        self.scope.pop()
+
+    def _add(self, name: str, node) -> None:
+        self.found.append((self.scope[-1] if self.scope else None, name, node.lineno))
+
+    def visit_Attribute(self, node):
+        if (
+            isinstance(node.value, ast.Name) and node.value.id == "os"
+            and node.attr in ("rename", "replace", "link", "open")
+        ):
+            self._add(f"os.{node.attr}", node)
+        self.generic_visit(node)
+
+    def visit_ImportFrom(self, node):
+        if node.module == "os":
+            for a in node.names:
+                if a.name in ("rename", "replace", "link", "open"):
+                    self._add(f"os.{a.name}", node)
+
+    def visit_Call(self, node):
+        if isinstance(node.func, ast.Name) and node.func.id == "open" and _writes_file(node):
+            self._add("open", node)
+        self.generic_visit(node)
+
+
+def test_table_files_have_one_writer():
+    """Every table file (manifest, version pointer, tags, feed checkpoint)
+    is written by ``table._atomic_write``: under ``lake/`` and ``cdc/``
+    nothing else renames, links or opens a file for writing (the flock fd
+    of ``_file_lock`` aside). So a dying writer can leave only that
+    function's temp files, and the rows that wrap it reach every write."""
+    offenders = []
+    pkg_dir = os.path.dirname(pkg.__file__)
+    for sub in ("lake", "cdc"):
+        for dirpath, _, fns in os.walk(os.path.join(pkg_dir, sub)):
+            for fn in fns:
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                rel = os.path.relpath(path, pkg_dir)
+                with open(path) as fh:
+                    v = _FileWrites()
+                    v.visit(ast.parse(fh.read(), path))
+                offenders += [
+                    f"{rel}:{line} {name} in {func}"
+                    for func, name, line in v.found
+                    if (rel, func, name) not in _WRITERS
+                ]
     assert offenders == []

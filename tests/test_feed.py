@@ -100,3 +100,38 @@ def test_incremental_feed_replica_convergence(spark, tmp_lake, tmp_path_factory)
     feed.commit(tok)
     assert replica2 == _public_state(spark, tp)
     assert feed.poll(spark) is None
+
+
+def test_maintenance_only_poll_starts_no_spark_job(spark, tmp_lake, tmp_path_factory):
+    """A window of maintenance commits alone is judged from the manifests'
+    harvested row counts: ``poll`` returns None and fast-forwards the
+    checkpoint without starting a Spark job. A data commit after it is
+    delivered, and its read does run jobs under the same probe."""
+    d = str(tmp_path_factory.mktemp("feedmaint"))
+    events, _ = gen_change_log(spark, n_turns=150, n_convs=6, n_batches=3)
+    write_batch_files(events, d)
+    tp = os.path.join(tmp_lake, "t")
+    ing = CdcIngest(tp, d, num_buckets=4, compact_max_files=None)
+    ing.run(spark, max_batches=2)
+    feed = IncrementalFeed(tp, os.path.join(tmp_lake, "feed.json"))
+    feed.commit(feed.poll(spark)[1])
+
+    t = LakeTable.load(tp)
+    assert t.compact(spark) > 0
+    assert t.truncate_applied(keep_last=0) > 0
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("feed-maintenance-poll", "maintenance-only feed poll")
+    try:
+        assert feed.poll(spark) is None
+        assert feed.position() == t.current_version()
+        assert list(tracker.getJobIdsForGroup("feed-maintenance-poll")) == []
+
+        assert len(ing.run(spark)) == 1
+        sc.setJobGroup("feed-data-poll", "data feed poll")
+        df, tok = feed.poll(spark)
+        assert tok.version == t.current_version() and not tok.was_resync
+        assert df.count() > 0
+        assert list(tracker.getJobIdsForGroup("feed-data-poll"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -4,6 +4,7 @@ evolution and late-event accounting.
 """
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,7 +56,8 @@ def test_mor_auto_compaction_preserves_state(spark, log, tmp_lake):
     ing.run(spark)
     t = ing.table()
     # compaction kept per-bucket file counts bounded
-    assert not t.buckets_needing_compaction(2)
+    deltas = Counter(f["bucket"] for f in t.current().files if f.get("kind") == "delta")
+    assert max(deltas.values(), default=0) <= 2
     assert _rows(t.read(spark)) == expected
     # a full manual compaction leaves exactly one base file per live bucket
     t.compact(spark)

@@ -74,3 +74,26 @@ def test_engine_writes_no_session_conf():
                 ):
                     offenders.append(f"{os.path.relpath(path, pkg_dir)}:{node.lineno}")
     assert offenders == []
+
+
+def test_shuffle_partitions_follow_the_master(monkeypatch):
+    """``default_shuffle_partitions`` sizes the shuffle to the task slots
+    each master string names, never below 8, with no session started:
+    ``local[*]`` counts the host's CPUs and ``local-cluster[n,c,m]``
+    counts n·c, where a plain ``int`` of the bracket would fail and fall
+    back to 32."""
+    from runyoro_llm_data_pipeline_spark.session import default_shuffle_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+    assert default_shuffle_partitions("local[*]") == 12
+    assert default_shuffle_partitions("local[*,3]") == 12
+    assert default_shuffle_partitions("local[16]") == 16
+    assert default_shuffle_partitions("local[4,2]") == 8
+    assert default_shuffle_partitions("local[2]") == 8
+    assert default_shuffle_partitions("local-cluster[4,4,14336]") == 16
+    assert default_shuffle_partitions("local-cluster[2,1,1024]") == 8
+    assert default_shuffle_partitions("local-cluster[8,4,2048]") == 32
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert default_shuffle_partitions("local[*]") == 8
+    for other in (None, "yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert default_shuffle_partitions(other) == 32
