@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES, LakeTable
 from runyoro_llm_data_pipeline_spark.sources.offsets import OFFSETS_KEY, OffsetLog
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
@@ -56,7 +56,7 @@ class CdcIngest:
         batch_dir: str | None = None,
         num_buckets: int = 16,
         normalize_text: bool = True,
-        compact_max_files: int | None = 4,
+        compact_max_files: int | None = COMPACT_MAX_FILES,
         quarantine_dir: str | None = None,
         truncate_keep: int | None = 4096,
         compact_target_file_rows: int | None = None,

@@ -31,13 +31,15 @@ import json
 import sys
 import time
 
+from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="CDC ingest: change log → lake table")
     p.add_argument("--table", required=True, help="lake table path")
     p.add_argument("--batch-dir", required=True, help="change-event batch directory")
     p.add_argument("--num-buckets", type=int, default=64)
-    p.add_argument("--compact-max-files", type=int, default=8)
+    p.add_argument("--compact-max-files", type=int, default=COMPACT_MAX_FILES)
     p.add_argument("--no-normalize", action="store_true")
     p.add_argument("--max-batches", type=int, default=None)
     p.add_argument("--streaming", action="store_true",
@@ -95,6 +97,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.maintain:
         table.maintain(
             spark,
+            compact_max_files=args.compact_max_files,
             target_file_rows=args.compact_target_file_rows,
             keep_last_snapshots=args.expire_keep_last or 4,
         )

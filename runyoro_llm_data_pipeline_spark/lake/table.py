@@ -17,7 +17,7 @@ dedup index. This module generalizes it into a real table format:
 * **per-file stats** live on the manifest entry and nowhere else: each write
   opens every new file's footer once and records its row count and its key
   and lsn bounds. Point lookups prune files by those bounds, and lineage is
-  read from the entries each data commit added, along the snapshot chain, so
+  read from the entries each data commit added, over the retained versions, so
   it is retained exactly as long as the snapshots themselves;
 * **exactly-once** falls out: applied batch offsets are recorded in the same
   snapshot that contains their data, so a crash before its manifest is
@@ -31,13 +31,14 @@ dedup index. This module generalizes it into a real table format:
 Commits: every table file is written by ``_atomic_write`` (temp file,
 fsync, publish), so no reader ever sees a partial one. Linking the new
 manifest to ``snapshots/vN.json`` is the commit, a CAS (Iceberg's
-optimistic concurrency): it fails if vN exists. The ``_VERSION`` pointer
-renamed after it is only a hint that ``current_version`` probes forward
-from, so a writer that dies between the two has still committed, and one
-that dies before the link leaves only a temp manifest, which
-``expire_snapshots`` sweeps. ``apply_batch`` retries a lost commit and
-re-gates on ``has_applied``; a losing maintenance commit raises
-``CommitConflictError``.
+optimistic concurrency): it fails if vN exists, and it is the only file a
+commit writes. ``expire_snapshots`` alone raises the low-water mark
+(``_LOW_WATER``), from which ``current_version`` probes forward; a link
+that lands below it is withdrawn, so no version is written twice (the
+argument is in ``commit``). A writer that dies before its link leaves only
+a temp manifest, which ``expire_snapshots`` sweeps. ``apply_batch``
+retries a lost commit and re-gates on ``has_applied``; a losing
+maintenance commit raises ``CommitConflictError``.
 
 Scale notes (100 TB / 1000 executors): the manifest lists O(num_buckets ×
 files-per-bucket) entries handled driver-side — same order as Iceberg's
@@ -74,7 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-VERSION_POINTER = "_VERSION"
+LOW_WATER = "_LOW_WATER"
 TAGS_FILE = "tags.json"
 SNAP_DIR = "snapshots"
 DATA_DIR = "data"
@@ -93,6 +94,9 @@ INTERNAL_COLS = (VERSION_TS, VERSION_LSN, DELETED)
 # the default layout, also assumed for manifests older than the summary keys
 DEFAULT_NUM_BUCKETS = 16
 DEFAULT_KEY_COLS = ("conv_id", "turn_idx")
+# the compaction policy: a bucket holding more delta files than this is
+# compacted (``CdcIngest``, ``maintain`` and the CLI all default to it)
+COMPACT_MAX_FILES = 4
 
 
 @dataclass
@@ -182,7 +186,8 @@ def _atomic_write(path: str, content: str, exclusive: bool = False) -> None:
     fails if ``path`` exists — the commit CAS, raised as
     ``CommitConflictError`` (also when ``expire_snapshots`` swept the temp
     of a version that is no longer ahead). Otherwise ``os.rename``
-    replaces ``path``."""
+    replaces ``path``: the low-water mark, tags and feed checkpoints. No
+    manifest is ever renamed over, so a linked one never changes."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         fh.write(content)
@@ -207,10 +212,11 @@ def _atomic_write(path: str, content: str, exclusive: bool = False) -> None:
 @contextlib.contextmanager
 def _file_lock(path: str):
     """Advisory exclusive lock (flock) serializing read-modify-write of a
-    shared sidecar file (tags.json). Manifest commits don't need this —
-    they CAS via ``_atomic_write(exclusive=True)`` — but tag mutations
-    rewrite one shared map, and last-writer-wins there can un-pin a
-    snapshot that the next expire/cleanup pass then permanently deletes."""
+    shared table-root file: ``tags.json``, and the low-water mark that
+    ``expire_snapshots`` raises. Manifest commits don't need this — they
+    CAS via ``_atomic_write(exclusive=True)`` — but a tag lost to
+    last-writer-wins un-pins a snapshot that the next expire/cleanup pass
+    then permanently deletes, and two expiries must not interleave."""
     fd = os.open(path, os.O_CREAT | os.O_RDWR)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX)
@@ -331,24 +337,46 @@ class LakeTable:
         return t
 
     # ------------------------------------------------------------ snapshots
+    def low_water(self) -> int:
+        """The oldest retained version: ``history()`` starts here, every
+        version from it to the tip has its manifest, and none below it can
+        become current. 0 until ``expire_snapshots`` first raises it."""
+        try:
+            with open(os.path.join(self.path, LOW_WATER)) as fh:
+                return int(fh.read())
+        except FileNotFoundError:
+            return 0
+
     def current_version(self) -> int | None:
         """The newest committed version, or None before the first commit.
-        ``_VERSION`` is a hint, moved after each commit, so it may trail:
-        probe forward from it while ``v+1`` exists (from v0 when there is
-        no pointer). Committed manifests are contiguous, so the probe
-        stops at the tip without listing ``snapshots/``."""
-        try:
-            with open(os.path.join(self.path, VERSION_POINTER)) as fh:
-                v = int(fh.read().strip())
-        except FileNotFoundError:
-            v = -1
-        while os.path.exists(self._manifest_path(v + 1)):
-            v += 1
-        return v if v >= 0 else None
+        The manifests from the low-water mark up are contiguous, so the tip
+        is probed from the mark by doubling the step, then halving it. If
+        the mark moved meanwhile, what the probe saw below it may be gone
+        or withdrawn, so it probes again from the new mark."""
+        mark, has = self.low_water(), lambda v: os.path.exists(self._manifest_path(v))
+        while True:
+            lo, step = mark, 1
+            while has(lo + step):
+                lo, step = lo + step, step * 2
+            hi = lo + step
+            while hi - lo > 1:
+                mid = (lo + hi) // 2
+                lo, hi = (mid, hi) if has(mid) else (lo, mid)
+            tip = lo if has(lo) else None
+            mark, prev = self.low_water(), mark
+            if mark == prev:
+                return tip
 
     def snapshot(self, version: int) -> Snapshot:
         with open(self._manifest_path(version)) as fh:
             return Snapshot.from_json(fh.read())
+
+    def _maybe_snapshot(self, version: int) -> Snapshot | None:
+        """``snapshot(version)``, or None if its manifest is gone or unreadable."""
+        try:
+            return self.snapshot(version)
+        except (OSError, ValueError):
+            return None
 
     def current(self) -> Snapshot:
         v = self.current_version()
@@ -367,6 +395,15 @@ class LakeTable:
         with open(p) as fh:
             return {k: int(v) for k, v in json.load(fh).items()}
 
+    def _edit_tags(self, edit) -> None:
+        """Apply ``edit`` to the tag map and publish it, under the flock."""
+        with _file_lock(os.path.join(self.path, TAGS_FILE + ".lock")):
+            t = self.tags()
+            edit(t)
+            _atomic_write(
+                os.path.join(self.path, TAGS_FILE), json.dumps(t, indent=1)
+            )
+
     def tag(self, name: str, version: int | None = None) -> int:
         """Create/overwrite a named ref pointing at ``version`` (default:
         current). The target manifest must exist. The read-modify-write
@@ -377,21 +414,11 @@ class LakeTable:
         so readers never see a partial tags file."""
         v = self.current().version if version is None else int(version)
         self.snapshot(v)  # raises if the manifest doesn't exist
-        with _file_lock(os.path.join(self.path, TAGS_FILE + ".lock")):
-            t = self.tags()
-            t[name] = v
-            _atomic_write(
-                os.path.join(self.path, TAGS_FILE), json.dumps(t, indent=1)
-            )
+        self._edit_tags(lambda t: t.__setitem__(name, v))
         return v
 
     def drop_tag(self, name: str) -> None:
-        with _file_lock(os.path.join(self.path, TAGS_FILE + ".lock")):
-            t = self.tags()
-            t.pop(name, None)
-            _atomic_write(
-                os.path.join(self.path, TAGS_FILE), json.dumps(t, indent=1)
-            )
+        self._edit_tags(lambda t: t.pop(name, None))
 
     def resolve_ref(self, ref: int | str) -> int:
         """int → itself; str → the tagged version (KeyError if unknown)."""
@@ -406,8 +433,8 @@ class LakeTable:
         """Restore the table to a prior snapshot's state by committing a
         NEW snapshot with that snapshot's files, schema, applied-offset
         ledger, and summary (history-preserving, Iceberg-style rollback):
-        versions stay monotonic so ``current_version``'s forward probe
-        and ``read_incremental``'s parent chain hold, and batches applied
+        versions stay contiguous so ``current_version``'s forward probe
+        and ``read_incremental``'s version range hold, and batches applied
         after the target become re-ingestable again because the ledger
         (and its ``applied_floor``/watermark summary keys) are restored
         wholesale, not merged."""
@@ -429,7 +456,7 @@ class LakeTable:
     def maintain(
         self,
         spark: SparkSession,
-        compact_max_files: int = 4,
+        compact_max_files: int = COMPACT_MAX_FILES,
         target_file_rows: int | None = None,
         truncate_keep: int = 4096,
         keep_last_snapshots: int = 4,
@@ -457,25 +484,29 @@ class LakeTable:
         }
 
     def history(self) -> list[Snapshot]:
-        out, v = [], self.current_version()
-        while v is not None:
-            s = self.snapshot(v)
-            out.append(s)
-            v = s.parent
-        return list(reversed(out))
+        """The retained snapshots, oldest first: the low-water mark to the
+        tip (tagged versions below the mark are readable, but not here)."""
+        tip = self.current_version()
+        return [] if tip is None else [
+            self.snapshot(v) for v in range(self.low_water(), tip + 1)
+        ]
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.path, SNAP_DIR, f"v{version:08d}.json")
 
     def _write_snapshot(self, snap: Snapshot) -> None:
-        """Commit ``snap``: link its manifest into place (the CAS — if
-        another writer already published vN this raises
-        ``CommitConflictError`` and nothing changes; the caller re-reads
-        and re-plans), then move the version hint to it."""
-        _atomic_write(
-            self._manifest_path(snap.version), snap.to_json(), exclusive=True
-        )
-        _atomic_write(os.path.join(self.path, VERSION_POINTER), str(snap.version))
+        """Link ``snap``'s manifest, then withdraw it if it landed below
+        the low-water mark (see ``commit``)."""
+        path = self._manifest_path(snap.version)
+        _atomic_write(path, snap.to_json(), exclusive=True)
+        if snap.version < (mark := self.low_water()):
+            if snap.version not in self.tags().values():
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
+            raise CommitConflictError(
+                f"snapshot v{snap.version} is below the low-water mark "
+                f"v{mark}: it was expired while this writer committed it"
+            )
 
     # ----------------------------------------------------------------- read
     def _scan(
@@ -550,9 +581,9 @@ class LakeTable:
         collapsed latest-wins, tombstones included so a consumer can
         propagate deletes.
 
-        Walks the snapshot chain from the current version back to
-        ``since_version`` and takes, for each data commit, exactly the
-        files that commit added (path-diff against its parent manifest —
+        Reads the versions from ``since_version`` to the current one and
+        takes, for each data commit, exactly the
+        files that commit added (path-diff against the previous manifest —
         the same attribution Iceberg gets from snapshot_id on manifest
         entries). Maintenance commits (compaction / rebucket) are pure
         rewrites of existing content and contribute nothing; crucially,
@@ -582,33 +613,27 @@ class LakeTable:
         ``since_version`` is at or past it). Manifests only, no Spark job;
         raises ``IncrementalHistoryError`` as ``read_incremental`` does."""
         cur = self.current()
-        chain: list[Snapshot] = []
-        s = cur
-        while s.version > since_version:
-            if s.commit_type == "rollback":
+        if since_version >= cur.version:
+            return cur, []
+        expired = since_version < self.low_water()  # even if a tag kept it
+        chain = [] if expired else [
+            self._maybe_snapshot(v) for v in range(since_version, cur.version)
+        ]
+        if expired or None in chain:
+            raise IncrementalHistoryError(
+                f"snapshot history at v{since_version} was expired; cannot "
+                "diff against it — fall back to a full read"
+            )
+        parent_paths = {f["path"] for f in chain[0].files}
+        new_files: list[dict[str, Any]] = []
+        for snap in chain[1:] + [cur]:
+            if snap.commit_type == "rollback":
                 raise IncrementalHistoryError(
-                    f"v{s.version} is a rollback (to "
-                    f"v{s.summary.get('rolled_back_to')}); the window "
+                    f"v{snap.version} is a rollback (to "
+                    f"v{snap.summary.get('rolled_back_to')}); the window "
                     f"since v{since_version} is not forward-only — fall "
                     "back to a full read"
                 )
-            chain.append(s)
-            if s.parent is None:
-                raise IncrementalHistoryError(
-                    f"snapshot history before v{s.version} was expired; "
-                    f"cannot diff against v{since_version} — fall back to "
-                    "a full read"
-                )
-            try:
-                s = self.snapshot(s.parent)
-            except FileNotFoundError as e:
-                raise IncrementalHistoryError(
-                    f"snapshot v{s.parent} manifest is gone (expired); "
-                    "fall back to a full read"
-                ) from e
-        parent_paths = {f["path"] for f in s.files}  # s == since snapshot
-        new_files: list[dict[str, Any]] = []
-        for snap in reversed(chain):
             if snap.commit_type == "data":
                 new_files += [f for f in snap.files if f["path"] not in parent_paths]
             parent_paths = {f["path"] for f in snap.files}
@@ -638,24 +663,19 @@ class LakeTable:
         The applying commit is the one ``_applied_batch`` maps to
         ``batch_id``.
 
-        Walks newest→oldest, so cost is O(commits since the batch) — the
-        common "resume from a recent batch" case touches a handful of
-        manifests. Floor-aware failure modes when the walk exhausts
-        retained history (``expire_snapshots`` re-parented it away):
-        a batch at/below ``applied_floor`` or with a live ledger entry
-        was definitely applied but its commit point is expired →
+        Walks versions newest→oldest down to the low-water mark, so cost
+        is O(commits since the batch) — the common "resume from a recent
+        batch" case touches a handful of manifests. Floor-aware failure
+        modes when the walk exhausts retained history (``expire_snapshots``
+        raised the mark past the batch's commit): a batch at/below
+        ``applied_floor`` or with a live ledger entry was definitely
+        applied but its commit point is expired →
         ``IncrementalHistoryError`` (consumer must full-read); anything
         else was never applied → ``KeyError``."""
-        s = self.current()
-        while True:
-            if _applied_batch(s) == int(batch_id):
-                return s.version
-            if s.parent is None:
-                break
-            try:
-                s = self.snapshot(s.parent)
-            except FileNotFoundError:
-                break
+        for v in range(self.current().version, self.low_water() - 1, -1):
+            s = self._maybe_snapshot(v)  # None: expired under the walk
+            if s is not None and _applied_batch(s) == int(batch_id):
+                return v
         if self.was_applied(batch_id):
             raise IncrementalHistoryError(
                 f"batch {batch_id} was applied but its commit snapshot is "
@@ -979,9 +999,26 @@ class LakeTable:
         snapshot_id on manifest entries).
 
         Linking the fsynced manifest to ``snapshots/vN.json`` is the
-        commit; the version hint moved afterwards may trail it
-        (``current_version`` probes past it). Raises
-        ``CommitConflictError`` when vN already exists."""
+        commit and the only file it publishes. Raises
+        ``CommitConflictError`` when vN already exists, or when vN lands
+        below the low-water mark.
+
+        Why no version number is written twice: ``expire_snapshots``
+        makes an expired vN absent again, so "vN is absent" alone cannot
+        tell "never written" from "written and expired" — a writer that
+        stalls across an expiry could link a stale vN. But expiry writes
+        its mark durably *before* it deletes a manifest, so a link that
+        succeeds because vN was expired happens after the mark rose above
+        N, and the re-read after the link sees it: the writer withdraws
+        its vN (kept if a tag names it) and raises. A vN that was never
+        written lies above the tip, hence at or above the mark, so the
+        versions from the mark up stay contiguous and every reader
+        probes only there (``current_version``): a withdrawn vN is below
+        the mark and never read as the tip. A writer whose legitimate vN
+        was expired after its link sees the same mark and also raises,
+        though its commit landed; ``apply_batch``'s retry re-gates on
+        ``has_applied`` and skips, and a maintenance caller retries on its
+        next pass."""
         version = parent.version + 1
         snap = Snapshot(
             version=version,
@@ -1044,16 +1081,13 @@ class LakeTable:
         share: the tag-pinned versions, and the data file paths that
         ``snaps`` or a tag-pinned snapshot references. Tagged snapshots
         survive until the tag is dropped (Iceberg ref-retention
-        semantics). Tags resolve by manifest, not via the chain — a prior
-        expiry's re-parenting may have detached them from ``history()``
-        while they remain directly readable; an unreadable manifest pins
-        nothing."""
-        pinned: list[Snapshot] = []
-        for v in sorted(set(self.tags().values())):
-            try:
-                pinned.append(self.snapshot(v))
-            except (OSError, ValueError):
-                continue
+        semantics). Tags resolve by manifest, not via ``history()`` — a
+        tagged version below the low-water mark is outside it but stays
+        directly readable; an unreadable manifest pins nothing."""
+        pinned = [
+            s for v in sorted(set(self.tags().values()))
+            if (s := self._maybe_snapshot(v)) is not None
+        ]
         live: set[str] = set()
         for s in snaps + pinned:
             live |= {f["path"] for f in s.files}
@@ -1064,7 +1098,7 @@ class LakeTable:
         history (e.g. left by a writer that lost the commit race or
         crashed mid-write), provided they are older than
         ``min_age_seconds`` — the age guard keeps in-flight writers' files
-        safe, exactly like Iceberg's orphan-file removal."""
+        and directories safe, exactly like Iceberg's orphan-file removal."""
         _, live = self._retained(self.history())
         # version dirs (data/vNNN-nonce) that hold a referenced file:
         # writer bookkeeping files (_SUCCESS, .crc — never listed in
@@ -1083,75 +1117,66 @@ class LakeTable:
                 vdir = os.sep.join(rel.split(os.sep)[:2])
                 if not fn.endswith(".parquet") and vdir in live_vdirs:
                     continue
-                try:
+                with contextlib.suppress(OSError):
                     if now - os.path.getmtime(full) >= min_age_seconds:
                         os.remove(full)
                         removed += 1
-                except OSError:
-                    pass
-        # prune now-empty dirs
+        # prune now-empty dirs, under the same age guard: a live writer's
+        # output dir is empty until its Spark job writes the first file
         for dirpath, dirnames, filenames in list(os.walk(root, topdown=False)):
             if dirpath != root and not dirnames and not filenames:
-                try:
-                    os.rmdir(dirpath)
-                except OSError:
-                    pass
+                with contextlib.suppress(OSError):
+                    if now - os.path.getmtime(dirpath) >= min_age_seconds:
+                        os.rmdir(dirpath)
         return removed
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
-        """Cut the chain to its last ``keep_last`` snapshots (the reference
+        """Cut history to its last ``keep_last`` snapshots (the reference
         keeps 2 checkpoints, ``scripts/train_llm.py:265``); tagged ones
-        survive. In order: delete the dropped snapshots' data files that no
-        kept or tagged snapshot references; re-parent the oldest kept
-        snapshot so ``history()`` stops there; then sweep ``snapshots/`` of
-        every untagged ``vNNNNNNNN.json`` below the oldest kept version,
-        and of every temp manifest whose version is not ahead of the
-        current one (its writer died or lost that version; a live one
-        that links later gets ``CommitConflictError``).
-        The sweep lists the directory, not the chain, and runs even when
-        the chain is within ``keep_last``, so a resumed call finishes a
-        crashed one; it follows the re-parent, so ``history()`` never names
-        a missing parent. Returns the data files deleted."""
-        chain = self.history()
-        kept = chain[-keep_last:]
-        tagged, live = self._retained(kept)
-        removed = 0
-        for s in chain[: len(chain) - len(kept)]:
-            if s.version in tagged:
-                continue
-            for f in s.files:
-                fp = os.path.join(self.path, f["path"])
-                if f["path"] not in live and os.path.exists(fp):
-                    os.remove(fp)
-                    removed += 1
-        oldest = kept[0]
-        if oldest.parent is not None:
-            oldest.parent = None
-            _atomic_write(self._manifest_path(oldest.version), oldest.to_json())
-        snap_dir = os.path.join(self.path, SNAP_DIR)
-        for fn in os.listdir(snap_dir):
-            m = _MANIFEST_RE.match(fn)
-            if not m:
-                continue
-            v = int(m.group(1))
-            if m.group(2):  # a temp: its writer died, or lost or won v
-                drop = v <= chain[-1].version
-            else:
-                drop = v < oldest.version and v not in tagged
-            if drop:
-                # a writer that won v may remove its own temp first
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(snap_dir, fn))
-        # prune empty data dirs
-        ddir = os.path.join(self.path, DATA_DIR)
-        for sub in os.listdir(ddir):
-            full = os.path.join(ddir, sub)
-            if os.path.isdir(full) and not any(
-                fn.endswith(".parquet")
-                for _, _, fns in os.walk(full)
-                for fn in fns
+        survive. Under an flock, so expiries run one at a time: first raise
+        the low-water mark to the oldest kept version (never lower it), then
+        sweep ``snapshots/``. Each untagged ``vNNNNNNNN.json`` below the
+        mark is deleted after the data files it names that no kept or tagged
+        snapshot references; so is every temp manifest whose version is
+        not ahead of the tip (its writer died or lost that version; a live
+        one that links later gets ``CommitConflictError``). The sweep lists
+        the directory, so a resumed call finishes a crashed one. Returns the
+        data files deleted."""
+        with _file_lock(os.path.join(self.path, LOW_WATER + ".lock")):
+            chain = self.history()
+            kept = chain[-keep_last:]
+            tagged, live = self._retained(kept)
+            mark = kept[0].version
+            if mark > self.low_water():
+                _atomic_write(os.path.join(self.path, LOW_WATER), str(mark))
+            removed, emptied = 0, set()
+            snap_dir = os.path.join(self.path, SNAP_DIR)
+            for fn in sorted(os.listdir(snap_dir)):
+                m = _MANIFEST_RE.match(fn)
+                if not m:
+                    continue
+                v = int(m.group(1))
+                if m.group(2):  # a temp: its writer died, or lost or won v
+                    drop = v <= chain[-1].version
+                else:  # its data files first: a crash leaves the manifest
+                    drop = v < mark and v not in tagged
+                    old = self._maybe_snapshot(v) if drop else None
+                    for f in old.files if old else []:
+                        fp = os.path.join(self.path, f["path"])
+                        if f["path"] not in live and os.path.exists(fp):
+                            os.remove(fp)
+                            removed += 1
+                            emptied.add(os.path.dirname(os.path.dirname(fp)))
+                if drop:  # a writer may remove its temp or stale vN first
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(snap_dir, fn))
+        # prune only the write dirs this call emptied: any other dir without
+        # a parquet file may be a live writer's, not yet past its _temporary
+        for full in emptied:
+            if not any(
+                fn.endswith(".parquet") for _, _, fns in os.walk(full) for fn in fns
             ):
-                shutil.rmtree(full)
+                shutil.rmtree(full, ignore_errors=True)
         return removed
 
 

@@ -31,12 +31,14 @@ UNK_VOCAB = 32_000
 
 def scan_text_corpus(spark: SparkSession, path_glob: str) -> DataFrame:
     """S3/S4: line-oriented corpus scan, blank lines dropped
-    (``scripts/train_llm.py:154-161``, ``scripts/tokenizer_utils.py:14-16``).
+    (``scripts/train_llm.py:154-161``, ``scripts/tokenizer_utils.py:14-16``):
+    a line is blank when it holds only whitespace, tabs included, as
+    ``str.strip()`` sees it (Spark's ``trim`` strips spaces only).
     """
     return (
         spark.read.text(path_glob)
         .select(F.col("value").alias("text"))
-        .filter(F.length(F.trim("text")) > 0)
+        .filter(F.col("text").rlike(r"\S"))
     )
 
 

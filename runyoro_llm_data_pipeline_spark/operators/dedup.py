@@ -176,26 +176,6 @@ def minhash_signatures_wide(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", n_perm: int = 12, k: int = SHINGLE_K
-) -> DataFrame:
-    """Long-form (doc_id, perm, minhash) view of the wide signatures."""
-    wide = minhash_signatures_wide(docs, text_col, n_perm, k)
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("perm"), F.col(f"mh{i}").alias("minhash")
-                )
-                for i in range(n_perm)
-            ]
-        )
-    )
-    return wide.select("doc_id", pairs.alias("p")).select(
-        "doc_id", F.col("p.perm").alias("perm"), F.col("p.minhash").alias("minhash")
-    )
-
-
 def _banded_signatures(
     docs: DataFrame,
     text_col: str = "text",

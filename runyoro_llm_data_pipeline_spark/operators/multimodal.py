@@ -220,22 +220,6 @@ def subprocess_decoder(
     return decode
 
 
-def real_decoder_or_raise(modality: str) -> Callable[[bytes], np.ndarray]:
-    """Hook for real codecs, gated on optional imports (absent in this
-    container): raises NotImplementedError with the dependency name."""
-    try:
-        if modality == "image":
-            from PIL import Image  # noqa: F401
-        elif modality in ("audio", "video"):
-            import librosa  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            f"real {modality} decoding needs an optional dependency: {e}. "
-            "Use decode_with(custom_decoder) or the deterministic fake."
-        ) from e
-    raise NotImplementedError("wire the imported codec into a decoder here")
-
-
 # --------------------------------------------------------- forced alignment
 ALIGNMENT_SCHEMA = T.StructType(
     [

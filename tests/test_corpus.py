@@ -146,3 +146,43 @@ def test_hash_split_rejects_bad_pcts(spark, docs):
 
     with _pytest.raises(ValueError):
         hash_split(docs, key="doc_id", train_pct=90, val_pct=20)
+
+
+def test_scan_text_corpus_skips_blank_lines(spark, tmp_path_factory):
+    """S2/S4/P7: one row per non-blank line; empty and whitespace-only
+    lines are dropped, other lines pass through unchanged."""
+    import os
+
+    from runyoro_llm_data_pipeline_spark.operators.corpus import scan_text_corpus
+
+    d = str(tmp_path_factory.mktemp("textcorpus"))
+    with open(os.path.join(d, "a.txt"), "w") as fh:
+        fh.write("first line\n\n   \n  indented  \n")
+    with open(os.path.join(d, "b.txt"), "w") as fh:
+        fh.write("\t\nlast\n")
+    got = sorted(r["text"] for r in scan_text_corpus(spark, os.path.join(d, "*.txt")).collect())
+    assert got == ["  indented  ", "first line", "last"]
+
+
+def test_corpus_from_lake_is_the_admitted_public_read(spark, tmp_lake):
+    """S15: lake → corpus equals the table's public read (tombstones
+    filtered) under ``admission_filter``."""
+    import os
+
+    from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
+    from runyoro_llm_data_pipeline_spark.cdc.generator import gen_change_log
+    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+    from runyoro_llm_data_pipeline_spark.operators.corpus import corpus_from_lake
+
+    events, _ = gen_change_log(spark, n_turns=120, n_convs=6, n_batches=2)
+    t = CdcIngest(os.path.join(tmp_lake, "t"), num_buckets=2).table()
+    for b in range(2):
+        apply_batch(spark, t, events.filter(F.col("batch_id") == b), b)
+    public = t.read(spark)
+    lengths = sorted(len(r["text"]) for r in public.select("text").collect())
+    min_len = lengths[len(lengths) // 2]  # so the filter drops some turns
+    got = corpus_from_lake(spark, t.path, min_len=min_len)
+    want = admission_filter(public, min_len=min_len).select("conv_id", "turn_idx", "text")
+    assert got.columns == ["conv_id", "turn_idx", "text"]
+    assert 0 < want.count() < public.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

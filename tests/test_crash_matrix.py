@@ -36,8 +36,8 @@ from runyoro_llm_data_pipeline_spark.cdc.generator import (
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.lake import table as table_mod
 from runyoro_llm_data_pipeline_spark.lake.table import (
+    LOW_WATER,
     SNAP_DIR,
-    VERSION_POINTER,
     LakeTable,
     bucket_expr,
 )
@@ -81,8 +81,8 @@ def _always(*_args) -> bool:
     return True
 
 
-def _is_pointer(path, *_rest) -> bool:
-    return os.path.basename(path) == VERSION_POINTER
+def _is_mark(path, *_rest) -> bool:
+    return os.path.basename(path) == LOW_WATER
 
 
 def _is_manifest(path, *_rest) -> bool:
@@ -101,10 +101,11 @@ POINTS = {
     "harvested": (table_mod, "_atomic_write", _is_manifest, False),
     # temp manifest written and fsynced, not linked into place
     "staged": (os, "link", _always, False),
-    # manifest linked, version pointer not moved
-    "manifest": (table_mod, "_atomic_write", _is_pointer, False),
+    # manifest linked (the commit), its temp not yet removed
+    "manifest": (os, "link", _is_manifest, True),
+    # low-water mark raised, nothing deleted yet
+    "mark_written": (table_mod, "_atomic_write", _is_mark, True),
     "files_deleted": (os, "remove", _is_data_file, True),
-    "reparented": (table_mod, "_atomic_write", _is_manifest, True),
     "manifests_deleted": (os, "remove", _is_manifest, True),
     "removed": (os, "remove", _always, True),
 }
@@ -121,8 +122,8 @@ ROWS = [
     ("rebucket", "manifest"),
     ("truncate_applied", "manifest"),
     ("rollback", "manifest"),
+    ("expire_snapshots", "mark_written"),
     ("expire_snapshots", "files_deleted"),
-    ("expire_snapshots", "reparented"),
     ("expire_snapshots", "manifests_deleted"),
     ("cleanup_orphans", "removed"),
 ]
@@ -258,14 +259,14 @@ from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.lake import table as table_mod
 from runyoro_llm_data_pipeline_spark.session import get_spark
 
-real = table_mod._atomic_write
+real = os.link
 
-def die_before_pointer(path, content, **kwargs):
-    if os.path.basename(path) == table_mod.VERSION_POINTER:
+def die_after_link(src, dst):
+    real(src, dst)
+    if os.path.basename(os.path.dirname(dst)) == table_mod.SNAP_DIR:
         os._exit(3)
-    real(path, content, **kwargs)
 
-table_mod._atomic_write = die_before_pointer
+os.link = die_after_link
 spark = get_spark(app_name="crash-child")
 root = sys.argv[2]
 CdcIngest(
@@ -280,9 +281,11 @@ def test_apply_manifest_crash_in_subprocess(
     spark, base, tmp_path, check_table_files, feed_replica
 ):
     """The ``apply/manifest`` row with a real process death: a child
-    ingests and calls ``os._exit(3)`` once its manifest is linked, before
-    the pointer moves (an uncaught error would exit with 1). Resuming here gives the in-process row's outcome."""
+    ingests and calls ``os._exit(3)`` right after its manifest is linked
+    (an uncaught error would exit with 1). Resuming here gives the
+    in-process row's outcome."""
     root = _copy(base, tmp_path)
+    before = LakeTable(os.path.join(root, "table")).current_version()
     env = {**os.environ, "SPARK_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "2"}
     env.pop("PYSPARK_GATEWAY_PORT", None)
     child = subprocess.run(
@@ -291,11 +294,10 @@ def test_apply_manifest_crash_in_subprocess(
     )
     assert child.returncode == 3, child.stderr[-2000:]
     t = LakeTable(os.path.join(root, "table"))
-    with open(os.path.join(t.path, VERSION_POINTER)) as fh:
-        hint = int(fh.read())
-    # the manifest past the stale hint is committed, and the probe finds it
-    assert f"v{hint + 1:08d}.json" in os.listdir(os.path.join(t.path, SNAP_DIR))
-    assert t.current_version() == hint + 1
+    # the linked manifest is committed; its writer died holding the temp
+    names = os.listdir(os.path.join(t.path, SNAP_DIR))
+    assert any(n.startswith(f"v{before + 1:08d}.json.tmp.") for n in names)
+    assert t.current_version() == before + 1
     writes = _resume_and_check(
         spark, base, root, "apply", check_table_files, feed_replica
     )
@@ -335,7 +337,7 @@ def test_engine_never_catches_base_exception():
 
 
 # (module, function, name) allowed to write files: the one writer, and
-# the lock fd that serializes tag updates
+# the lock fd that serializes tag updates and expiries
 _TABLE_PY = os.path.join("lake", "table.py")
 _WRITERS = {
     (_TABLE_PY, "_atomic_write", "open"),
@@ -391,7 +393,7 @@ class _FileWrites(ast.NodeVisitor):
 
 
 def test_table_files_have_one_writer():
-    """Every table file (manifest, version pointer, tags, feed checkpoint)
+    """Every table file (manifest, low-water mark, tags, feed checkpoint)
     is written by ``table._atomic_write``: under ``lake/`` and ``cdc/``
     nothing else renames, links or opens a file for writing (the flock fd
     of ``_file_lock`` aside). So a dying writer can leave only that

@@ -1,5 +1,5 @@
 """Round-2 hardening: incremental reads that survive compaction, commit
-crash recovery (wedged version pointer), admission counting on filtered
+crash recovery (a writer that died after its link), admission counting on filtered
 sources, and LSH dim safety."""
 
 import os
@@ -14,7 +14,6 @@ from runyoro_llm_data_pipeline_spark.cdc.generator import (
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.lake.table import (
     SNAP_DIR,
-    VERSION_POINTER,
     IncrementalHistoryError,
     LakeTable,
     Snapshot,
@@ -112,10 +111,10 @@ def test_incremental_read_raises_after_expiry(spark, tmp_lake, tmp_path_factory)
         t.read_incremental(spark, 0)
 
 
-# ------------------------------------------------------ wedged-pointer crash
+# ---------------------------------------------- writer died after its link
 def _orphan_snapshot(t: LakeTable) -> int:
-    """Simulate a writer that crashed between the snapshot write and the
-    pointer rename: a fully valid vN+1 manifest, pointer still at vN."""
+    """Simulate a writer that died right after its commit: a fully valid
+    vN+1 manifest that its writer never reported."""
     cur = t.current()
     snap = Snapshot(
         version=cur.version + 1,
@@ -140,10 +139,9 @@ def test_load_rolls_pointer_forward_over_orphan_commit(spark, tmp_lake, tmp_path
     t = ing.table()
     v = t.current_version()
     orphan_v = _orphan_snapshot(t)
-    with open(os.path.join(t.path, VERSION_POINTER)) as fh:
-        assert int(fh.read()) == v  # pointer untouched by the "crash"
+    assert orphan_v == v + 1
 
-    # the probe past the stale pointer finds the durable commit…
+    # the forward probe finds the durable commit…
     t2 = LakeTable.load(t.path)
     assert t2.current_version() == orphan_v
     assert t2.current().summary.get("orphan") is True
