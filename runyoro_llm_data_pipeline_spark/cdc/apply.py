@@ -8,7 +8,8 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   ``batch_id`` (``Snapshot.has_applied``: a live ledger entry, or at/below
   the ``applied_floor``) the call is a no-op (returns ``skipped``) —
   replaying a batch after a crash, or delivering it twice, cannot
-  double-apply;
+  double-apply. Batch ids are non-negative: the floor of a fresh table
+  is -1;
 * **normalization** (P2): the reference's ``clean_and_preprocess_text``
   (``scripts/text_processing.py:15-40``) applied to the ``text`` payload as a
   JVM column expression — the per-turn equality invariant lives here;
@@ -42,8 +43,9 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   data files and the manifest. Readers collapse base ∪ deltas;
   ``LakeTable.compact`` folds deltas back into base files.
 * **commit**: data files (with their stats) + applied offsets land in ONE
-  snapshot manifest, and linking it into ``snapshots/`` is the commit
-  point (``LakeTable.commit``). Crash anywhere before it → next run
+  snapshot manifest, the ledger folded into its floor
+  (``Snapshot.ledger_after``), and linking it into ``snapshots/`` is the
+  commit point (``LakeTable.commit``). Crash anywhere before it → next run
   re-applies the batch onto the previous snapshot and converges to the
   same state (orphan files are ignored by manifests).
 """
@@ -74,6 +76,9 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     LakeTable,
     bucket_expr,
 )
+
+# lost commit races one ``apply_batch`` call retries before it raises
+MAX_COMMIT_RETRIES = 3
 
 
 def _apply_mor(
@@ -144,13 +149,15 @@ def _apply_mor(
     max_lsn = -1 if metrics["max_lsn"] is None else int(metrics["max_lsn"])
     applied_keys = sum(e["rows"] for e in new_files)
     sec = round(time.perf_counter() - t_start, 3)
+    applied, floor = snap.ledger_after(batch_id, [min_lsn, max_lsn])
     table.commit(
         snap,
         snap.files + new_files,
         schema=schema,
-        applied={**snap.applied, str(batch_id): [min_lsn, max_lsn]},
+        applied=applied,
         summary={
             **snap.summary,
+            "applied_floor": floor,
             "last_batch_id": int(batch_id),
             "watermark_lsn": max(watermark, max_lsn),
             # per-batch job metrics, queryable from the snapshot history
@@ -181,7 +188,6 @@ def apply_batch(
     normalize_text: bool = True,
     quarantine_dir: str | None = None,
     summary_extra: dict | None = None,
-    max_commit_retries: int = 3,
 ) -> dict[str, Any]:
     """Append the batch's per-key winners (keyed on the current snapshot's
     ``key_cols``, bucketed under its ``num_buckets``) as per-bucket delta
@@ -196,11 +202,16 @@ def apply_batch(
     ``train_llm.py:126-129``), the atomic commit raises
     ``CommitConflictError``; this call then re-reads the fresh snapshot
     (layout included, so a rival's ``rebucket`` is honoured) and retries
-    up to ``max_commit_retries`` times. The applied-offset gate is
+    up to ``MAX_COMMIT_RETRIES`` times. The applied-offset gate is
     re-checked on every attempt, so if the competing writer applied the
     SAME batch the retry degrades to ``status='skipped'`` — exactly-once
     holds under any interleaving. Data files staged by a
-    lost attempt are unreferenced and reclaimed by ``cleanup_orphans``."""
+    lost attempt are unreferenced and reclaimed by ``cleanup_orphans``.
+
+    A ``batch_id`` below 0 raises ``ValueError`` before any Spark job:
+    a fresh table's floor is -1, so the gate would skip it silently."""
+    if batch_id < 0:
+        raise ValueError(f"batch_id must be >= 0, got {batch_id}")
     attempt = 0
     while True:
         snap = table.current()
@@ -228,5 +239,5 @@ def apply_batch(
             )
         except CommitConflictError:
             attempt += 1
-            if attempt > max_commit_retries:
+            if attempt > MAX_COMMIT_RETRIES:
                 raise

@@ -3,9 +3,10 @@
 Generalizes the reference's re-scan-and-skip ingest loop
 (``scripts/process_raw_data.py:46-54`` + ledger admission
 ``scripts/orchestrator.py:52-101``). Three front-ends feed one private apply
-step — ``apply_batch``, then ``compact(max_files=compact_max_files)``, then
-one ledger truncation per run — so every source gets the same compaction
-threshold, quarantine and ledger bound. None of them writes session conf:
+step — ``apply_batch``, then ``compact(max_files=compact_max_files)`` — so
+every source gets the same compaction threshold and quarantine. Each batch
+commit folds the applied ledger into its floor (``Snapshot.ledger_after``),
+so no front-end runs a ledger pass. None of them writes session conf:
 every batch is read under the session's own split rule
 (``session.get_spark``):
 
@@ -32,7 +33,6 @@ BASELINE.json:north_star).
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import os
 import re
@@ -58,7 +58,6 @@ class CdcIngest:
         normalize_text: bool = True,
         compact_max_files: int | None = COMPACT_MAX_FILES,
         quarantine_dir: str | None = None,
-        truncate_keep: int | None = 4096,
         compact_target_file_rows: int | None = None,
     ):
         """``batch_dir`` is the source of ``run()`` and ``run_stream()``;
@@ -70,15 +69,11 @@ class CdcIngest:
         every other commit), so about k batches run between compactions.
         ``None`` disables auto-compaction.
 
-        ``truncate_keep`` bounds the applied-batch ledger: once more than
-        that many entries are committed, a maintenance commit folds the
-        contiguous prefix into the ``applied_floor`` low watermark
-        (``LakeTable.truncate_applied``) — the soak showed ~300 B/batch
-        manifest growth otherwise, which matters at 10⁵+ batches. Runs at
-        most once per run, after its last batch, so it costs one manifest
-        write per ingest cycle, not per batch. ``None`` disables. The
-        hashed batch ids of ``run_log()`` are not a contiguous sequence and
-        never fold into the floor, so this does not bound that ledger.
+        The applied-batch ledger needs no setting: each batch commit
+        folds the entries contiguous with the ``applied_floor`` low
+        watermark into it, so batch ids ``0, 1, 2, …`` leave the ledger
+        empty however many batches have run (``run_log()``'s hashed ids
+        never fold).
 
         ``compact_target_file_rows`` caps rows per compacted file: big
         buckets split into key-contiguous files whose harvested manifest
@@ -92,7 +87,6 @@ class CdcIngest:
         self.normalize_text = normalize_text
         self.compact_max_files = compact_max_files
         self.quarantine_dir = quarantine_dir
-        self.truncate_keep = truncate_keep
         self.compact_target_file_rows = compact_target_file_rows
 
     def table(self) -> LakeTable:
@@ -116,20 +110,6 @@ class CdcIngest:
     def pending(self) -> list[tuple[int, str]]:
         snap = self.table().current()
         return [(b, p) for b, p in self.discover() if not snap.has_applied(b)]
-
-    @contextlib.contextmanager
-    def _run(self):
-        """One ingest run: yields the table and the run's result list, and
-        truncates the applied ledger once if the run completes."""
-        table = self.table()
-        results: list[dict[str, Any]] = []
-        yield table, results
-        if (
-            results
-            and self.truncate_keep is not None
-            and len(table.current().applied) > self.truncate_keep
-        ):
-            table.truncate_applied(keep_last=self.truncate_keep)
 
     def _apply(
         self,
@@ -163,12 +143,13 @@ class CdcIngest:
     ) -> list[dict[str, Any]]:
         """Apply pending batch directories in order; ``max_batches`` lets
         tests simulate a crash between commits."""
-        with self._run() as (table, results):
-            for i, (batch_id, path) in enumerate(self.pending()):
-                if max_batches is not None and i >= max_batches:
-                    break
-                events = spark.read.parquet(path)
-                results.append(self._apply(spark, table, events, batch_id))
+        table = self.table()
+        results = []
+        for i, (batch_id, path) in enumerate(self.pending()):
+            if max_batches is not None and i >= max_batches:
+                break
+            events = spark.read.parquet(path)
+            results.append(self._apply(spark, table, events, batch_id))
         return results
 
     def run_stream(
@@ -182,26 +163,25 @@ class CdcIngest:
         for incremental catch-up jobs). Each micro-batch is applied with
         its epoch id as the batch id; ``max_files_per_trigger`` caps the
         files per epoch."""
-        with self._run() as (table, results):
+        table = self.table()
+        results = []
 
-            def apply_epoch(df: DataFrame, epoch_id: int) -> None:
-                results.append(
-                    self._apply(df.sparkSession, table, df, int(epoch_id))
-                )
+        def apply_epoch(df: DataFrame, epoch_id: int) -> None:
+            results.append(self._apply(df.sparkSession, table, df, int(epoch_id)))
 
-            reader = spark.readStream.schema(EVENT_SCHEMA).option(
-                "recursiveFileLookup", "true"
-            )
-            if max_files_per_trigger:
-                reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-            q = (
-                reader.parquet(self.batch_dir)
-                .writeStream.foreachBatch(apply_epoch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        reader = spark.readStream.schema(EVENT_SCHEMA).option(
+            "recursiveFileLookup", "true"
+        )
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        q = (
+            reader.parquet(self.batch_dir)
+            .writeStream.foreachBatch(apply_epoch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         return results
 
     def run_log(self, spark: SparkSession, log: OffsetLog) -> list[dict[str, Any]]:
@@ -210,23 +190,25 @@ class CdcIngest:
         of the target offsets, stable across retries and processes, so a
         crash after commit makes the retry a structural no-op and a crash
         before commit re-reads the identical range. Each result carries the
-        committed ``offsets``."""
-        with self._run() as (table, results):
-            since = dict(table.current().summary.get(OFFSETS_KEY, {}))
-            pending = {
-                p: hi
-                for p, hi in log.latest_offsets(spark).items()
-                if hi > since.get(p, -1)
-            }
-            if pending:
-                digest = hashlib.md5(repr(sorted(pending.items())).encode())
-                batch_id = int(digest.hexdigest()[:15], 16)
-                offsets = {**since, **pending}
-                # offsets land INSIDE the same snapshot as the data — the
-                # checkpoint can never disagree with the table
-                result = self._apply(
-                    spark, table, log.read(spark, since, pending), batch_id,
-                    summary_extra={OFFSETS_KEY: offsets},
-                )
-                results.append({**result, "offsets": offsets})
-        return results
+        committed ``offsets``. Hashed ids are not contiguous, so they never
+        fold into ``applied_floor``: this front-end's ledger keeps one
+        entry per batch."""
+        table = self.table()
+        since = dict(table.current().summary.get(OFFSETS_KEY, {}))
+        pending = {
+            p: hi
+            for p, hi in log.latest_offsets(spark).items()
+            if hi > since.get(p, -1)
+        }
+        if not pending:
+            return []
+        digest = hashlib.md5(repr(sorted(pending.items())).encode())
+        batch_id = int(digest.hexdigest()[:15], 16)
+        offsets = {**since, **pending}
+        # offsets land INSIDE the same snapshot as the data — the
+        # checkpoint can never disagree with the table
+        result = self._apply(
+            spark, table, log.read(spark, since, pending), batch_id,
+            summary_extra={OFFSETS_KEY: offsets},
+        )
+        return [{**result, "offsets": offsets}]

@@ -16,7 +16,7 @@ Local smoke::
 
 ``--streaming --checkpoint-dir DIR`` drains the same directory as a
 Structured Streaming query (``CdcIngest.run_stream``) instead of per batch
-directory (``CdcIngest.run``); both take the same compaction, ledger and
+directory (``CdcIngest.run``); both take the same compaction and
 normalization options. ``--max-batches`` is batch-directory only.
 
 Exit code 0 = all pending batches committed; the job is safe to re-run or
@@ -59,12 +59,7 @@ def main(argv: list[str] | None = None) -> int:
                         "(tagged snapshots survive expiry until dropped)")
     p.add_argument("--maintain", action="store_true",
                    help="run the full maintenance pass after ingest "
-                        "(compaction + ledger truncation + snapshot expiry + "
-                        "orphan cleanup)")
-    p.add_argument("--truncate-keep", type=int, default=4096,
-                   help="bound the applied-batch ledger to this many entries "
-                        "(contiguous prefix folds into the applied_floor low "
-                        "watermark); 0 disables")
+                        "(compaction + snapshot expiry + orphan cleanup)")
     args = p.parse_args(argv)
 
     if args.streaming and not args.checkpoint_dir:
@@ -82,7 +77,6 @@ def main(argv: list[str] | None = None) -> int:
         num_buckets=args.num_buckets,
         normalize_text=not args.no_normalize,
         compact_max_files=args.compact_max_files,
-        truncate_keep=args.truncate_keep or None,
         compact_target_file_rows=args.compact_target_file_rows,
     )
     t0 = time.perf_counter()

@@ -46,10 +46,12 @@ manifest lists; data access is executor-side Parquet scans of only the
 pruned file set.
 
 Manifest hygiene at 100 TB: MOR keeps per-bucket live-file counts bounded
-by ``compact_max_files``, so the manifest stays O(num_buckets ×
-compact_max_files) regardless of history; ``expire_snapshots`` bounds the
-manifest *chain* and ``cleanup_orphans`` reclaims de-referenced files
-(interaction tested under churn in ``tests/test_round2_fixes.py``).
+by ``compact_max_files``, and every batch commit folds the applied-offset
+ledger into its ``applied_floor`` (``Snapshot.ledger_after``), so the
+manifest stays O(num_buckets × compact_max_files) regardless of history;
+``expire_snapshots`` bounds the manifest *chain* and ``cleanup_orphans``
+reclaims de-referenced files (interaction tested under churn in
+``tests/test_churn.py``).
 Incremental consumers must poll within the retention window or take the
 documented ``IncrementalHistoryError`` → full-read fallback. If a
 deployment ever needs >10^5 buckets, the next step is Iceberg-style
@@ -131,14 +133,33 @@ class Snapshot:
     def key_cols(self) -> list[str]:
         return list(self.summary.get("key_cols", DEFAULT_KEY_COLS))
 
+    @property
+    def applied_floor(self) -> int:
+        return int(self.summary.get("applied_floor", -1))
+
     def has_applied(self, batch_id: int) -> bool:
         """The exactly-once rule: ``batch_id`` is consumed iff its ledger
         entry is live, or it sits at/below the ``applied_floor`` low
-        watermark (``truncate_applied`` folded its entry away; the floor's
+        watermark (``ledger_after`` folded its entry away; the floor's
         contract is that the whole contiguous prefix was applied)."""
-        return str(batch_id) in self.applied or batch_id <= int(
-            self.summary.get("applied_floor", -1)
-        )
+        return str(batch_id) in self.applied or batch_id <= self.applied_floor
+
+    def ledger_after(
+        self, batch_id: int, lsn_range: list[int]
+    ) -> tuple[dict[str, list[int]], int]:
+        """The ``(applied, applied_floor)`` a commit applying ``batch_id``
+        records: the batch's entry is added, then the floor rises while
+        ``floor + 1`` is in the ledger, dropping each entry it passes.
+        The floor only passes ids the ledger holds, so for every id >= 0
+        ``has_applied`` answers as an unbounded ledger would, and a
+        contiguous batch stream leaves the ledger empty (Kafka
+        committed-offset semantics)."""
+        applied = {**self.applied, str(batch_id): lsn_range}
+        floor = self.applied_floor
+        while str(floor + 1) in applied:
+            floor += 1
+            del applied[str(floor)]
+        return applied, floor
 
     def to_json(self) -> str:
         return json.dumps(
@@ -436,8 +457,9 @@ class LakeTable:
         versions stay contiguous so ``current_version``'s forward probe
         and ``read_incremental``'s version range hold, and batches applied
         after the target become re-ingestable again because the ledger
-        (and its ``applied_floor``/watermark summary keys) are restored
-        wholesale, not merged."""
+        and its ``applied_floor`` (with the watermark summary keys) are
+        restored wholesale, not merged: the target's floor lies below
+        every batch the target had not applied."""
         target = self.snapshot(self.resolve_ref(version_or_ref))
         cur = self.current()
         return self.commit(
@@ -458,23 +480,22 @@ class LakeTable:
         spark: SparkSession,
         compact_max_files: int = COMPACT_MAX_FILES,
         target_file_rows: int | None = None,
-        truncate_keep: int = 4096,
         keep_last_snapshots: int = 4,
         orphan_age_seconds: float = 3600,
     ) -> dict[str, int]:
         """One-call production maintenance pass: compact read-amplified
-        buckets, fold the applied ledger into its low watermark, expire
-        old snapshots (tagged ones retained), reclaim orphaned files.
-        Every step is an independent crash-safe commit or idempotent
-        cleanup, so a pass that died is finished by the next one. Safe to
-        run from a cron alongside the ingester: a compaction or truncation
-        that loses its commit to an ingest raises ``CommitConflictError``
-        and the next pass retries it."""
+        buckets, expire old snapshots (tagged ones retained), reclaim
+        orphaned files. The applied ledger needs no pass: every batch
+        commit folds it (``Snapshot.ledger_after``). Every step is an
+        independent crash-safe commit or idempotent cleanup, so a pass
+        that died is finished by the next one. Safe to run from a cron
+        alongside the ingester: a compaction that loses its commit to an
+        ingest raises ``CommitConflictError`` and the next pass retries
+        it."""
         return {
             "compacted_buckets": self.compact(
                 spark, compact_max_files, target_file_rows=target_file_rows
             ),
-            "applied_truncated": self.truncate_applied(keep_last=truncate_keep),
             "snapshots_expired": self.expire_snapshots(
                 keep_last=keep_last_snapshots
             ),
@@ -1036,44 +1057,9 @@ class LakeTable:
 
     def applied_floor(self) -> int:
         """The committed low watermark of the batch stream: every
-        ``batch_id <= floor`` is known-applied even if its ledger entry
-        was truncated (Kafka committed-offset semantics)."""
-        return int(self.current().summary.get("applied_floor", -1))
-
-    def truncate_applied(self, keep_last: int = 64) -> int:
-        """Bound the applied-batch ledger so the manifest stays
-        O(keep_last) no matter how many batches have ever been ingested
-        (the soak shows ~300 B/batch growth otherwise — harmless at 10³
-        batches, not at 10⁵+). Entries contiguous with the current floor
-        are folded INTO the floor; the last ``keep_last`` entries are
-        always kept verbatim (so recent replays still short-circuit on
-        their exact lsn range). Assumes the standard CDC contract of a
-        monotone batch-id stream: a batch numbered at-or-below the floor
-        is by definition consumed. Maintenance commit; returns entries
-        dropped."""
-        snap = self.current()
-        ids = sorted(int(k) for k in snap.applied)
-        if len(ids) <= keep_last:
-            return 0
-        prev_floor = int(snap.summary.get("applied_floor", -1))
-        idset = set(ids)
-        c = prev_floor
-        while c + 1 in idset:
-            c += 1
-        floor = min(c, ids[-keep_last] - 1) if keep_last > 0 else c
-        if floor <= prev_floor:
-            return 0
-        new_applied = {
-            k: v for k, v in snap.applied.items() if int(k) > floor
-        }
-        self.commit(
-            snap,
-            snap.files,
-            applied=new_applied,
-            summary={**snap.summary, "applied_floor": floor},
-            commit_type="maintenance",
-        )
-        return len(snap.applied) - len(new_applied)
+        ``batch_id <= floor`` is known-applied though its ledger entry
+        was folded away (Kafka committed-offset semantics)."""
+        return self.current().applied_floor
 
     # -------------------------------------------------------------- cleanup
     def _retained(self, snaps: list[Snapshot]) -> tuple[set[int], set[str]]:

@@ -330,17 +330,6 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -
     return agg.select("doc_id", bit_str.alias("simhash"))
 
 
-def dedup_keep_canonical(
-    docs: DataFrame, pairs: DataFrame
-) -> DataFrame:
-    """Resolve near-dup pairs to a keep-set: drop every doc that appears as
-    ``doc_b`` of a pair with a smaller canonical ``doc_a`` (one union-find
-    step — sufficient when similarity is near-transitive; iterate to a
-    fixpoint for full clustering)."""
-    drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return docs.join(drop, on="doc_id", how="left_anti")
-
-
 LINE_WORDS = 8
 MAX_LINE_FREQ = 2
 
@@ -530,9 +519,9 @@ def connected_components(
     canonical representative the curation pipelines (RefinedWeb, C4)
     keep per duplicate cluster. Pair generators (``near_dup_verified``,
     ``ngram_jaccard_pairs``, ``embedding near-dup``) emit edges; this
-    resolves them to clusters, which one union-find step
-    (``dedup_keep_canonical``) gets wrong whenever similarity chains:
-    a~b, b~c but the pair (a,c) was never emitted.
+    resolves them to clusters, which a single step that drops every
+    pair's ``doc_b`` gets wrong whenever similarity chains: a~b, b~c but
+    the pair (a,c) was never emitted.
 
     Why this shape at 100 TB: each iteration is (1) an equi-join of the
     edge list against current labels + a min-aggregate (map-side

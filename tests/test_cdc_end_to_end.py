@@ -213,7 +213,6 @@ def test_extreme_skew_hot_conversation(spark, tmp_lake, tmp_path_factory):
 
 
 FRONT_ENDS = ("run", "run_stream", "run_log")
-TRUNCATE_KEEP = 2
 
 
 @pytest.fixture(scope="module")
@@ -235,10 +234,7 @@ def front_ends(spark, log, tmp_path_factory):
     )
     out = {}
     for how in FRONT_ENDS:
-        ing = CdcIngest(
-            os.path.join(work, how), batch_dir, num_buckets=8,
-            truncate_keep=TRUNCATE_KEEP,
-        )
+        ing = CdcIngest(os.path.join(work, how), batch_dir, num_buckets=8)
         spark.conf.unset("spark.sql.files.openCostInBytes")
         before = spark.conf.getAll
         if how == "run":
@@ -266,8 +262,8 @@ def test_run_leaves_session_conf_unchanged(front_ends, how):
 @pytest.mark.parametrize("how", FRONT_ENDS)
 def test_front_ends_agree(spark, log, front_ends, how):
     """Batch directories, the streaming query and the offset log give the
-    same public table; run and run_stream keep the ledger within
-    truncate_keep (run_log's hashed batch ids never fold into the floor)."""
+    same public table; run and run_stream fold their whole ledger into the
+    floor (run_log's hashed batch ids never fold into it)."""
     _, expected = log
     ing, results, _, _ = front_ends[how]
     assert all(r["status"] == "applied" for r in results)
@@ -282,5 +278,6 @@ def test_front_ends_agree(spark, log, front_ends, how):
         == reference.select(*cols).orderBy(*order).collect()
     )
     if how != "run_log":
-        assert len(results) > TRUNCATE_KEEP
-        assert len(ing.table().current().applied) <= TRUNCATE_KEEP
+        snap = ing.table().current()
+        assert snap.applied == {}
+        assert snap.applied_floor == len(results) - 1

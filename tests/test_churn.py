@@ -74,9 +74,7 @@ def test_churn_rounds_converge(
     ing = CdcIngest(table_path, log_dir, num_buckets=4)
     feed = IncrementalFeed(table_path, str(tmp_path / "feed.json"))
     replica = feed_replica()
-    swept = dict.fromkeys(
-        ("applied_truncated", "snapshots_expired", "orphans_removed"), 0
-    )
+    swept = dict.fromkeys(("snapshots_expired", "orphans_removed"), 0)
 
     for r in range(ROUNDS):
         name = f"batch_{r:05d}"
@@ -107,9 +105,7 @@ def test_churn_rounds_converge(
         # keep_last exceeds the commits of one round, so the feed's last
         # position stays in history and only a rollback in its window
         # can force a resync
-        done = t.maintain(
-            spark, truncate_keep=2, keep_last_snapshots=8, orphan_age_seconds=0
-        )
+        done = t.maintain(spark, keep_last_snapshots=8, orphan_age_seconds=0)
         for k in swept:
             swept[k] += done[k]
         token = replica.sync(spark, feed)

@@ -42,8 +42,8 @@ def test_cli_ingest_roundtrip(spark, tmp_lake, tmp_path_factory):
 def test_cli_streaming_takes_ledger_and_compaction_options(
     spark, tmp_lake, tmp_path_factory
 ):
-    """``--streaming`` runs the same ingest driver as batch mode, so
-    ``--truncate-keep`` bounds its ledger and ``--compact-target-file-rows``
+    """``--streaming`` runs the same ingest driver as batch mode, so its
+    epochs fold into the ledger's floor and ``--compact-target-file-rows``
     splits the buckets it compacts. Two invocations, one new batch each,
     give two epochs."""
     from pyspark.sql import functions as F
@@ -68,7 +68,7 @@ def test_cli_streaming_takes_ledger_and_compaction_options(
                 "--table", table, "--batch-dir", log_dir,
                 "--streaming", "--checkpoint-dir", os.path.join(tmp_lake, "cp"),
                 "--num-buckets", "4", "--master", "local[2]",
-                "--truncate-keep", "1", "--compact-max-files", "0",
+                "--compact-max-files", "0",
                 "--compact-target-file-rows", "10",
             ],
             capture_output=True, text=True, env=env, cwd=REPO, timeout=300,
@@ -76,7 +76,7 @@ def test_cli_streaming_takes_ledger_and_compaction_options(
         assert out.returncode == 0, out.stderr[-2000:]
         assert json.loads(out.stdout.strip().splitlines()[-1])["batches_applied"] == 1
     snap = LakeTable.load(table).current()
-    assert list(snap.applied) == ["1"] and snap.summary["applied_floor"] == 0
+    assert snap.applied == {} and snap.summary["applied_floor"] == 1
     per_bucket = {}
     for f in snap.files:
         assert f["kind"] == "base" and "min_key" in f

@@ -7,6 +7,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from runyoro_llm_data_pipeline_spark.cdc import apply as apply_mod
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.cdc.generator import (
@@ -95,11 +96,11 @@ def test_orphan_cleanup_after_lost_race(spark, tmp_lake):
     assert t.cleanup_orphans(min_age_seconds=0) == 0  # nothing orphaned now
 
 
-def test_apply_batch_retries_after_transient_conflict(spark, tmp_lake):
+def test_apply_batch_retries_after_transient_conflict(spark, tmp_lake, monkeypatch):
     """Optimistic-concurrency retry: a commit that loses the pointer race
     raises CommitConflictError; apply_batch must re-read the snapshot and
     succeed on the next attempt (and must NOT retry when
-    max_commit_retries=0)."""
+    ``MAX_COMMIT_RETRIES`` is 0)."""
     ing = CdcIngest(os.path.join(tmp_lake, "t"), "/nonexistent", num_buckets=4)
     t = ing.table()
     real_commit = t.commit
@@ -120,15 +121,17 @@ def test_apply_batch_retries_after_transient_conflict(spark, tmp_lake):
     t.commit = real_commit
     t2 = ing.table()
 
+    lost = []
+
     def always_conflict(*a, **k):
+        lost.append(1)
         raise CommitConflictError("permanent")
 
     t2.commit = always_conflict
+    monkeypatch.setattr(apply_mod, "MAX_COMMIT_RETRIES", 0)
     with pytest.raises(CommitConflictError):
-        apply_batch(
-            spark, t2, _batch(spark, 2, 1), 1,
-            max_commit_retries=0,
-        )
+        apply_batch(spark, t2, _batch(spark, 2, 1), 1)
+    assert len(lost) == 1
 
 
 def test_apply_batch_retry_degrades_to_skip_when_rival_applied_same_batch(
@@ -402,8 +405,7 @@ def test_each_commit_publishes_one_file(spark, tmp_lake, tmp_path_factory, monke
     ing.run(spark)
     t = ing.table()
     t.maintain(
-        spark, compact_max_files=0, truncate_keep=1, keep_last_snapshots=1,
-        orphan_age_seconds=0,
+        spark, compact_max_files=0, keep_last_snapshots=1, orphan_age_seconds=0,
     )
     monkeypatch.undo()
 

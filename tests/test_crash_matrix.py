@@ -5,9 +5,10 @@ one base table, dies at the point, then resumes the way an operator
 would: a fresh handle issues the same operation again, ``run()`` ingests
 whatever is pending, and one ``maintain`` pass follows. The table must
 then equal the generator's oracle, every file a retained manifest names
-must exist, nothing unreferenced may stay on disk, and a feed replica
-must converge. A new mutation adds one entry to ``MUTATIONS`` and one
-row per crash point.
+must exist, nothing unreferenced may stay on disk, the applied ledger
+must be folded whole into its floor, and a feed replica must converge.
+A new mutation adds one entry to ``MUTATIONS`` and one row per crash
+point.
 
 The crash is injected from here; the package has no hook for it. A row
 wraps one function so that it raises ``_Crash`` (a ``BaseException``)
@@ -70,7 +71,6 @@ MUTATIONS = {
     "apply": lambda spark, root: _ingest(root).run(spark),
     "compact": lambda spark, root: _table(root).compact(spark),
     "rebucket": lambda spark, root: _table(root).rebucket(spark, 2 * NUM_BUCKETS),
-    "truncate_applied": lambda _, root: _table(root).truncate_applied(keep_last=1),
     "rollback": lambda _, root: _table(root).rollback(TAG),
     "expire_snapshots": lambda _, root: _table(root).expire_snapshots(keep_last=2),
     "cleanup_orphans": lambda _, root: _table(root).cleanup_orphans(min_age_seconds=0),
@@ -120,7 +120,6 @@ ROWS = [
     ("compact", "staged"),
     ("compact", "manifest"),
     ("rebucket", "manifest"),
-    ("truncate_applied", "manifest"),
     ("rollback", "manifest"),
     ("expire_snapshots", "mark_written"),
     ("expire_snapshots", "files_deleted"),
@@ -224,6 +223,9 @@ def _resume_and_check(
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     check_table_files(t)
+    # every batch folded into the floor: the ledger holds no entry
+    snap = t.current()
+    assert snap.applied == {} and snap.applied_floor == 3
     return len(writes)
 
 

@@ -118,7 +118,6 @@ def test_maintenance_only_poll_starts_no_spark_job(spark, tmp_lake, tmp_path_fac
 
     t = LakeTable.load(tp)
     assert t.compact(spark) > 0
-    assert t.truncate_applied(keep_last=0) > 0
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup("feed-maintenance-poll", "maintenance-only feed poll")

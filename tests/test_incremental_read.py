@@ -86,17 +86,17 @@ def test_sql_view_and_metrics_history(spark, tmp_lake, tmp_path_factory):
 def test_metrics_history_lists_batches_after_ledger_truncation(
     spark, tmp_lake, tmp_path_factory
 ):
-    """Every batch-applying commit is listed, also after a ledger
-    truncation has shrunk ``applied``; maintenance commits inheriting
+    """Every batch-applying commit is listed, also after the ledger has
+    folded into its floor; maintenance commits inheriting
     ``last_batch_id`` are not."""
     d = str(tmp_path_factory.mktemp("hist"))
     events, _ = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=5)
     write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4, truncate_keep=1)
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark, max_batches=3)
     ing.run(spark)
     t = ing.table()
-    assert t.applied_floor() >= 0  # the ledger was truncated
+    assert t.current().applied == {} and t.applied_floor() == 4
     hist = t.metrics_history()
     assert [h["batch_id"] for h in hist] == [0, 1, 2, 3, 4]
     assert all(

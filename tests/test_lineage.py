@@ -87,8 +87,8 @@ def _parquet_files(root: str) -> set[str]:
 def test_footprint_bounded_and_lineage_follows_retention(
     spark, tmp_lake, tmp_path_factory
 ):
-    """Twelve batches, each followed by compaction, ledger truncation,
-    snapshot expiry and orphan cleanup: the files on disk are exactly the
+    """Twelve batches, each followed by compaction, snapshot expiry and
+    orphan cleanup: the files on disk are exactly the
     live data files, so their count stops growing; after expiry,
     ``read_lineage`` lists exactly the batches whose data commits are
     still in ``history()``."""
@@ -97,13 +97,13 @@ def test_footprint_bounded_and_lineage_follows_retention(
     write_batch_files(events, d)
     ing = CdcIngest(
         os.path.join(tmp_lake, "t"), d, num_buckets=NUM_BUCKETS,
-        compact_max_files=1, truncate_keep=2,
+        compact_max_files=1,
     )
     counts = []
     for _ in range(12):
         ing.run(spark, max_batches=1)
         t = ing.table()
-        t.expire_snapshots(keep_last=2)
+        t.expire_snapshots(keep_last=1)
         t.cleanup_orphans(min_age_seconds=0)
         on_disk = _parquet_files(t.path)
         counts.append(len(on_disk))

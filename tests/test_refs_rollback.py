@@ -105,7 +105,6 @@ def test_rollback_by_tag_and_maintain(spark, tmp_lake):
     )
     assert set(out) == {
         "compacted_buckets",
-        "applied_truncated",
         "snapshots_expired",
         "orphans_removed",
     }

@@ -38,8 +38,9 @@ def test_empty_batch_commits_noop(spark, tmp_lake):
     assert r1["status"] == "applied"
     assert r1.get("late_events", 0) == 0
 
-    # idempotence ledger advanced (batch 1 recorded), data unchanged
-    assert "1" in t.current().applied
+    # idempotence ledger advanced (batch 1 folded into the floor), data
+    # unchanged
+    assert t.applied_floor() == 1
     assert t.read(spark).count() == rows_before
     r1b = apply_batch(spark, t, empty, batch_id=1)
     assert r1b["status"] == "skipped"
@@ -135,82 +136,36 @@ def test_entity_unescape_order_matches_html_unescape(spark):
 
 
 def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
-    """Ledger truncation (soak follow-up): the applied-batch map stays
-    O(keep_last) while idempotence is preserved through the floor — a
-    truncated batch replay is still skipped, resume of NEW batches still
-    works, and incremental ingest is unaffected."""
+    """Every batch commit folds the applied ledger into its floor, so the
+    ledger stays empty over a contiguous batch stream while idempotence
+    holds through the floor: a folded batch's replay is skipped, an
+    incremental consumer whose window spans folded batches receives
+    exactly their winners, and a new batch past a gap keeps its entry
+    until the gap closes."""
     from runyoro_llm_data_pipeline_spark.cdc.generator import write_batch_files
     from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 
-    d = str(tmp_path_factory.mktemp("trunc"))
-    events, _ = gen_change_log(spark, n_turns=300, n_convs=10, n_batches=6)
-    write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
-    res = ing.run(spark)
-    assert len(res) == 6
-    t = ing.table()
-    rows = t.read(spark).count()
-
-    dropped = t.truncate_applied(keep_last=2)
-    assert dropped == 4
-    snap = t.current()
-    assert sorted(snap.applied) == ["4", "5"]
-    assert snap.summary["applied_floor"] == 3
-    assert t.applied_floor() == 3
-
-    # idempotence THROUGH the floor: all 6 batch dirs still on disk,
-    # nothing is pending and a forced re-apply of a truncated batch skips
-    assert ing.pending() == []
-    ev0 = spark.read.parquet(os.path.join(d, "batch_00000"))
-    r = apply_batch(spark, t, ev0, batch_id=0)
-    assert r["status"] == "skipped"
-    assert t.read(spark).count() == rows
-
-    # a genuinely NEW batch still applies
-    ev_new = ev0.withColumn("lsn", F.col("lsn") + 10_000_000).withColumn(
-        "event_ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("lsn"))
-    )
-    r = apply_batch(spark, t, ev_new, batch_id=6)
-    assert r["status"] == "applied"
-    # truncation again with nothing new to fold is a no-op
-    assert t.truncate_applied(keep_last=3) == 0
-
-
-def test_auto_truncate_knob_and_incremental_across_floor(
-    spark, tmp_lake, tmp_path_factory
-):
-    """``CdcIngest(truncate_keep=k)`` bounds the ledger without any manual
-    maintenance call, and an incremental consumer whose window spans the
-    truncation maintenance commit still receives exactly the late-batch
-    winners — truncation carries the parent's files verbatim, so the
-    path-diff walk attributes nothing to it."""
-    from runyoro_llm_data_pipeline_spark.cdc.generator import write_batch_files
-    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-
-    d = str(tmp_path_factory.mktemp("autotrunc"))
+    d = str(tmp_path_factory.mktemp("fold"))
     events, _ = gen_change_log(spark, n_turns=400, n_convs=12, n_batches=8)
     write_batch_files(events, d)
-    ing = CdcIngest(
-        os.path.join(tmp_lake, "t"), d, num_buckets=4, truncate_keep=3
-    )
-    first = ing.run(spark, max_batches=5)
-    assert len(first) == 5
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
+    assert len(ing.run(spark, max_batches=5)) == 5
     t = ing.table()
-    # ledger was auto-bounded after the run: floor folded the contiguous
-    # prefix, the last keep entries survive verbatim
-    assert len(t.current().applied) <= 3
-    assert t.applied_floor() >= 0
+    assert t.current().applied == {} and t.applied_floor() == 4
     v_mid = t.current_version()
+    assert len(ing.run(spark)) == 3
+    snap = t.current()
+    assert snap.applied == {} and snap.summary["applied_floor"] == 7
 
-    rest = ing.run(spark)
-    assert len(rest) == 3
-    t = ing.table()
-    assert len(t.current().applied) <= 3
-    assert t.applied_floor() >= 4
-    # idempotence through the floor: nothing pending, a rerun applies zero
+    # idempotence THROUGH the floor: all 8 batch dirs still on disk,
+    # nothing is pending and a forced re-apply of a folded batch skips
     assert ing.pending() == [] and ing.run(spark) == []
+    rows = t.read(spark).count()
+    ev0 = spark.read.parquet(os.path.join(d, "batch_00000"))
+    assert apply_batch(spark, t, ev0, batch_id=0)["status"] == "skipped"
+    assert t.read(spark).count() == rows
 
-    # incremental window spanning the truncation commit(s)
+    # incremental window spanning the folded batches 5-7
     inc = t.read_incremental(spark, v_mid)
     late_keys = {
         (r["conv_id"], r["turn_idx"])
@@ -224,13 +179,25 @@ def test_auto_truncate_knob_and_incremental_across_floor(
     assert got_keys == late_keys
     assert inc.count() == len(got_keys)
 
+    # a genuinely NEW batch past a gap applies and keeps its entry; the
+    # batch that closes the gap folds both
+    ev_new = ev0.withColumn("lsn", F.col("lsn") + 10_000_000).withColumn(
+        "event_ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("lsn"))
+    )
+    assert apply_batch(spark, t, ev_new, batch_id=9)["status"] == "applied"
+    assert sorted(t.current().applied) == ["9"] and t.applied_floor() == 7
+    assert not t.was_applied(8)
+    empty = spark.createDataFrame([], EVENT_SCHEMA)
+    assert apply_batch(spark, t, empty, batch_id=8)["status"] == "applied"
+    assert t.current().applied == {} and t.applied_floor() == 9
+
 
 def test_batch_keyed_incremental_consumer(spark, tmp_lake):
     """A downstream consumer can checkpoint BATCH IDS (the same unit the
     ingest side checkpoints) instead of lake versions:
     ``version_for_batch`` resolves the applying data commit,
     ``read_incremental_since_batch`` delivers exactly the later batches'
-    winners, and both stay correct across ledger truncation. Once
+    winners, and both stay correct once the ledger folded away. Once
     ``expire_snapshots`` drops the commit point, resolution fails with
     the documented floor-aware errors instead of silently under- or
     over-delivering."""
@@ -266,18 +233,17 @@ def test_batch_keyed_incremental_consumer(spark, tmp_lake):
     v2 = t.version_for_batch(2)
     assert t.snapshot(v2).summary["last_batch_id"] == 2
 
-    # truncation folds batch 0-3 ledger entries into the floor; the
-    # commit points are still retained, so batch-keyed consumption of a
-    # truncated batch still resolves and delivers batches 1-5
-    assert t.truncate_applied(keep_last=2) == 4
-    assert t.applied_floor() == 3
+    # each commit folded its batch into the floor; the commit points
+    # are still retained, so batch-keyed consumption of a folded batch
+    # still resolves and delivers batches 1-5
+    assert t.current().applied == {} and t.applied_floor() == 5
     assert t.was_applied(0)  # known-applied through the floor
     assert keys_of(t.read_incremental_since_batch(spark, 0)) == keys_of(
         events.filter(F.col("batch_id") >= 1)
     )
 
-    # expire history: last 2 snapshots = (batch-5 data commit, truncate
-    # maintenance commit). batch 5 still resolves; batch 0 is applied
+    # expire history: last 2 snapshots = the batch-4 and batch-5 data
+    # commits. batch 5 still resolves; batch 0 is applied
     # (floor says so) but its commit point is gone -> history error, NOT
     # KeyError and NOT a wrong version
     t.expire_snapshots(keep_last=2)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from runyoro_llm_data_pipeline_spark.operators.text import (
     clean_and_preprocess_text_col,
+    clean_and_preprocess_text_col_strict,
     clean_and_preprocess_text_pandas,
     clean_and_preprocess_text_py,
     clean_text_initial_col,
@@ -75,6 +76,16 @@ def test_jvm_path_matches_cpython_on_corpus(spark):
     got = _spark_apply(spark, clean_and_preprocess_text_col, CORPUS)
     want = [clean_and_preprocess_text_py(t) for t in CORPUS]
     assert got == want
+
+
+def test_strict_jvm_path_matches_cpython_on_corpus_and_null(spark):
+    """The strict column adds the reference's non-string guard: a null
+    text normalizes to ``""``, as ``clean_and_preprocess_text_py(None)``
+    does."""
+    texts = CORPUS + [None]
+    got = _spark_apply(spark, clean_and_preprocess_text_col_strict, texts)
+    assert got == [clean_and_preprocess_text_py(t) for t in texts]
+    assert got[-1] == ""
 
 
 def test_pandas_path_matches_cpython_on_corpus(spark):
