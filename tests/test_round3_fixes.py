@@ -138,14 +138,53 @@ def test_entity_unescape_order_matches_html_unescape(spark):
 def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
     """Every batch commit folds the applied ledger into its floor, so the
     ledger stays empty over a contiguous batch stream while idempotence
-    holds through the floor: a folded batch's replay is skipped, an
-    incremental consumer whose window spans folded batches receives
-    exactly their winners, and a new batch past a gap keeps its entry
-    until the gap closes."""
+    holds through the floor: a folded batch's replay is skipped, and a
+    new batch past a gap keeps its entry until the gap closes."""
     from runyoro_llm_data_pipeline_spark.cdc.generator import write_batch_files
     from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 
     d = str(tmp_path_factory.mktemp("fold"))
+    events, _ = gen_change_log(spark, n_turns=300, n_convs=10, n_batches=6)
+    write_batch_files(events, d)
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
+    assert len(ing.run(spark)) == 6
+    t = ing.table()
+    snap = t.current()
+    assert snap.applied == {} and snap.summary["applied_floor"] == 5
+    assert t.applied_floor() == 5
+
+    # idempotence THROUGH the floor: all 6 batch dirs still on disk,
+    # nothing is pending and a forced re-apply of a folded batch skips
+    assert ing.pending() == []
+    rows = t.read(spark).count()
+    ev0 = spark.read.parquet(os.path.join(d, "batch_00000"))
+    assert apply_batch(spark, t, ev0, batch_id=0)["status"] == "skipped"
+    assert t.read(spark).count() == rows
+
+    # a genuinely NEW batch past a gap applies and keeps its entry; the
+    # batch that closes the gap folds both
+    ev_new = ev0.withColumn("lsn", F.col("lsn") + 10_000_000).withColumn(
+        "event_ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("lsn"))
+    )
+    assert apply_batch(spark, t, ev_new, batch_id=7)["status"] == "applied"
+    assert sorted(t.current().applied) == ["7"] and t.applied_floor() == 5
+    assert not t.was_applied(6)
+    empty = spark.createDataFrame([], EVENT_SCHEMA)
+    assert apply_batch(spark, t, empty, batch_id=6)["status"] == "applied"
+    assert t.current().applied == {} and t.applied_floor() == 7
+
+
+def test_auto_truncate_knob_and_incremental_across_floor(
+    spark, tmp_lake, tmp_path_factory
+):
+    """``CdcIngest`` bounds the ledger without any maintenance call or
+    option (each batch commit folds it), and an incremental consumer
+    whose window spans the folded batches still receives exactly the
+    late-batch winners."""
+    from runyoro_llm_data_pipeline_spark.cdc.generator import write_batch_files
+    from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+
+    d = str(tmp_path_factory.mktemp("autotrunc"))
     events, _ = gen_change_log(spark, n_turns=400, n_convs=12, n_batches=8)
     write_batch_files(events, d)
     ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
@@ -153,17 +192,11 @@ def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
     t = ing.table()
     assert t.current().applied == {} and t.applied_floor() == 4
     v_mid = t.current_version()
-    assert len(ing.run(spark)) == 3
-    snap = t.current()
-    assert snap.applied == {} and snap.summary["applied_floor"] == 7
 
-    # idempotence THROUGH the floor: all 8 batch dirs still on disk,
-    # nothing is pending and a forced re-apply of a folded batch skips
+    assert len(ing.run(spark)) == 3
+    assert t.current().applied == {} and t.applied_floor() == 7
+    # idempotence through the floor: nothing pending, a rerun applies zero
     assert ing.pending() == [] and ing.run(spark) == []
-    rows = t.read(spark).count()
-    ev0 = spark.read.parquet(os.path.join(d, "batch_00000"))
-    assert apply_batch(spark, t, ev0, batch_id=0)["status"] == "skipped"
-    assert t.read(spark).count() == rows
 
     # incremental window spanning the folded batches 5-7
     inc = t.read_incremental(spark, v_mid)
@@ -178,18 +211,6 @@ def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
     }
     assert got_keys == late_keys
     assert inc.count() == len(got_keys)
-
-    # a genuinely NEW batch past a gap applies and keeps its entry; the
-    # batch that closes the gap folds both
-    ev_new = ev0.withColumn("lsn", F.col("lsn") + 10_000_000).withColumn(
-        "event_ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("lsn"))
-    )
-    assert apply_batch(spark, t, ev_new, batch_id=9)["status"] == "applied"
-    assert sorted(t.current().applied) == ["9"] and t.applied_floor() == 7
-    assert not t.was_applied(8)
-    empty = spark.createDataFrame([], EVENT_SCHEMA)
-    assert apply_batch(spark, t, empty, batch_id=8)["status"] == "applied"
-    assert t.current().applied == {} and t.applied_floor() == 9
 
 
 def test_batch_keyed_incremental_consumer(spark, tmp_lake):
