@@ -25,9 +25,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from runyoro_llm_data_pipeline_spark.cdc.dedup import (  # noqa: E402
-    collapse_latest_wins,
-    collapse_latest_wins_salted,
+from runyoro_llm_data_pipeline_spark.lake.table import (  # noqa: E402
+    VERSION_LSN,
+    VERSION_TS,
+    bucket_expr,
+    collapse_stored,
 )
 from runyoro_llm_data_pipeline_spark.operators import (  # noqa: E402
     corpus as cp,
@@ -82,9 +84,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_as_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map the events table onto the CDC event shape: key=user_id,
-    version order=(ts, event_id); original ts/event_id are duplicated into
-    the payload so the winner's own values survive the collapse."""
+    """Map the events table onto the stored-row shape: key=user_id,
+    version columns=(ts, event_id); original ts/event_id are duplicated
+    into the payload so the winner's own values survive the collapse."""
     return _ev(spark, sf_dir).select(
         F.col("user_id"),
         F.col("event_type"),
@@ -92,9 +94,8 @@ def _events_as_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("props"),
         F.col("ts").alias("src_ts"),
         F.col("event_id").alias("src_event_id"),
-        F.col("ts").alias("event_ts"),
-        F.col("event_id").alias("lsn"),
-        F.lit("upsert").alias("op"),
+        F.col("ts").alias(VERSION_TS),
+        F.col("event_id").alias(VERSION_LSN),
     )
 
 
@@ -110,17 +111,18 @@ def _latest_out(collapsed: DataFrame) -> DataFrame:
 
 
 def q_cdc_latest_wins(spark, sf_dir):
-    return _latest_out(
-        collapse_latest_wins(_events_as_cdc(spark, sf_dir), keys=("user_id",))
-    )
+    return _latest_out(collapse_stored(_events_as_cdc(spark, sf_dir), ["user_id"]))
 
 
 def q_cdc_latest_wins_salted(spark, sf_dir):
-    return _latest_out(
-        collapse_latest_wins_salted(
-            _events_as_cdc(spark, sf_dir), keys=("user_id",), n_salt=16
-        )
+    """The two-phase skew recipe (SURVEY.md §4.1) on the production
+    collapse: pre-collapse on ``(key, salt)``, then on the key alone. The
+    salt splits only the first shuffle, never the key identity."""
+    salted = _events_as_cdc(spark, sf_dir).withColumn(
+        "__salt", bucket_expr(VERSION_LSN, 16)
     )
+    phase1 = collapse_stored(salted, ["user_id", "__salt"]).drop("__salt")
+    return _latest_out(collapse_stored(phase1, ["user_id"]))
 
 
 def _derived_cdc_log(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,7 +4,6 @@ from runyoro_llm_data_pipeline_spark.cdc.events import (  # noqa: F401
     validate_events,
 )
 from runyoro_llm_data_pipeline_spark.cdc.dedup import (  # noqa: F401
-    collapse_latest_wins,
     collapse_latest_wins_window,
 )
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch  # noqa: F401

@@ -13,9 +13,12 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
 * **normalization** (P2): the reference's ``clean_and_preprocess_text``
   (``scripts/text_processing.py:15-40``) applied to the ``text`` payload as a
   JVM column expression — the per-turn equality invariant lives here;
-* **collapse** (W3): latest-wins by ``(event_ts, lsn)`` per key with the
-  pure-JVM ``max_by`` aggregate; each key's row keeps its winning event's
-  own ``(event_ts, lsn)`` as the stored version;
+* **collapse** (W3): the admitted events are projected onto the stored
+  row (``event_ts``/``lsn`` become the version columns, ``op == 'delete'``
+  the tombstone flag) and collapsed latest-wins per key by
+  ``lake.table.collapse_stored`` — the pure-JVM ``max_by`` aggregate that
+  reads, compaction and the feed run on stored rows. Each key's row keeps
+  its winning event's own ``(event_ts, lsn)`` as the stored version;
 * **merge-on-read delta append** as ONE write query with two shuffles:
 
       scan → validate → normalize → partial collapse ⇒ final collapse
@@ -30,10 +33,9 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   write. The partial aggregation means the post-collapse bucket shuffle
   moves at most one row per key and task. The bucket repartition runs
   ``min(num_buckets, cores)`` write tasks with each bucket on exactly one
-  of them, so a batch appends at most one delta file per bucket. The
-  collapse is kept as the benchmarked default, not as the fastest: on a
-  4-CPU host it measured slower than the Arrow and single-shuffle
-  collapses that were tried, so replacing it is a job for a measured A/B.
+  of them, so a batch appends at most one delta file per bucket. No
+  current A/B ranks this collapse against an Arrow (``applyInPandas``) or
+  single-shuffle collapse; replacing it is a job for a measured one.
   Admission metrics (counts and the admitted lsn range) are piggybacked
   on the write via ``Observation`` (no extra scan). Each new file's row
   count and key/lsn bounds are harvested from its parquet *footer* onto
@@ -58,10 +60,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from runyoro_llm_data_pipeline_spark.cdc.dedup import (
-    collapse_latest_wins,
-    payload_columns,
-)
+from runyoro_llm_data_pipeline_spark.cdc.dedup import payload_columns
 from runyoro_llm_data_pipeline_spark.cdc.events import (
     conform_events,
     validate_events,
@@ -75,6 +74,7 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     CommitConflictError,
     LakeTable,
     bucket_expr,
+    collapse_stored,
 )
 
 # lost commit races one ``apply_batch`` call retries before it raises
@@ -124,17 +124,19 @@ def _apply_mor(
         valid = valid.withColumn("text", clean_and_preprocess_text_col(F.col("text")))
 
     keys = snap.key_cols
-    # map-side-combinable aggregate; the write below adds a second (cheap,
-    # post-collapse) shuffle to bucket-align the files
-    collapsed = collapse_latest_wins(valid, keys=keys)
-    schema = evolve_schema(snap.schema(), collapsed)
-    incoming = collapsed.select(
+    # events → stored rows, then the read path's map-side-combinable
+    # collapse; the write below adds a second (cheap, post-collapse)
+    # shuffle to bucket-align the files
+    stored = valid.select(
         *keys,
-        *payload_columns(collapsed, keys),
-        F.col("__event_ts").alias(VERSION_TS),
-        F.col("__lsn").alias(VERSION_LSN),
-        (F.col("__op") == "delete").alias(DELETED),
-        bucket_expr(keys[0], snap.num_buckets).alias("__bucket"),
+        *payload_columns(valid, keys),
+        F.col("event_ts").alias(VERSION_TS),
+        F.col("lsn").alias(VERSION_LSN),
+        (F.col("op") == "delete").alias(DELETED),
+    )
+    schema = evolve_schema(snap.schema(), stored)
+    incoming = collapse_stored(stored, keys).withColumn(
+        "__bucket", bucket_expr(keys[0], snap.num_buckets)
     )
     version = snap.version + 1
     new_files = table.write_data_files(

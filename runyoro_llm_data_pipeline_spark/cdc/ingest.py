@@ -20,11 +20,14 @@ every batch is read under the session's own split rule
   (``scripts/train_llm.py:126-129``). Each epoch id is the batch id, so
   exactly-once is double-gated: the streaming checkpoint redelivers an epoch
   at-least-once with a stable id, and the table's applied gate turns the
-  redelivery into a no-op. A lost streaming checkpoint is survivable too;
+  redelivery into a no-op. The checkpoint is therefore part of the table's
+  state: a lost one restarts epoch ids at 0, which the gate would skip as
+  applied, so ``run_stream`` refuses a fresh checkpoint on a table that
+  has applied a batch;
 * ``run_log()`` tails an offset-addressed log (``sources.offsets.OffsetLog``,
   the Kafka/binlog shape): it reads ``(committed, head]`` per partition as
-  one batch whose id is an md5 of the target offsets, and stores the
-  advanced offsets in the same snapshot summary as the data.
+  one batch numbered ``applied_floor + 1``, and stores the advanced
+  offsets in the same snapshot summary as the data.
 
 Crash anywhere → rerun resumes from the last committed snapshot and
 converges to the identical final state (checkpoint-resume invariant,
@@ -33,7 +36,6 @@ BASELINE.json:north_star).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 from typing import Any
@@ -72,8 +74,7 @@ class CdcIngest:
         The applied-batch ledger needs no setting: each batch commit
         folds the entries contiguous with the ``applied_floor`` low
         watermark into it, so batch ids ``0, 1, 2, …`` leave the ledger
-        empty however many batches have run (``run_log()``'s hashed ids
-        never fold).
+        empty however many batches have run.
 
         ``compact_target_file_rows`` caps rows per compacted file: big
         buckets split into key-contiguous files whose harvested manifest
@@ -162,8 +163,26 @@ class CdcIngest:
         stop (``Trigger.AvailableNow``: the batch-equivalent streaming run
         for incremental catch-up jobs). Each micro-batch is applied with
         its epoch id as the batch id; ``max_files_per_trigger`` caps the
-        files per epoch."""
+        files per epoch.
+
+        Raises ``ValueError`` before the query starts if the checkpoint
+        has planned no epoch but the table has applied a batch: a fresh
+        checkpoint numbers its epochs from 0 again, the gate would skip
+        them as applied, and their files would be lost for good. A
+        checkpoint with planned epochs on a fresh table is a resume after
+        a crash and runs."""
         table = self.table()
+        snap = table.current()
+        offsets_dir = os.path.join(checkpoint_dir, "offsets")
+        planned = os.path.isdir(offsets_dir) and any(
+            fn.isdigit() for fn in os.listdir(offsets_dir)
+        )
+        if not planned and (snap.applied_floor >= 0 or snap.applied):
+            raise ValueError(
+                f"checkpoint {checkpoint_dir} has planned no epoch, but the "
+                "table has applied batches: its epoch ids would restart at "
+                "0 and be skipped as applied"
+            )
         results = []
 
         def apply_epoch(df: DataFrame, epoch_id: int) -> None:
@@ -186,15 +205,18 @@ class CdcIngest:
 
     def run_log(self, spark: SparkSession, log: OffsetLog) -> list[dict[str, Any]]:
         """Apply everything between the committed offsets and the log head
-        as ONE batch; returns ``[]`` when caught up. The batch id is an md5
-        of the target offsets, stable across retries and processes, so a
-        crash after commit makes the retry a structural no-op and a crash
-        before commit re-reads the identical range. Each result carries the
-        committed ``offsets``. Hashed ids are not contiguous, so they never
-        fold into ``applied_floor``: this front-end's ledger keeps one
-        entry per batch."""
+        as ONE batch; returns ``[]`` when caught up. The batch is numbered
+        ``applied_floor + 1`` of the snapshot the range was planned on, so
+        its ledger folds like the other front-ends', and the committed
+        offsets alone decide what is pending: a crash after commit leaves
+        nothing pending for that range, and a crash before commit re-plans
+        it under the same id. A rival that commits first takes the id, so
+        this call's batch is ``skipped`` and the rest of its range stays
+        pending for the next call. Each result carries the committed
+        ``offsets``."""
         table = self.table()
-        since = dict(table.current().summary.get(OFFSETS_KEY, {}))
+        snap = table.current()
+        since = dict(snap.summary.get(OFFSETS_KEY, {}))
         pending = {
             p: hi
             for p, hi in log.latest_offsets(spark).items()
@@ -202,13 +224,13 @@ class CdcIngest:
         }
         if not pending:
             return []
-        digest = hashlib.md5(repr(sorted(pending.items())).encode())
-        batch_id = int(digest.hexdigest()[:15], 16)
         offsets = {**since, **pending}
         # offsets land INSIDE the same snapshot as the data — the
         # checkpoint can never disagree with the table
         result = self._apply(
-            spark, table, log.read(spark, since, pending), batch_id,
+            spark, table, log.read(spark, since, pending), snap.applied_floor + 1,
             summary_extra={OFFSETS_KEY: offsets},
         )
+        if result["status"] == "skipped":
+            offsets = table.snapshot(result["version"]).summary.get(OFFSETS_KEY, {})
         return [{**result, "offsets": offsets}]

@@ -21,7 +21,10 @@ normalization options. ``--max-batches`` is batch-directory only.
 
 Exit code 0 = all pending batches committed; the job is safe to re-run or
 to schedule at any cadence (exactly-once is enforced by the table's
-applied-offset gate, not by the scheduler).
+applied-offset gate, not by the scheduler). A streaming checkpoint belongs
+to its table: ``--streaming`` with a checkpoint that has planned no epoch
+on a table that has applied batches raises ``ValueError``, because the
+fresh checkpoint's epoch ids would restart at 0 and be skipped as applied.
 """
 
 from __future__ import annotations

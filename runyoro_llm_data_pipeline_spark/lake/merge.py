@@ -75,13 +75,11 @@ def evolve_schema(table_schema: T.StructType, changes: DataFrame) -> T.StructTyp
     existing = {f.name: f.dataType for f in table_schema.fields}
     data_fields = [f for f in table_schema.fields if f.name not in INTERNAL_COLS]
     for f in changes.schema.fields:
-        if f.name.startswith("__"):
+        if f.name.startswith("__") or f.name in INTERNAL_COLS:
             continue
         if f.name in existing:
-            if (
-                f.name not in INTERNAL_COLS
-                and f.dataType != existing[f.name]
-                and not isinstance(f.dataType, T.NullType)
+            if f.dataType != existing[f.name] and not isinstance(
+                f.dataType, T.NullType
             ):
                 wider = _widen(existing[f.name], f.dataType)
                 if wider is None:

@@ -293,10 +293,15 @@ def bucket_expr(key, num_buckets: int):
 
 
 def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Latest-wins collapse of *stored* rows (base ∪ delta files) by the
-    internal version columns — the read-side half of merge-on-read. Same
-    map-side-combinable ``max_by`` as the write path, so hot keys are
-    partially collapsed before the shuffle."""
+    """Latest-wins collapse of *stored* rows by the internal version
+    columns: per key, the row with the greatest ``(_cdc_event_ts,
+    _cdc_lsn)`` wins, tombstones included. The engine's one production
+    collapse. Its callers: ``apply_batch`` (a batch's events projected onto
+    stored rows), ``LakeTable._scan`` (base ∪ delta files, so reads, point
+    lookups, incremental reads, compaction, rebucket and the
+    ``IncrementalFeed``), and the ``cdc_latest_wins`` gate queries. A
+    map-side-combinable ``max_by``, so hot keys are partially collapsed
+    before the shuffle."""
     payload = [c for c in df.columns if c not in keys]
     ordv = F.struct(F.col(VERSION_TS), F.col(VERSION_LSN))
     return (
@@ -491,12 +496,13 @@ class LakeTable:
         that died is finished by the next one. Safe to run from a cron
         alongside the ingester: a compaction that loses its commit to an
         ingest raises ``CommitConflictError`` and the next pass retries
-        it."""
+        it. Returns the buckets compacted, the data files snapshot expiry
+        deleted and the orphans removed."""
         return {
             "compacted_buckets": self.compact(
                 spark, compact_max_files, target_file_rows=target_file_rows
             ),
-            "snapshots_expired": self.expire_snapshots(
+            "expired_files_removed": self.expire_snapshots(
                 keep_last=keep_last_snapshots
             ),
             "orphans_removed": self.cleanup_orphans(

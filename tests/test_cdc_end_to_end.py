@@ -262,8 +262,7 @@ def test_run_leaves_session_conf_unchanged(front_ends, how):
 @pytest.mark.parametrize("how", FRONT_ENDS)
 def test_front_ends_agree(spark, log, front_ends, how):
     """Batch directories, the streaming query and the offset log give the
-    same public table; run and run_stream fold their whole ledger into the
-    floor (run_log's hashed batch ids never fold into it)."""
+    same public table, and each folds its whole ledger into the floor."""
     _, expected = log
     ing, results, _, _ = front_ends[how]
     assert all(r["status"] == "applied" for r in results)
@@ -277,7 +276,6 @@ def test_front_ends_agree(spark, log, front_ends, how):
         public.select(*cols).orderBy(*order).collect()
         == reference.select(*cols).orderBy(*order).collect()
     )
-    if how != "run_log":
-        snap = ing.table().current()
-        assert snap.applied == {}
-        assert snap.applied_floor == len(results) - 1
+    snap = ing.table().current()
+    assert snap.applied == {}
+    assert snap.applied_floor == len(results) - 1

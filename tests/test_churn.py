@@ -74,7 +74,7 @@ def test_churn_rounds_converge(
     ing = CdcIngest(table_path, log_dir, num_buckets=4)
     feed = IncrementalFeed(table_path, str(tmp_path / "feed.json"))
     replica = feed_replica()
-    swept = dict.fromkeys(("snapshots_expired", "orphans_removed"), 0)
+    swept = dict.fromkeys(("expired_files_removed", "orphans_removed"), 0)
 
     for r in range(ROUNDS):
         name = f"batch_{r:05d}"

@@ -3,17 +3,21 @@ with and without compaction, across crash-resume, tombstones, schema
 evolution and late-event accounting.
 """
 
+import ast
 import os
+import re
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+import runyoro_llm_data_pipeline_spark as pkg
 from runyoro_llm_data_pipeline_spark.cdc.generator import (
     gen_change_log,
     write_batch_files,
 )
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
+from runyoro_llm_data_pipeline_spark.lake.table import LakeTable
 
 
 def _rows(df):
@@ -195,3 +199,69 @@ def test_late_event_accounting(spark, tmp_lake):
     # the stale duplicate did not clobber anything
     rows = {r["turn_idx"]: r["text"] for r in t.read(spark).collect()}
     assert rows == {0: "v1", 1: "fresh"}
+
+
+def test_apply_plans_one_key_shuffle_over_a_partial_max_by(
+    spark, log, tmp_lake, monkeypatch
+):
+    """The frame apply hands to ``write_data_files`` shuffles once, on the
+    key, with the partial ``max_by`` below the exchange: a hot key is
+    collapsed inside each input partition before the shuffle (the map-side
+    combine the skew story relies on)."""
+    plans = []
+    write = LakeTable.write_data_files
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    batch_dir, _ = log
+    CdcIngest(
+        os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8,
+        compact_max_files=None,
+    ).run(spark, max_batches=1)
+    assert len(plans) == 1
+    lines = plans[0].splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, plans[0]
+    assert re.search(
+        r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, ", lines[exchanges[0]]
+    ), plans[0]
+    assert any("partial_max_by" in ln for ln in lines[exchanges[0] + 1:]), plans[0]
+
+
+def _max_by_owners(node, owner):
+    """(function name) of every ``max_by`` call under ``node``, by the
+    innermost enclosing function."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, ast.Call):
+            func = child.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(
+                func, "id", None
+            )
+            if name == "max_by":
+                yield owner
+        inner = (
+            child.name
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            else owner
+        )
+        yield from _max_by_owners(child, inner)
+
+
+def test_engine_has_one_latest_wins_aggregate():
+    """``cdc/`` and ``lake/`` hold exactly one ``max_by`` call, inside
+    ``collapse_stored``: apply, reads, compaction and the feed share one
+    latest-wins collapse, and only the window oracle stays beside it."""
+    pkg_dir = os.path.dirname(pkg.__file__)
+    found = []
+    for sub in ("cdc", "lake"):
+        for fn in sorted(os.listdir(os.path.join(pkg_dir, sub))):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(pkg_dir, sub, fn)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [(f"{sub}/{fn}", o) for o in _max_by_owners(tree, None)]
+    assert found == [("lake/table.py", "collapse_stored")]

@@ -115,3 +115,69 @@ def test_latest_offsets_footer_only_and_incremental(
         .groupBy("log_part").agg(F.max("lsn").alias("hi")).collect()
     }
     assert second == truth
+
+
+def test_run_log_ledger_folds(spark, tmp_lake, tmp_path_factory):
+    """Each run_log batch is numbered ``applied_floor + 1`` of the snapshot
+    it planned on, so its ledger folds into the floor like the other
+    front-ends': three batches leave no live entry and a floor of 2."""
+    log = ParquetOffsetLog(str(tmp_path_factory.mktemp("olog_fold")))
+    events, expected = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=3)
+    ev = _with_parts(events, n_parts=2)
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), num_buckets=4)
+    for b in range(3):
+        log.append(ev.filter(F.col("batch_id") == b))
+        (r,) = ing.run_log(spark, log)
+        assert (r["status"], r["batch_id"]) == ("applied", b)
+    snap = ing.table().current()
+    assert (snap.applied, snap.applied_floor) == ({}, 2)
+    assert _rows(ing.table().read(spark)) == _rows(expected)
+
+
+class _CappedLog(ParquetOffsetLog):
+    """A view of the log whose head is fixed: a rival that polled early."""
+
+    def __init__(self, root, head):
+        super().__init__(root)
+        self.head = head
+
+    def latest_offsets(self, spark):
+        return dict(self.head)
+
+
+def test_run_log_rival_commit_leaves_rest_pending(
+    spark, tmp_lake, tmp_path_factory
+):
+    """A rival that commits first takes this call's batch id: the call is
+    ``skipped``, reports the committed offsets, and never writes its own
+    planned offsets over the rival's; the part of its range the rival did
+    not cover stays pending and the next call applies it."""
+    root = str(tmp_path_factory.mktemp("olog_rival"))
+    log = ParquetOffsetLog(root)
+    events, expected = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=2)
+    ev = _with_parts(events, n_parts=2)
+    log.append(ev.filter(F.col("batch_id") == 0))
+    head0 = log.latest_offsets(spark)
+    log.append(ev.filter(F.col("batch_id") == 1))
+    t_path = os.path.join(tmp_lake, "t")
+
+    class RivalFirst(ParquetOffsetLog):
+        def read(self, spark, since, until):
+            # the rival plans and commits between this call's plan and apply
+            (rival,) = CdcIngest(t_path, num_buckets=4).run_log(
+                spark, _CappedLog(root, head0)
+            )
+            assert rival["status"] == "applied" and rival["offsets"] == head0
+            return super().read(spark, since, until)
+
+    ing = CdcIngest(t_path, num_buckets=4)
+    (r,) = ing.run_log(spark, RivalFirst(root))
+    assert (r["status"], r["batch_id"], r["offsets"]) == ("skipped", 0, head0)
+    assert ing.table().current().summary[OFFSETS_KEY] == head0
+
+    (r2,) = ing.run_log(spark, log)
+    assert (r2["status"], r2["batch_id"]) == ("applied", 1)
+    assert r2["offsets"] == log.latest_offsets(spark)
+    assert _rows(ing.table().read(spark)) == _rows(expected)
+    snap = ing.table().current()
+    assert (snap.applied, snap.applied_floor) == ({}, 1)

@@ -105,7 +105,7 @@ def test_rollback_by_tag_and_maintain(spark, tmp_lake):
     )
     assert set(out) == {
         "compacted_buckets",
-        "snapshots_expired",
+        "expired_files_removed",
         "orphans_removed",
     }
     assert _rows(t.read(spark)) == state0  # maintenance is data-preserving

@@ -184,3 +184,39 @@ def test_dedup_within_watermark_stream_and_batch_parity(spark, log, tmp_lake):
         got.groupBy("conv_id", "turn_idx", "lsn").count().filter("count > 1").count()
         == 0
     )
+
+
+def test_fresh_checkpoint_on_applied_table_is_refused(spark, tmp_lake):
+    """A fresh checkpoint restarts epoch ids at 0, which the table's gate
+    would skip as applied, losing the new files for good. ``run_stream``
+    refuses it before the query starts, whether the table was filled by
+    an earlier stream or by ``run()``, and commits nothing; the table's
+    own checkpoint then picks the new files up."""
+    staged, src = os.path.join(tmp_lake, "staged"), os.path.join(tmp_lake, "src")
+    events, expected = gen_change_log(spark, n_turns=200, n_convs=10, n_batches=3)
+    write_batch_files(events, staged, files_per_batch=2)
+    os.makedirs(src)
+    for b in (0, 1):
+        os.rename(
+            os.path.join(staged, f"batch_{b:05d}"), os.path.join(src, f"batch_{b:05d}")
+        )
+
+    # a stream, a new file, then a stream with a new checkpoint
+    ing = CdcIngest(os.path.join(tmp_lake, "t"), src, num_buckets=4)
+    ing.run_stream(spark, os.path.join(tmp_lake, "cp"))
+    os.rename(os.path.join(staged, "batch_00002"), os.path.join(src, "batch_00002"))
+    v = ing.table().current_version()
+    with pytest.raises(ValueError, match="planned no epoch"):
+        ing.run_stream(spark, os.path.join(tmp_lake, "cp_fresh"))
+    assert ing.table().current_version() == v
+    resumed = ing.run_stream(spark, os.path.join(tmp_lake, "cp"))
+    assert any(r["status"] == "applied" for r in resumed)
+    assert _rows(ing.table().read(spark)) == _rows(expected)
+
+    # run() over batch_0..2, then a stream with a fresh checkpoint
+    ing2 = CdcIngest(os.path.join(tmp_lake, "t2"), src, num_buckets=4)
+    assert [r["batch_id"] for r in ing2.run(spark)] == [0, 1, 2]
+    v2 = ing2.table().current_version()
+    with pytest.raises(ValueError, match="planned no epoch"):
+        ing2.run_stream(spark, os.path.join(tmp_lake, "cp2"))
+    assert ing2.table().current_version() == v2
