@@ -14,30 +14,43 @@ Contract (Kafka-consumer-shaped, at-least-once):
 
 * ``poll(spark)`` → ``(DataFrame, token)``: every row committed by data
   commits after the checkpoint, latest-wins collapsed, tombstones
-  included (``__deleted`` column) so deletes propagate. The frame is the
-  *upsert delta*: apply it keyed on ``key_cols`` and a replica converges
-  to the table's public state.
+  included so deletes propagate. The frame holds the table's public
+  columns plus the ``_cdc_deleted`` flag; the other internal version
+  columns stay in the table. It is the *upsert delta*: apply it keyed on
+  ``key_cols`` and a replica converges to the table's public state.
 * ``commit(token)``: atomically advance the checkpoint — call AFTER the
   batch is durably processed. Crash between poll and commit → the next
   poll redelivers the same window (plus anything newer). Redelivery is
   safe for any idempotent/upsert sink because rows are per-key winners,
   the same convergence argument as the ingest side's replay safety.
-* If retained history no longer reaches the checkpoint
-  (``expire_snapshots`` ran past it — the consumer lagged beyond the
-  retention window), ``poll`` transparently degrades to a **full-read
-  resync**: the table's current public state plus a synthetic all-false
-  ``__deleted`` column (a full state is self-contained; prior deletes are
-  simply absent from it). ``was_resync`` on the token tells the sink to
-  truncate-and-load instead of merge.
+* A consumer that should start at table version ``v`` commits
+  ``FeedToken(v)`` and polls; ``metrics_history()`` maps a batch id to the
+  version that applied it.
+* When the window cannot be delivered as an upsert delta, ``poll``
+  degrades to a **full-read resync**: the table's current public state
+  plus a synthetic all-false ``_cdc_deleted`` column (a full state is
+  self-contained; prior deletes are simply absent from it).
+  ``was_resync`` on the token tells the sink to truncate-and-load
+  instead of merge. That is the first poll, and every window ``_plan``
+  cannot plan: the consumer lagged past ``expire_snapshots``' retention,
+  a rollback is in the window (rows the consumer holds would have to be
+  unwound), or a file the window needs was removed.
+
+The window is planned from manifests alone. Each data commit contributes
+the entries stamped with its own version (``added_v``; Iceberg stamps
+every manifest entry with the snapshot that added it), so a delta that a
+later compaction folded away is still read, and maintenance commits,
+rewrites of what the consumer already saw, contribute nothing.
 
 The checkpoint is a tiny JSON file published whole by the table's own
 file writer (``_atomic_write``: temp, fsync, rename), and it lives
 *outside* the table directory because consumer progress belongs to the
 consumer (many feeds, one table).
 
-Scale: ``poll`` costs O(new files) manifest walking driver-side and one
-pruned Parquet scan executor-side; nothing grows with table size or with
-the number of consumers.
+Scale: ``poll`` reads the manifests from the checkpoint + 1 to the tip
+driver-side and runs one Parquet scan of the window's files
+executor-side; nothing grows with table size or with the number of
+consumers.
 """
 
 from __future__ import annotations
@@ -45,6 +58,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,8 +66,8 @@ from pyspark.sql import functions as F
 from runyoro_llm_data_pipeline_spark.lake.table import (
     DELETED,
     INTERNAL_COLS,
-    IncrementalHistoryError,
     LakeTable,
+    Snapshot,
     _atomic_write,
 )
 
@@ -95,36 +109,61 @@ class IncrementalFeed:
         The window is planned from one snapshot, which is also the token's
         version, and judged empty from the manifest's harvested row
         counts, so a poll with nothing new starts no Spark job."""
-        table = LakeTable.load(self.table_path)
+        table = LakeTable(self.table_path)
         pos = self.position()
-        if pos < 0:
-            return self._resync(spark, table)
-        try:
-            snap, files = table._window(pos)
-        except IncrementalHistoryError:
-            return self._resync(spark, table)
-        if snap.version <= pos:
+        tip, files = _plan(table, pos)
+        if files is None:
+            return self._resync(spark, table, tip)
+        if tip.version <= pos:
             return None
-        token = FeedToken(version=snap.version)
+        token = FeedToken(version=tip.version)
         if not any(f["rows"] for f in files):
             # only maintenance commits in the window: fast-forward the
-            # checkpoint so the next incremental walk starts at the tip
-            # instead of re-diffing the same maintenance chain forever
+            # checkpoint so the next poll plans from the tip instead of
+            # re-reading the same maintenance chain forever
             self.commit(token)
             return None
         # one delivery schema for both modes: public columns +
         # normalized tombstone flag (engine version columns are the
         # table's internals, not the consumer's)
-        df = table._scan(spark, snap, files).withColumn(
+        df = table._scan(spark, tip, files).withColumn(
             DELETED, F.coalesce(F.col(DELETED), F.lit(False))
         ).drop(*[c for c in INTERNAL_COLS if c != DELETED])
         return df, token
 
     def _resync(
-        self, spark: SparkSession, table: LakeTable
+        self, spark: SparkSession, table: LakeTable, tip: Snapshot
     ) -> tuple[DataFrame, FeedToken]:
-        version = table.current().version
-        full = table.read(spark, version=version).withColumn(
+        full = table.read(spark, version=tip.version).withColumn(
             DELETED, F.lit(False)
         )
-        return full, FeedToken(version=version, was_resync=True)
+        return full, FeedToken(version=tip.version, was_resync=True)
+
+
+def _plan(
+    table: LakeTable, since: int
+) -> tuple[Snapshot, list[dict[str, Any]] | None]:
+    """The window after version ``since``: the tip snapshot, and the
+    entries each data commit from ``since + 1`` to the tip added (those
+    with ``added_v`` equal to its version); no entries when ``since`` is
+    at or past the tip. ``None`` in place of the entries means resync:
+    ``since`` is below the low-water mark (``-1``, a consumer that never
+    committed, always is), a manifest in the range is gone, a rollback
+    commit is in the range, or a planned data file is missing. Reads the
+    manifests from ``since + 1`` to the tip and nothing else: no Spark
+    job."""
+    tip = table.current()
+    if since >= tip.version:
+        return tip, []
+    if since < table.low_water():
+        return tip, None
+    chain = [table._maybe_snapshot(v) for v in range(since + 1, tip.version)]
+    files: list[dict[str, Any]] = []
+    for snap in chain + [tip]:
+        if snap is None or snap.commit_type == "rollback":
+            return tip, None
+        if snap.commit_type == "data":
+            files += [f for f in snap.files if f.get("added_v") == snap.version]
+    if not all(os.path.exists(os.path.join(table.path, f["path"])) for f in files):
+        return tip, None
+    return tip, files

@@ -65,6 +65,8 @@ def main(argv: list[str] | None = None) -> int:
                         "(compaction + snapshot expiry + orphan cleanup)")
     args = p.parse_args(argv)
 
+    if args.expire_keep_last is not None and args.expire_keep_last < 1:
+        p.error("--expire-keep-last must be at least 1")
     if args.streaming and not args.checkpoint_dir:
         p.error("--streaming requires --checkpoint-dir")
     if args.streaming and args.max_batches is not None:
@@ -98,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
             target_file_rows=args.compact_target_file_rows,
             keep_last_snapshots=args.expire_keep_last or 4,
         )
-    elif args.expire_keep_last:
+    elif args.expire_keep_last is not None:
         table.expire_snapshots(keep_last=args.expire_keep_last)
     applied = [r for r in results if r["status"] == "applied"]
     print(

@@ -52,8 +52,8 @@ manifest stays O(num_buckets × compact_max_files) regardless of history;
 ``expire_snapshots`` bounds the manifest *chain* and ``cleanup_orphans``
 reclaims de-referenced files (interaction tested under churn in
 ``tests/test_churn.py``).
-Incremental consumers must poll within the retention window or take the
-documented ``IncrementalHistoryError`` → full-read fallback. If a
+An ``IncrementalFeed`` whose checkpoint falls out of the retained
+history resyncs from a full read (``cdc/feed.py``). If a
 deployment ever needs >10^5 buckets, the next step is Iceberg-style
 manifest SPLITTING (one manifest file per bucket range, a manifest-list on
 top): ``Snapshot.files`` is already the only structure that would shard,
@@ -194,11 +194,6 @@ class CommitConflictError(RuntimeError):
     table and re-plan the merge against the new current snapshot."""
 
 
-class IncrementalHistoryError(RuntimeError):
-    """The snapshot chain or data files needed for an incremental read
-    were expired; the consumer must fall back to a full read."""
-
-
 def _atomic_write(path: str, content: str, exclusive: bool = False) -> None:
     """The one way the engine writes a table file: ``content`` goes to a
     temp file beside ``path``, is fsynced, then published whole, so a
@@ -298,10 +293,9 @@ def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
     _cdc_lsn)`` wins, tombstones included. The engine's one production
     collapse. Its callers: ``apply_batch`` (a batch's events projected onto
     stored rows), ``LakeTable._scan`` (base ∪ delta files, so reads, point
-    lookups, incremental reads, compaction, rebucket and the
-    ``IncrementalFeed``), and the ``cdc_latest_wins`` gate queries. A
-    map-side-combinable ``max_by``, so hot keys are partially collapsed
-    before the shuffle."""
+    lookups, compaction, rebucket and the ``IncrementalFeed``), and the
+    ``cdc_latest_wins`` gate queries. A map-side-combinable ``max_by``, so
+    hot keys are partially collapsed before the shuffle."""
     payload = [c for c in df.columns if c not in keys]
     ordv = F.struct(F.col(VERSION_TS), F.col(VERSION_LSN))
     return (
@@ -460,7 +454,7 @@ class LakeTable:
         NEW snapshot with that snapshot's files, schema, applied-offset
         ledger, and summary (history-preserving, Iceberg-style rollback):
         versions stay contiguous so ``current_version``'s forward probe
-        and ``read_incremental``'s version range hold, and batches applied
+        and the feed's version range hold, and batches applied
         after the target become re-ingestable again because the ledger
         and its ``applied_floor`` (with the watermark summary keys) are
         restored wholesale, not merged: the target's floor lies below
@@ -599,137 +593,6 @@ class LakeTable:
         _bucket, cand = self.candidate_files_for_key(spark, conv_id, snap)
         df = self._scan(spark, snap, cand)
         return self._public_view(df.filter(F.col(snap.key_cols[0]) == conv_id))
-
-    def read_incremental(
-        self, spark: SparkSession, since_version: int
-    ) -> DataFrame:
-        """Incremental consumption (the downstream-consumer side of CDC):
-        stored rows added by **data commits** AFTER ``since_version``,
-        collapsed latest-wins, tombstones included so a consumer can
-        propagate deletes.
-
-        Reads the versions from ``since_version`` to the current one and
-        takes, for each data commit, exactly the
-        files that commit added (path-diff against the previous manifest —
-        the same attribution Iceberg gets from snapshot_id on manifest
-        entries). Maintenance commits (compaction / rebucket) are pure
-        rewrites of existing content and contribute nothing; crucially,
-        a delta file that a LATER compaction folded away is still read
-        from its own commit's manifest, so auto-compaction can never
-        silently drop changes from an incremental consumer. O(new files).
-
-        Data commits are delta appends, so the window delivers exactly
-        the per-key winners of the batches it spans.
-
-        Raises ``IncrementalHistoryError`` when the chain or a needed
-        file has been expired (``expire_snapshots``/``cleanup_orphans``),
-        or when a **rollback** commit sits inside the window — a rollback
-        makes the window non-forward-only (rows the consumer already
-        holds must be *unwound*, which upsert deltas cannot express), so
-        the consumer must resync from the full state."""
-        snap, files = self._window(since_version)
-        # data commits add delta files, so the scan collapses latest-wins
-        # within the consumed window (a key may appear in several commits)
-        return self._scan(spark, snap, files)
-
-    def _window(
-        self, since_version: int
-    ) -> tuple[Snapshot, list[dict[str, Any]]]:
-        """The plan of ``read_incremental``: the current snapshot, and the
-        files the data commits after ``since_version`` added (empty when
-        ``since_version`` is at or past it). Manifests only, no Spark job;
-        raises ``IncrementalHistoryError`` as ``read_incremental`` does."""
-        cur = self.current()
-        if since_version >= cur.version:
-            return cur, []
-        expired = since_version < self.low_water()  # even if a tag kept it
-        chain = [] if expired else [
-            self._maybe_snapshot(v) for v in range(since_version, cur.version)
-        ]
-        if expired or None in chain:
-            raise IncrementalHistoryError(
-                f"snapshot history at v{since_version} was expired; cannot "
-                "diff against it — fall back to a full read"
-            )
-        parent_paths = {f["path"] for f in chain[0].files}
-        new_files: list[dict[str, Any]] = []
-        for snap in chain[1:] + [cur]:
-            if snap.commit_type == "rollback":
-                raise IncrementalHistoryError(
-                    f"v{snap.version} is a rollback (to "
-                    f"v{snap.summary.get('rolled_back_to')}); the window "
-                    f"since v{since_version} is not forward-only — fall "
-                    "back to a full read"
-                )
-            if snap.commit_type == "data":
-                new_files += [f for f in snap.files if f["path"] not in parent_paths]
-            parent_paths = {f["path"] for f in snap.files}
-        missing = [
-            f["path"] for f in new_files
-            if not os.path.exists(os.path.join(self.path, f["path"]))
-        ]
-        if missing:
-            raise IncrementalHistoryError(
-                f"{len(missing)} data file(s) from the incremental window "
-                f"were removed (e.g. {missing[0]!r}) — history was cleaned "
-                "up; fall back to a full read"
-            )
-        return cur, new_files
-
-    def was_applied(self, batch_id: int) -> bool:
-        """Floor-aware idempotency probe on the current snapshot
-        (``Snapshot.has_applied``): the check ``apply_batch`` runs before
-        doing any work, exposed for source connectors that want to prune
-        already-consumed offset ranges before even reading them."""
-        return self.current().has_applied(batch_id)
-
-    def version_for_batch(self, batch_id: int) -> int:
-        """Resolve the snapshot version whose data commit applied
-        ``batch_id`` — the bridge from the *producer's* progress unit
-        (batch/offset-range id) to the *consumer's* (snapshot version).
-        The applying commit is the one ``_applied_batch`` maps to
-        ``batch_id``.
-
-        Walks versions newest→oldest down to the low-water mark, so cost
-        is O(commits since the batch) — the common "resume from a recent
-        batch" case touches a handful of manifests. Floor-aware failure
-        modes when the walk exhausts retained history (``expire_snapshots``
-        raised the mark past the batch's commit): a batch at/below
-        ``applied_floor`` or with a live ledger entry was definitely
-        applied but its commit point is expired →
-        ``IncrementalHistoryError`` (consumer must full-read); anything
-        else was never applied → ``KeyError``."""
-        for v in range(self.current().version, self.low_water() - 1, -1):
-            s = self._maybe_snapshot(v)  # None: expired under the walk
-            if s is not None and _applied_batch(s) == int(batch_id):
-                return v
-        if self.was_applied(batch_id):
-            raise IncrementalHistoryError(
-                f"batch {batch_id} was applied but its commit snapshot is "
-                "outside retained history (expired) — fall back to a full "
-                "read"
-            )
-        raise KeyError(f"batch {batch_id} was never applied to this table")
-
-    def read_incremental_since_batch(
-        self, spark: SparkSession, batch_id: int
-    ) -> DataFrame:
-        """``read_incremental`` keyed on the last *batch id* the consumer
-        saw instead of a snapshot version: everything committed after the
-        data commit that applied ``batch_id``, latest-wins collapsed,
-        tombstones included. Lets a downstream consumer checkpoint the
-        same unit the ingest side checkpoints (the batch stream) without
-        tracking lake versions at all."""
-        return self.read_incremental(
-            spark, since_version=self.version_for_batch(batch_id)
-        )
-
-    def create_view(
-        self, spark: SparkSession, name: str, version: int | None = None
-    ) -> None:
-        """Expose the table (tombstone-filtered public view, MOR-collapsed)
-        as a temp view so consumers can ``spark.sql`` against it."""
-        self.read(spark, version=version).createOrReplaceTempView(name)
 
     def metrics_history(self) -> list[dict[str, Any]]:
         """Per-commit job metrics from the snapshot chain — the queryable
@@ -1021,7 +884,7 @@ class LakeTable:
         """Commit snapshot ``parent.version + 1`` listing ``files``. Every
         other field defaults to ``parent``'s value; a caller passes the
         whole new value of what it changes. Entries without ``added_v``
-        are stamped with the new version, so incremental readers and
+        are stamped with the new version, so the ``IncrementalFeed`` and
         ``read_lineage`` can attribute files to commits (Iceberg's
         snapshot_id on manifest entries).
 
@@ -1060,12 +923,6 @@ class LakeTable:
         )
         self._write_snapshot(snap)
         return snap
-
-    def applied_floor(self) -> int:
-        """The committed low watermark of the batch stream: every
-        ``batch_id <= floor`` is known-applied though its ledger entry
-        was folded away (Kafka committed-offset semantics)."""
-        return self.current().applied_floor
 
     # -------------------------------------------------------------- cleanup
     def _retained(self, snaps: list[Snapshot]) -> tuple[set[int], set[str]]:
@@ -1133,7 +990,10 @@ class LakeTable:
         not ahead of the tip (its writer died or lost that version; a live
         one that links later gets ``CommitConflictError``). The sweep lists
         the directory, so a resumed call finishes a crashed one. Returns the
-        data files deleted."""
+        data files deleted. ``keep_last`` below 1 raises ``ValueError``: the
+        tip is always kept."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be at least 1, got {keep_last}")
         with _file_lock(os.path.join(self.path, LOW_WATER + ".lock")):
             chain = self.history()
             kept = chain[-keep_last:]

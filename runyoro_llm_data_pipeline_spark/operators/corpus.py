@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from runyoro_llm_data_pipeline_spark.operators.text import non_empty_text
 from runyoro_llm_data_pipeline_spark.operators.textstats import tokens_col
 
 PAD_ID = 0
@@ -43,9 +44,11 @@ def scan_text_corpus(spark: SparkSession, path_glob: str) -> DataFrame:
 
 
 def admission_filter(df: DataFrame, text_col: str = "text", min_len: int = 10) -> DataFrame:
-    """P5 + P6 (``scripts/train_llm.py:161-162``)."""
+    """P5 + P6 (``scripts/train_llm.py:161-162``): non-blank as
+    ``str.strip()`` sees it (``non_empty_text``; Spark's ``trim`` strips
+    spaces only), and longer than ``min_len``."""
     t = F.col(text_col)
-    return df.filter(t.isNotNull() & (F.trim(t) != "") & (F.length(t) > min_len))
+    return df.filter(non_empty_text(t) & (F.length(t) > min_len))
 
 
 def tokenize_fixed_width(

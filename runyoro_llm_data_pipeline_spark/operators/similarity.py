@@ -139,9 +139,11 @@ def build_lsh_index(
     interpreted per element while the matmul is BLAS. The two kernels are
     equality-tested on the fixtures; they could in principle differ on a
     dot product within ~1e-13 of exactly 0 (pairwise vs sequential
-    summation order at the sign boundary), so the gate queries stay on
-    the oracle-matched expression path and the arrow path is the bulk
-    builder."""
+    summation order at the sign boundary). The gate queries build their
+    stored indexes with ``kernel="arrow"`` (``_lsh_index`` and
+    ``_nd_index`` in ``__spark_entry__.py``), so their oracle parity
+    also checks the arrow kernel against the DuckDB twin's sequential
+    sums; the expression path stays the default."""
     if kernel == "arrow":
         return _build_lsh_index_arrow(
             embeddings, n_planes, n_tables, dim, vec_col

@@ -50,7 +50,7 @@ _PY_PATTERN = re.compile(rf"[^\w\s{re.escape(_ALLOWED_PUNCT)}]", flags=re.UNICOD
 # table version (JDK 17 ships Unicode 13; CPython 3.11 ships 14 — e.g.
 # U+0870 Arabic Ext-B) classify as non-word on the JVM and word in
 # CPython. For corpora that can contain bleeding-edge codepoints,
-# normalize ``text`` with ``functions.clean_text_exact`` (bit-exact by
+# normalize ``text`` with ``clean_and_preprocess_text_pandas`` (bit-exact by
 # construction) before ingest and apply with ``normalize_text=False``.
 _J_WS = r"\s\x1C-\x1F"
 _JAVA_PATTERN = rf"(?U)[^\p{{L}}\p{{N}}_{_J_WS}.,?!'’\-–—]"
@@ -134,8 +134,3 @@ def non_empty_text(col: Column) -> Column:
     """P4/P5 predicate: drop empty/whitespace-only payloads
     (scripts/text_processing.py:77-79, scripts/train_llm.py:161)."""
     return col.isNotNull() & (F.length(F.regexp_replace(col, r"(?U)\s", "")) > 0)
-
-
-def min_length_filter(col: Column, n: int = 10) -> Column:
-    """P6: ``len(text) > 10`` (scripts/train_llm.py:162)."""
-    return F.length(col) > n

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from runyoro_llm_data_pipeline_spark.operators.text import non_empty_text
+
 # Stopword set used by the quality score and the language-ID heuristic.
 # Deliberately tiny and explicit — the point is the operator shape
 # (token-membership counting), not lexicon quality.
@@ -118,11 +120,9 @@ def corpus_filter(
     (``scripts/train_llm.py:161-162``), pushed into the Parquet scan."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     t = F.col("text")
-    return docs.filter(
-        t.isNotNull()
-        & (F.length(F.regexp_replace(t, r"(?U)\s", "")) > 0)
-        & (F.length(t) > min_len)
-    ).select("doc_id", "lang", "source", F.length(t).cast("long").alias("n_chars_actual"))
+    return docs.filter(non_empty_text(t) & (F.length(t) > min_len)).select(
+        "doc_id", "lang", "source", F.length(t).cast("long").alias("n_chars_actual")
+    )
 
 
 # Gopher-style admission thresholds (Rae et al. 2021, "Scaling Language

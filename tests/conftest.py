@@ -6,6 +6,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from runyoro_llm_data_pipeline_spark.cdc.feed import (  # noqa: E402
+    FeedToken,
+    IncrementalFeed,
+)
 from runyoro_llm_data_pipeline_spark.lake.table import (  # noqa: E402
     DATA_DIR,
     DELETED,
@@ -129,3 +133,17 @@ class FeedReplica:
 @pytest.fixture(scope="session")
 def feed_replica():
     return FeedReplica
+
+
+def _poll_since(spark, table_path: str, version: int):
+    """The next poll of a feed whose checkpoint is ``version``: a
+    ``(frame, token)``, or None when caught up. The checkpoint file lives
+    beside the table."""
+    feed = IncrementalFeed(table_path, f"{table_path}.feed-v{version}.json")
+    feed.commit(FeedToken(version))
+    return feed.poll(spark)
+
+
+@pytest.fixture(scope="session")
+def poll_since():
+    return _poll_since

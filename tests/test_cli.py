@@ -6,6 +6,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -153,3 +155,14 @@ def test_spark_submit_py_files_separate_executor_jvms(
     from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 
     assert CdcIngest(table, log_dir).run(spark) == []  # exactly-once holds
+
+
+def test_cli_rejects_expire_keep_last_below_one(capsys):
+    """``--expire-keep-last 0`` is a usage error, not a silent no-op, and
+    it is reported before a Spark session starts."""
+    from runyoro_llm_data_pipeline_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--table", "t", "--batch-dir", "b", "--expire-keep-last", "0"])
+    assert exc.value.code == 2
+    assert "--expire-keep-last must be at least 1" in capsys.readouterr().err

@@ -348,6 +348,23 @@ def test_racing_expiries_serialize_and_never_lower_the_mark(
     assert [h.version for h in t.history()] == [6]
 
 
+def test_expire_keep_last_below_one_raises_and_changes_nothing(tmp_lake):
+    """``keep_last=0`` used to keep the whole chain (``chain[-0:]``) and
+    return 0. It raises before the lock is taken, and neither the
+    low-water mark nor ``snapshots/`` changes."""
+    t = _empty_table(tmp_lake)
+    s = t.current()
+    for _ in range(3):
+        s = t.commit(s, [])
+    manifests = sorted(os.listdir(os.path.join(t.path, SNAP_DIR)))
+    with pytest.raises(ValueError, match="keep_last"):
+        t.expire_snapshots(keep_last=0)
+    assert t.low_water() == 0
+    assert not os.path.exists(os.path.join(t.path, table_mod.LOW_WATER))
+    assert not os.path.exists(os.path.join(t.path, table_mod.LOW_WATER + ".lock"))
+    assert sorted(os.listdir(os.path.join(t.path, SNAP_DIR))) == manifests
+
+
 def test_maintenance_leaves_an_in_flight_write_dir_alone(tmp_lake):
     """A concurrent writer's output dir holds no parquet file until its
     Spark job writes one (only the empty ``_temporary`` tree), and

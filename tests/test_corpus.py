@@ -32,6 +32,21 @@ def test_tokenize_shapes(spark, docs):
                 assert x == 0 and y == -100
 
 
+def test_admission_filter_drops_whitespace_only_text(spark):
+    """Blank means blank to ``str.strip()``: tab-only and newline-only
+    texts longer than ``min_len`` are dropped like space-only ones (Spark's
+    ``trim`` strips spaces only)."""
+    rows = [
+        ("kept", "twelve chars"), ("tabs", "\t" * 12), ("newlines", "\n" * 12),
+        ("spaces", " " * 12), ("mixed", " \t\n\r" * 3), ("short", "short"),
+        ("null", None),
+    ]
+    df = spark.createDataFrame(rows, "id string, text string")
+    got = sorted(r["id"] for r in admission_filter(df).collect())
+    want = [i for i, t in rows if t is not None and t.strip() and len(t) > 10]
+    assert got == want == ["kept"]
+
+
 def test_tokenize_deterministic(spark, docs):
     a = tokenize_fixed_width(docs, block_size=16).select("doc_id", "input_ids")
     b = tokenize_fixed_width(docs, block_size=16).select("doc_id", "input_ids")

@@ -8,13 +8,15 @@ into O(new data) consumption."""
 
 import os
 
-from runyoro_llm_data_pipeline_spark.cdc.feed import FeedToken, IncrementalFeed
+from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
+from runyoro_llm_data_pipeline_spark.cdc.feed import FeedToken, IncrementalFeed, _plan
 from runyoro_llm_data_pipeline_spark.cdc.generator import (
     gen_change_log,
     write_batch_files,
 )
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-from runyoro_llm_data_pipeline_spark.lake.table import DELETED, LakeTable
+from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
+from runyoro_llm_data_pipeline_spark.lake.table import DATA_DIR, DELETED, LakeTable
 
 
 def _apply_delivery(replica: dict, rows) -> None:
@@ -134,3 +136,81 @@ def test_maintenance_only_poll_starts_no_spark_job(spark, tmp_lake, tmp_path_fac
         assert list(tracker.getJobIdsForGroup("feed-data-poll"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+# ------------------------------------------------ the window planner, no Spark
+def _hand_table(tmp_lake) -> LakeTable:
+    return LakeTable.create(
+        os.path.join(tmp_lake, "t"), with_internal_schema(TRANSCRIPT_SCHEMA)
+    )
+
+
+def _file(t: LakeTable, name: str, kind: str = "delta") -> dict:
+    """A manifest entry with an empty placeholder file on disk: the
+    planner reads manifests and checks that the files exist, nothing
+    more."""
+    rel = os.path.join(DATA_DIR, name, "__bucket=0", "part-0.parquet")
+    os.makedirs(os.path.join(t.path, os.path.dirname(rel)), exist_ok=True)
+    open(os.path.join(t.path, rel), "w").close()
+    return {"path": rel, "bucket": 0, "kind": kind, "rows": 1}
+
+
+def _names(files) -> list[str]:
+    return sorted(f["path"].split(os.sep)[1] for f in files)
+
+
+def test_plan_takes_each_data_commits_added_entries(tmp_lake, monkeypatch):
+    """Each data commit in the window contributes exactly the entries
+    stamped with its version: the entries it carried over from its parent
+    are not re-delivered, and deltas that a later compaction folded away
+    are still planned from the commit that added them. A plan reads the
+    manifests from the checkpoint + 1 to the tip, each once."""
+    t = _hand_table(tmp_lake)
+    s1 = t.commit(t.current(), [_file(t, "a"), _file(t, "b")])
+    s2 = t.commit(s1, s1.files + [_file(t, "c")])
+    s3 = t.commit(s2, [_file(t, "base", "base")], commit_type="maintenance")
+    t.commit(s3, s3.files + [_file(t, "d")])
+    read: list[int] = []
+    real_snapshot = LakeTable.snapshot
+    monkeypatch.setattr(
+        LakeTable, "snapshot", lambda self, v: read.append(v) or real_snapshot(self, v)
+    )
+    for since, want in [(0, "abcd"), (1, "cd"), (2, "d"), (3, "d")]:
+        read.clear()
+        tip, files = _plan(t, since)
+        assert tip.version == 4 and _names(files) == list(want)
+        assert sorted(read) == list(range(since + 1, 5))
+    read.clear()
+    tip, files = _plan(t, 4)
+    assert (tip.version, files, read) == (4, [], [4])
+
+
+def test_plan_of_maintenance_commits_only_is_empty(tmp_lake):
+    t = _hand_table(tmp_lake)
+    s1 = t.commit(t.current(), [_file(t, "a"), _file(t, "b")])
+    s2 = t.commit(s1, [_file(t, "base", "base")], commit_type="maintenance")
+    t.commit(s2, [_file(t, "base2", "base")], commit_type="maintenance")
+    tip, files = _plan(t, 1)
+    assert tip.version == 3 and files == []
+
+
+def test_plan_resyncs_when_the_window_cannot_be_delivered(tmp_lake):
+    """A rollback commit in the window, a checkpoint below the low-water
+    mark after ``expire_snapshots``, and a removed data file each plan a
+    resync (no entries); the windows after them still plan."""
+    t = _hand_table(tmp_lake)
+    s1 = t.commit(t.current(), [_file(t, "a")])
+    s2 = t.commit(s1, s1.files + [_file(t, "b")])
+    t.rollback(1)
+    s4 = t.commit(t.current(), t.current().files + [_file(t, "c")])
+    assert _plan(t, 2) == (s4, None) and _plan(t, 1) == (s4, None)
+    assert _names(_plan(t, 3)[1]) == ["c"]
+
+    t.commit(s4, s4.files + [_file(t, "d")])
+    t.expire_snapshots(keep_last=2)
+    assert t.low_water() == 4
+    assert _plan(t, 3)[1] is None and _plan(t, -1)[1] is None
+    assert _names(_plan(t, 4)[1]) == ["d"]
+
+    os.remove(os.path.join(t.path, t.current().files[-1]["path"]))
+    assert _plan(t, 4)[1] is None

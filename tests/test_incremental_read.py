@@ -1,5 +1,6 @@
-"""Incremental consumption: read_incremental(since) returns exactly the
-per-key winners written after a snapshot, tombstones included."""
+"""Incremental consumption: a feed whose checkpoint is a snapshot version
+delivers exactly the per-key winners written after it, tombstones
+included."""
 
 import os
 
@@ -13,7 +14,9 @@ from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.lake.table import DELETED
 
 
-def test_incremental_read_between_versions(spark, tmp_lake, tmp_path_factory):
+def test_incremental_read_between_versions(
+    spark, tmp_lake, tmp_path_factory, poll_since
+):
     d = str(tmp_path_factory.mktemp("inc"))
     events, _ = gen_change_log(spark, n_turns=400, n_convs=15, n_batches=4)
     write_batch_files(events, d)
@@ -27,7 +30,8 @@ def test_incremental_read_between_versions(spark, tmp_lake, tmp_path_factory):
     rest = ing.run(spark)
     assert len(rest) == 2
 
-    inc = t.read_incremental(spark, v_mid)
+    inc, tok = poll_since(spark, t.path, v_mid)
+    assert not tok.was_resync and tok.version == t.current_version()
     # every key in the incremental set comes from the late batches
     late_keys = {
         (r["conv_id"], r["turn_idx"])
@@ -44,14 +48,15 @@ def test_incremental_read_between_versions(spark, tmp_lake, tmp_path_factory):
     assert DELETED in inc.columns
 
     # consuming from the latest version yields nothing
-    assert t.read_incremental(spark, t.current_version()).count() == 0
+    assert poll_since(spark, t.path, t.current_version()) is None
 
     # full-history consumption covers every key ever written
     all_keys = {
         (r["conv_id"], r["turn_idx"])
         for r in events.select("conv_id", "turn_idx").distinct().collect()
     }
-    inc0 = t.read_incremental(spark, 0)
+    inc0, tok0 = poll_since(spark, t.path, 0)
+    assert not tok0.was_resync
     keys0 = {
         (r["conv_id"], r["turn_idx"])
         for r in inc0.select("conv_id", "turn_idx").collect()
@@ -72,7 +77,7 @@ def test_sql_view_and_metrics_history(spark, tmp_lake, tmp_path_factory):
     ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     ing.run(spark)
     t = ing.table()
-    t.create_view(spark, "transcripts")
+    t.read(spark).createOrReplaceTempView("transcripts")
     n = spark.sql(
         "SELECT conv_id, count(*) AS n FROM transcripts GROUP BY conv_id"
     ).agg(F.sum("n")).collect()[0][0]
@@ -96,7 +101,7 @@ def test_metrics_history_lists_batches_after_ledger_truncation(
     ing.run(spark, max_batches=3)
     ing.run(spark)
     t = ing.table()
-    assert t.current().applied == {} and t.applied_floor() == 4
+    assert t.current().applied == {} and t.current().applied_floor == 4
     hist = t.metrics_history()
     assert [h["batch_id"] for h in hist] == [0, 1, 2, 3, 4]
     assert all(

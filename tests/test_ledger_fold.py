@@ -81,4 +81,4 @@ def test_negative_batch_id_rejected_before_any_job(spark, tmp_lake):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
-    assert t.current_version() == 0 and not t.was_applied(0)
+    assert t.current_version() == 0 and not t.current().has_applied(0)

@@ -117,7 +117,8 @@ def test_footprint_bounded_and_lineage_follows_retention(
     # down to the chain that starts at the final batch's data commit
     ing.run(spark)
     t = ing.table()
-    keep = t.current_version() - t.version_for_batch(13) + 1
+    v13 = next(h["version"] for h in t.metrics_history() if h["batch_id"] == 13)
+    keep = t.current_version() - v13 + 1
     t.expire_snapshots(keep_last=keep)
     in_history = {
         s.summary["last_batch_id"]

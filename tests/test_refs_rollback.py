@@ -83,7 +83,7 @@ def test_rollback_restores_state_and_ledger(spark, tmp_lake):
     assert snap.version == t.current().version  # new monotonic version
     assert _rows(t.read(spark)) == state1
     # ledger restored wholesale: batch 2 is re-ingestable and converges
-    assert not t.was_applied(2)
+    assert not t.current().has_applied(2)
     r = apply_batch(
         spark, t, events.filter(F.col("batch_id") == 2), 2
     )

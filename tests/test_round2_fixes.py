@@ -14,7 +14,6 @@ from runyoro_llm_data_pipeline_spark.cdc.generator import (
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
 from runyoro_llm_data_pipeline_spark.lake.table import (
     SNAP_DIR,
-    IncrementalHistoryError,
     LakeTable,
     Snapshot,
 )
@@ -25,9 +24,11 @@ def _keys(df):
 
 
 # ------------------------------------------------- incremental vs compaction
-def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_factory):
+def test_incremental_read_survives_auto_compaction(
+    spark, tmp_lake, tmp_path_factory, poll_since
+):
     """ADVICE(high): with aggressive auto-compaction folding deltas into
-    base files between the consumer's checkpoints, read_incremental must
+    base files between the consumer's checkpoints, the feed must
     still deliver every change of the window (it reads each data commit's
     own files, which compaction carries out of the manifest but not off
     disk)."""
@@ -46,7 +47,8 @@ def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_fac
     # compaction genuinely ran inside the consumed window
     assert any(s.commit_type == "maintenance" for s in t.history())
 
-    inc = t.read_incremental(spark, v_mid)
+    inc, tok = poll_since(spark, t.path, v_mid)
+    assert not tok.was_resync
     late_keys = {
         (r["conv_id"], r["turn_idx"])
         for r in events.filter(F.col("batch_id") >= 2)
@@ -57,7 +59,7 @@ def test_incremental_read_survives_auto_compaction(spark, tmp_lake, tmp_path_fac
 
 
 def test_incremental_read_across_inline_compactions(
-    spark, tmp_lake, tmp_path_factory
+    spark, tmp_lake, tmp_path_factory, poll_since
 ):
     """ADVICE(high): every data commit must appear in incremental reads,
     across inline compactions (which rewrite buckets into base files
@@ -79,7 +81,8 @@ def test_incremental_read_across_inline_compactions(
         s.commit_type == "maintenance" and s.version > v_mid for s in t.history()
     )
 
-    inc = t.read_incremental(spark, v_mid)
+    inc, tok = poll_since(spark, t.path, v_mid)
+    assert not tok.was_resync
     late_keys = {
         (r["conv_id"], r["turn_idx"])
         for r in events.filter(F.col("batch_id") >= 2)
@@ -97,18 +100,6 @@ def test_incremental_read_across_inline_compactions(
         live.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"]
     )
     assert live.exceptAll(pub).count() == 0 and pub.exceptAll(live).count() == 0
-
-
-def test_incremental_read_raises_after_expiry(spark, tmp_lake, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("incexp"))
-    events, _ = gen_change_log(spark, n_turns=200, n_convs=8, n_batches=3)
-    write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
-    ing.run(spark)
-    t = ing.table()
-    t.expire_snapshots(keep_last=1)
-    with pytest.raises(IncrementalHistoryError):
-        t.read_incremental(spark, 0)
 
 
 # ---------------------------------------------- writer died after its link

@@ -40,7 +40,7 @@ def test_empty_batch_commits_noop(spark, tmp_lake):
 
     # idempotence ledger advanced (batch 1 folded into the floor), data
     # unchanged
-    assert t.applied_floor() == 1
+    assert t.current().applied_floor == 1
     assert t.read(spark).count() == rows_before
     r1b = apply_batch(spark, t, empty, batch_id=1)
     assert r1b["status"] == "skipped"
@@ -151,7 +151,7 @@ def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
     t = ing.table()
     snap = t.current()
     assert snap.applied == {} and snap.summary["applied_floor"] == 5
-    assert t.applied_floor() == 5
+    assert t.current().applied_floor == 5
 
     # idempotence THROUGH the floor: all 6 batch dirs still on disk,
     # nothing is pending and a forced re-apply of a folded batch skips
@@ -167,15 +167,15 @@ def test_applied_ledger_truncation(spark, tmp_lake, tmp_path_factory):
         "event_ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("lsn"))
     )
     assert apply_batch(spark, t, ev_new, batch_id=7)["status"] == "applied"
-    assert sorted(t.current().applied) == ["7"] and t.applied_floor() == 5
-    assert not t.was_applied(6)
+    assert sorted(t.current().applied) == ["7"] and t.current().applied_floor == 5
+    assert not t.current().has_applied(6)
     empty = spark.createDataFrame([], EVENT_SCHEMA)
     assert apply_batch(spark, t, empty, batch_id=6)["status"] == "applied"
-    assert t.current().applied == {} and t.applied_floor() == 7
+    assert t.current().applied == {} and t.current().applied_floor == 7
 
 
 def test_auto_truncate_knob_and_incremental_across_floor(
-    spark, tmp_lake, tmp_path_factory
+    spark, tmp_lake, tmp_path_factory, poll_since
 ):
     """``CdcIngest`` bounds the ledger without any maintenance call or
     option (each batch commit folds it), and an incremental consumer
@@ -190,16 +190,17 @@ def test_auto_truncate_knob_and_incremental_across_floor(
     ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=4)
     assert len(ing.run(spark, max_batches=5)) == 5
     t = ing.table()
-    assert t.current().applied == {} and t.applied_floor() == 4
+    assert t.current().applied == {} and t.current().applied_floor == 4
     v_mid = t.current_version()
 
     assert len(ing.run(spark)) == 3
-    assert t.current().applied == {} and t.applied_floor() == 7
+    assert t.current().applied == {} and t.current().applied_floor == 7
     # idempotence through the floor: nothing pending, a rerun applies zero
     assert ing.pending() == [] and ing.run(spark) == []
 
     # incremental window spanning the folded batches 5-7
-    inc = t.read_incremental(spark, v_mid)
+    inc, tok = poll_since(spark, t.path, v_mid)
+    assert not tok.was_resync
     late_keys = {
         (r["conv_id"], r["turn_idx"])
         for r in events.filter(F.col("batch_id") >= 5)
@@ -213,21 +214,15 @@ def test_auto_truncate_knob_and_incremental_across_floor(
     assert inc.count() == len(got_keys)
 
 
-def test_batch_keyed_incremental_consumer(spark, tmp_lake):
-    """A downstream consumer can checkpoint BATCH IDS (the same unit the
-    ingest side checkpoints) instead of lake versions:
-    ``version_for_batch`` resolves the applying data commit,
-    ``read_incremental_since_batch`` delivers exactly the later batches'
-    winners, and both stay correct once the ledger folded away. Once
-    ``expire_snapshots`` drops the commit point, resolution fails with
-    the documented floor-aware errors instead of silently under- or
-    over-delivering."""
-    import pytest
-
-    from runyoro_llm_data_pipeline_spark.lake.table import (
-        IncrementalHistoryError,
-    )
-
+def test_batch_keyed_incremental_consumer(spark, tmp_lake, poll_since):
+    """A downstream consumer that checkpoints BATCH IDS (the same unit the
+    ingest side checkpoints) maps a batch to the data commit that applied
+    it through ``metrics_history()``, then reads with a feed from that
+    version: it gets exactly the later batches' winners, also once the
+    ledger folded away. Once ``expire_snapshots`` drops the commit point,
+    the batch leaves ``metrics_history()`` though ``has_applied`` still
+    holds, and a feed from its old version resyncs instead of silently
+    under- or over-delivering."""
     t = _mk_table(tmp_lake)
     events, _ = gen_change_log(spark, n_turns=300, n_convs=10, n_batches=6)
     for b in range(6):
@@ -236,10 +231,15 @@ def test_batch_keyed_incremental_consumer(spark, tmp_lake):
         )
         assert r["status"] == "applied"
 
-    assert t.was_applied(0) and t.was_applied(5)
-    assert not t.was_applied(6)
-    with pytest.raises(KeyError):
-        t.version_for_batch(99)
+    def version_of(batch_id):
+        return {h["batch_id"]: h["version"] for h in t.metrics_history()}.get(
+            batch_id
+        )
+
+    snap = t.current()
+    assert snap.has_applied(0) and snap.has_applied(5)
+    assert not snap.has_applied(6)
+    assert version_of(99) is None
 
     def keys_of(df):
         return {
@@ -248,30 +248,31 @@ def test_batch_keyed_incremental_consumer(spark, tmp_lake):
         }
 
     after2 = keys_of(events.filter(F.col("batch_id") >= 3))
-    inc = t.read_incremental_since_batch(spark, 2)
+    v2 = version_of(2)
+    inc, tok = poll_since(spark, t.path, v2)
+    assert not tok.was_resync
     assert keys_of(inc) == after2
     # sanity: the resolved version really is batch 2's data commit
-    v2 = t.version_for_batch(2)
     assert t.snapshot(v2).summary["last_batch_id"] == 2
 
     # each commit folded its batch into the floor; the commit points
     # are still retained, so batch-keyed consumption of a folded batch
     # still resolves and delivers batches 1-5
-    assert t.current().applied == {} and t.applied_floor() == 5
-    assert t.was_applied(0)  # known-applied through the floor
-    assert keys_of(t.read_incremental_since_batch(spark, 0)) == keys_of(
-        events.filter(F.col("batch_id") >= 1)
-    )
+    assert t.current().applied == {} and t.current().applied_floor == 5
+    assert t.current().has_applied(0)  # known-applied through the floor
+    v0 = version_of(0)
+    inc, tok = poll_since(spark, t.path, v0)
+    assert not tok.was_resync
+    assert keys_of(inc) == keys_of(events.filter(F.col("batch_id") >= 1))
 
     # expire history: last 2 snapshots = the batch-4 and batch-5 data
-    # commits. batch 5 still resolves; batch 0 is applied
-    # (floor says so) but its commit point is gone -> history error, NOT
-    # KeyError and NOT a wrong version
+    # commits. batch 5 still resolves; batch 0 is applied (the floor says
+    # so) but its commit point is gone, so it leaves metrics_history and a
+    # feed from its old version resyncs; batch 77 has neither
     t.expire_snapshots(keep_last=2)
-    assert t.version_for_batch(5) == t.snapshot(
-        t.version_for_batch(5)
-    ).version
-    with pytest.raises(IncrementalHistoryError):
-        t.version_for_batch(0)
-    with pytest.raises(KeyError):
-        t.version_for_batch(77)
+    assert [h["batch_id"] for h in t.metrics_history()] == [4, 5]
+    assert t.snapshot(version_of(5)).summary["last_batch_id"] == 5
+    assert version_of(0) is None and t.current().has_applied(0)
+    assert version_of(77) is None and not t.current().has_applied(77)
+    _, tok = poll_since(spark, t.path, v0)
+    assert tok.was_resync
