@@ -38,12 +38,12 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   single-shuffle collapse; replacing it is a job for a measured one.
   Admission metrics (counts and the admitted lsn range) are piggybacked
   on the write via ``Observation`` (no extra scan). Each new file's row
-  count and key/lsn bounds are harvested from its parquet *footer* onto
-  its manifest entry by ``LakeTable.write_data_files`` (no stats job — the
+  count and lsn bounds are harvested from its parquet *footer* onto its
+  manifest entry by ``LakeTable.write_data_files`` (no stats job — the
   same trick Iceberg manifests use); lineage is read back from those
   entries (``LakeTable.read_lineage``), so apply writes nothing beside the
   data files and the manifest. Readers collapse base ∪ deltas;
-  ``LakeTable.compact`` folds deltas back into base files.
+  ``LakeTable.compact`` folds a bucket's files back into one base file.
 * **commit**: data files (with their stats) + applied offsets land in ONE
   snapshot manifest, the ledger folded into its floor
   (``Snapshot.ledger_after``), and linking it into ``snapshots/`` is the

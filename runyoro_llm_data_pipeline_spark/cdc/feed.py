@@ -32,9 +32,10 @@ Contract (Kafka-consumer-shaped, at-least-once):
   self-contained; prior deletes are simply absent from it).
   ``was_resync`` on the token tells the sink to truncate-and-load
   instead of merge. That is the first poll, and every window ``_plan``
-  cannot plan: the consumer lagged past ``expire_snapshots``' retention,
-  a rollback is in the window (rows the consumer holds would have to be
-  unwound), or a file the window needs was removed.
+  cannot plan: the consumer lagged past ``expire_snapshots``' retention
+  (its checkpoint + 1 is below the low-water mark, so a commit of the
+  window is gone), a rollback is in the window (rows the consumer holds
+  would have to be unwound), or a file the window needs was removed.
 
 The window is planned from manifests alone. Each data commit contributes
 the entries stamped with its own version (``added_v``; Iceberg stamps
@@ -147,15 +148,17 @@ def _plan(
     entries each data commit from ``since + 1`` to the tip added (those
     with ``added_v`` equal to its version); no entries when ``since`` is
     at or past the tip. ``None`` in place of the entries means resync:
-    ``since`` is below the low-water mark (``-1``, a consumer that never
-    committed, always is), a manifest in the range is gone, a rollback
-    commit is in the range, or a planned data file is missing. Reads the
-    manifests from ``since + 1`` to the tip and nothing else: no Spark
-    job."""
+    ``since`` is negative (a consumer that never committed gets a full
+    read), ``since + 1`` is below the low-water mark (a commit of the
+    window is expired), a manifest in the range is gone, a rollback commit
+    is in the range, or a planned data file is missing. A checkpoint at
+    ``low_water() - 1`` plans: every manifest of its window is retained,
+    and so are the files those commits added. Reads the manifests from
+    ``since + 1`` to the tip and nothing else: no Spark job."""
     tip = table.current()
     if since >= tip.version:
         return tip, []
-    if since < table.low_water():
+    if since < 0 or since + 1 < table.low_water():
         return tip, None
     chain = [table._maybe_snapshot(v) for v in range(since + 1, tip.version)]
     files: list[dict[str, Any]] = []

@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
 from runyoro_llm_data_pipeline_spark.cdc.events import EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
-from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES, LakeTable
+from runyoro_llm_data_pipeline_spark.lake.table import (
+    COMPACT_MAX_FILES,
+    DEFAULT_NUM_BUCKETS,
+    LakeTable,
+)
 from runyoro_llm_data_pipeline_spark.sources.offsets import OFFSETS_KEY, OffsetLog
 
 _BATCH_RE = re.compile(r"^batch_(\d+)$")
@@ -56,39 +60,31 @@ class CdcIngest:
         self,
         table_path: str,
         batch_dir: str | None = None,
-        num_buckets: int = 16,
+        num_buckets: int = DEFAULT_NUM_BUCKETS,
         normalize_text: bool = True,
         compact_max_files: int | None = COMPACT_MAX_FILES,
         quarantine_dir: str | None = None,
-        compact_target_file_rows: int | None = None,
     ):
         """``batch_dir`` is the source of ``run()`` and ``run_stream()``;
         ``run_log()`` takes its log as an argument and needs none.
 
         A batch appends at most one delta file per bucket it touches; with
         ``compact_max_files=k`` any bucket accumulating more than k delta
-        files is compacted inline (a data-only snapshot — resumable like
-        every other commit), so about k batches run between compactions.
-        ``None`` disables auto-compaction.
+        files is compacted inline into one key-sorted base file (a
+        data-only snapshot — resumable like every other commit), so about
+        k batches run between compactions. ``None`` disables
+        auto-compaction.
 
         The applied-batch ledger needs no setting: each batch commit
         folds the entries contiguous with the ``applied_floor`` low
         watermark into it, so batch ids ``0, 1, 2, …`` leave the ledger
-        empty however many batches have run.
-
-        ``compact_target_file_rows`` caps rows per compacted file: big
-        buckets split into key-contiguous files whose harvested manifest
-        key ranges make point lookups read ~1 base file
-        (``LakeTable.candidate_files_for_key``). ``None`` keeps one file
-        per bucket — the better default when the table is mostly scanned,
-        not point-served."""
+        empty however many batches have run."""
         self.table_path = table_path
         self.batch_dir = batch_dir
         self.num_buckets = num_buckets
         self.normalize_text = normalize_text
         self.compact_max_files = compact_max_files
         self.quarantine_dir = quarantine_dir
-        self.compact_target_file_rows = compact_target_file_rows
 
     def table(self) -> LakeTable:
         """Open the table, creating it with ``num_buckets`` on first use."""
@@ -133,10 +129,7 @@ class CdcIngest:
             summary_extra=summary_extra,
         )
         if self.compact_max_files is not None:
-            table.compact(
-                spark, self.compact_max_files,
-                target_file_rows=self.compact_target_file_rows,
-            )
+            table.compact(spark, self.compact_max_files)
         return result
 
     def run(

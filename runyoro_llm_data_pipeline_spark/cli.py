@@ -17,7 +17,9 @@ Local smoke::
 ``--streaming --checkpoint-dir DIR`` drains the same directory as a
 Structured Streaming query (``CdcIngest.run_stream``) instead of per batch
 directory (``CdcIngest.run``); both take the same compaction and
-normalization options. ``--max-batches`` is batch-directory only.
+normalization options. ``--compact-max-files K`` compacts a bucket that
+holds more than K delta files into one key-sorted base file.
+``--max-batches`` is batch-directory only.
 
 Exit code 0 = all pending batches committed; the job is safe to re-run or
 to schedule at any cadence (exactly-once is enforced by the table's
@@ -53,10 +55,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="override master (default: whatever spark-submit set)")
     p.add_argument("--expire-keep-last", type=int, default=None,
                    help="expire old snapshots after ingest, keeping this many")
-    p.add_argument("--compact-target-file-rows", type=int, default=None,
-                   help="split compacted buckets into key-contiguous files of "
-                        "at most this many rows (enables manifest key-range "
-                        "point-lookup pruning)")
     p.add_argument("--tag", default=None,
                    help="tag the table's final snapshot with this name "
                         "(tagged snapshots survive expiry until dropped)")
@@ -82,7 +80,6 @@ def main(argv: list[str] | None = None) -> int:
         num_buckets=args.num_buckets,
         normalize_text=not args.no_normalize,
         compact_max_files=args.compact_max_files,
-        compact_target_file_rows=args.compact_target_file_rows,
     )
     t0 = time.perf_counter()
     if args.streaming:
@@ -97,7 +94,6 @@ def main(argv: list[str] | None = None) -> int:
         table.maintain(
             spark,
             compact_max_files=args.compact_max_files,
-            target_file_rows=args.compact_target_file_rows,
             keep_last_snapshots=args.expire_keep_last or 4,
         )
     elif args.expire_keep_last is not None:

@@ -15,10 +15,10 @@ dedup index. This module generalizes it into a real table format:
   reference's ledger rewrite, and the mechanism Iceberg's file-system
   catalog uses for its metadata files;
 * **per-file stats** live on the manifest entry and nowhere else: each write
-  opens every new file's footer once and records its row count and its key
-  and lsn bounds. Point lookups prune files by those bounds, and lineage is
-  read from the entries each data commit added, over the retained versions, so
-  it is retained exactly as long as the snapshots themselves;
+  opens every new file's footer once and records its row count and its lsn
+  bounds. Lineage is read from the entries each data commit added, over the
+  retained versions, so it is retained exactly as long as the snapshots
+  themselves;
 * **exactly-once** falls out: applied batch offsets are recorded in the same
   snapshot that contains their data, so a crash before its manifest is
   linked leaves both invisible and replay is safe (idempotent, cf.
@@ -112,8 +112,8 @@ class Snapshot:
     version: int
     parent: int | None
     schema_json: dict[str, Any]
-    # {path(rel), bucket, kind, added_v, rows, [min_key, max_key],
-    #  [min_lsn, max_lsn]} — see LakeTable.write_data_files
+    # {path(rel), bucket, kind, added_v, rows, [min_lsn, max_lsn]}
+    # — see LakeTable.write_data_files
     files: list[dict[str, Any]]
     applied: dict[str, list[int]]  # batch_id(str) -> [min_lsn, max_lsn]
     summary: dict[str, Any] = field(default_factory=dict)
@@ -312,7 +312,7 @@ class LakeTable:
     (O(batch) write cost regardless of table size); reads collapse
     base ∪ deltas per key by the stored version columns. *Base* files
     (file entries carry ``kind: base|delta``) come only from ``compact()``,
-    which folds a bucket's files back into key-sorted base files, and
+    which folds a bucket's files back into one key-sorted base file, and
     ``rebucket()``.
 
     The handle holds only the table's path. Layout (bucket modulus, key
@@ -478,24 +478,22 @@ class LakeTable:
         self,
         spark: SparkSession,
         compact_max_files: int = COMPACT_MAX_FILES,
-        target_file_rows: int | None = None,
         keep_last_snapshots: int = 4,
         orphan_age_seconds: float = 3600,
     ) -> dict[str, int]:
-        """One-call production maintenance pass: compact read-amplified
-        buckets, expire old snapshots (tagged ones retained), reclaim
-        orphaned files. The applied ledger needs no pass: every batch
-        commit folds it (``Snapshot.ledger_after``). Every step is an
-        independent crash-safe commit or idempotent cleanup, so a pass
-        that died is finished by the next one. Safe to run from a cron
+        """One-call production maintenance pass: compact the buckets
+        holding more than ``compact_max_files`` deltas, expire old
+        snapshots (tagged ones retained), reclaim orphaned files. The
+        applied ledger needs no pass: every batch commit folds it
+        (``Snapshot.ledger_after``). Every step is an independent
+        crash-safe commit or idempotent cleanup, so a pass that died is
+        finished by the next one. Safe to run from a cron
         alongside the ingester: a compaction that loses its commit to an
         ingest raises ``CommitConflictError`` and the next pass retries
         it. Returns the buckets compacted, the data files snapshot expiry
         deleted and the orphans removed."""
         return {
-            "compacted_buckets": self.compact(
-                spark, compact_max_files, target_file_rows=target_file_rows
-            ),
+            "compacted_buckets": self.compact(spark, compact_max_files),
             "expired_files_removed": self.expire_snapshots(
                 keep_last=keep_last_snapshots
             ),
@@ -585,10 +583,9 @@ class LakeTable:
     def read_conversation(self, spark: SparkSession, conv_id: str) -> DataFrame:
         """Point lookup: read ONE conversation by pruning to its hash
         bucket driver-side (1/num_buckets of the table's files regardless
-        of table size), then to the files whose harvested key range covers
-        the key (≈1 base file after a size-targeted compaction), then let
-        parquet row-group stats narrow further. The per-conversation
-        serving path."""
+        of table size: one key-sorted base file plus the bucket's deltas),
+        then let parquet row-group stats skip the base file's row groups
+        that cannot hold the key. The per-conversation serving path."""
         snap = self.current()
         _bucket, cand = self.candidate_files_for_key(spark, conv_id, snap)
         df = self._scan(spark, snap, cand)
@@ -652,25 +649,24 @@ class LakeTable:
         n_buckets: int,
         keys: list[str],
         kind: str = "base",
-        max_records_per_file: int | None = None,
     ) -> list[dict[str, Any]]:
         """Write ``df`` (must contain ``__bucket``) into this snapshot's data
         dir, one Parquet directory partition per bucket (``partitionBy``, so
         file→bucket is structural), and return one manifest entry per
         written file. Every write runs ``min(n_buckets, cores)`` tasks
         hash-partitioned on ``__bucket`` (``n_buckets``: the buckets ``df``
-        spans), so each bucket has one writer and gets one file (more only
-        under ``max_records_per_file``). ``delta`` rows (the MOR apply
-        append) stay unsorted; ``base`` rows (``compact``/``rebucket``
-        output) are sorted by bucket, then ``keys``. No key salt: tuned at
-        ``local[32]`` on 17 M-event batches, on 4 CPUs it wrote 61 files
-        per 10k-event batch instead of 16, spent 1.7–1.9 s per batch in the
-        write instead of 0.9–1.0 s, and did not speed up a 10⁶-event batch
-        with 30% on one conversation (BENCH.md, "4-CPU host").
+        spans), so each bucket has one writer and gets one file. ``delta``
+        rows (the MOR apply append) stay unsorted; ``base`` rows
+        (``compact``/``rebucket`` output) are sorted by bucket, then
+        ``keys``. No key salt: tuned at ``local[32]`` on 17 M-event
+        batches, on 4 CPUs it wrote 61 files per 10k-event batch instead
+        of 16, spent 1.7–1.9 s per batch in the write instead of 0.9–1.0 s,
+        and did not speed up a 10⁶-event batch with 30% on one
+        conversation (BENCH.md, "4-CPU host").
 
         Every entry carries the file's footer stats (``_harvest``): ``rows``
-        always, ``min_key``/``max_key`` of ``keys[0]`` and
-        ``min_lsn``/``max_lsn`` of the stored lsn where the footer has them.
+        always, and ``min_lsn``/``max_lsn`` of the stored lsn where the
+        footer has them.
 
         The directory name carries a per-attempt nonce so two writers
         racing on the same version can never clobber each other's files —
@@ -687,14 +683,7 @@ class LakeTable:
             # the pruned bucket's files. Deltas stay sort-free: sorting
             # would tax ingest throughput for transient files.
             df = df.sortWithinPartitions("__bucket", *keys)
-        writer = df.write.mode("overwrite").partitionBy("__bucket")
-        if max_records_per_file:
-            # split big buckets into several key-contiguous files (rows are
-            # already sorted within the task for base writes), so the
-            # harvested per-file key ranges become disjoint and a point
-            # lookup reads ~1 file however large the bucket grows
-            writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-        writer.parquet(out_dir)
+        df.write.mode("overwrite").partitionBy("__bucket").parquet(out_dir)
         entries: list[dict[str, Any]] = []
         for bdir in sorted(os.listdir(out_dir)):
             if not bdir.startswith("__bucket="):
@@ -709,33 +698,27 @@ class LakeTable:
                             "kind": kind,
                         }
                     )
-        return self._harvest(entries, keys[0])
+        return self._harvest(entries)
 
-    def _harvest(
-        self, entries: list[dict[str, Any]], key: str
-    ) -> list[dict[str, Any]]:
+    def _harvest(self, entries: list[dict[str, Any]]) -> list[dict[str, Any]]:
         """``entries`` with each file's footer stats attached: ``rows``,
-        plus ``min_key``/``max_key`` of ``key`` and ``min_lsn``/``max_lsn``
-        of the stored lsn when every row group has stats for that column.
-        One footer open per file, in one thread pool (this sits on the
-        serial commit path of every batch). The bounds let a point lookup
-        prune *files* inside the already-pruned bucket; the rows and lsn
-        bounds are the lineage ``read_lineage`` reports.
+        plus ``min_lsn``/``max_lsn`` of the stored lsn when every row group
+        has stats for it — the lineage ``read_lineage`` reports (the feed
+        reads ``rows``). One footer open per file, in one thread pool (this
+        sits on the serial commit path of every batch).
 
         An unreadable footer raises: the caller commits nothing, and the
         written files become orphans that ``cleanup_orphans`` reclaims. A
-        stats gap only leaves that pair of bounds off the entry, and an
-        unranged file is always read."""
+        stats gap only leaves the lsn bounds off the entry."""
         from concurrent.futures import ThreadPoolExecutor
 
         def one(e: dict[str, Any]) -> dict[str, Any]:
             rows, bounds = footer_bounds(
-                os.path.join(self.path, e["path"]), [key, VERSION_LSN]
+                os.path.join(self.path, e["path"]), [VERSION_LSN]
             )
             out = {**e, "rows": rows}
-            for col, name in ((key, "key"), (VERSION_LSN, "lsn")):
-                if col in bounds:
-                    out[f"min_{name}"], out[f"max_{name}"] = bounds[col]
+            if VERSION_LSN in bounds:
+                out["min_lsn"], out["max_lsn"] = bounds[VERSION_LSN]
             return out
 
         with ThreadPoolExecutor(max_workers=min(16, max(len(entries), 1))) as ex:
@@ -758,66 +741,39 @@ class LakeTable:
     def candidate_files_for_key(
         self, spark: SparkSession, key_value: str, snap: Snapshot | None = None
     ) -> tuple[int, list[dict[str, Any]]]:
-        """Point-lookup planning: the key's hash bucket, then file-level
-        key-range pruning inside it. Base and delta files whose harvested
-        ``min_key``/``max_key`` bounds exclude ``key_value`` are skipped;
-        an unranged file (a footer without key stats) is always kept.
-        Unsorted deltas span most of their bucket's key range, so their
-        bounds prune less than a sorted base file's. Driver-side
-        arithmetic over the manifest — the file-skipping half of what
-        Iceberg does with manifest column bounds."""
+        """Point-lookup planning: the key's hash bucket and the files of
+        that bucket — its base file and its deltas. Driver-side arithmetic
+        over the manifest; inside the files, parquet row-group stats of the
+        key-sorted base do the rest."""
         snap = snap or self.current()
         bucket = self.bucket_for_key(spark, key_value, snap)
-        cand = [
-            f
-            for f in snap.files
-            if f["bucket"] == bucket
-            and (
-                "min_key" not in f
-                or f["min_key"] <= key_value <= f["max_key"]
-            )
-        ]
-        return bucket, cand
+        return bucket, [f for f in snap.files if f["bucket"] == bucket]
 
-    def compact(
-        self,
-        spark: SparkSession,
-        max_files: int | None = None,
-        target_file_rows: int | None = None,
-    ) -> int:
-        """Fold buckets' files back into key-sorted base files (latest-wins
-        collapse with tombstones retained — a stale replayed event must
-        still lose to a newer delete), planned and rewritten on one
-        snapshot. ``max_files=None`` rewrites every bucket holding a delta
-        file or more than one file; ``max_files=k`` only the buckets with
-        more than k *delta* files — the MOR read-amplification guard. An
-        apply lands at most one delta per bucket it touches, so ``k``
-        compacts a bucket on its (k+1)-th batch since the last compaction.
-        Base files don't count: ``max_records_per_file`` may split a
-        bucket's base, and read cost is driven by how many deltas must be
-        re-collapsed. Data-only commit: the applied-offset map is
+    def compact(self, spark: SparkSession, max_files: int = 0) -> int:
+        """Fold each due bucket's files into one key-sorted base file
+        (latest-wins collapse with tombstones retained — a stale replayed
+        event must still lose to a newer delete), planned and rewritten on
+        one snapshot. The one rule: a bucket is due when it holds more than
+        ``max_files`` *delta* files — the MOR read-amplification guard. The
+        default 0 compacts every bucket holding a delta; a base-only bucket
+        is never rewritten. An apply lands at most one delta per bucket it
+        touches, so ``k`` compacts a bucket on its (k+1)-th batch since the
+        last compaction. Data-only commit: the applied-offset map is
         untouched, so compaction is safe at any point and crash during
         compaction simply leaves the previous snapshot current. Returns
         the number of buckets compacted."""
         snap = self.current()
-        per_bucket: dict[int, list[dict[str, Any]]] = {}
+        deltas: dict[int, int] = {}
         for f in snap.files:
-            per_bucket.setdefault(f["bucket"], []).append(f)
-
-        def due(fs: list[dict[str, Any]]) -> bool:
-            deltas = sum(f.get("kind", "base") == "delta" for f in fs)
-            if max_files is None:
-                return deltas > 0 or len(fs) > 1
-            return deltas > max_files
-
-        todo = {b for b, fs in per_bucket.items() if due(fs)}
+            if f.get("kind", "base") == "delta":
+                deltas[f["bucket"]] = deltas.get(f["bucket"], 0) + 1
+        todo = {b for b, n in deltas.items() if n > max_files}
         if not todo:
             return 0
         self._rewrite(
             spark, snap, [f for f in snap.files if f["bucket"] in todo],
             snap.num_buckets,
             {**snap.summary, "last_compaction_version": snap.version + 1},
-            target_file_rows,
         )
         return len(todo)
 
@@ -841,12 +797,12 @@ class LakeTable:
         files: list[dict[str, Any]],
         num_buckets: int,
         summary: dict[str, Any],
-        target_file_rows: int | None = None,
     ) -> None:
         """The one maintenance rewrite under ``compact`` and ``rebucket``:
         scan ``files`` (collapsed when any is a delta), bucket the rows
-        under ``num_buckets``, write them as key-sorted base files, and
-        commit a maintenance snapshot in which they replace ``files``."""
+        under ``num_buckets``, write them as one key-sorted base file per
+        bucket, and commit a maintenance snapshot in which they replace
+        ``files``."""
         keys = snap.key_cols
         rows = self._scan(spark, snap, files).withColumn(
             "__bucket", bucket_expr(keys[0], num_buckets)
@@ -860,8 +816,7 @@ class LakeTable:
             else num_buckets
         )
         written = self.write_data_files(
-            rows, snap.version + 1, max(width, 1), keys, kind="base",
-            max_records_per_file=target_file_rows,
+            rows, snap.version + 1, max(width, 1), keys, kind="base"
         )
         replaced = {f["path"] for f in files}
         self.commit(

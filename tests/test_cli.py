@@ -45,9 +45,9 @@ def test_cli_streaming_takes_ledger_and_compaction_options(
     spark, tmp_lake, tmp_path_factory
 ):
     """``--streaming`` runs the same ingest driver as batch mode, so its
-    epochs fold into the ledger's floor and ``--compact-target-file-rows``
-    splits the buckets it compacts. Two invocations, one new batch each,
-    give two epochs."""
+    epochs fold into the ledger's floor and ``--compact-max-files 0``
+    compacts every bucket it touches into one key-sorted base file. Two
+    invocations, one new batch each, give two epochs."""
     from pyspark.sql import functions as F
 
     from runyoro_llm_data_pipeline_spark.cdc.generator import (
@@ -71,7 +71,6 @@ def test_cli_streaming_takes_ledger_and_compaction_options(
                 "--streaming", "--checkpoint-dir", os.path.join(tmp_lake, "cp"),
                 "--num-buckets", "4", "--master", "local[2]",
                 "--compact-max-files", "0",
-                "--compact-target-file-rows", "10",
             ],
             capture_output=True, text=True, env=env, cwd=REPO, timeout=300,
         )
@@ -79,11 +78,12 @@ def test_cli_streaming_takes_ledger_and_compaction_options(
         assert json.loads(out.stdout.strip().splitlines()[-1])["batches_applied"] == 1
     snap = LakeTable.load(table).current()
     assert snap.applied == {} and snap.summary["applied_floor"] == 1
+    entry_keys = {"path", "bucket", "kind", "added_v", "rows", "min_lsn", "max_lsn"}
     per_bucket = {}
     for f in snap.files:
-        assert f["kind"] == "base" and "min_key" in f
+        assert f["kind"] == "base" and set(f) <= entry_keys
         per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
-    assert max(per_bucket.values()) > 1
+    assert per_bucket and set(per_bucket.values()) == {1}
 
 
 def test_spark_submit_py_files_separate_executor_jvms(

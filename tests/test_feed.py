@@ -195,9 +195,11 @@ def test_plan_of_maintenance_commits_only_is_empty(tmp_lake):
 
 
 def test_plan_resyncs_when_the_window_cannot_be_delivered(tmp_lake):
-    """A rollback commit in the window, a checkpoint below the low-water
-    mark after ``expire_snapshots``, and a removed data file each plan a
-    resync (no entries); the windows after them still plan."""
+    """A rollback commit in the window, a window reaching below the
+    low-water mark after ``expire_snapshots``, a consumer that never
+    committed, and a removed data file each plan a resync (no entries);
+    the windows after them still plan. A checkpoint one below the mark
+    plans: every commit of its window is retained."""
     t = _hand_table(tmp_lake)
     s1 = t.commit(t.current(), [_file(t, "a")])
     s2 = t.commit(s1, s1.files + [_file(t, "b")])
@@ -209,7 +211,8 @@ def test_plan_resyncs_when_the_window_cannot_be_delivered(tmp_lake):
     t.commit(s4, s4.files + [_file(t, "d")])
     t.expire_snapshots(keep_last=2)
     assert t.low_water() == 4
-    assert _plan(t, 3)[1] is None and _plan(t, -1)[1] is None
+    assert _plan(t, 2)[1] is None and _plan(t, -1)[1] is None
+    assert _names(_plan(t, 3)[1]) == ["c", "d"]
     assert _names(_plan(t, 4)[1]) == ["d"]
 
     os.remove(os.path.join(t.path, t.current().files[-1]["path"]))

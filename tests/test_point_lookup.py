@@ -31,52 +31,11 @@ def test_read_conversation_prunes_and_matches(spark, tmp_lake, tmp_path_factory)
     assert t.read_conversation(spark, "no_such_conv").count() == 0
 
 
-def test_file_range_pruning_after_sized_compaction(spark, tmp_lake, tmp_path_factory):
-    """Size-targeted compaction splits a bucket into key-contiguous files
-    whose harvested manifest ranges are disjoint; the point-lookup planner
-    then reads ~1 base file instead of the whole bucket."""
-    d = str(tmp_path_factory.mktemp("plr"))
-    events, expected = gen_change_log(spark, n_turns=1200, n_convs=60, n_batches=2)
-    write_batch_files(events, d)
-    ing = CdcIngest(os.path.join(tmp_lake, "t2"), d, num_buckets=2)
-    ing.run(spark)
-    t = ing.table()
-    t.compact(spark, target_file_rows=120)
-
-    snap = t.current()
-    base = [f for f in snap.files if f.get("kind", "base") == "base"]
-    # the small target forces several files per bucket, each with bounds
-    per_bucket: dict[int, list] = {}
-    for f in base:
-        assert "min_key" in f and "max_key" in f and f["min_key"] <= f["max_key"]
-        per_bucket.setdefault(f["bucket"], []).append(f)
-    assert any(len(v) > 1 for v in per_bucket.values())
-    for files in per_bucket.values():
-        spans = sorted((f["min_key"], f["max_key"]) for f in files)
-        for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-            assert hi1 <= lo2  # disjoint-or-touching key ranges
-
-    full = t.read(spark)
-    convs = sorted(r["conv_id"] for r in full.select("conv_id").distinct().collect())
-    pruned_any = False
-    for conv in convs[:6]:
-        bucket, cand = t.candidate_files_for_key(spark, conv)
-        in_bucket = [f for f in snap.files if f["bucket"] == bucket]
-        assert len(cand) <= len(in_bucket)
-        if len(cand) < len(in_bucket):
-            pruned_any = True
-        got = t.read_conversation(spark, conv)
-        want = full.filter(full.conv_id == conv)
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-    assert pruned_any  # the planner actually skipped files
-
-
 def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory):
     """Delta files must never be pruned away from a key they hold:
-    post-compaction batches land as unsorted deltas whose harvested key
-    bounds span most of their bucket, on top of key-ranged base files, and
-    they must still win the point lookup."""
+    post-compaction batches land as unsorted deltas on top of each
+    bucket's one key-sorted base file, and they must still win the point
+    lookup. The plan is the key's whole bucket: its base and its deltas."""
     from pyspark.sql import functions as F
 
     from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
@@ -86,12 +45,18 @@ def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory)
     t = ing.table()
     apply_batch(spark, t, events.filter(F.col("batch_id") == 0), 0)
     apply_batch(spark, t, events.filter(F.col("batch_id") == 1), 1)
-    t.compact(spark, target_file_rows=60)
-    # the last batch lands as deltas on top of the key-ranged base files
+    t.compact(spark)
+    # the last batch lands as deltas on top of one base file per bucket
     apply_batch(spark, t, events.filter(F.col("batch_id") == 2), 2)
+    snap = t.current()
+    for b in range(2):
+        assert [f["kind"] for f in snap.files if f["bucket"] == b].count("base") == 1
 
     full = t.read(spark)
-    for conv in [r["conv_id"] for r in full.select("conv_id").distinct().collect()][:5]:
+    for conv in [r["conv_id"] for r in full.select("conv_id").distinct().collect()]:
+        bucket, cand = t.candidate_files_for_key(spark, conv)
+        assert bucket == t.bucket_for_key(spark, conv)
+        assert cand == [f for f in snap.files if f["bucket"] == bucket]
         got = t.read_conversation(spark, conv)
         want = full.filter(full.conv_id == conv)
         assert got.exceptAll(want).count() == 0
@@ -102,8 +67,8 @@ def test_file_without_footer_stats_is_unranged_and_read(
     spark, tmp_lake, tmp_path_factory
 ):
     """A parquet file written without column statistics lands in a
-    compacted (range-pruned) bucket: it gets no key range, so the lookup
-    planner always keeps it and ``read_conversation`` returns its rows."""
+    compacted bucket: its harvested entry carries ``rows`` and no lsn
+    bounds, and ``read_conversation`` still returns its row."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -121,12 +86,11 @@ def test_file_without_footer_stats_is_unranged_and_read(
     ing = CdcIngest(os.path.join(tmp_lake, "t"), d, num_buckets=2)
     ing.run(spark)
     t = ing.table()
-    t.compact(spark, target_file_rows=60)
+    t.compact(spark)
 
     key = "conv_nostats"
     bucket = t.bucket_for_key(spark, key)
     snap = t.current()
-    assert all("min_key" in f for f in snap.files if f["bucket"] == bucket)
     ts = datetime.datetime(2024, 1, 1)
     row = {"conv_id": key, "turn_idx": 0, "role": "user", "text": "no stats",
            "ts": ts, VERSION_TS: ts, VERSION_LSN: 10**9, DELETED: False}
@@ -136,10 +100,9 @@ def test_file_without_footer_stats_is_unranged_and_read(
     os.makedirs(os.path.dirname(os.path.join(t.path, rel)))
     pq.write_table(df.toArrow(), os.path.join(t.path, rel), write_statistics=False)
 
-    assert footer_bounds(os.path.join(t.path, rel), ["conv_id"]) == (1, {})
-    [entry] = t._harvest([{"path": rel, "bucket": bucket, "kind": "base"}], "conv_id")
-    assert entry["rows"] == 1
-    assert not {"min_key", "max_key", "min_lsn", "max_lsn"} & set(entry)
+    assert footer_bounds(os.path.join(t.path, rel), [VERSION_LSN]) == (1, {})
+    [entry] = t._harvest([{"path": rel, "bucket": bucket, "kind": "base"}])
+    assert entry == {"path": rel, "bucket": bucket, "kind": "base", "rows": 1}
     t.commit(snap, snap.files + [entry], commit_type="maintenance")
     _, cand = t.candidate_files_for_key(spark, key)
     assert rel in [f["path"] for f in cand]

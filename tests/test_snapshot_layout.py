@@ -10,12 +10,18 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from runyoro_llm_data_pipeline_spark.cdc.apply import apply_batch
+from runyoro_llm_data_pipeline_spark.cdc.events import TRANSCRIPT_SCHEMA
 from runyoro_llm_data_pipeline_spark.cdc.generator import (
     gen_change_log,
     write_batch_files,
 )
 from runyoro_llm_data_pipeline_spark.cdc.ingest import CdcIngest
-from runyoro_llm_data_pipeline_spark.lake.table import LakeTable, bucket_expr
+from runyoro_llm_data_pipeline_spark.lake.merge import with_internal_schema
+from runyoro_llm_data_pipeline_spark.lake.table import (
+    DATA_DIR,
+    LakeTable,
+    bucket_expr,
+)
 
 
 def _lookup_misses(spark, t: LakeTable) -> list[str]:
@@ -98,3 +104,25 @@ def test_compaction_cadence_counts_batches(spark, tmp_lake, tmp_path_factory):
     assert {f["kind"] for f in files} == {"base"}
     assert sorted(Counter(f["bucket"] for f in files).values()) == [1] * 4
 
+
+
+def test_compact_leaves_a_base_only_bucket_alone(tmp_lake):
+    """``compact``'s one rule counts delta files only: a bucket holding
+    two base files and no delta (the layout an older size-capped
+    compaction left) is not due at the default threshold, so nothing is
+    planned, read or committed. No Spark: the table is built by hand."""
+    t = LakeTable.create(
+        os.path.join(tmp_lake, "t"), with_internal_schema(TRANSCRIPT_SCHEMA)
+    )
+    base = [
+        {
+            "path": os.path.join(DATA_DIR, "v00000001-0", "__bucket=0", fn),
+            "bucket": 0,
+            "kind": "base",
+            "rows": 1,
+        }
+        for fn in ("part-0.parquet", "part-1.parquet")
+    ]
+    t.commit(t.current(), base, commit_type="maintenance")
+    assert t.compact(None) == 0 and t.compact(None, 0) == 0
+    assert t.current_version() == 1
