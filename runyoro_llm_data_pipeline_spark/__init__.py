@@ -6,7 +6,8 @@ idiomatic Spark engine:
 
 * change-event log (insert/update/delete/upsert keyed on ``conv_id, turn_idx``)
   applied to a snapshot-atomic lake table of multi-turn transcripts,
-* latest-wins dedup via map-side-combinable aggregation (skew-proof),
+* latest-wins dedup by one ``max_by`` aggregate that every table write
+  and every read shares,
 * one apply path: O(batch) merge-on-read delta appends with bounded-read
   compaction,
 * exactly-once commits (offsets live inside the table snapshot),

@@ -15,29 +15,30 @@ ledger rewrite ``scripts/orchestrator.py:184-186``):
   JVM column expression — the per-turn equality invariant lives here;
 * **collapse** (W3): the admitted events are projected onto the stored
   row (``event_ts``/``lsn`` become the version columns, ``op == 'delete'``
-  the tombstone flag) and collapsed latest-wins per key by
-  ``lake.table.collapse_stored`` — the pure-JVM ``max_by`` aggregate that
-  reads, compaction and the feed run on stored rows. Each key's row keeps
-  its winning event's own ``(event_ts, lsn)`` as the stored version;
-* **merge-on-read delta append** as ONE write query with two shuffles:
+  the tombstone flag) and handed to ``LakeTable.write_data_files``, the
+  one write shape: it buckets the rows, collapses them latest-wins per key
+  with ``lake.table.collapse_stored`` (the pure-JVM ``max_by`` aggregate
+  that reads and the feed run on stored rows) and sorts them by key. Each
+  key's row keeps its winning event's own ``(event_ts, lsn)`` as the
+  stored version;
+* **merge-on-read delta append** as ONE write query with one shuffle:
 
-      scan → validate → normalize → partial collapse ⇒ final collapse
-      ⇒ bucket repartition → partitioned parquet write
+      scan → validate → normalize → project
+      ⇒ bucket repartition → collapse → partitioned parquet write
 
-  Under AQE each shuffle's map side runs as its own query-stage job, so a
-  traced ingest (``perfbench/run.py --trace 1``) shows three Spark jobs
-  per batch, all with the anonymous stage name
+  Under AQE the shuffle's map side runs as its own query-stage job, so a
+  traced ingest (``perfbench/run.py --trace 1``) shows two Spark jobs
+  per batch, both with the anonymous stage name
   ``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``:
-  (1) scan → normalize → partial ``max_by`` into the collapse shuffle,
-  (2) final collapse into the bucket shuffle, (3) the partitioned parquet
-  write. The partial aggregation means the post-collapse bucket shuffle
-  moves at most one row per key and task. The bucket repartition runs
+  (1) scan → normalize → project into the bucket shuffle, (2) the
+  collapse and the partitioned parquet write. The repartition runs
   ``min(num_buckets, cores)`` write tasks with each bucket on exactly one
-  of them, so a batch appends at most one delta file per bucket. No
-  current A/B ranks this collapse against an Arrow (``applyInPandas``) or
-  single-shuffle collapse; replacing it is a job for a measured one.
+  of them, so a batch appends at most one delta file per bucket. There is
+  no map-side combine: every event of a hot key crosses the shuffle to
+  its bucket's task (BENCH.md, "one write shape", measures that case).
   Admission metrics (counts and the admitted lsn range) are piggybacked
-  on the write via ``Observation`` (no extra scan). Each new file's row
+  on the write via ``Observation`` (no extra scan; a batch that admits no
+  row takes one count job instead, see ``_apply_mor``). Each new file's row
   count and lsn bounds are harvested from its parquet *footer* onto its
   manifest entry by ``LakeTable.write_data_files`` (no stats job — the
   same trick Iceberg manifests use); lineage is read back from those
@@ -73,8 +74,6 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     VERSION_TS,
     CommitConflictError,
     LakeTable,
-    bucket_expr,
-    collapse_stored,
 )
 
 # lost commit races one ``apply_batch`` call retries before it raises
@@ -124,9 +123,7 @@ def _apply_mor(
         valid = valid.withColumn("text", clean_and_preprocess_text_col(F.col("text")))
 
     keys = snap.key_cols
-    # events → stored rows, then the read path's map-side-combinable
-    # collapse; the write below adds a second (cheap, post-collapse)
-    # shuffle to bucket-align the files
+    # events → stored rows; the writer buckets, collapses and sorts them
     stored = valid.select(
         *keys,
         *payload_columns(valid, keys),
@@ -135,20 +132,21 @@ def _apply_mor(
         (F.col("op") == "delete").alias(DELETED),
     )
     schema = evolve_schema(snap.schema(), stored)
-    incoming = collapse_stored(stored, keys).withColumn(
-        "__bucket", bucket_expr(keys[0], snap.num_buckets)
-    )
     version = snap.version + 1
     new_files = table.write_data_files(
-        incoming, version, snap.num_buckets, keys, kind="delta"
+        stored, version, snap.num_buckets, keys, kind="delta"
     )
-    metrics = obs.get
-    # aggregates over an empty (or all-rejected) batch observe NULL (count
-    # observes 0); guard them so an empty poll commits a no-op batch
-    n_total = int(metrics["n_total"] or 0)
-    n_rejected = n_total - int(metrics["n_valid"] or 0)
-    min_lsn = -1 if metrics["min_lsn"] is None else int(metrics["min_lsn"])
-    max_lsn = -1 if metrics["max_lsn"] is None else int(metrics["max_lsn"])
+    if new_files:
+        metrics = obs.get
+    else:
+        # no admitted row (an empty poll, an all-rejected batch): AQE drops
+        # the empty shuffle stage from the final plan, and the Observation
+        # inside it, so one count job gives the total and nothing is valid
+        metrics = {"n_total": events.count(), "n_valid": 0, "n_late": 0,
+                   "min_lsn": -1, "max_lsn": -1}
+    n_total = int(metrics["n_total"])
+    n_rejected = n_total - int(metrics["n_valid"])
+    min_lsn, max_lsn = int(metrics["min_lsn"]), int(metrics["max_lsn"])
     applied_keys = sum(e["rows"] for e in new_files)
     sec = round(time.perf_counter() - t_start, 3)
     applied, floor = snap.ledger_after(batch_id, [min_lsn, max_lsn])
@@ -178,7 +176,7 @@ def _apply_mor(
         "applied_keys": applied_keys,
         "min_lsn": min_lsn,
         "max_lsn": max_lsn,
-        "late_events": int(metrics["n_late"] or 0),
+        "late_events": int(metrics["n_late"]),
     }
 
 
@@ -193,7 +191,7 @@ def apply_batch(
 ) -> dict[str, Any]:
     """Append the batch's per-key winners (keyed on the current snapshot's
     ``key_cols``, bucketed under its ``num_buckets``) as per-bucket delta
-    files with one write query — three Spark jobs under AQE, see the
+    files with one write query — two Spark jobs under AQE, see the
     module docstring (write-optimized — pair with ``table.compact()``,
     which ``CdcIngest`` runs with ``max_files=compact_max_files`` after
     every batch).

@@ -7,8 +7,9 @@ the greatest ``(event_ts, lsn)`` wins, and exact duplicate deliveries
 (same ``lsn``) are idempotent.
 
 The engine's one production collapse is ``lake.table.collapse_stored``:
-``apply_batch`` projects events onto the stored row and collapses them with
-it, as reads, compaction and the feed collapse stored rows.
+``apply_batch`` projects events onto the stored row and every table write
+(``LakeTable.write_data_files``) collapses them with it, as reads and the
+feed collapse stored rows.
 ``collapse_latest_wins_window`` is kept beside it as an independent oracle
 — ``row_number() over (partition by key order by event_ts desc, lsn desc)
 = 1``, the formulation DuckDB runs in the correctness gate. The

@@ -36,14 +36,17 @@ import json
 import sys
 import time
 
-from runyoro_llm_data_pipeline_spark.lake.table import COMPACT_MAX_FILES
+from runyoro_llm_data_pipeline_spark.lake.table import (
+    COMPACT_MAX_FILES,
+    DEFAULT_NUM_BUCKETS,
+)
 
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="CDC ingest: change log → lake table")
     p.add_argument("--table", required=True, help="lake table path")
     p.add_argument("--batch-dir", required=True, help="change-event batch directory")
-    p.add_argument("--num-buckets", type=int, default=64)
+    p.add_argument("--num-buckets", type=int, default=DEFAULT_NUM_BUCKETS)
     p.add_argument("--compact-max-files", type=int, default=COMPACT_MAX_FILES)
     p.add_argument("--no-normalize", action="store_true")
     p.add_argument("--max-batches", type=int, default=None)

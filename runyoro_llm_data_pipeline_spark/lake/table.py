@@ -282,8 +282,8 @@ def _applied_batch(snap: Snapshot) -> int | None:
 
 def bucket_expr(key, num_buckets: int):
     """The engine's hash bucket of ``key`` (a column name or a Column):
-    ``pmod(xxhash64(key), num_buckets)``. Writes, compaction, rebucket and
-    point-lookup planning all use this one expression."""
+    ``pmod(xxhash64(key), num_buckets)``. ``LakeTable.write_data_files``
+    and point-lookup planning both use this one expression."""
     return F.pmod(F.xxhash64(key), F.lit(num_buckets)).cast("int")
 
 
@@ -291,11 +291,13 @@ def collapse_stored(df: DataFrame, keys: list[str]) -> DataFrame:
     """Latest-wins collapse of *stored* rows by the internal version
     columns: per key, the row with the greatest ``(_cdc_event_ts,
     _cdc_lsn)`` wins, tombstones included. The engine's one production
-    collapse. Its callers: ``apply_batch`` (a batch's events projected onto
-    stored rows), ``LakeTable._scan`` (base ∪ delta files, so reads, point
-    lookups, compaction, rebucket and the ``IncrementalFeed``), and the
-    ``cdc_latest_wins`` gate queries. A map-side-combinable ``max_by``, so
-    hot keys are partially collapsed before the shuffle."""
+    collapse. Its callers: ``LakeTable.write_data_files`` (every table
+    write: an apply's projected events, a compaction's or rebucket's
+    files), ``LakeTable._scan`` (base ∪ delta files, so reads, point
+    lookups and the ``IncrementalFeed``), and the ``cdc_latest_wins`` gate
+    queries. A ``max_by``: on reads the aggregate's partial side collapses
+    hot keys before the shuffle; a write collapses after its one bucket
+    shuffle."""
     payload = [c for c in df.columns if c not in keys]
     ordv = F.struct(F.col(VERSION_TS), F.col(VERSION_LSN))
     return (
@@ -650,19 +652,26 @@ class LakeTable:
         keys: list[str],
         kind: str = "base",
     ) -> list[dict[str, Any]]:
-        """Write ``df`` (must contain ``__bucket``) into this snapshot's data
-        dir, one Parquet directory partition per bucket (``partitionBy``, so
-        file→bucket is structural), and return one manifest entry per
-        written file. Every write runs ``min(n_buckets, cores)`` tasks
-        hash-partitioned on ``__bucket`` (``n_buckets``: the buckets ``df``
-        spans), so each bucket has one writer and gets one file. ``delta``
-        rows (the MOR apply append) stay unsorted; ``base`` rows
-        (``compact``/``rebucket`` output) are sorted by bucket, then
-        ``keys``. No key salt: tuned at ``local[32]`` on 17 M-event
-        batches, on 4 CPUs it wrote 61 files per 10k-event batch instead
-        of 16, spent 1.7–1.9 s per batch in the write instead of 0.9–1.0 s,
-        and did not speed up a 10⁶-event batch with 30% on one
-        conversation (BENCH.md, "4-CPU host").
+        """The one write shape: stored rows ``df`` (a key may repeat)
+        become bucket files under modulus ``n_buckets``, and the call
+        returns one manifest entry per file. Behind one shuffle, in order:
+        add ``__bucket``; hash-partition on it into ``min(n_buckets,
+        cores)`` tasks, so each bucket has one writer and gets one file;
+        collapse latest-wins per key (``collapse_stored``); sort by bucket,
+        then ``keys``, so every file, delta or base, is key-sorted and its
+        row-group stats on the key are selective; write partitioned by
+        bucket (file→bucket is structural). The planner drops that sort
+        after the collapse's SortAggregate; it stays so the files are
+        sorted whichever aggregate Spark picks. ``kind`` (``delta`` for an
+        apply, ``base`` for ``compact``/``rebucket``) only labels the
+        entries.
+
+        No map-side combine and no key salt: a hot key's rows all reach
+        its bucket's task. On 4 CPUs a 10⁶-event batch with 30% on one
+        conversation applied no slower than with a partial collapse before
+        the shuffle (BENCH.md, "one write shape"); the salt wrote 61 files
+        per 10k-event batch instead of 16 and spent 1.7–1.9 s per batch in
+        the write instead of 0.9–1.0 s (BENCH.md, "4-CPU host").
 
         Every entry carries the file's footer stats (``_harvest``): ``rows``
         always, and ``min_lsn``/``max_lsn`` of the stored lsn where the
@@ -675,14 +684,10 @@ class LakeTable:
         rel_dir = os.path.join(DATA_DIR, f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
         width = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
-        df = df.repartition(width, "__bucket")
-        if kind == "base":
-            # cluster rows by key within each written file so parquet
-            # row-group min/max statistics become selective — a point
-            # lookup (read_conversation) then skips most row groups of
-            # the pruned bucket's files. Deltas stay sort-free: sorting
-            # would tax ingest throughput for transient files.
-            df = df.sortWithinPartitions("__bucket", *keys)
+        df = df.withColumn("__bucket", bucket_expr(keys[0], n_buckets))
+        df = collapse_stored(
+            df.repartition(width, "__bucket"), ["__bucket", *keys]
+        ).sortWithinPartitions("__bucket", *keys)
         df.write.mode("overwrite").partitionBy("__bucket").parquet(out_dir)
         entries: list[dict[str, Any]] = []
         for bdir in sorted(os.listdir(out_dir)):
@@ -799,24 +804,15 @@ class LakeTable:
         summary: dict[str, Any],
     ) -> None:
         """The one maintenance rewrite under ``compact`` and ``rebucket``:
-        scan ``files`` (collapsed when any is a delta), bucket the rows
-        under ``num_buckets``, write them as one key-sorted base file per
-        bucket, and commit a maintenance snapshot in which they replace
-        ``files``."""
-        keys = snap.key_cols
-        rows = self._scan(spark, snap, files).withColumn(
-            "__bucket", bucket_expr(keys[0], num_buckets)
-        )
-        # the buckets the write spans (it caps its tasks at the cores): a
-        # compaction keeps rows in the buckets it read, a rebucket spreads
-        # them over the new modulus
-        width = (
-            len({f["bucket"] for f in files})
-            if num_buckets == snap.num_buckets
-            else num_buckets
+        hand ``files``, read raw at ``snap``'s schema, to
+        ``write_data_files``, which collapses them into one key-sorted base
+        file per bucket under ``num_buckets``, and commit a maintenance
+        snapshot in which those replace ``files``."""
+        rows = spark.read.schema(snap.schema()).parquet(
+            *[os.path.join(self.path, f["path"]) for f in files]
         )
         written = self.write_data_files(
-            rows, snap.version + 1, max(width, 1), keys, kind="base"
+            rows, snap.version + 1, num_buckets, snap.key_cols, kind="base"
         )
         replaced = {f["path"] for f in files}
         self.commit(

@@ -40,7 +40,6 @@ from runyoro_llm_data_pipeline_spark.lake.table import (
     LOW_WATER,
     SNAP_DIR,
     LakeTable,
-    bucket_expr,
 )
 
 NUM_BUCKETS = 4
@@ -175,12 +174,9 @@ def base(spark, tmp_path_factory, feed_replica):
     ing.run(spark, max_batches=1)
     assert [b for b, _ in ing.pending()] == [3]
     snap = t.current()
-    keys = snap.key_cols
     t.write_data_files(
-        t.read(spark, include_internal=True).limit(5).withColumn(
-            "__bucket", bucket_expr(keys[0], NUM_BUCKETS)
-        ),
-        snap.version + 1, NUM_BUCKETS, keys, kind="delta",
+        t.read(spark, include_internal=True).limit(5),
+        snap.version + 1, NUM_BUCKETS, snap.key_cols, kind="delta",
     )
     replica = feed_replica()
     replica.sync(spark, IncrementalFeed(t.path, os.path.join(state, "feed.json")))

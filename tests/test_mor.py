@@ -10,6 +10,7 @@ from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 import runyoro_llm_data_pipeline_spark as pkg
 from runyoro_llm_data_pipeline_spark.cdc.generator import (
@@ -201,34 +202,37 @@ def test_late_event_accounting(spark, tmp_lake):
     assert rows == {0: "v1", 1: "fresh"}
 
 
-def test_apply_plans_one_key_shuffle_over_a_partial_max_by(
+def test_every_write_plans_one_bucket_shuffle_under_its_collapse(
     spark, log, tmp_lake, monkeypatch
 ):
-    """The frame apply hands to ``write_data_files`` shuffles once, on the
-    key, with the partial ``max_by`` below the exchange: a hot key is
-    collapsed inside each input partition before the shuffle (the map-side
-    combine the skew story relies on)."""
+    """The frame an apply and a ``compact`` hand to the parquet writer
+    shuffles once, on ``__bucket``, with the whole ``max_by`` collapse
+    (partial and final) above the exchange: ``write_data_files`` is the one
+    write shape, and no write shuffles on the key first."""
     plans = []
-    write = LakeTable.write_data_files
+    parquet = DataFrameWriter.parquet
 
-    def spy(self, df, *args, **kwargs):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return write(self, df, *args, **kwargs)
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     batch_dir, _ = log
-    CdcIngest(
+    ing = CdcIngest(
         os.path.join(tmp_lake, "t"), batch_dir, num_buckets=8,
         compact_max_files=None,
-    ).run(spark, max_batches=1)
-    assert len(plans) == 1
-    lines = plans[0].splitlines()
-    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
-    assert len(exchanges) == 1, plans[0]
-    assert re.search(
-        r"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, ", lines[exchanges[0]]
-    ), plans[0]
-    assert any("partial_max_by" in ln for ln in lines[exchanges[0] + 1:]), plans[0]
+    )
+    ing.run(spark, max_batches=1)
+    assert ing.table().compact(spark) > 0
+    assert len(plans) == 2
+    for plan in plans:
+        lines = plan.splitlines()
+        exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        assert re.search(
+            r"Exchange hashpartitioning\(__bucket#\d+, ", lines[exchanges[0]]
+        ), plan
+        assert any("partial_max_by" in ln for ln in lines[: exchanges[0]]), plan
 
 
 def _max_by_owners(node, owner):

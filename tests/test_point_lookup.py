@@ -33,7 +33,7 @@ def test_read_conversation_prunes_and_matches(spark, tmp_lake, tmp_path_factory)
 
 def test_range_pruning_never_hides_delta_rows(spark, tmp_lake, tmp_path_factory):
     """Delta files must never be pruned away from a key they hold:
-    post-compaction batches land as unsorted deltas on top of each
+    post-compaction batches land as deltas on top of each
     bucket's one key-sorted base file, and they must still win the point
     lookup. The plan is the key's whole bucket: its base and its deltas."""
     from pyspark.sql import functions as F

@@ -255,9 +255,12 @@ def _all_data_files(root):
 
 # --------------------------------------------- key-clustered compaction
 def test_compaction_clusters_rows_by_key(spark, tmp_lake, tmp_path_factory):
-    """compact() writes each bucket's base file key-sorted, so parquet
-    row-group min/max stats on conv_id become selective for point
-    lookups; delta writes stay sort-free (ingest hot path)."""
+    """Every write is key-sorted: the delta files an ingest appends and
+    the base file compact() writes per bucket, so parquet row-group
+    min/max stats on conv_id are selective for point lookups in both. The
+    ingest runs with AQE's partition coalescing off, so its rows reach the
+    writer from several shuffle partitions and only the writer's own sort
+    orders them."""
     import pyarrow.parquet as pq
 
     d = str(tmp_path_factory.mktemp("sortc"))
@@ -267,18 +270,25 @@ def test_compaction_clusters_rows_by_key(spark, tmp_lake, tmp_path_factory):
         os.path.join(tmp_lake, "t"), d, num_buckets=4,
         compact_max_files=None,
     )
-    ing.run(spark)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try:
+        ing.run(spark)
+    finally:
+        spark.conf.unset(coalesce)
     t = ing.table()
+    deltas = t.current().files
+    assert {f.get("kind") for f in deltas} == {"delta"}
     t.compact(spark)
     base = [f for f in t.current().files if f.get("kind") == "base"]
     assert base
     checked = 0
-    for f in base:
+    for f in deltas + base:
         tb = pq.read_table(os.path.join(t.path, f["path"]), columns=["conv_id", "turn_idx"])
         rows = list(zip(tb.column("conv_id").to_pylist(), tb.column("turn_idx").to_pylist()))
         assert rows == sorted(rows), f["path"]
         checked += 1
-    assert checked >= 2
+    assert checked >= len(deltas) + 2
     # point lookup still correct on the clustered layout
     conv = spark.read.parquet(os.path.join(d, "batch_00000")).select("conv_id").first()[0]
     expect = t.read(spark).filter(F.col("conv_id") == conv).count()

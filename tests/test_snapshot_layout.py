@@ -59,6 +59,22 @@ def test_stale_handle_plans_against_rival_rebucket(spark, tmp_lake):
     assert _lookup_misses(spark, LakeTable.load(path)) == []
 
 
+def test_rebucket_of_a_table_without_files_commits_the_modulus(spark, tmp_lake):
+    """A table with no data files rebuckets too: the rewrite reads an empty
+    file list, writes no file, and commits the new modulus, under which
+    the next apply buckets its rows."""
+    events, _ = gen_change_log(spark, n_turns=240, n_convs=12, n_batches=1)
+    t = CdcIngest(os.path.join(tmp_lake, "t"), num_buckets=2).table()
+    t.rebucket(spark, 8)
+    snap = t.current()
+    assert (snap.version, snap.commit_type, snap.files) == (1, "maintenance", [])
+    assert snap.num_buckets == 8
+    apply_batch(spark, t, events, 0)
+    buckets = {f["bucket"] for f in t.current().files}
+    assert len(buckets) > 2 and all(b < 8 for b in buckets)
+    assert _lookup_misses(spark, t) == []
+
+
 def _added_per_bucket(snap) -> Counter:
     return Counter(f["bucket"] for f in snap.files if f.get("added_v") == snap.version)
 
